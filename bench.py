@@ -39,18 +39,54 @@ def vm_microbench() -> float:
     return round(best, 3)
 
 
+def jvm_microbench(spark) -> float:
+    """JVM window-quality stamp (min-of-3 seconds): a single-task
+    codegen'd range-sum on the live session. Python and JVM throughput
+    drift INDEPENDENTLY on this host (a same-day pair of runs measured
+    python 0.69 both times while the fused KG job went 15.0 -> 23.1 s),
+    so every bench json carries both stamps."""
+    best = None
+    for _ in range(3):
+        t0 = time.time()
+        spark.range(0, 1_000_000_000, 1, 1).selectExpr("sum(id) AS s").collect()
+        dt = time.time() - t0
+        best = dt if best is None or dt < best else best
+    return round(best, 3)
+
+
+def kg_pipeline(spark, cpus: str, n_corpus_docs: int) -> dict:
+    """The flagship fused KG pipeline on the synthetic corpus, timed
+    after one warm-up pass (codegen + python UDF worker pool) — the
+    throughput-honest shape; the checkpointed variant with per-stage
+    commits is exercised by the pipeline CLI and its tests. Pages are
+    materialized BEFORE the clock: corpus synthesis is driver-side
+    scaffolding, not engine throughput. Returns {sec, docs, chars,
+    triples}."""
+    from easyner_spark.corpus import pages_df
+    from easyner_spark.pipeline import fused_kg_triples
+    from easyner_spark.stages.extract import extract_documents
+    from pyspark.sql import functions as F
+
+    pages = pages_df(
+        spark, n_docs=n_corpus_docs, n_partitions=int(cpus) * 4 if cpus.isdigit() else 64
+    ).persist()
+    pages.count()
+    fused_kg_triples(pages.limit(1000), n_batches=64)  # warm-up
+    stats = extract_documents(pages, n_batches=64).agg(
+        F.count("*").alias("n"), F.sum(F.length("text")).alias("c")
+    ).first()
+    t0 = time.time()
+    n_triples = fused_kg_triples(pages, n_batches=64)
+    sec = time.time() - t0
+    pages.unpersist()
+    return {"sec": sec, "docs": stats["n"], "chars": stats["c"], "triples": n_triples}
+
+
 def run_bench(sf_dir: str, cpus: str, n_corpus_docs: int | None = None) -> dict:
     if n_corpus_docs is None:
         n_corpus_docs = int(os.environ.get("SPARK_GRAFT_KG_DOCS", "40000"))
-    from easyner_spark.corpus import GAZETTEER, NEL_LOOKUP, pages_df
-    from easyner_spark.queries import ORACLES, QUERIES  # noqa: F401
+    from easyner_spark.queries import PENDING_R6, QUERIES
     from easyner_spark.session import get_spark
-    from easyner_spark.stages.extract import extract_documents
-    from easyner_spark.stages.ner_dict import dict_ner
-    from easyner_spark.stages.nel import link_entities
-    from easyner_spark.stages.split import split_documents
-    from easyner_spark.stages.triples import cooccurrence_triples
-    from pyspark.sql import functions as F
 
     spark = get_spark(
         app_name="easyner_bench",
@@ -64,46 +100,8 @@ def run_bench(sf_dir: str, cpus: str, n_corpus_docs: int | None = None) -> dict:
 
     results: dict[str, float] = {}
 
-    # --- flagship KG pipeline on the synthetic corpus ---
-    # FUSED single-action DAG (scan → extract → split → NER → NEL →
-    # triples), measured after one warm-up pass (codegen + python UDF
-    # worker pool) — the throughput-honest shape; the checkpointed
-    # variant with per-stage commits is exercised by the pipeline CLI
-    # and its tests. Pages are materialized BEFORE the clock: corpus
-    # synthesis is driver-side scaffolding, not engine throughput.
-    pages = pages_df(
-        spark, n_docs=n_corpus_docs, n_partitions=int(cpus) * 4 if cpus.isdigit() else 64
-    ).persist()
-    pages.count()
-    lookup = spark.createDataFrame(
-        [{"entity": e, "id": i, "name": n} for e, i, n in NEL_LOOKUP]
-    )
-
-    def kg_run(src):
-        docs = extract_documents(src, n_batches=64)
-        sents = split_documents(docs).persist()
-        # mentions persisted like scaling_bench: the NEL mint derives
-        # its miss dimension from mentions, and without the cache that
-        # subplan re-executes the whole UDF chain (production reads the
-        # mentions stage table from the warehouse instead)
-        mentions = dict_ner(sents, GAZETTEER).persist()
-        linked, _ = link_entities(mentions, lookup)
-        linked = linked.persist()
-        nt = cooccurrence_triples(linked, sents).count()
-        for df in (sents, mentions, linked):
-            df.unpersist()
-        return nt
-
-    kg_run(pages.limit(1000))  # warm-up
-    stats = extract_documents(pages, n_batches=64).agg(
-        F.count("*").alias("n"), F.sum(F.length("text")).alias("c")
-    ).first()
-    n_docs, n_chars = stats["n"], stats["c"]
-    t0 = time.time()
-    n_triples = kg_run(pages)
-    kg_sec = time.time() - t0
-    pages.unpersist()
-    results["kg_pipeline_synthetic"] = round(kg_sec, 3)
+    kg = kg_pipeline(spark, cpus, n_corpus_docs)
+    results["kg_pipeline_synthetic"] = round(kg["sec"], 3)
 
     headline = [
         "kg_triple_counts",
@@ -185,52 +183,37 @@ def run_bench(sf_dir: str, cpus: str, n_corpus_docs: int | None = None) -> dict:
     # recorded bench run (adding coverage must not read as regression)
     total = round(sum(results.values()), 3)
 
-    # round-5 continuation: every PENDING_R6 contract pair (window-6
-    # registrations) gets a regression row from day one — pulled from
-    # the dict itself so bench coverage can't drift from the registry
-    from easyner_spark.queries import PENDING_R6
-
-    pending = {name: timed(fn) for name, (fn, _sql) in PENDING_R6.items()}
+    # the round-6 registrations, timed as their own block
+    pending = {name: timed(QUERIES[name]) for name in PENDING_R6}
     results.update(pending)
     pending_total = round(sum(pending.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # stamps AFTER the suite: the values capture the window the query
-    # seconds above were actually measured in. BOTH stamps matter:
-    # python and JVM throughput drift INDEPENDENTLY on this host (a
-    # same-day pair of runs measured python 0.69 both times while the
-    # fused KG job went 15.0 -> 23.1 s) — the JVM stamp is a
-    # single-task codegen'd range-sum on the live session.
-    jvm_best = None
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(0, 1_000_000_000, 1, 1).selectExpr(
-            "sum(id) AS s"
-        ).collect()
-        dt = time.time() - t0
-        jvm_best = dt if jvm_best is None or dt < jvm_best else jvm_best
+    # seconds above were actually measured in
+    jvm = jvm_microbench(spark)
     micro = vm_microbench()
     return {
         "metric": "e2e_suite_sec",
         "value": total,
         "unit": "sec",
-        # pending window-6 contracts timed separately — NOT in `value`
+        # round-6 contracts timed separately — NOT in `value`
         # (their rows live in `queries` for per-query tracking)
         "pending_total_sec": pending_total,
         "queries": results,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "kg_docs": n_docs,
-        "kg_chars": int(n_chars),
-        "kg_triples": n_triples,
-        "kg_docs_per_sec": round(n_docs / kg_sec, 1),
-        "kg_chars_per_sec": round(n_chars / kg_sec, 1),
-        "kg_triples_per_sec": round(n_triples / kg_sec, 1),
+        "kg_docs": kg["docs"],
+        "kg_chars": int(kg["chars"]),
+        "kg_triples": kg["triples"],
+        "kg_docs_per_sec": round(kg["docs"] / kg["sec"], 1),
+        "kg_chars_per_sec": round(kg["chars"] / kg["sec"], 1),
+        "kg_triples_per_sec": round(kg["triples"] / kg["sec"], 1),
         "cpus": cpus,
         # single-core window-quality stamps (see vm_microbench docstring
         # and the comment above); r5 host measured python 0.6-0.85 s
         # idle — absolute levels are host-generation-dependent, compare
         # within a host/round only
         "vm_microbench_s": micro,
-        "jvm_microbench_s": round(jvm_best, 3),
+        "jvm_microbench_s": jvm,
     }
 
 

@@ -5,7 +5,7 @@ capture — WITHOUT touching the frozen bench.py / its methodology.
 Usage:
     python bench_extra.py [--repeats N] [--explain-dir DIR] [--sf DIR]
                           [--cpus N] [--kg] name [name ...]
-    python bench_extra.py --all            # every registered + pending query
+    python bench_extra.py --all            # every registered query
 
 Prints one JSON line: {"queries": {name: min_sec}, "samples": {...},
 "sf": ..., "cpus": ..., "vm_microbench_s": ..., "jvm_microbench_s": ...}.
@@ -34,15 +34,12 @@ def main() -> None:
     ap.add_argument("--kg-docs", type=int, default=int(os.environ.get("SPARK_GRAFT_KG_DOCS", "40000")))
     args = ap.parse_args()
 
-    from easyner_spark.queries import PENDING_R6, QUERIES
+    import bench as _bench
+    from easyner_spark.queries import QUERIES
     from easyner_spark.session import get_spark
 
-    allq = dict(QUERIES)
-    for name, (fn, _sql) in PENDING_R6.items():
-        allq.setdefault(name, fn)
-
-    names = list(allq) if args.all else args.names
-    unknown = [n for n in names if n not in allq]
+    names = list(QUERIES) if args.all else args.names
+    unknown = [n for n in names if n not in QUERIES]
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
 
@@ -58,7 +55,7 @@ def main() -> None:
     results: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     for name in names:
-        fn = allq[name]
+        fn = QUERIES[name]
         if args.explain_dir:
             with open(os.path.join(args.explain_dir, f"{name}.txt"), "w") as fh:
                 fh.write(fn(spark, args.sf)._jdf.queryExecution().explainString(
@@ -80,15 +77,8 @@ def main() -> None:
         samples[name] = ss
 
     if args.kg and not args.explain_only:
-        results["kg_pipeline_synthetic"] = round(_kg_pipeline(spark, args.cpus, args.kg_docs), 3)
-
-    jvm_best = None
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(0, 1_000_000_000, 1, 1).selectExpr("sum(id) AS s").collect()
-        dt = time.time() - t0
-        jvm_best = dt if jvm_best is None or dt < jvm_best else jvm_best
-    import bench as _bench
+        kg = _bench.kg_pipeline(spark, args.cpus, args.kg_docs)
+        results["kg_pipeline_synthetic"] = round(kg["sec"], 3)
 
     print(json.dumps({
         "queries": results,
@@ -96,46 +86,8 @@ def main() -> None:
         "sf": args.sf,
         "cpus": args.cpus,
         "vm_microbench_s": _bench.vm_microbench(),
-        "jvm_microbench_s": round(jvm_best, 3),
+        "jvm_microbench_s": _bench.jvm_microbench(spark),
     }))
-
-
-def _kg_pipeline(spark, cpus: str, n_docs: int) -> float:
-    """Same fused-KG shape as bench.py (warm-up + timed pass)."""
-    from pyspark.sql import functions as F
-
-    from easyner_spark.corpus import GAZETTEER, NEL_LOOKUP, pages_df
-    from easyner_spark.stages.extract import extract_documents
-    from easyner_spark.stages.nel import link_entities
-    from easyner_spark.stages.ner_dict import dict_ner
-    from easyner_spark.stages.split import split_documents
-    from easyner_spark.stages.triples import cooccurrence_triples
-
-    pages = pages_df(
-        spark, n_docs=n_docs, n_partitions=int(cpus) * 4 if cpus.isdigit() else 64
-    ).persist()
-    pages.count()
-    lookup = spark.createDataFrame(
-        [{"entity": e, "id": i, "name": n} for e, i, n in NEL_LOOKUP]
-    )
-
-    def kg_run(src):
-        docs = extract_documents(src, n_batches=64)
-        sents = split_documents(docs).persist()
-        mentions = dict_ner(sents, GAZETTEER).persist()
-        linked, _ = link_entities(mentions, lookup)
-        linked = linked.persist()
-        nt = cooccurrence_triples(linked, sents).count()
-        for df in (sents, mentions, linked):
-            df.unpersist()
-        return nt
-
-    kg_run(pages.limit(1000))  # warm-up
-    t0 = time.time()
-    kg_run(pages)
-    dt = time.time() - t0
-    pages.unpersist()
-    return dt
 
 
 if __name__ == "__main__":

@@ -91,13 +91,16 @@ _SPREAD_OPEN_COST = 4 * 1024 * 1024  # spark.sql.files.openCostInBytes default
 
 def _table_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk bytes of a testdata table (file or directory); None for
-    non-local paths (cluster: leave the scan alone)."""
+    paths that do not exist locally (cluster storage: leave the scan
+    alone — os.walk would see nothing and report 0 bytes)."""
     import os
 
     path = f"{sf_dir}/{name}.parquet"
     try:
         if os.path.isfile(path):
             return os.path.getsize(path)
+        if not os.path.isdir(path):
+            return None
         return sum(
             os.path.getsize(os.path.join(r, f))
             for r, _d, fs in os.walk(path)
@@ -1157,10 +1160,9 @@ def _minhash_sig_exprs_sql() -> str:
     )
 
 
-@register(
-    "dedup_minhash_pairs",
-    _SHINGLES_CTE
-    + f""",
+# per-doc MinHash signature + its two LSH bands of four hashes, appended to
+# _SHINGLES_CTE by every banded dedup oracle
+_MINHASH_BANDS_CTE = f""",
 sigs AS (
   SELECT doc_id, {_minhash_sig_exprs_sql()}
   FROM shingles GROUP BY doc_id
@@ -1169,7 +1171,14 @@ bands AS (
   SELECT doc_id, unnest([md5(h0 || h1 || h2 || h3), md5(h4 || h5 || h6 || h7)]) AS band_hash,
          unnest([0, 1]) AS band_id
   FROM sigs
-)
+)"""
+
+
+@register(
+    "dedup_minhash_pairs",
+    _SHINGLES_CTE
+    + _MINHASH_BANDS_CTE
+    + """
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM bands a JOIN bands b
   ON a.band_hash = b.band_hash AND a.band_id = b.band_id AND a.doc_id < b.doc_id
@@ -1626,7 +1635,10 @@ def _lsh_coef_literal(plane: int) -> str:
 
 def _lsh_bucket_expr() -> str:
     """BIGINT bucket id of the `embedding` column under the md5-parity
-    hyperplane family — the Spark twin of the oracle's proj/bits CTEs."""
+    hyperplane family — the Spark twin of the oracle's proj/bits CTEs.
+    A vector wider than _LSH_COEF_LEN raises whatever the ANSI setting:
+    without ANSI, element_at past the coefficient array is null and the
+    bucket would be silently wrong."""
     terms = []
     for plane in range(LSH_PLANES):
         p = (
@@ -1635,7 +1647,11 @@ def _lsh_bucket_expr() -> str:
             " 0D, (acc, v) -> acc + v)"
         )
         terms.append(f"CASE WHEN ({p}) >= 0 THEN {1 << plane} ELSE 0 END")
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
+    return (
+        f"CASE WHEN size(embedding) > {_LSH_COEF_LEN} THEN raise_error("
+        f"'LSH bucket: embedding wider than {_LSH_COEF_LEN} dims')"
+        " ELSE CAST(" + " + ".join(terms) + " AS BIGINT) END"
+    )
 
 
 @register(
@@ -2005,16 +2021,8 @@ def q_split_udf_passthrough(spark, sf_dir):
 @register(
     "dedup_components",
     _SHINGLES_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
-    + f""",
-sigs AS (
-  SELECT doc_id, {_minhash_sig_exprs_sql()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, unnest([md5(h0 || h1 || h2 || h3), md5(h4 || h5 || h6 || h7)]) AS band_hash,
-         unnest([0, 1]) AS band_id
-  FROM sigs
-),
+    + _MINHASH_BANDS_CTE
+    + """,
 pairs AS (
   SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
   FROM bands a JOIN bands b
@@ -2091,22 +2099,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     then exact cosine >= threshold inside the bucket. Complements the
     lexical dedup family (exact / Jaccard / MinHash / SimHash)."""
     e = _embeddings(spark, sf_dir)
-    v = e.select("vec_id", F.posexplode("embedding").alias("pos", "val"))
-    planes = F.explode(F.sequence(F.lit(0), F.lit(LSH_PLANES - 1))).alias("plane")
-    coef = F.expr(
-        "CASE WHEN ascii(substring(md5(CAST(plane AS STRING) || '|' ||"
-        " CAST(pos AS STRING)), 1, 1)) % 2 = 0 THEN 1 ELSE -1 END"
-    )
-    proj = (
-        v.select("vec_id", "pos", "val", planes)
-        .groupBy("vec_id", "plane")
-        .agg(F.sum(F.col("val").cast("double") * coef).alias("p"))
-    )
-    buckets = proj.groupBy("vec_id").agg(
-        F.sum(F.expr("CASE WHEN p >= 0 THEN shiftleft(1, plane) ELSE 0 END"))
-        .cast("bigint")
-        .alias("bucket")
-    )
+    buckets = e.select("vec_id", F.expr(_lsh_bucket_expr()).alias("bucket"))
     a = buckets.select(F.col("vec_id").alias("vec_a"), "bucket")
     b = buckets.select(F.col("vec_id").alias("vec_b"), "bucket")
     pairs = a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b")).select(
@@ -4731,16 +4724,8 @@ def q_tpch_priority_late_ship(spark, sf_dir):
 @register(
     "train_corpus_curated",
     _SHINGLES_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
-    + f""",
-sigs AS (
-  SELECT doc_id, {_minhash_sig_exprs_sql()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, unnest([md5(h0 || h1 || h2 || h3), md5(h4 || h5 || h6 || h7)]) AS band_hash,
-         unnest([0, 1]) AS band_id
-  FROM sigs
-),
+    + _MINHASH_BANDS_CTE
+    + """,
 pairs AS (
   SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
   FROM bands a JOIN bands b
@@ -4942,16 +4927,8 @@ def q_kg_entity_trend(spark, sf_dir):
 @register(
     "dedup_minhash_verified",
     _SHINGLES_CTE
-    + f""",
-sigs AS (
-  SELECT doc_id, {_minhash_sig_exprs_sql()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, unnest([md5(h0 || h1 || h2 || h3), md5(h4 || h5 || h6 || h7)]) AS band_hash,
-         unnest([0, 1]) AS band_id
-  FROM sigs
-),
+    + _MINHASH_BANDS_CTE
+    + """,
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b
@@ -5856,14 +5833,10 @@ def q_kg_graph_label_prop(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# pending round-6 registrations
+# round-6 registrations
 # ---------------------------------------------------------------------------
-# Window 5 is saturated (see the _DRIVER_WINDOWS round-6 note), so these
-# contract pairs are oracle-gated by the LOCAL sweep only this round
-# (tests/test_queries_oracle.py::test_pending_r6_queries_match_duckdb)
-# and move into the registry + window 6 with a one-line register() call
-# next round. Same shape rules as registered queries: scalar columns,
-# integer-exact arithmetic, shared graph definition (_WU_SQL/wuedges).
+# Same shape rules as the queries above: scalar columns, integer-exact
+# arithmetic, shared graph definition (_WU_SQL/wuedges).
 
 # ONE seed rule for every seeded backbone gate (BFS, personalized
 # PageRank): the GATE_N_SEEDS lexicographically smallest backbone
@@ -5922,7 +5895,8 @@ v{h} AS MATERIALIZED (
     )
 
 
-def _q_kg_graph_bfs_hops(spark, sf_dir):
+@register("kg_graph_bfs_hops", _bfs_hops_oracle())
+def q_kg_graph_bfs_hops(spark, sf_dir):
     """Minimum hop distance from the GATE_N_SEEDS lexicographically
     smallest backbone entities to every entity within BFS_MAX_HOPS,
     over the TWOHOP_TOPK_EDGES-strongest-edge backbone (the raw
@@ -5968,7 +5942,8 @@ FROM deg d LEFT JOIN tcnt t ON d.node = t.node
 )
 
 
-def _q_kg_graph_clustering(spark, sf_dir):
+@register("kg_graph_clustering", _CLUSTERING_ORACLE)
+def q_kg_graph_clustering(spark, sf_dir):
     """Per-node local clustering coefficient over the top-K
     co-occurrence backbone (the raw graph is complete at every SF —
     cc would be uniformly 1e6, vacuous; the sparse backbone makes the
@@ -6028,7 +6003,8 @@ FROM v{HARMONIC_MAX_HOPS} WHERE hops >= 1 GROUP BY seed"""
     )
 
 
-def _q_kg_graph_harmonic(spark, sf_dir):
+@register("kg_graph_harmonic", _harmonic_oracle())
+def q_kg_graph_harmonic(spark, sf_dir):
     """Bounded harmonic centrality over the top-K co-occurrence
     backbone: per entity, the number of entities within
     HARMONIC_MAX_HOPS hops and Σ 1/d over them — held exact by scaling
@@ -6079,7 +6055,8 @@ FROM (
 )
 
 
-def _q_kg_entity_weakest_link(spark, sf_dir):
+@register("kg_entity_weakest_link", _WEAKEST_ORACLE)
+def q_kg_entity_weakest_link(spark, sf_dir):
     """Per-entity weakest relation — the minimum-evidence incident
     co-occurrence edge per node ((w, a, b) unique ⇒ deterministic
     argmin), i.e. the relations a KG curator re-checks first. The
@@ -6148,7 +6125,8 @@ FROM r CROSS JOIN need d
 """
 
 
-def _q_web_crawl_budget(spark, sf_dir):
+@register("web_crawl_budget", _CRAWL_BUDGET_ORACLE)
+def q_web_crawl_budget(spark, sf_dir):
     """Exact crawl-budget apportionment: allocate CRAWL_BUDGET page
     fetches across hosts proportional to host text volume by Hamilton's
     largest-remainder method — floor quotas plus one bonus fetch to
@@ -6256,7 +6234,8 @@ LEFT JOIN sup{TRUSS_MAX_ITER + 1} s ON e.a = s.a AND e.b = s.b"""
     )
 
 
-def _q_kg_graph_truss(spark, sf_dir):
+@register("kg_graph_truss", _truss_oracle())
+def q_kg_graph_truss(spark, sf_dir):
     """Bounded k-truss peel over the top-K backbone: the edge-level
     dense core (every surviving edge sits in >= TRUSS_T triangles of
     the surviving subgraph, support recomputed per round) — stricter
@@ -6288,7 +6267,8 @@ GROUP BY d.doc_id
 )
 
 
-def _q_doc_novelty(spark, sf_dir):
+@register("doc_novelty", _NOVELTY_ORACLE)
+def q_doc_novelty(spark, sf_dir):
     """Per-document novelty: the share of a doc's distinct 3-shingles
     whose FIRST corpus occurrence (min doc_id — ingest-order proxy,
     deterministic on the zero-padded ids) is this document. The
@@ -6370,7 +6350,8 @@ r0 AS (SELECT node, CAST(CASE WHEN is_seed = 1 THEN {PR_SCALE} ELSE 0 END
     )
 
 
-def _q_kg_graph_ppr(spark, sf_dir):
+@register("kg_graph_ppr", _ppr_oracle())
+def q_kg_graph_ppr(spark, sf_dir):
     """Personalized PageRank from the two lexicographically smallest
     backbone entities — the seed-biased relevance ranking a KG serves
     for "entities related to THIS seed set" panels (uniform PageRank
@@ -6445,7 +6426,17 @@ def host_links_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_web_host_linkrank(spark, sf_dir):
+@register(
+    "web_host_linkrank",
+    _weighted_pagerank_oracle(
+        WPAGERANK_ITERS,
+        WPR_SCALE,
+        prefix="",  # _HOST_LINKS_SQL reads documents directly
+        wedges_sql=_HOST_LINKS_SQL,
+        key_alias="host",
+    ),
+)
+def q_web_host_linkrank(spark, sf_dir):
     """Host-level link-graph PageRank — the crawl-priority/authority
     ranking a web pipeline runs over its link graph: synthesize the
     deterministic per-doc outlinks, collapse to a weighted host×host
@@ -6493,7 +6484,8 @@ LEFT JOIN recip r ON h.host = r.host
 """
 
 
-def _q_web_host_reciprocity(spark, sf_dir):
+@register("web_host_reciprocity", _RECIPROCITY_ORACLE)
+def q_web_host_reciprocity(spark, sf_dir):
     """Per-host link reciprocity over the directed host graph — the
     standard link-spam / partnership signal (mutual-link rings stand
     out as reciprocity → 1, organic authority sites stay low): distinct
@@ -6592,7 +6584,8 @@ FROM h{HITS_ITERS} h JOIN a{HITS_ITERS} a ON h.node = a.node"""
     )
 
 
-def _q_web_host_hits(spark, sf_dir):
+@register("web_host_hits", _hits_oracle())
+def q_web_host_hits(spark, sf_dir):
     """Kleinberg hubs-and-authorities over the weighted host link
     graph — the link-analysis dual of web_host_linkrank (PageRank says
     "endorsed"; HITS separates "points at good pages" from "is a good
@@ -6624,7 +6617,8 @@ FROM cnt
 """
 
 
-def _q_events_type_transitions(spark, sf_dir):
+@register("events_type_transitions", _TRANSITIONS_ORACLE)
+def q_events_type_transitions(spark, sf_dir):
     """Per-user event-type transition matrix (first-order Markov
     counts + exact row-ppm shares): lead() over the per-user stream
     ordered by (ts, event_id) — event_id breaks timestamp ties, so
@@ -6679,7 +6673,8 @@ FROM pairs JOIN ca caa ON pairs.a = caa.ent_id
 )
 
 
-def _q_kg_relation_pmi(spark, sf_dir):
+@register("kg_relation_pmi", _PMI_ORACLE)
+def q_kg_relation_pmi(spark, sf_dir):
     """Log-free PMI (association lift) per co-occurring entity pair:
     lift_ppm = P(a,b) / (P(a)·P(b)) in exact integer ppm =
     (n_ab·N·1e6) div (c_a·c_b) over sentence-level presence — the
@@ -6819,7 +6814,8 @@ def _bucket_prefix_agg(tbl, key, val, agg_fn, out, inclusive=False):
     )
 
 
-def _q_doc_length_percentiles(spark, sf_dir):
+@register("doc_length_percentiles", _PCT_ORACLE)
+def q_doc_length_percentiles(spark, sf_dir):
     """Exact corpus length percentiles (P50/P90/P99 of per-doc token
     counts) WITHOUT a global sort: value(p) = min length whose
     cumulative doc count ≥ ceil(p·n/100) — type-1 (lower) quantile,
@@ -6876,7 +6872,8 @@ FROM s
 """
 
 
-def _q_web_host_gini(spark, sf_dir):
+@register("web_host_gini", _GINI_ORACLE)
+def q_web_host_gini(spark, sf_dir):
     """Source-concentration Gini over per-host text volume, exact
     integer ppm — the mixture-diversity dial crawl/curation monitors
     watch (gini→1: the corpus is one domain wearing a trenchcoat;
@@ -6943,7 +6940,8 @@ FROM tot CROSS JOIN d CROSS JOIN s
 )
 
 
-def _q_eval_run_agreement_kappa(spark, sf_dir):
+@register("eval_run_agreement_kappa", _KAPPA_ORACLE)
+def q_eval_run_agreement_kappa(spark, sf_dir):
     """Chance-corrected agreement (Cohen's kappa, exact integer ppm)
     between two deterministic NER labelings of the full token stream —
     the eval primitive that raw accuracy fakes on NER corpora: both
@@ -7047,7 +7045,8 @@ FROM pm GROUP BY event_type
 """
 
 
-def _q_events_watermark_late(spark, sf_dir):
+@register("events_watermark_late", _WM_LATE_ORACLE)
+def q_events_watermark_late(spark, sf_dir):
     """Watermark late-data audit (the batch twin of the streaming
     ingest's 1 h watermark): an event is LATE iff its event time is
     more than WM_DELAY_US behind the max event time of all events
@@ -7150,7 +7149,8 @@ FROM cands GROUP BY subj, obj
 )
 
 
-def _q_kg_negative_samples(spark, sf_dir):
+@register("kg_negative_samples", _NEGSAMPLE_ORACLE)
+def q_kg_negative_samples(spark, sf_dir):
     """Deterministic negative sampling for KG-embedding training
     (TransE-style corrupt-object generation): for every strong
     relation (subj, obj) in the backbone KG, emit the corrupted
@@ -7237,7 +7237,8 @@ FROM tot CROSS JOIN med CROSS JOIN madq CROSS JOIN outl
 )
 
 
-def _q_doc_length_outliers(spark, sf_dir):
+@register("doc_length_outliers", _MAD_ORACLE)
+def q_doc_length_outliers(spark, sf_dir):
     """Robust length-outlier screen: median + MAD (median absolute
     deviation) of per-doc token counts, and the count/ppm of docs with
     |len − median| > MAD_K·MAD — the outlier rule curation uses where
@@ -7319,7 +7320,8 @@ WHERE rn <= {TOPK_TERMS}
 )
 
 
-def _q_doc_top_terms(spark, sf_dir):
+@register("doc_top_terms", _TOPTERMS_ORACLE)
+def q_doc_top_terms(spark, sf_dir):
     """Per-document keyword extraction: the TOPK_TERMS most
     characteristic terms by the log-free TF-IDF analog score =
     tf · (N·1e6 div df) — term frequency weighted by integer-ppm
@@ -7438,7 +7440,8 @@ FROM comp c LEFT JOIN oreach r ON c.node = r.node
     )
 
 
-def _q_kg_graph_scc(spark, sf_dir):
+@register("kg_graph_scc", _scc_oracle())
+def q_kg_graph_scc(spark, sf_dir):
     """Bounded strongly-connected components over the directed top-K
     co-occurrence backbone — the cycle detector for directional KG
     relations ("A precedes B" rings vs pure hierarchies), and the
@@ -7547,7 +7550,8 @@ FROM ipos GROUP BY source
 """
 
 
-def _q_train_interleave_order(spark, sf_dir):
+@register("train_interleave_order", _INTERLEAVE_ORACLE)
+def q_train_interleave_order(spark, sf_dir):
     """Deterministic global training order audit — the shuffle a data
     loader needs reproduced bit-identically on any cluster layout:
     global position = rank of (md5('interleave:'||doc_id), doc_id),
@@ -7625,7 +7629,8 @@ FROM g JOIN best b ON g.canon_url = b.canon_url AND b.rn = 1
 )
 
 
-def _q_dedup_url_recrawl(spark, sf_dir):
+@register("dedup_url_recrawl", _URL_RECRAWL_ORACLE)
+def q_dedup_url_recrawl(spark, sf_dir):
     """URL-keyed recrawl dedup — the first dedup every crawl pipeline
     runs, BEFORE any content hashing: canonicalize (ops/web.py rule
     chain), group by canonical URL, keep the best capture (longest
@@ -7734,7 +7739,8 @@ mdegs AS MATERIALIZED (
     )
 
 
-def _q_kg_graph_modularity(spark, sf_dir):
+@register("kg_graph_modularity", _modularity_oracle())
+def q_kg_graph_modularity(spark, sf_dir):
     """Weighted-modularity trajectory of the label-prop run — the
     quality metric that tells a KG curator whether detected
     communities are real structure (per round r, the global
@@ -7846,7 +7852,8 @@ FROM srk WHERE rk <= {PERSRC_K}
 """
 
 
-def _q_train_per_source_sample(spark, sf_dir):
+@register("train_per_source_sample", _PERSRC_ORACLE)
+def q_train_per_source_sample(spark, sf_dir):
     """Deterministic per-source K-sample — the reproducible reservoir
     every mixture pipeline needs (inspection shards, per-source eval
     holdouts): keep each source's PERSRC_K docs with the smallest
@@ -7914,7 +7921,8 @@ FROM pbin GROUP BY bin_id
 )
 
 
-def _q_train_packing_manifest(spark, sf_dir):
+@register("train_packing_manifest", _PACKING_ORACLE)
+def q_train_packing_manifest(spark, sf_dir):
     """Sequence-packing manifest — the bin assignment a training data
     loader materializes before tokenizing: documents stream in the
     deterministic interleave order (_IH_SQL — the SAME key rule as
@@ -8000,7 +8008,8 @@ FROM frames
 """
 
 
-def _q_multimodal_audio_frames(spark, sf_dir):
+@register("multimodal_audio_frames", _AUDIO_FRAMES_ORACLE)
+def q_multimodal_audio_frames(spark, sf_dir):
     """Audio framing grid over opaque blobs — the window/hop manifest
     an audio feature extractor (MFCC/VAD/whisper-style chunking)
     materializes BEFORE any decode: interpret each payload as 8 kHz
@@ -8059,59 +8068,37 @@ def _q_multimodal_audio_frames(spark, sf_dir):
     )
 
 
-# name -> (query fn, oracle sql); registered into QUERIES/ORACLES +
-# window 6 next round, alongside the forced kg_graph_two_hop /
-# index_postings_rare re-gates.
-PENDING_R6: dict = {
-    "kg_graph_bfs_hops": (_q_kg_graph_bfs_hops, _bfs_hops_oracle()),
-    "kg_graph_clustering": (_q_kg_graph_clustering, _CLUSTERING_ORACLE),
-    "events_type_transitions": (_q_events_type_transitions, _TRANSITIONS_ORACLE),
-    "kg_graph_harmonic": (_q_kg_graph_harmonic, _harmonic_oracle()),
-    "web_host_hits": (_q_web_host_hits, _hits_oracle()),
-    "kg_graph_ppr": (_q_kg_graph_ppr, _ppr_oracle()),
-    "web_host_reciprocity": (_q_web_host_reciprocity, _RECIPROCITY_ORACLE),
-    "kg_entity_weakest_link": (_q_kg_entity_weakest_link, _WEAKEST_ORACLE),
-    "doc_novelty": (_q_doc_novelty, _NOVELTY_ORACLE),
-    "kg_graph_truss": (_q_kg_graph_truss, _truss_oracle()),
-    "web_crawl_budget": (_q_web_crawl_budget, _CRAWL_BUDGET_ORACLE),
-    "kg_relation_pmi": (_q_kg_relation_pmi, _PMI_ORACLE),
-    "eval_run_agreement_kappa": (_q_eval_run_agreement_kappa, _KAPPA_ORACLE),
-    "events_watermark_late": (_q_events_watermark_late, _WM_LATE_ORACLE),
-    "kg_negative_samples": (_q_kg_negative_samples, _NEGSAMPLE_ORACLE),
-    "doc_length_outliers": (_q_doc_length_outliers, _MAD_ORACLE),
-    "doc_top_terms": (_q_doc_top_terms, _TOPTERMS_ORACLE),
-    "doc_length_percentiles": (_q_doc_length_percentiles, _PCT_ORACLE),
-    "web_host_gini": (_q_web_host_gini, _GINI_ORACLE),
-    "web_host_linkrank": (
-        _q_web_host_linkrank,
-        _weighted_pagerank_oracle(
-            WPAGERANK_ITERS,
-            WPR_SCALE,
-            prefix="",  # _HOST_LINKS_SQL reads documents directly
-            wedges_sql=_HOST_LINKS_SQL,
-            key_alias="host",
-        ),
-    ),
-    "kg_graph_scc": (_q_kg_graph_scc, _scc_oracle()),
-    "train_interleave_order": (
-        _q_train_interleave_order,
-        _INTERLEAVE_ORACLE,
-    ),
-    "dedup_url_recrawl": (_q_dedup_url_recrawl, _URL_RECRAWL_ORACLE),
-    "kg_graph_modularity": (_q_kg_graph_modularity, _modularity_oracle()),
-    "train_per_source_sample": (
-        _q_train_per_source_sample,
-        _PERSRC_ORACLE,
-    ),
-    "train_packing_manifest": (
-        _q_train_packing_manifest,
-        _PACKING_ORACLE,
-    ),
-    "multimodal_audio_frames": (
-        _q_multimodal_audio_frames,
-        _AUDIO_FRAMES_ORACLE,
-    ),
-}
+# the queries registered in round 6 (first driver row: window 6); bench.py
+# times them as its `pending_total_sec` block
+PENDING_R6: tuple[str, ...] = (
+    "kg_graph_bfs_hops",
+    "kg_graph_clustering",
+    "events_type_transitions",
+    "kg_graph_harmonic",
+    "web_host_hits",
+    "kg_graph_ppr",
+    "web_host_reciprocity",
+    "kg_entity_weakest_link",
+    "doc_novelty",
+    "kg_graph_truss",
+    "web_crawl_budget",
+    "kg_relation_pmi",
+    "eval_run_agreement_kappa",
+    "events_watermark_late",
+    "kg_negative_samples",
+    "doc_length_outliers",
+    "doc_top_terms",
+    "doc_length_percentiles",
+    "web_host_gini",
+    "web_host_linkrank",
+    "kg_graph_scc",
+    "train_interleave_order",
+    "dedup_url_recrawl",
+    "kg_graph_modularity",
+    "train_per_source_sample",
+    "train_packing_manifest",
+    "multimodal_audio_frames",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -8128,10 +8115,20 @@ PENDING_R6: dict = {
 # rows/round (two windows while N <= 100; LRU rotation achieves the
 # bound for any N); enforced by
 # tests/test_queries_oracle.py::test_driver_window_union_invariant,
-# plus _MUST_REGATE below for semantics-changed queries whose old
+# plus _MUST_REGATE for semantics-changed queries whose old
 # rows gate outputs that no longer exist).
 # The local sweep covers all entries cell-exact regardless of order;
 # this block only chooses WHICH 50 the driver anchors each round.
+
+# Queries whose registered semantics changed AFTER their newest driver
+# row (de-vacuoused late in round 5): their old rows gate outputs that
+# no longer exist, so their next window appearance is MANDATORY — the
+# horizon test alone would count the stale rows as valid evidence. The
+# union-invariant test enforces each entry once its round's window is
+# authored.
+_MUST_REGATE: dict[int, list[str]] = {
+    6: ["kg_graph_two_hop", "index_postings_rare"],
+}
 
 _DRIVER_WINDOWS: dict[int, list[str]] = {
     4: [
@@ -8256,35 +8253,35 @@ _DRIVER_WINDOWS: dict[int, list[str]] = {
         # invariant still covers it via the previous window)
         "kg_graph_label_prop",
     ],
-    # ROUND 6 NOTE: kg_graph_two_hop and index_postings_rare were
-    # de-vacuoused late in round 5 (backbone / bottom-k semantics);
-    # their r4 driver rows gated the OLD vacuous outputs, and window 5
-    # was already saturated (|w4 ∪ w5| == all 99 registered queries, so
-    # no eviction candidate existed). Both should take window-6 slots —
-    # that is when the rewritten semantics first meet the driver. Until
-    # then they are covered by the local cell-exact sweep at
-    # sf0.001/0.01.
-    #
-    # CAPACITY MATH for the round-6 rotation: registering the
-    # PENDING_R6 queries pushes N past 100, where a strict two-window
-    # freshness rule is unsatisfiable (the driver grants 50 rows per
-    # round, so no schedule can gate N > 100 queries within two
-    # rounds). The union-invariant test therefore checks a
-    # ceil(N / 50)-round horizon — the information-theoretic bound,
-    # achieved by LRU rotation. Window 6 = all PENDING_R6 names (new
-    # queries have no prior row) + the two de-vacuoused reruns + LRU
-    # veterans from window 4's list; the remaining w4-only veterans
-    # rotate in at round 7 inside the 3-round horizon.
-}
-
-# Queries whose registered semantics changed AFTER their newest driver
-# row (de-vacuoused late in round 5): their old rows gate outputs that
-# no longer exist, so their next window appearance is MANDATORY — the
-# horizon test alone would count the stale rows as valid evidence. The
-# union-invariant test enforces each entry once its round's window is
-# authored.
-_MUST_REGATE: dict[int, list[str]] = {
-    6: ["kg_graph_two_hop", "index_postings_rare"],
+    6: [
+        # new in round 6 (never had a driver row)
+        *PENDING_R6,
+        # de-vacuoused late in round 5: their round-4 rows gate old outputs
+        *_MUST_REGATE[6],
+        # least-gated veterans: one driver row each, in window 4; the
+        # other 26 window-4-only names must take window-7 slots
+        "corpus_source_stats",
+        "kg_graph_nodes",
+        "kg_graph_edges",
+        "kg_graph_pagerank",
+        "kg_graph_triangles",
+        "merge_runs_union",
+        "train_sample_hash",
+        "train_stratified_quality",
+        "token_budget_shards",
+        "dedup_exact_keep_best",
+        "web_url_canonical",
+        "web_domain_stats",
+        "web_boilerplate_ngrams",
+        "web_boilerplate_ratio",
+        "tpch_small_quantity_revenue",
+        "events_asof_purchase",
+        "events_interval_overlap",
+        "doc_length_deciles",
+        "events_rollup_cascade",
+        "kg_sql_surface",
+        "doc_rarity_idf",
+    ],
 }
 
 _DRIVER_ROUND = max(_DRIVER_WINDOWS)

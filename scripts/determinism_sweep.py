@@ -26,12 +26,10 @@ WORKER = r"""
 import hashlib, json, sys
 master, shuffle, sf_dir, out_path = sys.argv[1:5]
 from easyner_spark.session import get_spark
-from easyner_spark.queries import PENDING_R6, QUERIES
+from easyner_spark.queries import QUERIES
 spark = get_spark(master=master, shuffle_partitions=int(shuffle), app_name="det")
-# pending next-round registrations meet the driver eventually; sweep them now
-todo = dict(QUERIES, **{n: fn for n, (fn, _sql) in PENDING_R6.items()})
 out = {}
-for name, fn in sorted(todo.items()):
+for name, fn in sorted(QUERIES.items()):
     df = fn(spark, sf_dir)
     # scalar-only contract outputs (CLAUDE.md): repr() below would hash
     # list cells happily, hiding the driver-canonicalizer crash class
@@ -52,8 +50,10 @@ json.dump(out, open(out_path, "w"))
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    configs = [("local[3]", "7", "/tmp/det_sweep_a.json"),
-               ("local[16]", "64", "/tmp/det_sweep_b.json")]
+    # both knobs differ between the two layouts; neither oversubscribes
+    # a 4-core host
+    configs = [("local[2]", "3", "/tmp/det_sweep_a.json"),
+               ("local[4]", "16", "/tmp/det_sweep_b.json")]
     for master, shuffle, path in configs:
         subprocess.run(
             [sys.executable, "-c", WORKER, master, shuffle, sf_dir, path],

@@ -17,10 +17,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import vm_microbench  # noqa: E402
 
@@ -34,7 +35,8 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from easyner_spark.corpus import GAZETTEER, NEL_LOOKUP, pages_df
+    from easyner_spark.corpus import GAZETTEER, pages_df
+    from easyner_spark.pipeline import fused_kg_triples, nel_lookup_frame
     from easyner_spark.session import get_spark
     from easyner_spark.stages.extract import extract_documents
     from easyner_spark.stages.nel import link_entities
@@ -50,32 +52,19 @@ def main() -> None:
     )
     pages = pages_df(spark, n_docs=args.docs, n_partitions=args.cpus * 4).persist()
     pages.count()
-    lookup = spark.createDataFrame(
-        [{"entity": e, "id": i, "name": n} for e, i, n in NEL_LOOKUP]
-    )
 
     def noop(df) -> None:
         df.write.format("noop").mode("overwrite").save()
 
-    def fused_run(src) -> int:
-        docs = extract_documents(src, n_batches=64)
-        sents = split_documents(docs).persist()
-        mentions = dict_ner(sents, GAZETTEER).persist()
-        linked, _ = link_entities(mentions, lookup)
-        linked = linked.persist()
-        nt = cooccurrence_triples(linked, sents).count()
-        for df in (sents, mentions, linked):
-            df.unpersist()
-        return nt
-
-    fused_run(pages.limit(1000))  # warm-up: codegen + python worker pool
+    # warm-up: codegen + python worker pool
+    fused_kg_triples(pages.limit(1000), n_batches=64)
 
     # --- the floor: min-of-N fused passes ---
     fused = []
     n_triples = 0
     for _ in range(args.passes):
         t0 = time.time()
-        n_triples = fused_run(pages)
+        n_triples = fused_kg_triples(pages, n_batches=64)
         fused.append(round(time.time() - t0, 2))
 
     # --- progressive cuts (min-of-2 each; deltas = per-stage cost) ---
@@ -100,7 +89,7 @@ def main() -> None:
     # does): its mint path has multiple consumers of mentions
     mp = mentions.persist()
     mp.count()
-    linked, _ = link_entities(mp, lookup)
+    linked, _ = link_entities(mp, nel_lookup_frame(spark))
     t_linked = timed(lambda: noop(linked))
     lp = linked.persist()
     lp.count()

@@ -64,12 +64,8 @@ print("PREPARED", flush=True)
 WORKER = r"""
 import glob, json, os, sys, time, zipfile
 n_exec, exec_cores, path = int(sys.argv[1]), int(sys.argv[2]), sys.argv[3]
-from easyner_spark.corpus import GAZETTEER, NEL_LOOKUP
+from easyner_spark.pipeline import fused_kg_triples
 from easyner_spark.stages.extract import extract_documents
-from easyner_spark.stages.split import split_documents
-from easyner_spark.stages.ner_dict import dict_ner
-from easyner_spark.stages.nel import link_entities
-from easyner_spark.stages.triples import cooccurrence_triples
 from pyspark.sql import SparkSession, functions as F
 
 # multi-executor emulation: Spark standalone local-cluster mode — one
@@ -100,21 +96,9 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 spark.sparkContext.addPyFile(zip_path)
-lookup = spark.createDataFrame([{"entity": e, "id": i, "name": nm} for e, i, nm in NEL_LOOKUP])
-
-def pipeline(pages):
-    docs = extract_documents(pages, n_batches=256)
-    sents = split_documents(docs).persist()
-    m = dict_ner(sents, GAZETTEER).persist()
-    linked, _ = link_entities(m, lookup)
-    linked = linked.persist()
-    nt = cooccurrence_triples(linked, sents).count()
-    for df in (sents, m, linked):
-        df.unpersist()
-    return nt
 
 # warm-up on a slice: codegen + python worker pool, negligible work
-pipeline(spark.read.parquet(path).limit(4000))
+fused_kg_triples(spark.read.parquet(path).limit(4000), n_batches=256)
 
 pages = spark.read.parquet(path)
 stats = extract_documents(pages, n_batches=256).agg(
@@ -125,7 +109,7 @@ stats = extract_documents(pages, n_batches=256).agg(
 dt = None
 for _ in range(2):
     t0 = time.time()
-    nt = pipeline(pages)
+    nt = fused_kg_triples(pages, n_batches=256)
     d = time.time() - t0
     dt = d if dt is None or d < dt else dt
 print(json.dumps({"executors": n_exec, "cores_per_executor": exec_cores,

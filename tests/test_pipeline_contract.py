@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from easyner_spark.corpus import GAZETTEER, NEL_LOOKUP, make_pages_pdf, pages_df
 from easyner_spark.oracle.pyoracle import precision_recall, run_oracle
+from easyner_spark.pipeline import fused_kg_triples, nel_lookup_frame
 from easyner_spark.stages.analysis import entity_frequency, id_frequency
 from easyner_spark.stages.extract import audit_hashes, extract_documents
 from easyner_spark.stages.ner_dict import dict_ner
@@ -35,10 +36,7 @@ def engine(spark):
     docs = extract_documents(pages, n_batches=8).cache()
     sents = split_documents(docs).cache()
     mentions = dict_ner(sents, GAZETTEER).cache()
-    lookup = spark.createDataFrame(
-        [{"entity": e, "id": i, "name": n} for e, i, n in NEL_LOOKUP]
-    )
-    linked, new_ents = link_entities(mentions, lookup)
+    linked, new_ents = link_entities(mentions, nel_lookup_frame(spark))
     linked = linked.cache()
     triples = cooccurrence_triples(linked, sents).cache()
     return {
@@ -89,6 +87,13 @@ def test_triples_pr_at_least_095(engine, oracle):
     assert p == 1.0 and r == 1.0  # dict path is exactly reproducible
 
 
+def test_fused_kg_triples_matches_staged_chain(engine, spark):
+    """The benches' single-action chain yields the same triples as the
+    stage-by-stage frames above."""
+    pages = pages_df(spark, n_docs=N_DOCS)
+    assert fused_kg_triples(pages, n_batches=8) == engine["triples"].count()
+
+
 def test_entity_frequency_ranking_identical(engine, oracle):
     freq = entity_frequency(engine["mentions"]).collect()
     got_rank = [(r["surface"], r["total_count"]) for r in freq]
@@ -113,10 +118,7 @@ def test_nel_mint_deterministic_and_reused(engine, spark):
     # minted ids are dense easyner:{n}
     assert all(i.startswith("easyner:") for i in new1)
     # re-running the link yields the identical minted dimension
-    lookup = spark.createDataFrame(
-        [{"entity": e, "id": i, "name": n} for e, i, n in NEL_LOOKUP]
-    )
-    _, new2 = link_entities(engine["mentions"], lookup)
+    _, new2 = link_entities(engine["mentions"], nel_lookup_frame(spark))
     assert sorted(r["id"] for r in new2.collect()) == new1
 
 

@@ -288,7 +288,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 
 
 def test_pending_r6_queries_have_no_single_partition_exchange(spark):
-    """The non-iterative pending window-6 contracts must keep every
+    """The non-iterative round-6 (window-6) contracts must keep every
     exchange hash-partitioned and every window keyed: the transition
     matrix windows by src_type, the weakest-link argmin by node, the
     novelty join by shingle, reciprocity by host, the PMI pair
@@ -308,7 +308,7 @@ def test_pending_r6_queries_have_no_single_partition_exchange(spark):
     scalar aggregates (total weight, quota deficit) — 1-row scalars
     are the one sanctioned single-partition shape (same exemption as
     train_mixture_tokens)."""
-    from easyner_spark.queries import PENDING_R6
+    from easyner_spark.queries import QUERIES
 
     for name in (
         "events_type_transitions",
@@ -329,6 +329,19 @@ def test_pending_r6_queries_have_no_single_partition_exchange(spark):
         "train_packing_manifest",
         "multimodal_audio_frames",
     ):
-        plan = _plan(PENDING_R6[name][0](spark, SF_DIR))
+        plan = _plan(QUERIES[name](spark, SF_DIR))
         assert "Exchange SinglePartition" not in plan, name
         assert "WindowExec: No Partition Defined" not in plan, name
+
+
+def test_spread_leaves_non_local_scans_alone(spark):
+    """_spread round-robins only a scan it can size locally: a path that
+    does not exist here (cluster storage) must keep its own splits, not
+    be reshuffled to defaultParallelism on a 0-byte reading."""
+    from easyner_spark.queries import _read, _spread, _table_bytes
+
+    local = _read(spark, SF_DIR, "documents")
+    assert "RoundRobinPartitioning" in _plan(_spread(local, SF_DIR, "documents"))
+    missing = "/nonexistent/sf_dir"
+    assert _table_bytes(missing, "documents") is None
+    assert "RoundRobinPartitioning" not in _plan(_spread(local, missing, "documents"))

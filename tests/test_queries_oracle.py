@@ -10,6 +10,9 @@ from easyner_spark.queries import ORACLES, QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
+# sha256 over name + NUL + sql + NUL for every oracle, in name order
+ORACLE_SQL_SHA256 = "870fc54f1800c68790a986cd80f4f28ca4f2bce42d0e89bc3b4dcdec0b1b832e"
+
 
 def test_every_query_has_oracle():
     assert set(ORACLES) == set(QUERIES)
@@ -74,17 +77,39 @@ def test_query_matches_duckdb(spark, name):
     assert diff is None, diff
 
 
-def test_pending_r6_queries_match_duckdb(spark):
-    """Contract pairs written while the current driver window was
-    saturated: oracle-gated locally now, registered (+ window slot)
-    next round. Must not collide with registered names."""
-    from easyner_spark.queries import PENDING_R6
+def test_oracle_sql_is_byte_identical():
+    """The DuckDB oracle SQL is the specification: the registry and the
+    shared CTE helpers may be refactored, but the generated text must
+    not change unless a query's semantics change on purpose (then
+    update the digest in the same change and say why)."""
+    import hashlib
 
-    assert PENDING_R6, "remove this test when the pending dict empties"
-    for name, (fn, sql) in PENDING_R6.items():
-        assert name not in QUERIES, f"{name} is registered — drop it from PENDING_R6"
-        diff = compare_query(spark, SF_DIR, name, fn, sql)
-        assert diff is None, (name, diff)
+    h = hashlib.sha256()
+    for name in sorted(ORACLES):
+        h.update(f"{name}\0{ORACLES[name]}\0".encode())
+    assert h.hexdigest() == ORACLE_SQL_SHA256
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_lsh_bucket_rejects_wide_vectors(spark, ansi):
+    """A vector wider than the plan-time hyperplane coefficients must
+    fail the query in both ANSI modes, never bucket on nulls."""
+    from pyspark.sql import functions as F
+
+    from easyner_spark.queries import _LSH_COEF_LEN, _lsh_bucket_expr
+
+    def bucket(dim):
+        df = spark.createDataFrame([([0.5] * dim,)], "embedding ARRAY<FLOAT>")
+        return df.select(F.expr(_lsh_bucket_expr()).alias("bucket"))
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        assert bucket(_LSH_COEF_LEN).first()["bucket"] is not None
+        with pytest.raises(Exception, match="wider than"):
+            bucket(300).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_entry_smoke(spark):
