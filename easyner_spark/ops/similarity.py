@@ -30,18 +30,13 @@ _NORM2 = (
 )
 
 
-def _cosine(a: str, b: str):
-    return F.expr(_DOT.format(a=a, b=b)) / F.sqrt(
-        F.expr(_NORM2.format(a=a)) * F.expr(_NORM2.format(a=b))
-    )
-
-
 def _cosine_pre(a: str, b: str, na: str, nb: str):
-    """Cosine with the squared norms PRECOMPUTED on the input frames
-    (r6 opt, guide §1.2): a norm depends on one side only, so hoisting
-    it turns |A|·|B| interpreted higher-order aggregates into |A|+|B|.
-    The per-pair arithmetic (dot / sqrt(na·nb)) is unchanged — values
-    are bit-identical to :func:`_cosine`."""
+    """Cosine of array columns ``a``, ``b`` with their squared norms
+    (``_NORM2``) PRECOMPUTED as columns ``na``, ``nb`` on the input
+    frames (r6 opt, guide §1.2): a norm depends on one side only, so
+    hoisting it turns |A|·|B| interpreted higher-order aggregates into
+    |A|+|B|. Per pair: dot / sqrt(na·nb). The one cosine kernel —
+    the engine ops and the contract queries all score through it."""
     return F.expr(_DOT.format(a=a, b=b)) / F.sqrt(F.col(na) * F.col(nb))
 
 

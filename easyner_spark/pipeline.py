@@ -29,11 +29,23 @@ from .io.catalog import CheckpointCatalog
 from .stages.analysis import entity_frequency, id_frequency
 from .stages.canonical import canonicalize_entities
 from .stages.extract import audit_hashes, extract_documents
-from .stages.merge import resolve_conflicts
 from .stages.ner_dict import dict_ner
 from .stages.nel import link_entities
 from .stages.split import split_documents
 from .stages.triples import cooccurrence_triples
+
+# every stage a default run_pipeline call executes, in chain order;
+# the opt-in curation stages ("screen", "dedup") are added by name
+STAGES = (
+    "documents",
+    "sentences",
+    "mentions",
+    "linked",
+    "canonical",
+    "triples",
+    "graph",
+    "analysis",
+)
 
 
 def nel_lookup_frame(spark: SparkSession, nel_lookup=NEL_LOOKUP) -> DataFrame:
@@ -70,9 +82,7 @@ def run_pipeline(
     gazetteer=None,
     nel_lookup=None,
     n_batches: int = 64,
-    canonicalize: bool = True,
     stages: set[str] | None = None,
-    resolve_single_run_conflicts: bool = False,
     analysis_sets: bool = False,
     analysis_approx: bool = False,
     triples_cap: int | None = None,
@@ -90,16 +100,7 @@ def run_pipeline(
     nel_lookup = nel_lookup if nel_lookup is not None else NEL_LOOKUP
     cat = CheckpointCatalog(warehouse)
     report: dict[str, dict] = {}
-    want = stages or {
-        "documents",
-        "sentences",
-        "mentions",
-        "linked",
-        "canonical",
-        "triples",
-        "graph",
-        "analysis",
-    }
+    want = stages or set(STAGES)
 
     def commit(name: str, df: DataFrame) -> DataFrame:
         t0 = time.time()
@@ -215,10 +216,7 @@ def run_pipeline(
     # mention-exact parity with the oracle.
     if "mentions" in want:
         sents = sents if sents is not None else need("sentences", "mentions")
-        m = dict_ner(sents, gazetteer)
-        if resolve_single_run_conflicts:
-            m = resolve_conflicts(m)
-        mentions = commit("mentions", m)
+        mentions = commit("mentions", dict_ner(sents, gazetteer))
 
     if "linked" in want:
         mentions = mentions if mentions is not None else need("mentions", "linked")
@@ -236,7 +234,7 @@ def run_pipeline(
     elif {"canonical", "triples", "analysis"} & want:
         linked = need("linked", "canonical/triples/analysis")
 
-    if linked is not None and canonicalize and "canonical" in want:
+    if linked is not None and "canonical" in want:
         ents = linked.select(
             F.col("ent_id"), F.col("ent_name").alias("name")
         ).distinct()
@@ -342,7 +340,6 @@ def main() -> None:
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--n-docs", type=int, default=2000)
     ap.add_argument("--n-batches", type=int, default=64)
-    ap.add_argument("--no-canonical", action="store_true")
     ap.add_argument(
         "--stages",
         default=None,
@@ -400,18 +397,12 @@ def main() -> None:
     stages = set(args.stages.split(",")) if args.stages else None
     for flag, stage in ((args.screen, "screen"), (args.dedup_docs, "dedup")):
         if flag:
-            if stages is None:
-                stages = {
-                    "documents", "sentences", "mentions", "linked",
-                    "canonical", "triples", "graph", "analysis",
-                }
-            stages.add(stage)
+            stages = (stages or set(STAGES)) | {stage}
     report = run_pipeline(
         spark,
         pages,
         args.warehouse,
         n_batches=args.n_batches,
-        canonicalize=not args.no_canonical,
         stages=stages,
         analysis_sets=args.analysis_sets,
         analysis_approx=args.analysis_approx,

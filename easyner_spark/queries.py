@@ -25,6 +25,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from .ops.rank import bucket_prefix, ordered_prefix
+from .ops.similarity import _NORM2, _cosine_pre
+
 # ---------------------------------------------------------------------------
 # shared dimension literals (embedded: the contract gazetteer / NEL lookup
 # for the word-soup corpus; reference analogs: dictionaries/*.txt and the
@@ -142,6 +145,16 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first exchange is the expensive part)."""
     return _spread(_read(spark, sf_dir, "embeddings"), sf_dir, "embeddings")
 
+
+def _normed(e: DataFrame, id_as: str, vec_as: str, norm_as: str) -> DataFrame:
+    """(vec_id, embedding) renamed, plus the squared norm the cosine
+    kernel (ops/similarity.py:_cosine_pre) divides by — evaluated once
+    per vector, never per pair."""
+    return e.select(
+        F.col("vec_id").alias(id_as),
+        F.col("embedding").alias(vec_as),
+        F.expr(_NORM2.format(a="embedding")).alias(norm_as),
+    )
 
 
 def _doc_tokens(docs: DataFrame) -> DataFrame:
@@ -456,46 +469,6 @@ def q_kg_new_entities(spark, sf_dir):
     return new
 
 
-def _two_phase_rank(agg, count_col, tie_cols, out="rnk"):
-    """Global RANK() over (count_col DESC, tie_cols) without a global
-    sort. Requirement: (count_col, *tie_cols) is unique per row, so
-    RANK == bucket-local row_number + rows-in-higher-buckets. The big
-    table windows hash-partitioned BY count_col; only the per-bucket
-    count table (|distinct counts| rows — Zipf-bounded) crosses a
-    single partition for the offset prefix-sum. Same pattern as the
-    NEL mint (stages/nel.py:_dense_rank_by), numeric leading key.
-
-    The input aggregate is localCheckpoint-ed: rank side and offset
-    side both consume it, and Catalyst does not dedupe the two logical
-    subtrees (no ReusedExchange across a multi-consumer fan-out) —
-    without this the upstream pipeline executes twice. Offsets derive
-    from the windowed side so both consumers share the
-    exchange-on-count_col subplan (ReusedExchange)."""
-    agg = agg.localCheckpoint()
-    local = agg.withColumn(
-        "_r",
-        F.row_number().over(W.partitionBy(count_col).orderBy(*tie_cols)),
-    )
-    # offset = rows in HIGHER-count buckets, via a theta self-join over
-    # the per-bucket count table instead of an unpartitioned prefix-sum
-    # window: O(|distinct counts|²) on a Zipf-bounded aggregate, zero
-    # single-partition exchanges anywhere in the plan
-    cnts = local.groupBy(count_col).agg(F.count("*").alias("_n"))
-    higher = cnts.select(
-        F.col(count_col).alias("_k2"), F.col("_n").alias("_n2")
-    )
-    offsets = (
-        cnts.join(F.broadcast(higher), F.col("_k2") > F.col(count_col), "left")
-        .groupBy(count_col)
-        .agg(F.coalesce(F.sum("_n2"), F.lit(0)).alias("_off"))
-    )
-    return (
-        local.join(F.broadcast(offsets), count_col)
-        .withColumn(out, (F.col("_off") + F.col("_r")).cast("bigint"))
-        .drop("_r", "_off")
-    )
-
-
 @register(
     "kg_entity_frequency",
     _MENTIONS_CTE
@@ -543,9 +516,14 @@ def q_kg_entity_frequency(spark, sf_dir):
         )
     )
     # (total_count DESC, surface) is a unique total order (surface is
-    # the group key), so RANK == the two-phase bucketed row_number —
-    # no global single-partition window (the round-2 weak item).
-    return _two_phase_rank(agg, "total_count", ["surface"]).select(
+    # the group key), so RANK == row position: the count-bucketed
+    # ordered_prefix — no global single-partition window (the round-2
+    # weak item). Checkpointed: the windowed side and its bucket totals
+    # both consume the aggregate.
+    ranked = ordered_prefix(
+        agg.localCheckpoint(), "total_count", ["surface"], "_p", descending=True
+    )
+    return ranked.select(
         "surface",
         "total_count",
         "articles_spanned",
@@ -557,7 +535,7 @@ def q_kg_entity_frequency(spark, sf_dir):
             F.col("total_count").cast("double") / F.col("batches_spanned"), 6
         ).alias("freq_per_batch"),
         "batch_set",
-        "rnk",
+        (F.col("_p") + 1).alias("rnk"),
     )
 
 
@@ -585,10 +563,18 @@ def q_kg_id_frequency(spark, sf_dir):
         F.count("*").alias("total_count"),
         F.countDistinct("doc_id").alias("articles_spanned"),
     )
-    # (total_count DESC, ent_id) is unique per row — two-phase bucketed
-    # rank, same reasoning as kg_entity_frequency.
-    return _two_phase_rank(agg, "total_count", ["ent_id"]).select(
-        "ent_id", "name", "entities_list", "total_count", "articles_spanned", "rnk"
+    # (total_count DESC, ent_id) is unique per row — bucketed rank,
+    # same reasoning as kg_entity_frequency.
+    ranked = ordered_prefix(
+        agg.localCheckpoint(), "total_count", ["ent_id"], "_p", descending=True
+    )
+    return ranked.select(
+        "ent_id",
+        "name",
+        "entities_list",
+        "total_count",
+        "articles_spanned",
+        (F.col("_p") + 1).alias("rnk"),
     )
 
 
@@ -649,12 +635,15 @@ FROM (
 )
 def q_kg_triple_counts(spark, sf_dir):
     """Global rank without a global sort: (n_cooccur DESC, subj, obj)
-    is unique per row, so RANK == the two-phase bucketed row_number —
-    see _two_phase_rank for the partitioning/ReusedExchange argument."""
+    is unique per row, so RANK == the count-bucketed row position
+    (ops/rank.py:ordered_prefix)."""
     t = QUERIES["kg_triples"](spark, sf_dir)
     agg = t.groupBy("subj", "pred", "obj").agg(F.count("*").alias("n_cooccur"))
-    return _two_phase_rank(agg, "n_cooccur", ["subj", "obj"]).select(
-        "subj", "pred", "obj", "n_cooccur", "rnk"
+    ranked = ordered_prefix(
+        agg.localCheckpoint(), "n_cooccur", ["subj", "obj"], "_p", descending=True
+    )
+    return ranked.select(
+        "subj", "pred", "obj", "n_cooccur", (F.col("_p") + 1).alias("rnk")
     )
 
 
@@ -1084,27 +1073,14 @@ def q_dedup_exact(spark, sf_dir):
     )
 
 
-@register(
-    "dedup_jaccard",
-    _SHINGLES_CTE
-    + """,
-ds AS (SELECT DISTINCT doc_id, shingle FROM shingles),
-sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM ds GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS n_inter
-  FROM ds a JOIN ds b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT i.doc_a, i.doc_b, i.n_inter,
-       sa.n + sb.n - i.n_inter AS n_union,
-       round(CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter), 6) AS jaccard
-FROM inter i
-JOIN sizes sa ON i.doc_a = sa.doc_id
-JOIN sizes sb ON i.doc_b = sb.doc_id
-WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
-""",
-)
-def q_dedup_jaccard(spark, sf_dir):
+def _shingle_overlap(spark, sf_dir):
+    """(doc_a, doc_b, n_inter, na, nb) for every doc pair sharing a
+    shingle (doc_a < doc_b): distinct-shingle intersection size and
+    both docs' distinct-shingle counts — the frame dedup_jaccard and
+    dedup_containment score (the oracles' shared ds/sizes/inter CTEs).
+    Plan: distinct (doc, shingle) → shingle-keyed equi self-join
+    (fan-out bounded by shingle df, AQE skew-split) → pair agg → two
+    broadcast size-dimension joins. No all-pairs product."""
     # r6 opt (guide §2.4): the distinct shingle frame fans out to THREE
     # consumers (both self-join sides + the per-doc size agg) and
     # Catalyst does not dedupe identical logical subtrees — the plan
@@ -1134,12 +1110,35 @@ def q_dedup_jaccard(spark, sf_dir):
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    return inter.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
+
+
+@register(
+    "dedup_jaccard",
+    _SHINGLES_CTE
+    + """,
+ds AS (SELECT DISTINCT doc_id, shingle FROM shingles),
+sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM ds GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS n_inter
+  FROM ds a JOIN ds b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
+SELECT i.doc_a, i.doc_b, i.n_inter,
+       sa.n + sb.n - i.n_inter AS n_union,
+       round(CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter), 6) AS jaccard
+FROM inter i
+JOIN sizes sa ON i.doc_a = sa.doc_id
+JOIN sizes sb ON i.doc_b = sb.doc_id
+WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
+""",
+)
+def q_dedup_jaccard(spark, sf_dir):
     jac = F.col("n_inter").cast("double") / (
         F.col("na") + F.col("nb") - F.col("n_inter")
     )
     return (
-        inter.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
+        _shingle_overlap(spark, sf_dir)
         .withColumn("n_union", F.col("na") + F.col("nb") - F.col("n_inter"))
         .filter(jac >= 0.5)
         .select(
@@ -1478,33 +1477,15 @@ def q_embed_knn_bruteforce(spark, sf_dir):
     whole-stage codegen)."""
     e = _embeddings(spark, sf_dir)
     # r6 opt (guide §1.2): the squared norms depend on ONE side each,
-    # but were evaluated per PAIR — |Q|·|C| interpreted higher-order
-    # aggregates instead of |Q|+|C|. Hoist them onto the input frames;
-    # the cosine expression (dot / sqrt(qq·cc)) evaluates the identical
-    # double arithmetic per pair, so values are bit-identical.
-    norm2 = (
-        "aggregate(transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-        " 0D, (acc, v) -> acc + v)"
-    )
-    q = e.filter(F.col("vec_id") < KNN_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.expr(norm2.format(a="embedding")).alias("qq"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.expr(norm2.format(a="embedding")).alias("cc"),
-    )
-    dot = F.expr(
-        "aggregate(zip_with(qe, ce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " 0D, (acc, v) -> acc + v)"
-    )
+    # so they are hoisted onto the input frames (|Q|+|C| evaluations,
+    # not |Q|·|C|); the per-pair arithmetic is ops/similarity.py's.
+    q = _normed(e.filter(F.col("vec_id") < KNN_QUERIES), "qid", "qe", "qq")
+    c = _normed(e, "cid", "ce", "cc")
     pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
     scored = pairs.select(
         "qid",
         "cid",
-        F.round(dot / F.sqrt(F.col("qq") * F.col("cc")), 6).alias("cosine"),
+        F.round(_cosine_pre("qe", "ce", "qq", "cc"), 6).alias("cosine"),
     )
     w = W.partitionBy("qid").orderBy(F.desc("cosine"), "cid")
     return (
@@ -1848,33 +1829,14 @@ def q_embed_lsh_knn(spark, sf_dir):
     pairs = a.join(b, "bucket").filter(F.col("qid") != F.col("cid")).select("qid", "cid")
 
     # r6 opt: norms hoisted onto the per-vector frames (one evaluation
-    # per vector, not per candidate pair) — same double arithmetic per
-    # pair, identical values (see embed_knn_bruteforce).
-    norm2 = (
-        "aggregate(transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-        " 0D, (acc, v) -> acc + v)"
-    )
-    qe = e.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.expr(norm2.format(a="embedding")).alias("qq"),
-    )
-    ce = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.expr(norm2.format(a="embedding")).alias("cc"),
-    )
-    dot = F.expr(
-        "aggregate(zip_with(qe, ce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " 0D, (acc, v) -> acc + v)"
-    )
+    # per vector, not per candidate pair; see embed_knn_bruteforce)
     scored = (
-        pairs.join(F.broadcast(qe), "qid")
-        .join(ce, "cid")
+        pairs.join(F.broadcast(_normed(e, "qid", "qe", "qq")), "qid")
+        .join(_normed(e, "cid", "ce", "cc"), "cid")
         .select(
             "qid",
             "cid",
-            F.round(dot / F.sqrt(F.col("qq") * F.col("cc")), 6).alias("cosine"),
+            F.round(_cosine_pre("qe", "ce", "qq", "cc"), 6).alias("cosine"),
         )
     )
     w = W.partitionBy("qid").orderBy(F.desc("cosine"), "cid")
@@ -2105,23 +2067,10 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     pairs = a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b")).select(
         "vec_a", "vec_b"
     )
-    qe = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("qe"))
-    ce = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("ce"))
-    dot = F.expr(
-        "aggregate(zip_with(qe, ce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " 0D, (acc, v) -> acc + v)"
-    )
-    qq = F.expr(
-        "aggregate(transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 0D, (acc, v) -> acc + v)"
-    )
-    cc = F.expr(
-        "aggregate(transform(ce, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 0D, (acc, v) -> acc + v)"
-    )
-    cos = dot / F.sqrt(qq * cc)
     return (
-        pairs.join(qe, "vec_a")
-        .join(ce, "vec_b")
-        .withColumn("_c", cos)
+        pairs.join(_normed(e, "vec_a", "qe", "qq"), "vec_a")
+        .join(_normed(e, "vec_b", "ce", "cc"), "vec_b")
+        .withColumn("_c", _cosine_pre("qe", "ce", "qq", "cc"))
         .filter(F.col("_c") >= 0.93)
         .select("vec_a", "vec_b", F.round("_c", 6).alias("cosine"))
     )
@@ -3190,9 +3139,10 @@ def wbackbone(spark, sf_dir):
     (a, b, w) — the one definition of the backbone cut (zero-single-
     partition two-phase rank); backbone() derives the unweighted
     (src, dst) view, the modularity gate consumes the weights."""
+    edges = wuedges(spark, sf_dir).localCheckpoint()
     return (
-        _two_phase_rank(wuedges(spark, sf_dir), "w", ["a", "b"])
-        .filter(F.col("rnk") <= TWOHOP_TOPK_EDGES)
+        ordered_prefix(edges, "w", ["a", "b"], "_p", descending=True)
+        .filter(F.col("_p") < TWOHOP_TOPK_EDGES)
         .select("a", "b", "w")
     )
 
@@ -4477,8 +4427,8 @@ def q_index_postings_rare(spark, sf_dir):
     synthetic corpus has no token with df ≤ 20 even at sf0.01, and a
     0-row match checks nothing (r4 row was 0/0). One distinct + one
     token-keyed agg; the bottom-k rank is the zero-single-partition
-    two-phase rank (ascending df via the negated key); postings are
-    sorted in-group, no global order."""
+    df-bucketed ordered_prefix; postings are sorted in-group, no
+    global order."""
     t = tokens(spark, sf_dir)
     dt = t.select("token", "doc_id").distinct()
     agg = dt.groupBy("token").agg(
@@ -4487,10 +4437,8 @@ def q_index_postings_rare(spark, sf_dir):
             F.array_sort(F.collect_set(F.col("doc_id").cast("string"))), ","
         ).alias("postings"),
     )
-    ranked = _two_phase_rank(
-        agg.withColumn("_ndf", -F.col("df")), "_ndf", ["token"]
-    )
-    return ranked.filter(F.col("rnk") <= 20).select("token", "df", "postings")
+    ranked = ordered_prefix(agg.localCheckpoint(), "df", ["token"], "_p")
+    return ranked.filter(F.col("_p") < 20).select("token", "df", "postings")
 
 
 @register(
@@ -5126,33 +5074,14 @@ def q_dedup_containment(spark, sf_dir):
     in the pair (n_inter / min(|A|,|B|), exact integer ppm, ≥60%).
     Catches a short page verbatim-embedded in a long one — quote farms,
     article+comments wrappers — which symmetric Jaccard scores low
-    because the union is dominated by the long side. Plan: distinct
-    (doc, shingle) → shingle-keyed equi self-join (fan-out bounded by
-    shingle df, AQE skew-split; at production scale the same
+    because the union is dominated by the long side. Plan: the
+    shared _shingle_overlap frame (at production scale the same
     MinHash-band blocking as dedup_minhash_pairs runs first and
     stages/canonical.py:containment_filter verifies only the
     candidates — this contract query is its exact whole-corpus twin)
-    → pair agg → two size-dimension joins. No all-pairs product."""
-    ds = shingles(spark, sf_dir).distinct().localCheckpoint()  # 2 consumers
-    sizes = ds.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n"))
-    # sort-merge hint: same reasoning + A/B as dedup_jaccard (§3.1)
-    a, b = ds.alias("a"), ds.hint("merge").alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    → integer ppm filter."""
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_overlap(spark, sf_dir)
         .select(
             "doc_a",
             "doc_b",
@@ -6140,7 +6069,7 @@ def q_web_crawl_budget(spark, sf_dir):
     # feeds the 1-row total AND q's left side (and through q, the
     # deficit scalar + the rank): checkpoint the scan+agg once; the
     # downstream q/need projections are lazy and cheap on top of it
-    # (_two_phase_rank re-checkpoints only the tiny q frame)
+    # (the rank checkpoints only the tiny q frame on top)
     hw = _host_chars(spark, sf_dir).localCheckpoint()
     tot = hw.agg(F.sum("host_chars").cast("bigint").alias("_w"))
     q = (
@@ -6159,18 +6088,20 @@ def q_web_crawl_budget(spark, sf_dir):
     need = q.agg(
         (F.lit(CRAWL_BUDGET) - F.sum("quota_base")).cast("bigint").alias("_k")
     )
-    ranked = _two_phase_rank(q, "rem", ["host"])
+    ranked = ordered_prefix(
+        q.localCheckpoint(), "rem", ["host"], "_p", descending=True
+    )
     return (
         ranked.crossJoin(F.broadcast(need))
         .select(
             "host",
             "host_chars",
             "quota_base",
-            F.expr("CAST(CASE WHEN rnk <= _k THEN 1 ELSE 0 END AS BIGINT)").alias(
+            F.expr("CAST(CASE WHEN _p < _k THEN 1 ELSE 0 END AS BIGINT)").alias(
                 "bonus"
             ),
             F.expr(
-                "CAST(quota_base + CASE WHEN rnk <= _k THEN 1 ELSE 0 END"
+                "CAST(quota_base + CASE WHEN _p < _k THEN 1 ELSE 0 END"
                 " AS BIGINT)"
             ).alias("quota"),
         )
@@ -6758,9 +6689,10 @@ def _len_hist(spark, sf_dir):
     """Spark twin of _LEN_HIST_SQL: per-doc token counts partial-agged
     to the corpus-size-independent length histogram, localCheckpointed
     (every consumer fans out at least three ways: both theta sides of
-    the cumulative join plus the total)."""
+    the cumulative join plus the total). No _spread: the per-row work
+    (split + count) is too small to pay for the round-robin shuffle."""
     lens = (
-        _doc_tokens(_spread(_read(spark, sf_dir, "documents").select("doc_id", "text"), sf_dir, "documents"))
+        _doc_tokens(_read(spark, sf_dir, "documents").select("doc_id", "text"))
         .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("len"))
     )
@@ -6789,31 +6721,6 @@ GROUP BY th.pct, th.n_docs
 )
 
 
-def _bucket_prefix_agg(tbl, key, val, agg_fn, out, inclusive=False):
-    """Prefix aggregate over a BOUNDED, already-materialized bucket
-    table (length histogram, arrival-bucket maxima, ...) without a
-    global window: broadcast theta self-join + keyed agg — the
-    cumulative counterpart of _two_phase_rank's offset join.
-    (_two_phase_rank keeps its own inline copy deliberately: its rank
-    and offset consumers share one exchange via ReusedExchange, which
-    routing through a checkpointed helper would sever.) LEFT join so
-    the first bucket survives (agg over zero rows → NULL; callers
-    coalesce if they need a zero). Caller MUST pass a
-    localCheckpointed/materialized frame — both join sides consume
-    it, and Catalyst does not dedupe the fan-out."""
-    rhs = tbl.select(F.col(key).alias("_pk2"), F.col(val).alias("_pv2"))
-    cond = (
-        (F.col("_pk2") <= F.col(key))
-        if inclusive
-        else (F.col("_pk2") < F.col(key))
-    )
-    return (
-        tbl.join(F.broadcast(rhs), cond, "left")
-        .groupBy(key)
-        .agg(agg_fn(F.col("_pv2")).alias(out))
-    )
-
-
 @register("doc_length_percentiles", _PCT_ORACLE)
 def q_doc_length_percentiles(spark, sf_dir):
     """Exact corpus length percentiles (P50/P90/P99 of per-doc token
@@ -6824,14 +6731,14 @@ def q_doc_length_percentiles(spark, sf_dir):
     Scale shape: per-doc counts partial-agg to a LENGTH HISTOGRAM
     (|distinct lengths| ≤ max doc length, corpus-size-independent),
     the cumulative sum is the theta self-join over that bounded
-    histogram (same zero-single-partition trick as _two_phase_rank —
-    never orderBy the corpus), thresholds come from the sanctioned
-    1-row total crossJoin, and the final pick is a 3-row broadcast
-    theta join + min. approx_percentile would be cheaper but is
-    sketch-dependent and cross-engine nondeterministic — this is the
-    exact-and-still-distributed version."""
+    histogram (ops/rank.py:bucket_prefix — zero single-partition
+    exchanges, never orderBy the corpus), thresholds come from the
+    sanctioned 1-row total crossJoin, and the final pick is a 3-row
+    broadcast theta join + min. approx_percentile would be cheaper but
+    is sketch-dependent and cross-engine nondeterministic — this is
+    the exact-and-still-distributed version."""
     hist = _len_hist(spark, sf_dir)
-    cum = _bucket_prefix_agg(
+    cum = bucket_prefix(
         hist,
         "len",
         "cnt",
@@ -6886,12 +6793,18 @@ def q_web_host_gini(spark, sf_dir):
     two-phase rank over the host frame, one final 1-row agg — no
     global sort of anything corpus-sized; Σ rnk·w in DECIMAL(38,0) /
     HUGEINT (rnk ≤ n_hosts, w ≤ total chars — int64² territory)."""
-    r = _two_phase_rank(_host_chars(spark, sf_dir), "host_chars", ["host"])
+    r = ordered_prefix(
+        _host_chars(spark, sf_dir).localCheckpoint(),
+        "host_chars",
+        ["host"],
+        "_p",
+        descending=True,
+    )
     return (
         r.agg(
             F.count("*").cast("bigint").alias("n_hosts"),
             F.sum("host_chars").cast("bigint").alias("total_chars"),
-            F.sum(F.expr("CAST(rnk AS DECIMAL(38,0)) * host_chars")).alias("sd"),
+            F.sum(F.expr("CAST(_p + 1 AS DECIMAL(38,0)) * host_chars")).alias("sd"),
         )
         .select(
             "n_hosts",
@@ -7063,11 +6976,11 @@ def q_events_watermark_late(spark, sf_dir):
     bounded at 4096 for ANY corpus size — the 1-row max-key scalar
     sets the width), bucket-local running max via a KEYED window,
     cross-bucket prefix max via the broadcast theta join over the
-    ≤4096-row bucket-max table (same shape as _two_phase_rank's
-    offset join; two-level bucketing extends this to O(√n)-bounded
-    partitions if per-bucket rows outgrow a task). All arithmetic in
-    BIGINT epoch micros (the ts convention every events contract
-    shares — engine-native timestamps never cross the compare
+    ≤4096-row bucket-max table (ops/rank.py:bucket_prefix, the
+    ordered_prefix offset join; two-level bucketing extends this to
+    O(√n)-bounded partitions if per-bucket rows outgrow a task). All
+    arithmetic in BIGINT epoch micros (the ts convention every events
+    contract shares — engine-native timestamps never cross the compare
     boundary)."""
     ev = (
         _read(spark, sf_dir, "events")
@@ -7105,7 +7018,7 @@ def q_events_watermark_late(spark, sf_dir):
         # consumed by both sides of the prefix theta join
         .localCheckpoint()
     )
-    prev = _bucket_prefix_agg(bm, "bkt", "bmax", F.max, "pmax")
+    prev = bucket_prefix(bm, "bkt", "bmax", F.max, "pmax")
     late = F.expr(
         f"CASE WHEN greatest(lmax, pmax) IS NOT NULL"
         f" AND ts_us < greatest(lmax, pmax) - {WM_DELAY_US}"
@@ -7246,14 +7159,14 @@ def q_doc_length_outliers(spark, sf_dir):
     (boilerplate stubs, concatenation blobs). Everything exact
     integers: median and MAD are type-1 order statistics (smallest
     value with cumulative count ≥ ceil(n/2)) computed TWICE through
-    the shared _bucket_prefix_agg histogram prefix — lengths partial-
+    the shared bucket_prefix histogram prefix — lengths partial-
     agg to a corpus-size-independent histogram, the deviation
     histogram folds |len − m| over it (1-row median crossJoin), and
     the outlier count is a filtered sum over that tiny frame. No
     global sort anywhere; the corpus is touched exactly once."""
     hist = _len_hist(spark, sf_dir)
     tot = hist.agg(F.sum("cnt").cast("bigint").alias("n"))
-    cum = _bucket_prefix_agg(
+    cum = bucket_prefix(
         hist, "len", "cnt", lambda c: F.sum(c).cast("bigint"), "cum",
         inclusive=True,
     )
@@ -7269,7 +7182,7 @@ def q_doc_length_outliers(spark, sf_dir):
         # consumers: cum (both theta sides), outlier sum
         .localCheckpoint()
     )
-    dcum = _bucket_prefix_agg(
+    dcum = bucket_prefix(
         devh, "d", "c", lambda c: F.sum(c).cast("bigint"), "cum",
         inclusive=True,
     )
@@ -7392,9 +7305,10 @@ def dbackbone(spark, sf_dir):
     """Top-K strongest directed co-occurrence edges as (src, dst) —
     the Spark twin of _DBB_SQL, built on the zero-single-partition
     two-phase rank (same discipline as backbone())."""
+    edges = wedges(spark, sf_dir).localCheckpoint()
     return (
-        _two_phase_rank(wedges(spark, sf_dir), "w", ["src", "dst"])
-        .filter(F.col("rnk") <= SCC_TOPK_EDGES)
+        ordered_prefix(edges, "w", ["src", "dst"], "_p", descending=True)
+        .filter(F.col("_p") < SCC_TOPK_EDGES)
         .select("src", "dst")
     )
 
@@ -7502,37 +7416,6 @@ def interleave_keys(spark, sf_dir, prefix: str = "interleave:"):
     )
 
 
-def _hash_order_prefix(d, val_col, out="cum_before"):
-    """Exclusive prefix SUM of ``val_col`` over the (h, doc_id) hash
-    order WITHOUT a global sort — the shared two-phase scaffold behind
-    the interleave rank (val = 1: rank = prefix + 1) and the packing
-    manifest (val = n_tokens: bin offsets): ≤256 per-bucket totals →
-    broadcast exclusive offsets (_bucket_prefix_agg theta join) +
-    keyed within-bucket running sum (ROWS UNBOUNDED PRECEDING..1
-    PRECEDING). ``d`` must be localCheckpointed by the caller (bucket
-    totals + windowed side both consume it — the Catalyst-no-CSE
-    rule) and carry (h, bkt, doc_id, val_col)."""
-    bsum = (
-        d.groupBy("bkt")
-        .agg(F.sum(val_col).cast("bigint").alias("cnt"))
-        .localCheckpoint()
-    )
-    off = _bucket_prefix_agg(
-        bsum, "bkt", "cnt", lambda c: F.sum(c).cast("bigint"), "off"
-    ).select("bkt", F.coalesce("off", F.lit(0)).cast("bigint").alias("off"))
-    w = (
-        W.partitionBy("bkt")
-        .orderBy("h", "doc_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    return (
-        d.withColumn("_run", F.coalesce(F.sum(val_col).over(w), F.lit(0)))
-        .join(F.broadcast(off), "bkt")
-        .withColumn(out, (F.col("off") + F.col("_run")).cast("bigint"))
-        .drop("_run", "off")
-    )
-
-
 _INTERLEAVE_ORACLE = f"""
 WITH {_IH_SQL},
 ipos AS (
@@ -7563,18 +7446,14 @@ def q_train_interleave_order(spark, sf_dir):
     the two-phase form: 256 hash-prefix buckets (bucket = first 2 hex
     chars, a PREFIX of the sort key, so bucket order == key order),
     per-bucket row_number (hash-partitioned window), bucket offsets
-    via the broadcast _bucket_prefix_agg theta join over the ≤256-row
-    bucket histogram. Same zero-single-partition discipline as
-    _two_phase_rank / doc_length_percentiles."""
-    d = (
-        interleave_keys(spark, sf_dir)
-        .withColumn("one", F.lit(1).cast("bigint"))
-        # two consumers (bucket histogram + windowed rank side) — see
-        # the Catalyst-no-CSE rule
-        .localCheckpoint()
-    )
-    pos = _hash_order_prefix(d, "one").withColumn(
-        "pos", (F.col("cum_before") + 1).cast("bigint")
+    via the broadcast theta join over the ≤256-row bucket histogram
+    (ops/rank.py:ordered_prefix). Same zero-single-partition
+    discipline as the count-bucketed ranks / doc_length_percentiles."""
+    # two consumers (bucket histogram + windowed rank side) — see the
+    # Catalyst-no-CSE rule
+    d = interleave_keys(spark, sf_dir).localCheckpoint()
+    pos = ordered_prefix(d, "bkt", ["h", "doc_id"], "_p").withColumn(
+        "pos", F.col("_p") + 1
     )
     return pos.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -7935,7 +7814,7 @@ def q_train_packing_manifest(spark, sf_dir):
     boundary — expected), smallest doc id in the bin (min_doc_id — an
     id-space anchor, NOT the bin's stream-order head) and start
     offset. Scale shape: the global prefix sum never sorts the corpus
-    — _hash_order_prefix: per-bucket token totals (≤256 rows)
+    — ordered_prefix: per-bucket token totals (≤256 rows)
     theta-join into exclusive offsets and a keyed within-bucket
     running sum, so everything is hash-partitioned by the key prefix;
     the per-bin fold is one partial agg keyed by bin_id."""
@@ -7956,7 +7835,9 @@ def q_train_packing_manifest(spark, sf_dir):
         # two consumers: bucket totals + windowed running sum
         .localCheckpoint()
     )
-    binned = _hash_order_prefix(d, "n_tokens").withColumn(
+    binned = ordered_prefix(
+        d, "bkt", ["h", "doc_id"], "cum_before", val="n_tokens"
+    ).withColumn(
         "bin_id", F.expr(f"CAST(cum_before div {SEQ_BUDGET} AS BIGINT)")
     )
     return binned.groupBy("bin_id").agg(

@@ -17,50 +17,21 @@ Plan shape: broadcast hash LEFT join against the dimension (dimension
 ≪ facts at any scale); the mint path is a distinct over ONLY the miss
 surfaces, then broadcast back — no large shuffle anywhere.
 
-Mint numbering is a DISTRIBUTED two-phase rank (sort-based
-zipWithIndex): surfaces are bucketed by their 2-char prefix (a weakly
-order-preserving function of the sort key, so bucket-then-rank equals
-the global ``ROW_NUMBER() OVER (ORDER BY surface)``), ranked inside
-each bucket with a partitioned window, and shifted by the cumulative
-bucket counts (a window over the tiny per-bucket aggregate). On
-vocabulary-bounded gazetteers this matches the old single-partition
-window bit-for-bit; on open web text (every typo a distinct surface)
-it keeps the sort spread across buckets instead of one straggler task.
+Mint numbering is a DISTRIBUTED rank (ops/rank.py:ordered_prefix):
+surfaces are bucketed by their 2-char prefix — weakly order-preserving
+(UTF-8 byte order == codepoint order), so bucket-then-rank equals the
+global ``ROW_NUMBER() OVER (ORDER BY surface)`` — and ranked inside
+each bucket with a partitioned window, shifted by the broadcast
+counts of the earlier buckets. On open web text (every typo a
+distinct surface) the sort stays spread across buckets instead of one
+straggler task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-
-def _dense_rank_by(df: DataFrame, key: str, out_col: str, prefix_len: int = 2) -> DataFrame:
-    """Distributed deterministic ``ROW_NUMBER() OVER (ORDER BY key)``
-    (1-based) without a single-partition global sort.
-
-    Correctness: ``substring(key, 1, n)`` is weakly order-preserving
-    (UTF-8 byte order == codepoint order), so global rank =
-    (rows in strictly-smaller buckets) + (rank within own bucket).
-    The cumulative offset is a theta self-join over the per-bucket
-    count table (one row per bucket — bounded by alphabet², not data
-    size): O(buckets²) trivially, and the plan carries NO
-    single-partition exchange at all (an unpartitioned prefix-sum
-    window would execute fine on the tiny table but plans a
-    single-partition sort — this keeps every stage hash-partitioned).
-    """
-    d = df.withColumn("_bkt", F.substring(F.col(key), 1, prefix_len))
-    cnts = d.groupBy("_bkt").agg(F.count("*").alias("_n"))
-    lower = cnts.select(F.col("_bkt").alias("_b2"), F.col("_n").alias("_n2"))
-    offs = (
-        cnts.join(F.broadcast(lower), F.col("_b2") < F.col("_bkt"), "left")
-        .groupBy("_bkt")
-        .agg(F.coalesce(F.sum("_n2"), F.lit(0)).alias("_off"))
-    )
-    w_in = Window.partitionBy("_bkt").orderBy(key)
-    return (
-        d.join(F.broadcast(offs), "_bkt")
-        .withColumn(out_col, F.row_number().over(w_in) + F.col("_off"))
-        .drop("_bkt", "_off")
-    )
+from ..ops.rank import ordered_prefix
 
 
 def link_entities(
@@ -101,12 +72,15 @@ def link_entities(
     # the ContextCleaner when the frame becomes unreachable, whereas a
     # persist() pins CacheManager entries for the session lifetime —
     # a storage-memory leak across the 72-query driver session.
+    buckets = miss_surfaces.withColumn("_bkt", F.substring("surface", 1, 2))
     misses = (
-        _dense_rank_by(miss_surfaces, "surface", "_rnk")
-        .withColumn(
-            "mint_id", F.concat(F.lit(mint_prefix), F.col("_rnk").cast("string"))
+        ordered_prefix(buckets, "_bkt", ["surface"], "_p")
+        .select(
+            "surface",
+            F.concat(F.lit(mint_prefix), (F.col("_p") + 1).cast("string")).alias(
+                "mint_id"
+            ),
         )
-        .drop("_rnk")
         .localCheckpoint()
     )
     new_entities = misses.select(

@@ -34,7 +34,6 @@ def dict_ner(
     sentences: DataFrame,
     gazetteer: dict[str, str] | list[tuple[str, str]],
     source: str = "dict",
-    keep_empty: bool = False,
 ) -> DataFrame:
     """sentences(doc_id, batch_id, sent_idx, text) → mentions.
 
@@ -53,7 +52,6 @@ def dict_ner(
         sents = text.fillna("").tolist()
         return pd.Series(match_terms_batch(sents, idx))
 
-    exploded = F.posexplode if not keep_empty else F.posexplode_outer
     # extra input columns (e.g. warc_ts in the streaming path) pass through
     extras = [c for c in sentences.columns if c not in ("doc_id", "batch_id", "sent_idx", "text")]
     return sentences.select(
@@ -61,7 +59,7 @@ def dict_ner(
         "batch_id",
         "sent_idx",
         *extras,
-        exploded(_match_udf("text")).alias("mention_idx", "m"),
+        F.posexplode(_match_udf("text")).alias("mention_idx", "m"),
     ).select(
         "doc_id",
         "batch_id",

@@ -7,18 +7,13 @@ every ordered mention pair within a sentence, plus typed predicates
 from pattern rules over the text BETWEEN the two mentions (the
 pattern-rule extension mandated by the target contract).
 
-Plan shape: two formulations, MEASURED head-to-head at 600k docs on a
-4-executor local-cluster:
-* ``cooccurrence_triples`` (default) — self-equi-join of mentions on
-  (doc_id, sent_idx) with mention_idx inequality, then one equi-join
-  with the sentence text. Warm wall-clock 5.6s.
-* ``cooccurrence_triples_grouped`` — collect mentions per sentence and
-  expand ordered pairs INTRA-ROW with nested array transforms. Ships
-  less shuffle data (mentions once instead of twice) but Spark runs
-  nested higher-order functions in interpreted mode, not whole-stage
-  codegen, and the per-row expression cost dominates: 15.4s warm —
-  ~3× slower. Kept as the reference formulation and for clusters
-  where shuffle I/O (not CPU) is the true bottleneck.
+Plan shape: self-equi-join of mentions on (doc_id, sent_idx) with
+mention_idx inequality, then one equi-join with the sentence text.
+Measured at 600k docs on a 4-executor local-cluster against an
+intra-row formulation (collect mentions per sentence, expand pairs
+with nested array transforms): 5.6 s vs 15.4 s warm — Spark runs the
+nested higher-order functions interpreted, outside whole-stage
+codegen, and that per-row cost outweighs the shuffle it saves.
 """
 
 from __future__ import annotations
@@ -69,7 +64,7 @@ def _select_mentions(linked: DataFrame, subj_col: str, cap: int | None) -> DataF
     return m
 
 
-def cooccurrence_triples_grouped(
+def cooccurrence_triples(
     linked: DataFrame,
     sentences: DataFrame,
     subj_col: str = "ent_name",
@@ -81,49 +76,8 @@ def cooccurrence_triples_grouped(
     earlier mention — reference builds its entity list in sentence
     order (entity_parser.py:19-40). Pattern predicates come from the
     sentence slice between the two mentions (JVM substring, no UDF).
-    """
-    m = _select_mentions(linked, subj_col, max_mentions_per_sentence)
-    per_sent = m.groupBy("doc_id", "batch_id", "sent_idx").agg(
-        F.array_sort(
-            F.collect_list(F.struct("mention_idx", "ent", "begin", "end"))
-        ).alias("ms")
-    ).filter(F.size("ms") >= 2)  # reference co-occurrence condition (≥2)
-
-    sent = sentences.select("doc_id", "sent_idx", F.col("text").alias("sent_text"))
-    joined = per_sent.join(sent, ["doc_id", "sent_idx"])
-
-    # intra-row ordered pair expansion:
-    # pairs = [(ms[i], ms[j]) for i < j], flattened then exploded
-    pairs = F.explode(
-        F.flatten(
-            F.expr(
-                "transform(ms, (a, i) ->"
-                " transform(slice(ms, i + 2, size(ms) - i - 1), b -> struct(a, b)))"
-            )
-        )
-    ).alias("p")
-    exploded = joined.select("doc_id", "batch_id", "sent_idx", "sent_text", pairs)
-    gap = F.expr(
-        "substring(sent_text, p.a.`end` + 2, greatest(p.b.begin - p.a.`end` - 1, 0))"
-    )
-    return exploded.select(
-        F.col("p.a.ent").alias("subj"),
-        _gap_pred(gap).alias("pred"),
-        F.col("p.b.ent").alias("obj"),
-        "doc_id",
-        "sent_idx",
-        "batch_id",
-    )
-
-
-def cooccurrence_triples(
-    linked: DataFrame,
-    sentences: DataFrame,
-    subj_col: str = "ent_name",
-    max_mentions_per_sentence: int | None = None,
-) -> DataFrame:
-    """Join-based formulation (the default; see module docstring for
-    the measured comparison vs the grouped intra-row expansion)."""
+    ``max_mentions_per_sentence`` pairs only mentions with
+    ``mention_idx`` below it (None = uncapped)."""
     m = _select_mentions(linked, subj_col, max_mentions_per_sentence)
     a = m.alias("a")
     b = m.alias("b")

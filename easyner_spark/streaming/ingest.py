@@ -36,7 +36,6 @@ def read_page_stream(
     spark: SparkSession,
     input_dir: str,
     watermark: str = "10 minutes",
-    max_files_per_trigger: int | None = None,
     canonicalize_urls: bool = False,
 ) -> DataFrame:
     """File-source stream of pages with watermarked url-dedup.
@@ -52,10 +51,7 @@ def read_page_stream(
     doc_id. Off by default: the batch contract is byte-identical text
     per RAW url, and canonicalization changes doc_id = sha2(url).
     """
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(input_dir)
+    raw = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
     if canonicalize_urls:
         from ..ops.web import canonical_url
 

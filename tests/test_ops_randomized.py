@@ -188,21 +188,25 @@ def test_asof_salt_spreads_single_timestamp_hot_key(spark):
 
 
 def test_two_phase_rank_equals_global_rank_random(spark):
-    """_two_phase_rank == RANK() OVER (ORDER BY count DESC, ties) on
-    random data with heavy count collisions (the helper's precondition
-    — unique (count, ties) per row — holds by construction here)."""
+    """ordered_prefix bucketed by the count, descending (the rank shape
+    of the frequency/backbone/Gini queries), + 1 == RANK() OVER (ORDER
+    BY count DESC, ties) on random data with heavy count collisions
+    (the precondition — unique (count, ties) per row — holds by
+    construction here)."""
     import random
 
     from pyspark.sql import Window as W, functions as F
 
-    from easyner_spark.queries import _two_phase_rank
+    from easyner_spark.ops.rank import ordered_prefix
 
     rng = random.Random(7)
     rows = [(f"k{i:04d}", rng.randrange(1, 12)) for i in range(500)]
     df = spark.createDataFrame(rows, "key string, total_count int")
     got = {
-        r["key"]: r["rnk"]
-        for r in _two_phase_rank(df, "total_count", ["key"]).collect()
+        r["key"]: r["p"] + 1
+        for r in ordered_prefix(
+            df, "total_count", ["key"], "p", descending=True
+        ).collect()
     }
     want = {
         r["key"]: r["rnk"]
@@ -431,11 +435,11 @@ def test_k_truss_random_graph_matches_sequential_peel(spark):
 
 
 def test_bucket_prefix_agg_random_matches_sequential(spark):
-    """_bucket_prefix_agg (the shared broadcast theta prefix shape) vs
+    """bucket_prefix (the shared broadcast theta prefix shape) vs
     a sequential prefix on random bucket tables, across agg function
     (sum/max) and inclusivity; first bucket must survive as NULL in
     the strict variant."""
-    from easyner_spark.queries import _bucket_prefix_agg
+    from easyner_spark.ops.rank import bucket_prefix
 
     rng = random.Random(61)
     rows = [(k, rng.randrange(-50, 50)) for k in rng.sample(range(100), 17)]
@@ -450,7 +454,7 @@ def test_bucket_prefix_agg_random_matches_sequential(spark):
                 expect[k] = py_fn(vals) if vals else None
             got = {
                 r["k"]: r["p"]
-                for r in _bucket_prefix_agg(
+                for r in bucket_prefix(
                     df, "k", "v", agg_fn, "p", inclusive=inclusive
                 ).collect()
             }
@@ -515,13 +519,13 @@ def test_scc_bounded_random_digraph_matches_sequential(spark):
 
 
 def test_hash_order_prefix_random_matches_sequential(spark):
-    """_hash_order_prefix (the shared two-phase exclusive-prefix-sum
-    scaffold behind the interleave rank and the packing manifest) vs a
-    sequential prefix over the true (h, doc_id) order — random weights
+    """ordered_prefix over hash-prefix buckets (the shape behind the
+    interleave rank and the packing manifest) vs a sequential
+    exclusive prefix over the true (h, doc_id) order — random weights
     including zeros, random hex keys with shared 2-char prefixes so
     multi-row buckets, single-row buckets and bucket-boundary
     crossings are all exercised."""
-    from easyner_spark.queries import _hash_order_prefix
+    from easyner_spark.ops.rank import ordered_prefix
 
     rng = random.Random(71)
     prefixes = ["0a", "0b", "3f", "c2"]
@@ -541,7 +545,41 @@ def test_hash_order_prefix_random_matches_sequential(spark):
         cum += v
     got = {
         r["doc_id"]: r["cum_before"]
-        for r in _hash_order_prefix(df, "v").collect()
+        for r in ordered_prefix(
+            df, "bkt", ["h", "doc_id"], "cum_before", val="v"
+        ).collect()
+    }
+    assert got == expect
+
+
+def test_ordered_prefix_random_matches_python_sort(spark):
+    """ordered_prefix vs a Python sort in both of its shapes: an
+    ascending string key bucketed by its 2-char prefix with val=None
+    (the NEL mint: prefix == rank - 1; keys include the empty string,
+    shared prefixes and multi-byte characters), and a descending
+    numeric bucket with weights (zeros included) and ascending ties."""
+    from easyner_spark.ops.rank import ordered_prefix
+
+    rng = random.Random(79)
+    keys = {
+        "".join(rng.choice("abé日z") for _ in range(rng.randrange(0, 5)))
+        for _ in range(80)
+    }
+    df = spark.createDataFrame([(k, k[:2]) for k in keys], "k string, b string")
+    got = {r["k"]: r["p"] for r in ordered_prefix(df, "b", ["k"], "p").collect()}
+    assert got == {k: i for i, k in enumerate(sorted(keys))}
+
+    rows = [(i, rng.randrange(1, 6), rng.randrange(0, 9)) for i in range(80)]
+    df = spark.createDataFrame(rows, "id bigint, c bigint, v bigint")
+    expect, cum = {}, 0
+    for i, _c, v in sorted(rows, key=lambda r: (-r[1], r[0])):
+        expect[i] = cum
+        cum += v
+    got = {
+        r["id"]: r["p"]
+        for r in ordered_prefix(
+            df, "c", ["id"], "p", val="v", descending=True
+        ).collect()
     }
     assert got == expect
 

@@ -87,6 +87,32 @@ def test_triples_pr_at_least_095(engine, oracle):
     assert p == 1.0 and r == 1.0  # dict path is exactly reproducible
 
 
+def test_triples_mention_cap_pairs_only_leading_mentions(spark):
+    """max_mentions_per_sentence=k: a sentence holding more than k
+    mentions pairs only those with mention_idx < k; None pairs all."""
+    sents = spark.createDataFrame(
+        [("d", 0, "A x B y C z D"), ("d", 1, "E x F")],
+        "doc_id string, sent_idx int, text string",
+    )
+    linked = spark.createDataFrame(
+        [("d", 0, j, i, n, 4 * i, 4 * i) for j, ns in enumerate(("ABCD", "EF"))
+         for i, n in enumerate(ns)],
+        "doc_id string, batch_id int, sent_idx int, mention_idx int,"
+        " ent_name string, begin int, end int",
+    )
+
+    def pairs(cap):
+        tri = cooccurrence_triples(linked, sents, max_mentions_per_sentence=cap)
+        return sorted((r["subj"], r["obj"]) for r in tri.collect())
+
+    assert pairs(None) == [
+        ("A", "B"), ("A", "C"), ("A", "D"), ("B", "C"), ("B", "D"), ("C", "D"),
+        ("E", "F"),
+    ]
+    assert pairs(3) == [("A", "B"), ("A", "C"), ("B", "C"), ("E", "F")]
+    assert pairs(2) == [("A", "B"), ("E", "F")]
+
+
 def test_fused_kg_triples_matches_staged_chain(engine, spark):
     """The benches' single-action chain yields the same triples as the
     stage-by-stage frames above."""
@@ -243,7 +269,7 @@ def test_graph_stage_skips_cleanly_on_empty_triples(spark, tmp_path):
     operator to re-run a stage that just ran — the graph stage records
     a skip note instead."""
     from easyner_spark.corpus import pages_df
-    from easyner_spark.pipeline import run_pipeline
+    from easyner_spark.pipeline import STAGES, run_pipeline
 
     wh = str(tmp_path / "wh_empty")
     report = run_pipeline(
@@ -252,7 +278,7 @@ def test_graph_stage_skips_cleanly_on_empty_triples(spark, tmp_path):
         wh,
         n_batches=2,
         gazetteer={"zzz-not-in-corpus": "disease"},
-        canonicalize=False,
+        stages=set(STAGES) - {"canonical"},
     )
     assert report["graph"] == {"skipped": "triples stage committed no rows"}
     assert report["_totals"]["triples"] is None

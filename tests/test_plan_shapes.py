@@ -36,13 +36,19 @@ def test_ivf_centroids_use_distributed_topk(spark):
 def test_nel_mint_rank_is_bucket_partitioned(spark):
     """The miss-mint rank must window-partition by the prefix bucket;
     only the per-bucket OFFSET aggregate (≤ alphabet² rows) may pass
-    through a single partition."""
-    from easyner_spark.stages.nel import _dense_rank_by
+    through a single partition. Same call as stages/nel.py's mint."""
+    from easyner_spark.ops.rank import ordered_prefix
+
+    def rank(df):
+        d = df.withColumn("_bkt", F.substring("surface", 1, 2))
+        return ordered_prefix(d, "_bkt", ["surface"], "_p").withColumn(
+            "rnk", F.col("_p") + 1
+        )
 
     df = spark.createDataFrame(
         [(s,) for s in ["zz", "ab", "ba", "az", "bb", "a"]], "surface string"
     )
-    ranked = _dense_rank_by(df, "surface", "rnk")
+    ranked = rank(df)
     plan = _plan(ranked)
     assert "hashpartitioning(_bkt" in plan  # the big side is spread over buckets
     got = {r["surface"]: r["rnk"] for r in ranked.collect()}
@@ -55,7 +61,7 @@ def test_nel_mint_rank_is_bucket_partitioned(spark):
     df2 = spark.createDataFrame([(s,) for s in vals], "surface string")
     got2 = {
         r["surface"]: r["rnk"]
-        for r in _dense_rank_by(df2, "surface", "rnk").collect()
+        for r in rank(df2).collect()
     }
     assert got2 == {s: i + 1 for i, s in enumerate(sorted(vals))}
 
