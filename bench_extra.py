@@ -4,12 +4,14 @@ capture — WITHOUT touching the frozen bench.py / its methodology.
 
 Usage:
     python bench_extra.py [--repeats N] [--explain-dir DIR] [--sf DIR]
-                          [--cpus N] [--kg] name [name ...]
+                          [--kg] name [name ...]
     python bench_extra.py --all            # every registered query
 
 Prints one JSON line: {"queries": {name: min_sec}, "samples": {...},
 "sf": ..., "cpus": ..., "vm_microbench_s": ..., "jvm_microbench_s": ...}.
-Timing methodology matches bench.py: noop sink, min of N runs.
+Timing methodology matches bench.py: noop sink, min of N runs. The
+session is session.get_spark's default: local[$SPARK_GRAFT_CPUS] (all
+cores when unset), shuffle partitions = cores.
 """
 
 from __future__ import annotations
@@ -29,7 +31,6 @@ def main() -> None:
     ap.add_argument("--explain-dir", default=None)
     ap.add_argument("--explain-only", action="store_true")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "16"))
     ap.add_argument("--kg", action="store_true", help="also run the fused KG pipeline")
     ap.add_argument("--kg-docs", type=int, default=int(os.environ.get("SPARK_GRAFT_KG_DOCS", "40000")))
     args = ap.parse_args()
@@ -43,11 +44,8 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
 
-    spark = get_spark(
-        app_name="easyner_bench_extra",
-        master=f"local[{args.cpus}]",
-        shuffle_partitions=int(args.cpus) if args.cpus.isdigit() else 32,
-    )
+    spark = get_spark(app_name="easyner_bench_extra")
+    cpus = str(spark.sparkContext.defaultParallelism)
 
     if args.explain_dir:
         os.makedirs(args.explain_dir, exist_ok=True)
@@ -77,14 +75,14 @@ def main() -> None:
         samples[name] = ss
 
     if args.kg and not args.explain_only:
-        kg = _bench.kg_pipeline(spark, args.cpus, args.kg_docs)
+        kg = _bench.kg_pipeline(spark, cpus, args.kg_docs)
         results["kg_pipeline_synthetic"] = round(kg["sec"], 3)
 
     print(json.dumps({
         "queries": results,
         "samples": samples,
         "sf": args.sf,
-        "cpus": args.cpus,
+        "cpus": cpus,
         "vm_microbench_s": _bench.vm_microbench(),
         "jvm_microbench_s": _bench.jvm_microbench(spark),
     }))

@@ -2,20 +2,31 @@
 
 The north-star pipeline materializes a weighted co-occurrence graph
 (`kg_graph_nodes` / `kg_graph_edges`); these operators are the query
-workloads a KG actually serves from that graph: centrality (PageRank),
-local clustering (triangle participation), and neighborhood expansion
-(two-hop reach). The reference repo stops at frequency ranking
+workloads a KG actually serves from that graph: centrality (PageRank,
+HITS), local clustering (triangles, clustering coefficient, k-core,
+k-truss), communities (label propagation, bounded SCC) and
+neighborhood expansion (two-hop reach, BFS, bounded hop distances).
+The reference repo stops at frequency ranking
 (scripts/analysis.py:61-104 ranks entities by mention count); these are
 the graph-native generalizations of that ranking.
 
-Scale notes (all three):
+Every op reads an edge frame with ``src``/``dst`` columns.
+
+Scale notes:
 * every join is keyed on a node id — at production scale the edge table
   is written bucketed by ``src`` so each PageRank iteration and the
   triangle expansion shuffle only the (much smaller) rank/label side;
-* iterative loops ``localCheckpoint`` per round so the lineage never
-  grows (same discipline as stages/canonical.py:147 pointer-jumping CC);
-* no step ever materializes a neighborhood list in one buffer — degree
-  caps belong upstream (stages/triples.py applies them before pairing).
+* shared steps exist once: :func:`_weighted_edges` /
+  :func:`_endpoints` are the edge prep and node frame of pagerank and
+  hits, and :func:`_expand_pairs` is the one frontier loop (bfs_hops,
+  hop_distances, directed_reach_pairs);
+* iterative loops keep lineage flat — per-round ``localCheckpoint``
+  (same discipline as stages/canonical.py pointer-jumping CC), or a
+  lazy chain cut every ``PR_CHECKPOINT_EVERY`` rounds for PageRank;
+* no step ever materializes a neighborhood list in one buffer, and no
+  op drops hubs — size bounds belong upstream (stages/triples.py caps
+  mentions per sentence before pairing; the contract backbone keeps
+  only the top-K strongest edges).
 
 Cross-engine determinism: PageRank runs in *scaled integer arithmetic*
 (rank is a BIGINT in units of 1/SCALE) — integer division and integer
@@ -42,50 +53,69 @@ PR_DAMP_DEN = 100
 # calls (≤ 5 rounds) run as one job, shallow enough that a 100-round
 # call cannot overflow task serialization
 PR_CHECKPOINT_EVERY = 8
+# clustering_coefficient's cc unit: parts per million
+CC_SCALE = 1_000_000
+
+
+def _weighted_edges(edges: DataFrame, weight: str | None) -> DataFrame:
+    """The one edge prep of :func:`pagerank` and :func:`hits` →
+    materialized (src, dst, w BIGINT). ``weight=None`` gives w = 1 per
+    distinct edge; otherwise rows with w <= 0 are dropped (a zero-out-
+    weight source would divide by zero; negative weights would
+    floor/truncate differently across engines) and parallel edges are
+    summed. Checkpointed: the per-source sum, the node frame and every
+    round read it, and the upstream plan must run once."""
+    if weight is None:
+        e = edges.select("src", "dst").distinct().withColumn(
+            "w", F.lit(1).cast("bigint")
+        )
+    else:
+        e = (
+            edges.select("src", "dst", F.col(weight).cast("bigint").alias("w"))
+            .filter(F.col("w") > 0)
+            .groupBy("src", "dst")
+            .agg(F.sum("w").cast("bigint").alias("w"))
+        )
+    return e.localCheckpoint()
+
+
+def _endpoints(e: DataFrame) -> DataFrame:
+    """Distinct (node) frame of a (src, dst) edge frame, materialized —
+    every round joins against it."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
 
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 5,
     scale: int = PR_SCALE,
-    epsilon_scaled: int | None = None,
-    info: dict | None = None,
     weight: str | None = None,
     restart: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank → (node, rank_scaled BIGINT).
 
-    ``epsilon_scaled`` (production option): stop early once the max
-    per-node |Δrank| between successive iterations is <= this many
-    scaled units (e.g. ``scale // 10**6`` for a 1e-6 tolerance). The
-    check is one bounded aggregate per round (max over the joined rank
-    tables — exact integer compare, no float drift); ``iterations``
-    stays the hard cap. The CONTRACT query keeps fixed iterations
-    (epsilon_scaled=None) so the DuckDB oracle replays the identical
-    recursion depth. ``info`` (optional dict) receives
-    ``{"rounds": n, "last_delta": d}`` for observability/tests.
-
     rank_scaled is the PageRank value times ``scale``, computed with
     integer division only: per edge the contribution is
-    ``rank div out_degree``; per node the update is
-    ``(15 * scale) div 100 + (85 * sum(contrib)) div 100``.
-    Dangling-node mass is dropped (no redistribution) — documented
-    semantics, identical in the SQL oracle. Self-loops should be
-    removed by the caller.
+    ``(rank * w) div wsum`` where wsum is the source node's total
+    out-weight; per node the update is
+    ``(15 * scale) div 100 + (85 * sum(contrib)) div 100``. Dangling-
+    node mass is dropped (no redistribution) — documented semantics,
+    identical in the SQL oracle. Self-loops should be removed by the
+    caller.
 
-    ``weight`` (optional column name): WEIGHTED PageRank — per edge the
-    contribution becomes ``(rank * w) div wsum`` where wsum is the
-    source node's total out-weight (exact integers; parallel edges are
-    summed). Weights must be POSITIVE: rows with w <= 0 are dropped
-    before aggregation (a zero-out-weight source would divide by zero;
-    negative weights would floor/truncate differently across engines).
+    ``weight`` (optional column name): WEIGHTED PageRank over positive
+    weights, parallel edges summed (see :func:`_weighted_edges`). With
+    weight=None every distinct edge has w = 1, so wsum is the out-
+    degree and the contribution is the classic ``rank div out_degree``.
     The rank × weight product is computed in DECIMAL(38,0) (cast
     BEFORE the multiply), so hub ranks × large weights cannot overflow
     int64; only the final per-node rank must fit a BIGINT (ANSI mode
-    fails loudly otherwise). With weight=None the classic uniform
-    split runs, bit-identical to before the option existed.
+    fails loudly otherwise).
 
     ``restart`` (optional one-column node frame): PERSONALIZED
     PageRank — the teleport mass lands only on the given seed nodes
@@ -95,9 +125,9 @@ def pagerank(
     ranking behind "related entities" panels and topic-focused crawl
     ordering. Seeds not present in the graph are ignored (they have
     no edges to push mass through); with restart=None the classic
-    uniform variant runs, bit-identical to before the option existed.
+    uniform variant runs.
 
-    Plan shape: the (src, dst, out_degree) table is materialized once
+    Plan shape: the (src, dst, w, wsum) table is materialized once
     (localCheckpoint) and reused every round; each iteration is one
     hash-join edges⋈ranks on src plus one map-side-partial sum keyed by
     dst. With the edge table bucketed by src, only the rank table (one
@@ -105,40 +135,10 @@ def pagerank(
     extra broadcast-sized left join folded into the materialized node
     frame — per-round cost is unchanged.
     """
-    if weight is None:
-        e = (
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .distinct()
-            .localCheckpoint()  # upstream plan runs once, not per consumer
-        )
-        outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-        contrib = "CAST(rank div outdeg AS DECIMAL(38,0))"
-    else:
-        e = (
-            edges.select(
-                F.col(src).alias("src"),
-                F.col(dst).alias("dst"),
-                F.col(weight).cast("bigint").alias("w"),
-            )
-            .filter(F.col("w") > 0)  # see docstring: positive weights only
-            .groupBy("src", "dst")
-            .agg(F.sum("w").cast("bigint").alias("w"))
-            .localCheckpoint()
-        )
-        outdeg = e.groupBy("src").agg(
-            F.sum("w").cast("bigint").alias("wsum")
-        )
-        # cast BEFORE multiplying: a hub's rank (~n_nodes × scale) times
-        # a large bigint edge weight can exceed int64; the DECIMAL(38,0)
-        # product is exact and overflow-free (ADVICE r4)
-        contrib = "CAST(CAST(rank AS DECIMAL(38,0)) * w div wsum AS DECIMAL(38,0))"
-    eo = e.join(outdeg, "src").localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _weighted_edges(edges, weight)
+    wsum = e.groupBy("src").agg(F.sum("w").cast("bigint").alias("wsum"))
+    eo = e.join(wsum, "src").localCheckpoint()
+    nodes = _endpoints(e)
     base = PR_DAMP_DEN - PR_DAMP_NUM  # 15
     base_term = base * scale // PR_DAMP_DEN
     if restart is None:
@@ -159,32 +159,29 @@ def pagerank(
             .alias("rank"),
         )
         base_expr = f"CASE WHEN _seed = 1 THEN {base_term} ELSE 0 END"
-    if info is not None:
-        info.update({"rounds": 0, "last_delta": None})
-    # fixed-iteration lineage cap: chain rounds lazily (each round's
-    # frame has ONE consumer — the next round — and eo/nodes are
-    # already materialized) but cut the plan every PR_CHECKPOINT_EVERY
-    # rounds so a large iteration count cannot overflow task
-    # serialization. Contract queries run ≤ 5 rounds → zero mid-loop
-    # checkpoints (one job total); a 100-round production call pays
-    # 1/PR_CHECKPOINT_EVERY of the old per-round eager-job cost.
-    for it in range(iterations):
-        if info is not None:
-            info["rounds"] += 1
-        # per-edge contribution stays BIGINT (bounded by a node's rank);
-        # the in-sum and damping product go through DECIMAL(38,0) so no
-        # intermediate can overflow int64 on hub nodes (the DuckDB
+    # lineage cap: chain rounds lazily (each round's frame has ONE
+    # consumer — the next round — and eo/nodes are already
+    # materialized) but cut the plan every PR_CHECKPOINT_EVERY rounds
+    # so a large iteration count cannot overflow task serialization.
+    # Contract queries run ≤ 5 rounds → zero mid-loop checkpoints.
+    for it in range(1, iterations + 1):
+        # cast BEFORE multiplying: a hub's rank (~n_nodes × scale) times
+        # a large bigint edge weight can exceed int64; the in-sum and
+        # damping product also go through DECIMAL(38,0) (the DuckDB
         # oracle's SUM(BIGINT) is HUGEINT — same exact semantics)
         in_sum = (
             eo.join(ranks, eo["src"] == ranks["node"])
             .select(
                 F.col("dst").alias("node"),
-                F.expr(contrib).alias("c"),
+                F.expr(
+                    "CAST(CAST(rank AS DECIMAL(38,0)) * w div wsum"
+                    " AS DECIMAL(38,0))"
+                ).alias("c"),
             )
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        new_ranks = nodes.join(in_sum, "node", "left").select(
+        ranks = nodes.join(in_sum, "node", "left").select(
             "node",
             F.expr(
                 f"CAST(({base_expr}) + floor({PR_DAMP_NUM}"
@@ -192,38 +189,16 @@ def pagerank(
                 f" / {PR_DAMP_DEN}) AS BIGINT)"
             ).alias("rank"),
         )
-        if epsilon_scaled is not None:
-            # the convergence check consumes each round's frame twice
-            # (delta join + next round) — materialize every round
-            # (r6 opt, guide §1.2: the fixed-iteration path below
-            # instead chains lazily with a periodic lineage cut).
-            new_ranks = new_ranks.localCheckpoint()
-            # exact integer convergence check: one hash-join on node
-            # (both sides already materialized) + a bounded max agg
-            delta = (
-                new_ranks.join(
-                    ranks.select("node", F.col("rank").alias("_prev")), "node"
-                )
-                .agg(F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("d"))
-                .first()["d"]
-            )
-            ranks = new_ranks
-            if info is not None:
-                info["last_delta"] = delta
-            if delta is not None and delta <= epsilon_scaled:
-                break
-        else:
-            if (it + 1) % PR_CHECKPOINT_EVERY == 0 and it + 1 < iterations:
-                new_ranks = new_ranks.localCheckpoint()
-            ranks = new_ranks
+        if it % PR_CHECKPOINT_EVERY == 0 and it < iterations:
+            ranks = ranks.localCheckpoint()
     return ranks.select("node", F.col("rank").alias("rank_scaled"))
 
 
-def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+def _undirected(edges: DataFrame) -> DataFrame:
     return (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -255,23 +230,7 @@ def _degrees(u: DataFrame, node_col: str = "n", deg_col: str = "d") -> DataFrame
     )
 
 
-def _drop_hubs(u: DataFrame, max_degree: int) -> DataFrame:
-    """Remove edges touching nodes whose undirected degree exceeds the
-    cap — the standard super-hub guard before quadratic expansions
-    (same policy as stages/triples.py's per-sentence mention cap:
-    opt-in, exact when None)."""
-    hubs = _degrees(u).filter(F.col("d") > max_degree).select("n")
-    return u.join(
-        hubs.withColumnRenamed("n", "a"), "a", "left_anti"
-    ).join(hubs.withColumnRenamed("n", "b"), "b", "left_anti")
-
-
-def triangles(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_degree: int | None = None,
-) -> DataFrame:
+def triangles(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation → (node, n_triangles BIGINT).
 
     Edges are canonicalized to undirected (a < b, distinct); each
@@ -283,19 +242,12 @@ def triangles(
     a<b<c orientation makes every wedge originate at its lowest-id
     corner, which bounds the join fan-out by the *oriented* degree
     (max out-degree under the ordering ≈ sqrt(m) after degree
-    orientation), the same trick GraphX/GraphFrames use. On open-web
-    graphs pass ``max_degree`` to drop super-hub edges before the
-    wedge join (exact when None; capped mode deliberately ignores
-    triangles through hubs — stopword-like entities).
+    orientation), the same trick GraphX/GraphFrames use.
     """
-    # materialize once BEFORE any reuse: the degree computation and the
-    # three-way self-join would otherwise replicate the whole upstream
-    # plan per consumer (a production run reads the already-
-    # materialized edge table instead)
-    u = _undirected(edges, src, dst).localCheckpoint()
-    if max_degree is not None:
-        u = _drop_hubs(u, max_degree).localCheckpoint()
-    return _triangles_of(u)
+    # materialize once BEFORE any reuse: the three-way self-join would
+    # otherwise replicate the whole upstream plan per side (a
+    # production run reads the already-materialized edge table instead)
+    return _triangles_of(_undirected(edges).localCheckpoint())
 
 
 def _triangle_corners(u: DataFrame) -> DataFrame:
@@ -331,18 +283,12 @@ def _triangles_of(u: DataFrame) -> DataFrame:
     )
 
 
-def clustering_coefficient(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_degree: int | None = None,
-    scale: int = 1_000_000,
-) -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Per-node local clustering coefficient → (node, degree,
     n_triangles, cc_ppm), all BIGINT.
 
     cc = 2·triangles(n) / (deg(n)·(deg(n)−1)), emitted as the exact
-    integer ``2 * n_triangles * scale div (d * (d-1))`` (cross-engine
+    integer ``2 * n_triangles * CC_SCALE div (d * (d-1))`` (cross-engine
     float rule: quantize, never divide doubles). Degree-1 nodes have
     no possible wedge — cc_ppm = 0. Triangle-free nodes are kept
     (left join → 0), unlike ``triangles`` which omits them: the
@@ -352,19 +298,13 @@ def clustering_coefficient(
     Scale: the wedge closure is the only quadratic piece and is
     inherited from ``triangles`` (lowest-corner orientation bounds
     fan-out by oriented degree); the degree agg is map-side partial
-    and the final join is on node — both sides already keyed. The
-    hub cap applies to the SAME canonical edge frame used for both
-    triangles and degrees, so capped mode is self-consistent (a
-    coefficient over full degrees but hub-dropped triangles would be
-    meaningless).
+    and the final join is on node — both sides already keyed.
 
     Reference parity: EasyNER has no graph analytics; this extends
     the co-occurrence analysis family (reference scripts/analysis.py)
     the same way pagerank/k_core do.
     """
-    u = _undirected(edges, src, dst).localCheckpoint()
-    if max_degree is not None:
-        u = _drop_hubs(u, max_degree).localCheckpoint()
+    u = _undirected(edges).localCheckpoint()
     tri = _triangles_of(u)  # u is already canonical + checkpointed
     deg = _degrees(u, node_col="node", deg_col="degree")
     return (
@@ -373,26 +313,20 @@ def clustering_coefficient(
             "node",
             F.col("degree").cast("bigint").alias("degree"),
             F.coalesce("n_triangles", F.lit(0)).cast("bigint").alias("n_triangles"),
-            # 2·tri·scale in DECIMAL(38,0): a BIGINT product would
+            # 2·tri·CC_SCALE in DECIMAL(38,0): a BIGINT product would
             # overflow past ~4.6e12 triangles/node under ANSI (same
-            # guard as the weighted-pagerank contrib); the quotient
-            # is ≤ scale so the final BIGINT cast is always safe
+            # guard as the pagerank contrib); the quotient is
+            # ≤ CC_SCALE so the final BIGINT cast is always safe
             F.expr(
                 f"CAST(CASE WHEN degree >= 2 THEN"
                 f" CAST(2 AS DECIMAL(38,0)) * coalesce(n_triangles, 0)"
-                f" * {scale} div (degree * (degree - 1)) ELSE 0 END AS BIGINT)"
+                f" * {CC_SCALE} div (degree * (degree - 1)) ELSE 0 END AS BIGINT)"
             ).alias("cc_ppm"),
         )
     )
 
 
-def node_jaccard(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    min_common: int = 2,
-    max_neighbor_degree: int | None = None,
-) -> DataFrame:
+def node_jaccard(edges: DataFrame, min_common: int = 2) -> DataFrame:
     """Common-neighbor (Jaccard) node similarity →
     (ent_a, ent_b, n_common, deg_a, deg_b, jaccard_ppm BIGINT).
 
@@ -407,32 +341,16 @@ def node_jaccard(
 
     Scale: fan-out of the shared-neighbor join is Σ deg(v)² over
     neighbors v — one stopword-like hub entity (degree 10⁶) generates
-    ~10¹² candidate pairs. ``max_neighbor_degree`` drops super-hub
-    NEIGHBOR rows before the expansion (same opt-in policy as
-    ``triangles``/``two_hop_reach``): pairs then count only common
-    neighbors of bounded degree (similarity via stopword-like hubs
-    carries no signal), while ``deg_a``/``deg_b`` stay the EXACT full
-    degrees, so capped jaccard is a deterministic underestimate.
-    Exact when None.
+    ~10¹² candidate pairs, so run it over a degree-bounded graph.
     """
-    u = _undirected(edges, src, dst).localCheckpoint()
-    adj = _adjacency(u)  # consumed by deg + both self-join sides
-    # deg fans out to up to three consumers (hub filter + both degree
-    # dimensions) — materialize the aggregate once
+    adj = _adjacency(_undirected(edges).localCheckpoint())
+    # deg fans out to both degree dimensions — materialize it once
     deg = (
         adj.groupBy("u")
         .agg(F.count("*").cast("bigint").alias("d"))
         .localCheckpoint()
     )
-    mid = adj
-    if max_neighbor_degree is not None:
-        hubs = deg.filter(F.col("d") > max_neighbor_degree).select(
-            F.col("u").alias("v")
-        )
-        # mid feeds both self-join sides; the anti-join result is not a
-        # checkpointed frame like adj, so materialize it too
-        mid = adj.join(hubs, "v", "left_anti").localCheckpoint()
-    l, r = mid.alias("l"), mid.alias("r")
+    l, r = adj.alias("l"), adj.alias("r")
     pairs = (
         l.join(r, (F.col("l.v") == F.col("r.v")) & (F.col("l.u") < F.col("r.u")))
         .groupBy(F.col("l.u").alias("ent_a"), F.col("r.u").alias("ent_b"))
@@ -457,12 +375,7 @@ def node_jaccard(
     )
 
 
-def two_hop_reach(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_mid_degree: int | None = None,
-) -> DataFrame:
+def two_hop_reach(edges: DataFrame) -> DataFrame:
     """Distinct two-hop reach → (node, n_two_hop BIGINT).
 
     Counts nodes exactly two undirected hops away: reachable via a
@@ -472,20 +385,13 @@ def two_hop_reach(
     related-entity panels.
 
     Scale: adjacency⋈adjacency on the middle node is the one big
-    shuffle; the anti-join reuses the adjacency partitioning. Skewed
-    hubs bound the fan-out at degree² — ``max_mid_degree`` drops
-    super-hub MIDDLE nodes before expansion (paths through stopword-
-    like entities carry no signal); endpoints are unaffected, exact
-    when None.
+    shuffle; the anti-join reuses the adjacency partitioning. A hub
+    middle node costs degree² paths, so run it over a degree-bounded
+    graph.
     """
-    u0 = _undirected(edges, src, dst).localCheckpoint()  # upstream once
+    u0 = _undirected(edges).localCheckpoint()  # upstream once
     adj = _adjacency(u0)  # reused by both self-join sides + anti-join
-    mid = adj
-    if max_mid_degree is not None:
-        deg = adj.groupBy(F.col("u").alias("m")).agg(F.count("*").alias("d"))
-        hubs = deg.filter(F.col("d") > max_mid_degree).select("m")
-        mid = adj.join(hubs.withColumnRenamed("m", "u"), "u", "left_anti")
-    l, r = adj.alias("l"), mid.alias("r")  # middle node is r.u (== l.v)
+    l, r = adj.alias("l"), adj.alias("r")  # middle node is r.u (== l.v)
     paths = (
         l.join(r, F.col("l.v") == F.col("r.u"))
         .filter(F.col("l.u") != F.col("r.v"))
@@ -502,10 +408,7 @@ def two_hop_reach(
 
 def label_propagation(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 4,
-    max_degree: int | None = None,
     snapshots: list | None = None,
 ) -> DataFrame:
     """Fixed-round SYNCHRONOUS label propagation → (node, community).
@@ -530,16 +433,13 @@ def label_propagation(
     not the joined edge frame; that beats pre-aggregation
     ``repartition(node)`` (which would move every joined edge row to
     save the second, tiny exchange). localCheckpoint per round keeps
-    lineage flat. With the
-    adjacency bucketed by ``v`` only the one-row-per-node label frame
-    crosses the wire each round. ``max_degree`` (opt-in, exact when
-    None) drops super-hub edges first — the usual stopword-entity
-    guard, same policy as ``triangles``/``node_jaccard``.
+    lineage flat. With the adjacency bucketed by ``v`` only the
+    one-row-per-node label frame crosses the wire each round.
 
-    ``snapshots`` (optional list, same observability pattern as
-    pagerank's ``info``): receives the (node, label) frame after each
-    round — already localCheckpointed, so consuming them later costs
-    no recomputation. The contract query unions them into the full
+    ``snapshots`` (optional list): receives the (node, label) frame
+    after each round — already localCheckpointed, so consuming them
+    later costs no recomputation. The contract query unions them into
+    the full
     propagation trajectory, which pins every intermediate round
     cross-engine, not just the (often fully-converged) fixpoint.
 
@@ -547,10 +447,8 @@ def label_propagation(
     Aitslab/EasyNER scripts/analysis.py:61-104); this is the
     graph-native grouping its entity lists hint at.
     """
-    u = _undirected(edges, src, dst).localCheckpoint()
-    if max_degree is not None:
-        u = _drop_hubs(u, max_degree).localCheckpoint()
-    adj = _adjacency(u)  # reused every round + seeds the label frame
+    # reused every round + seeds the label frame
+    adj = _adjacency(_undirected(edges).localCheckpoint())
     # nodes come from edges, so every node has >= 1 neighbor and the
     # per-round join covers every node — no coalesce branch needed
     labels = (
@@ -584,12 +482,7 @@ def label_propagation(
 
 
 def bfs_hops(
-    edges: DataFrame,
-    sources: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
-    max_hops: int = 3,
+    edges: DataFrame, sources: DataFrame, max_hops: int = 3
 ) -> DataFrame:
     """Multi-source BFS → (node, hops BIGINT): minimum undirected hop
     distance from ANY source node, up to ``max_hops``. The neighborhood
@@ -602,46 +495,24 @@ def bfs_hops(
     or not it has edges — documented semantics, mirrored in any SQL
     twin via the plain UNION seed).
 
-    Plan: classic frontier expansion — per round ONE keyed hash join
-    (frontier ⋈ adjacency on the frontier node) and ONE anti-join
-    against the visited set, both localCheckpointed so lineage stays
-    flat. The frontier (not the graph) crosses the wire each round;
-    with the adjacency bucketed by ``u`` the join is co-located. Work
-    is Σ frontier-degree per round — output-bounded, never quadratic;
-    ``max_hops`` is the explicit web-scale bound (a 3-hop ball on a
-    small-world graph already touches most of it).
+    Plan: the shared :func:`_expand_pairs` frontier loop with every
+    source under one constant seed (``lit(0)``), so the per-round
+    anti-join on (seed, node) is the anti-join against the visited
+    node set — per round ONE keyed hash join (frontier ⋈ adjacency on
+    the frontier node) and ONE anti-join, localCheckpointed so lineage
+    stays flat. The frontier (not the graph) crosses the wire each
+    round; with the adjacency bucketed by ``u`` the join is
+    co-located. Work is Σ frontier-degree per round — output-bounded,
+    never quadratic; ``max_hops`` is the explicit web-scale bound (a
+    3-hop ball on a small-world graph already touches most of it).
 
     Reference has no graph ops (frequency ranking only,
     Aitslab/EasyNER scripts/analysis.py); this generalizes its
     entity-list lookups to neighborhood queries.
     """
-    u = _undirected(edges, src, dst).localCheckpoint()
-    adj = _adjacency(u)
-    frontier = (
-        sources.select(F.col(node).alias("node")).distinct().localCheckpoint()
-    )
-    # each round's frontier is checkpointed ONCE; the visited set is a
-    # lazy union of those materialized layers (re-checkpointing the
-    # whole union per round would write O(rounds × |visited|) rows)
-    layers = [frontier.select("node", F.lit(0).cast("bigint").alias("hops"))]
-    visited_nodes = frontier
-    for h in range(1, max_hops + 1):
-        nxt = (
-            adj.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(visited_nodes, "node", "left_anti")
-            .localCheckpoint()
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        layers.append(nxt.select("node", F.lit(h).cast("bigint").alias("hops")))
-        visited_nodes = visited_nodes.union(nxt)
-        frontier = nxt
-    out = layers[0]
-    for lay in layers[1:]:
-        out = out.union(lay)
-    return out
+    adj = _adjacency(_undirected(edges).localCheckpoint())
+    start = sources.select(F.lit(0).alias("seed"), "node")
+    return _expand_pairs(adj, start, max_hops).select("node", "hops")
 
 
 def _edge_support(u: DataFrame) -> DataFrame:
@@ -668,13 +539,7 @@ def _edge_support(u: DataFrame) -> DataFrame:
     )
 
 
-def k_truss(
-    edges: DataFrame,
-    t: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int | None = None,
-) -> DataFrame:
+def k_truss(edges: DataFrame, t: int, max_iter: int | None = None) -> DataFrame:
     """k-truss peel → (a, b, support): edges of the maximal subgraph
     in which every edge participates in ≥ t triangles, with their
     support INSIDE that subgraph. The EDGE-level dense-core extractor
@@ -693,7 +558,7 @@ def k_truss(
 
     Reference has no graph ops (frequency ranking only,
     Aitslab/EasyNER scripts/analysis.py)."""
-    u = _undirected(edges, src, dst).localCheckpoint()
+    u = _undirected(edges).localCheckpoint()
     rounds = 0
     while True:
         # ONE wedge closure per round: the same support frame drives
@@ -715,8 +580,6 @@ HITS_SCALE = 10**9
 
 def hits(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     weight: str | None = None,
     iterations: int = 3,
     scale: int = HITS_SCALE,
@@ -736,12 +599,13 @@ def hits(
       minus flooring dust (< n_nodes), which is what keeps every
       quantity bounded: no float drift, no norm explosions.
     * products run in DECIMAL(38,0) (cast BEFORE multiplying, same
-      overflow rule as weighted :func:`pagerank`); exactness requires
+      overflow rule as :func:`pagerank`); exactness requires
       ``total_edge_weight · scale² < 10^38`` — at scale 1e9 that is
       Σw < 1e20, far past any real link graph.
-    * weights must be POSITIVE (w <= 0 dropped, parallel edges summed
-      — identical contract to weighted pagerank); ``weight=None``
-      scores the unweighted graph (w = 1 per distinct edge).
+    * self-loops are dropped, then the edge prep is pagerank's
+      (:func:`_weighted_edges`): weights must be POSITIVE (w <= 0
+      dropped, parallel edges summed); ``weight=None`` scores the
+      unweighted graph (w = 1 per distinct edge).
     * nodes with no out-edges have hub 0; no in-edges, authority 0 —
       both KEPT in the output (LEFT JOIN + coalesce), since "pure
       sink" is exactly what a high-authority page looks like.
@@ -759,32 +623,8 @@ def hits(
 
     Reference has no graph ops (frequency ranking only,
     Aitslab/EasyNER scripts/analysis.py)."""
-    if weight is None:
-        e = (
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .select("src", "dst", F.lit(1).cast("bigint").alias("w"))
-            .localCheckpoint()
-        )
-    else:
-        e = (
-            edges.select(
-                F.col(src).alias("src"),
-                F.col(dst).alias("dst"),
-                F.col(weight).cast("bigint").alias("w"),
-            )
-            .filter((F.col("w") > 0) & (F.col("src") != F.col("dst")))
-            .groupBy("src", "dst")
-            .agg(F.sum("w").cast("bigint").alias("w"))
-            .localCheckpoint()
-        )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _weighted_edges(edges.filter(F.col("src") != F.col("dst")), weight)
+    nodes = _endpoints(e)
     # lazy: derived from the checkpointed nodes frame and consumed once
     # (by the first half-step) — an eager checkpoint here paid a job
     # for nothing (r6 opt)
@@ -837,12 +677,7 @@ def hits(
     )
 
 
-def hop_distances(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 3,
-) -> DataFrame:
+def hop_distances(edges: DataFrame, max_hops: int = 3) -> DataFrame:
     """All-pairs bounded hop distance → (seed, node, hops BIGINT):
     for EVERY graph node, its undirected hop-ball up to ``max_hops``
     (the per-node generalization of :func:`bfs_hops`, which tracks one
@@ -852,11 +687,12 @@ def hop_distances(
     are absent (bounded output, never NULL-padded to the n² grid).
 
     This is the primitive behind bounded closeness/harmonic centrality
-    and "ego-network within k hops" extraction. Plan: the same frontier
-    expansion as bfs_hops but keyed by (seed, node) — per round ONE
-    keyed hash join (frontier ⋈ adjacency on the frontier node) and ONE
-    anti-join against the visited pair set, both localCheckpointed so
-    lineage stays flat. Work per round is Σ over frontier pairs of the
+    and "ego-network within k hops" extraction. Plan: the shared
+    :func:`_expand_pairs` loop (the one bfs_hops runs) seeded with
+    every node's trivial (n, n) pair — per round ONE keyed hash join
+    (frontier ⋈ adjacency on the frontier node) and ONE anti-join
+    against the visited pair set, localCheckpointed so lineage stays
+    flat. Work per round is Σ over frontier pairs of the
     node's degree — i.e. total output is Σ per-node ball volume, which
     is what any exact all-pairs-bounded algorithm must write. At web
     scale run it over a bounded backbone (sparse by construction) with
@@ -866,63 +702,53 @@ def hop_distances(
 
     Reference has no graph ops (frequency ranking only,
     Aitslab/EasyNER scripts/analysis.py)."""
-    adj = _adjacency(_undirected(edges, src, dst).localCheckpoint())
-    layers = _expand_pairs(adj, max_hops)
-    out = None
-    for h, lay in enumerate(layers):
-        lab = lay.select(
-            "seed", "node", F.lit(h).cast("bigint").alias("hops")
-        )
-        out = lab if out is None else out.union(lab)
-    return out
+    adj = _adjacency(_undirected(edges).localCheckpoint())
+    return _expand_pairs(adj, _self_pairs(adj), max_hops)
 
 
-def _expand_pairs(adj: DataFrame, max_hops: int) -> list[DataFrame]:
-    """Bounded (seed, node) pair-frontier expansion over a (u, v)
-    adjacency frame — the ONE loop behind :func:`hop_distances`
-    (undirected, doubled adjacency) and :func:`directed_reach_pairs`
-    (directed adjacency): layer 0 is the trivial (n, n) pair for every
-    adjacency endpoint; per round ONE keyed hash join (pair frontier ⋈
-    adjacency on the frontier node) + ONE anti-join against the
-    visited pair set, each new layer localCheckpointed once. Returns
-    the layer list (layer index == hop count); the visited set stays a
-    lazy union of the materialized layers — the full ball is the
-    caller's OUTPUT, so a per-round re-checkpoint would re-write it
-    max_hops times over (same layered-union discipline as bfs_hops).
-    Work per round is Σ adjacency-degree over frontier pairs — total
-    cost is the output volume itself."""
-    frontier = (
-        adj.select(F.col("u").alias("seed"))
-        .union(adj.select(F.col("v").alias("seed")))
-        .distinct()
-        .select("seed", F.col("seed").alias("node"))
-        .localCheckpoint()
+def _self_pairs(adj: DataFrame) -> DataFrame:
+    """The trivial (seed, node) = (n, n) pair of every endpoint of a
+    (u, v) adjacency frame — layer 0 of the all-pairs expansions."""
+    n = adj.select(F.col("u").alias("node")).union(
+        adj.select(F.col("v").alias("node"))
     )
-    layers = [frontier]
-    visited_pairs = frontier
-    for _ in range(1, max_hops + 1):
+    return n.select(F.col("node").alias("seed"), "node")
+
+
+def _expand_pairs(adj: DataFrame, start: DataFrame, max_hops: int) -> DataFrame:
+    """Bounded (seed, node) pair-frontier expansion over a (u, v)
+    adjacency frame → (seed, node, hops BIGINT), the minimum hop count
+    of each reached pair — the ONE frontier loop behind
+    :func:`bfs_hops` (constant seed), :func:`hop_distances`
+    (undirected, doubled adjacency) and :func:`directed_reach_pairs`
+    (directed adjacency). ``start`` is layer 0 (deduplicated here);
+    per round ONE keyed hash join (pair frontier ⋈ adjacency on the
+    frontier node) + ONE anti-join against the visited pair set, each
+    new layer localCheckpointed once. The visited set and the output
+    stay lazy unions of the materialized layers — the full ball is the
+    caller's OUTPUT, so a per-round re-checkpoint would re-write it
+    max_hops times over. Work per round is Σ adjacency-degree over
+    frontier pairs — total cost is the output volume itself."""
+    frontier = start.distinct().localCheckpoint()
+    visited = frontier
+    out = frontier.withColumn("hops", F.lit(0).cast("bigint"))
+    for h in range(1, max_hops + 1):
         nxt = (
             adj.join(frontier.withColumnRenamed("node", "u"), "u")
             .select("seed", F.col("v").alias("node"))
             .distinct()
-            .join(visited_pairs, ["seed", "node"], "left_anti")
+            .join(visited, ["seed", "node"], "left_anti")
             .localCheckpoint()
         )
         if nxt.limit(1).count() == 0:
             break
-        layers.append(nxt)
-        visited_pairs = visited_pairs.union(nxt)
+        out = out.union(nxt.withColumn("hops", F.lit(h).cast("bigint")))
+        visited = visited.union(nxt)
         frontier = nxt
-    return layers
+    return out
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int | None = None,
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
     """k-core peel → (node, core_degree): nodes of the maximal subgraph
     in which every node has undirected degree ≥ k, with their degree
     INSIDE that subgraph. The canonical dense-region extractor (the
@@ -942,7 +768,7 @@ def k_core(
     query pins cross-engine; None runs to fixpoint). The early-exit
     count per round is a 1-row aggregate, not a collect of the frame.
     """
-    u = _undirected(edges, src, dst).localCheckpoint()
+    u = _undirected(edges).localCheckpoint()
     rounds = 0
     # max_iter <= 0 is the 0-round peel: the input graph's own degrees
     while max_iter is None or rounds < max_iter:
@@ -960,12 +786,7 @@ def k_core(
     )
 
 
-def directed_reach_pairs(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 3,
-) -> DataFrame:
+def directed_reach_pairs(edges: DataFrame, max_hops: int = 3) -> DataFrame:
     """All-pairs bounded DIRECTED reachability → distinct (seed, node)
     pairs with node reachable from seed following edge direction in at
     most ``max_hops`` steps, including the trivial (n, n) pair for
@@ -987,23 +808,14 @@ def directed_reach_pairs(
     Reference has no graph ops (frequency ranking only,
     Aitslab/EasyNER scripts/analysis.py)."""
     d = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .distinct()
         .localCheckpoint()
     )
-    layers = _expand_pairs(d, max_hops)
-    out = layers[0]
-    for lay in layers[1:]:
-        out = out.union(lay)
-    return out
+    return _expand_pairs(d, _self_pairs(d), max_hops).select("seed", "node")
 
 
-def scc_bounded(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 3,
-) -> DataFrame:
+def scc_bounded(edges: DataFrame, max_hops: int = 3) -> DataFrame:
     """Bounded strongly-connected components over a directed edge
     frame → (node, component, scc_size, out_reach): two nodes share a
     component iff each reaches the other within ``max_hops`` directed
@@ -1026,7 +838,7 @@ def scc_bounded(
 
     Reference has no graph ops (frequency ranking only,
     Aitslab/EasyNER scripts/analysis.py)."""
-    rp = directed_reach_pairs(edges, src, dst, max_hops).localCheckpoint()
+    rp = directed_reach_pairs(edges, max_hops).localCheckpoint()
     swapped = rp.select(
         F.col("node").alias("seed"), F.col("seed").alias("node")
     )

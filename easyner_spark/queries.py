@@ -1201,15 +1201,15 @@ def q_dedup_minhash_pairs(spark, sf_dir):
     which rewrites oversized shuffle partitions at runtime WITHOUT
     changing the pair set — oracle parity preserved, stragglers bounded.
     """
-    return _minhash_pairs_from(shingles(spark, sf_dir))
+    return _minhash_pairs_from(_md5_sig_cols(shingles(spark, sf_dir)))
 
 
 def _md5_sig_cols(sh: DataFrame) -> DataFrame:
     """(doc_id, shingle) → (doc_id, h0..h{S-1}): ONE definition of the
     cross-engine md5 minhash family (the Spark twin of
     _minhash_sig_exprs_sql — min over hex strings is lexicographic in
-    both engines). dedup_minhash_pairs and the epoch-dedup sig_fn both
-    build on this so the two can never drift apart."""
+    both engines). Every MinHash query and the epoch-dedup sig_fn
+    build on this so they can never drift apart."""
     return sh.groupBy("doc_id").agg(
         *[
             F.min(
@@ -1220,10 +1220,19 @@ def _md5_sig_cols(sh: DataFrame) -> DataFrame:
     )
 
 
-def _minhash_pairs_from(sh: DataFrame) -> DataFrame:
-    """(doc_id, shingle) → (doc_a, doc_b) LSH candidate pairs; split
-    out so composite queries reuse one materialized shingle frame."""
-    sigs = _md5_sig_cols(sh)
+def _md5_sig_array(sigs: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{S-1}) → (doc_id, sig): the signature as one
+    array column, the shape the agreement fold and the signature
+    stage read."""
+    return sigs.select(
+        "doc_id",
+        F.array(*[F.col(f"h{s}") for s in range(MINHASH_SEEDS)]).alias("sig"),
+    )
+
+
+def _minhash_pairs_from(sigs: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{S-1}) signatures → (doc_a, doc_b) LSH candidate
+    pairs; split out so composite queries reuse one signature frame."""
     bands = sigs.select(
         "doc_id",
         F.explode(
@@ -4465,11 +4474,7 @@ def q_kg_graph_node_jaccard(spark, sf_dir):
     similar if their co-occurrence neighborhoods overlap). Exact
     integer ppm via ops/graph.py:node_jaccard (adjacency self-join on
     the SHARED NEIGHBOR, equi join, two shuffled degree-dimension
-    joins — no all-pairs product). The contract runs the exact
-    uncapped mode so the oracle replays it; production callers pass
-    ``max_neighbor_degree`` to drop super-hub neighbors before the
-    deg² expansion (same opt-in policy as triangles/two_hop_reach;
-    pinned by tests/test_ops_graph.py)."""
+    joins — no all-pairs product)."""
     from easyner_spark.ops.graph import node_jaccard
 
     return node_jaccard(dedges(spark, sf_dir), min_common=2)
@@ -4747,7 +4752,7 @@ def q_train_corpus_curated(spark, sf_dir):
     # filter(split)→slide path, so only the (much smaller) distinct
     # shingle frame is materialized for its two consumers.
     sh = shingles(spark, sf_dir).localCheckpoint()  # pairs + contamination
-    pairs = _minhash_pairs_from(sh).select(
+    pairs = _minhash_pairs_from(_md5_sig_cols(sh)).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     comp = connected_components(pairs).select(
@@ -4914,38 +4919,20 @@ def q_dedup_minhash_verified(spark, sf_dir):
     oracle contract). Plan: the candidate equi-join plus two broadcast-
     free hash joins back to the signature table — agreement is a pure
     zip_with fold, no shuffle beyond the joins."""
-    # r6 opt (guide §2.4): one materialized shingle frame feeds the
-    # candidate pipeline AND the signature agg, and the signature frame
-    # is materialized before its two join sides — tokenize+shingle ran
-    # 3× before, once now.
-    sh = shingles(spark, sf_dir).localCheckpoint()
-    pairs = _minhash_pairs_from(sh)
-    sigs = (
-        sh.groupBy("doc_id")
-        .agg(
-            F.array(
-                *[
-                    F.min(
-                        F.md5(
-                            F.concat(F.lit(f"{s}|"), F.col("shingle")).cast("binary")
-                        )
-                    )
-                    for s in range(MINHASH_SEEDS)
-                ]
-            ).alias("sig")
-        )
-        .localCheckpoint()
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    agree = F.expr(
-        "aggregate(zip_with(sig_a, sig_b, (x, y) -> CAST(x = y AS INT)),"
-        " 0, (acc, v) -> acc + v)"
-    )
+    from .stages.canonical import signature_agreement
+
+    # the signature is aggregated ONCE and materialized: the LSH bands
+    # and both agreement join sides read it (Catalyst does not dedupe
+    # the fan-out), so tokenize+shingle+minhash run once
+    sigs = _md5_sig_cols(shingles(spark, sf_dir)).localCheckpoint()
+    pairs = _minhash_pairs_from(sigs)
+    sig = _md5_sig_array(sigs)
+    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
+    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn("_agree", agree)
+        .withColumn("_agree", signature_agreement())
         .filter(F.col("_agree") * 2 >= MINHASH_SEEDS)
         .select(
             "doc_a",
@@ -4973,8 +4960,8 @@ FROM deg GROUP BY degree
 def q_kg_graph_degree_dist(spark, sf_dir):
     """Degree distribution of the entity co-occurrence graph — the
     health/skew profile read before running any quadratic graph op
-    (it is how the hub caps for triangles/two-hop/node-jaccard get
-    CHOSEN: pick max_degree at the distribution's tail knee). Two
+    (triangles, two-hop and node-jaccard fan out by degree², so its
+    tail says whether the graph needs an upstream degree bound). Two
     map-side-partial aggs, both hash-keyed, nothing global; output is
     bounded by the number of distinct degrees (≤ max degree)."""
     und = (
@@ -5457,19 +5444,17 @@ def q_dedup_epoch_incremental(spark, sf_dir):
         # _md5_sig_cols, so this family and its oracle can never drift
         # apart. r6 opt: intra-row token derivation — no collect_list
         # exchange before the signature agg.
-        sigs = _md5_sig_cols(
-            _slide_shingles(
-                epoch_docs.select(
-                    "doc_id",
-                    F.expr("filter(split(text, ' '), x -> x != '')").alias(
-                        "toks"
-                    ),
+        return _md5_sig_array(
+            _md5_sig_cols(
+                _slide_shingles(
+                    epoch_docs.select(
+                        "doc_id",
+                        F.expr("filter(split(text, ' '), x -> x != '')").alias(
+                            "toks"
+                        ),
+                    )
                 )
             )
-        )
-        return sigs.select(
-            "doc_id",
-            F.array(*[F.col(f"h{s}") for s in range(MINHASH_SEEDS)]).alias("sig"),
         )
 
     wh = tempfile.mkdtemp(prefix="dedup_epoch_wh_")

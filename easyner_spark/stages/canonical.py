@@ -25,7 +25,7 @@ Everything is built-in DataFrame ops (xxhash64, explode, joins, aggs)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def _shingle_col(name_col, n: int = 3):
@@ -180,6 +180,15 @@ def incremental_lsh_candidates(
     )
 
 
+def signature_agreement() -> Column:
+    """INT count of positions where the ``sig_a`` and ``sig_b`` arrays
+    agree — the MinHash agreement fold, evaluated inside the row."""
+    return F.expr(
+        "aggregate(zip_with(sig_a, sig_b, (x, y) -> CAST(x = y AS INT)),"
+        " 0, (acc, v) -> acc + v)"
+    )
+
+
 def signature_similarity_filter(
     pairs: DataFrame,
     signatures: DataFrame,
@@ -191,14 +200,10 @@ def signature_similarity_filter(
     re-shuffle)."""
     s1 = signatures.select(F.col(id_col).alias("src"), F.col("sig").alias("sig_a"))
     s2 = signatures.select(F.col(id_col).alias("dst"), F.col("sig").alias("sig_b"))
-    agree = F.expr(
-        "aggregate(zip_with(sig_a, sig_b, (x, y) -> CAST(x = y AS INT)),"
-        " 0, (acc, v) -> acc + v)"
-    )
     return (
         pairs.join(s1, "src")
         .join(s2, "dst")
-        .withColumn("agreement", agree / F.size("sig_a"))
+        .withColumn("agreement", signature_agreement() / F.size("sig_a"))
         .filter(F.col("agreement") >= min_agreement)
         .select("src", "dst", "agreement")
     )

@@ -1,15 +1,15 @@
 """Per-stage profile of the fused KG chain (r4 verdict ask #5).
 
 Reproduces the controlled fused-KG floor measurement (40k docs,
-local[16], warm session, min-of-N) and then attributes the wall time to
+session.get_spark's default local[$SPARK_GRAFT_CPUS] — all cores when
+unset — warm session, min-of-N) and then attributes the wall time to
 stages by progressive materialization: each cut materializes the chain
 up to stage k with a noop write, so stage cost = T_k - T_{k-1} (the
 fused DAG recomputes upstream per cut — deltas, not absolutes, carry
 the signal; the persist()-based fused run is what the floor itself
 measures).
 
-Usage: python scripts/kg_floor_profile.py [--docs 40000] [--cpus 16]
-       [--passes 4]
+Usage: python scripts/kg_floor_profile.py [--docs 40000] [--passes 4]
 Prints one JSON report; paste the numbers into BASELINE.md.
 """
 
@@ -29,7 +29,6 @@ from bench import vm_microbench  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=40000)
-    ap.add_argument("--cpus", type=int, default=16)
     ap.add_argument("--passes", type=int, default=4)
     args = ap.parse_args()
 
@@ -45,12 +44,9 @@ def main() -> None:
     from easyner_spark.stages.triples import cooccurrence_triples
 
     micro_before = vm_microbench()
-    spark = get_spark(
-        app_name="kg_floor_profile",
-        master=f"local[{args.cpus}]",
-        shuffle_partitions=args.cpus,
-    )
-    pages = pages_df(spark, n_docs=args.docs, n_partitions=args.cpus * 4).persist()
+    spark = get_spark(app_name="kg_floor_profile")
+    cpus = spark.sparkContext.defaultParallelism
+    pages = pages_df(spark, n_docs=args.docs, n_partitions=cpus * 4).persist()
     pages.count()
 
     def noop(df) -> None:
@@ -104,7 +100,7 @@ def main() -> None:
     report = {
         "docs": args.docs,
         "chars": int(chars),
-        "cpus": args.cpus,
+        "cpus": cpus,
         "triples": n_triples,
         "fused_passes_s": fused,
         "fused_min_s": min(fused),

@@ -44,9 +44,7 @@ def asof_main(args) -> None:
     from easyner_spark.ops.asof import asof_join
     from easyner_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="skew_bench_asof", master="local[16]", shuffle_partitions=32
-    )
+    spark = get_spark(app_name="skew_bench_asof")
     n_hot = int(args.n * args.hot_frac)
     n_keys = 1000
     # left: one hot key (key 0) with n_hot rows, tail spread over keys
@@ -109,7 +107,7 @@ def main() -> None:
         minhash_signatures,
     )
 
-    spark = get_spark(app_name="skew_bench", master="local[16]", shuffle_partitions=32)
+    spark = get_spark(app_name="skew_bench")
     n_hot = int(args.n * args.hot_frac)
     # hot family: identical name -> identical signature -> one bucket;
     # tail: unique names spread across buckets

@@ -199,41 +199,6 @@ def test_asof_join_tied_right_rows_pick_greatest_payload(spark):
         assert (row["rid_r"], row["val_r"]) == (9, 2.0)
 
 
-def test_degree_caps_drop_hub_paths(spark):
-    """Opt-in hub guards: triangles ignores triangles touching a
-    capped node; two-hop drops paths THROUGH a hub but keeps hubs as
-    endpoints of other paths."""
-    # H is a degree-4 hub: triangle A-B-H plus spokes H-C, H-D; also a
-    # hub-free triangle X-Y-Z and a path C-E.
-    e = _edges(
-        spark,
-        [
-            ("A", "B"), ("B", "H"), ("H", "A"), ("H", "C"), ("H", "D"),
-            ("X", "Y"), ("Y", "Z"), ("Z", "X"), ("C", "E"),
-        ],
-    )
-    full = {r["node"]: r["n_triangles"] for r in triangles(e).collect()}
-    assert full == {"A": 1, "B": 1, "H": 1, "X": 1, "Y": 1, "Z": 1}
-    capped = {
-        r["node"]: r["n_triangles"]
-        for r in triangles(e, max_degree=3).collect()
-    }
-    assert capped == {"X": 1, "Y": 1, "Z": 1}  # hub triangle gone
-
-    # two-hop without cap: e.g. A reaches C,D via H and H-paths exist
-    full2 = {r["node"]: r["n_two_hop"] for r in two_hop_reach(e).collect()}
-    assert full2["E"] == 1  # E -C- H
-    # cap middle degree at 3: paths through H vanish; C-E path (mid
-    # degree 2) survives, so H can still be reached/reach via C
-    capped2 = {
-        r["node"]: r["n_two_hop"]
-        for r in two_hop_reach(e, max_mid_degree=3).collect()
-    }
-    # E-C-H survives (mid C has degree 2), both directions
-    assert capped2 == {"E": 1, "H": 1}
-    # A's only 2-hop paths ran through H (to C, D) — gone under the cap
-
-
 def test_node_jaccard_hand_computed(spark):
     # A and B share both neighbors {C, D}; C and D share {A, B} — two
     # perfect-overlap pairs, jaccard 2/(2+2-2) = 1.0 = 1e6 ppm.
@@ -250,10 +215,9 @@ def test_node_jaccard_hand_computed(spark):
     }
 
 
-def test_node_jaccard_hub_cap_drops_hub_mediated_common_neighbors(spark):
-    """max_neighbor_degree removes the hub as a SHARED NEIGHBOR (the
-    deg² fan-out source) but keeps it as a pair endpoint, and the
-    reported degrees stay the exact full degrees."""
+def test_node_jaccard_counts_hub_mediated_common_neighbors(spark):
+    """A hub counts as a shared neighbor like any other node: pairs
+    whose only common neighbor is the hub are still reported."""
     # A,B share C, D and hub H (deg 5: A,B,E,F,G)
     e = _edges(
         spark,
@@ -268,18 +232,6 @@ def test_node_jaccard_hub_cap_drops_hub_mediated_common_neighbors(spark):
     }
     assert full[("A", "B")] == (3, 1_000_000)  # 3e6 div (3+3-3)
     assert full[("E", "F")] == (1, 1_000_000)  # only via H
-    capped = {
-        (r["ent_a"], r["ent_b"]): (
-            r["n_common"], r["deg_a"], r["deg_b"], r["jaccard_ppm"]
-        )
-        for r in node_jaccard(e, min_common=1, max_neighbor_degree=4).collect()
-    }
-    # H-mediated commonality gone: (A,B) drops to {C,D}, H-only pairs
-    # like (E,F) vanish entirely; degrees remain the uncapped truth
-    assert capped[("A", "B")] == (2, 3, 3, 500_000)
-    assert ("E", "F") not in capped
-    # H survives as an ENDPOINT (C and H share neighbors A and B)
-    assert capped[("C", "H")] == (2, 2, 5, 400_000)
 
 
 def test_node_jaccard_matches_contract_query_shape(spark):
@@ -361,50 +313,6 @@ def test_interval_join_rejects_reserved_and_colliding_names(spark):
     )
     with pytest.raises(ValueError, match="collide"):
         interval_join(left2, right, on="k", bin_width=8)
-
-
-def test_pagerank_epsilon_early_stop(spark):
-    """Production convergence option: a cycle graph reaches its exact
-    integer fixed point after one round, so the epsilon run stops far
-    below the iteration cap with ranks identical to the capped run."""
-    from easyner_spark.ops.graph import pagerank
-
-    e = _edges(spark, [("A", "B"), ("B", "C"), ("C", "A")])
-    info = {}
-    early = {
-        r["node"]: r["rank_scaled"]
-        for r in pagerank(e, iterations=50, epsilon_scaled=0, info=info).collect()
-    }
-    assert info["rounds"] < 50  # converged early (delta hit 0)
-    assert info["last_delta"] == 0
-    fixed = {
-        r["node"]: r["rank_scaled"] for r in pagerank(e, iterations=50).collect()
-    }
-    assert early == fixed
-
-
-def test_pagerank_epsilon_bounds_divergence_on_chain(spark):
-    """On a non-trivial graph the early-stopped ranks differ from the
-    capped run by at most epsilon per node."""
-    from easyner_spark.ops.graph import pagerank
-
-    e = _edges(
-        spark,
-        [("A", "B"), ("B", "C"), ("C", "D"), ("D", "A"), ("A", "C"), ("B", "D")],
-    )
-    eps = 10**6  # 1e-6 of PR_SCALE
-    info = {}
-    early = {
-        r["node"]: r["rank_scaled"]
-        for r in pagerank(e, iterations=100, epsilon_scaled=eps, info=info).collect()
-    }
-    assert info["rounds"] < 100
-    full = {
-        r["node"]: r["rank_scaled"]
-        for r in pagerank(e, iterations=100).collect()
-    }
-    # geometric tail bound: total remaining movement <= eps * d/(1-d)
-    assert all(abs(early[n] - full[n]) <= 6 * eps for n in full)
 
 
 def _py_kcore(edges, k, max_iter=None):
@@ -501,11 +409,11 @@ def _py_lpa(edges, iterations):
     return labels
 
 
-def _run_lpa(spark, edges, iterations, **kw):
+def _run_lpa(spark, edges, iterations):
     from easyner_spark.ops.graph import label_propagation
 
     df = _edges(spark, [(str(a), str(b)) for a, b in edges])
-    got = label_propagation(df, iterations=iterations, **kw).collect()
+    got = label_propagation(df, iterations=iterations).collect()
     return {r["node"]: r["community"] for r in got}
 
 
@@ -537,14 +445,11 @@ def test_lpa_single_edge_oscillates_deterministically(spark):
     assert _run_lpa(spark, edges, 2) == {"1": "1", "2": "2"}
 
 
-def test_lpa_direction_dedup_and_hub_guard(spark):
-    """Reversed/duplicate/self edges collapse before propagation; the
-    opt-in max_degree guard drops hub edges first (star center above
-    the cap -> every edge gone -> empty result), exact when None."""
+def test_lpa_direction_dedup(spark):
+    """Reversed/duplicate/self edges collapse before propagation."""
     edges = [(1, 2), (2, 1), (1, 1), (1, 3), (1, 4), (1, 5)]
     expect = {str(k): str(v) for k, v in _py_lpa(edges, 2).items()}
     assert _run_lpa(spark, edges, 2) == expect
-    assert _run_lpa(spark, edges, 2, max_degree=3) == {}
 
 
 def test_lpa_snapshots_match_per_round_runs(spark):
@@ -640,11 +545,9 @@ def test_clustering_coefficient_hand_computed(spark):
     }
 
 
-def test_clustering_coefficient_direction_dedup_and_hub_cap(spark):
-    """Reversed/duplicate edges collapse before counting; the hub cap
-    removes the hub's edges from BOTH triangles and degrees (self-
-    consistent graph), so its spokes lose the hub-mediated triangle
-    AND the hub-incident degree."""
+def test_clustering_coefficient_direction_dedup(spark):
+    """Reversed/duplicate edges collapse before counting both the
+    triangles and the degrees."""
     from easyner_spark.ops.graph import clustering_coefficient
 
     # H is a degree-4 hub closing triangles with (A,B) and (B,C)
@@ -659,17 +562,6 @@ def test_clustering_coefficient_direction_dedup_and_hub_cap(spark):
     }
     assert full["H"] == (4, 2, 333_333)  # 2*2e6 div 12
     assert full["B"] == (3, 2, 666_666)
-    capped = {
-        r["node"]: (r["degree"], r["n_triangles"], r["cc_ppm"])
-        for r in clustering_coefficient(e, max_degree=3).collect()
-    }
-    # hub edges dropped: remaining graph is the path A-B-C
-    assert "H" not in capped
-    assert capped == {
-        "A": (1, 0, 0),
-        "B": (2, 0, 0),
-        "C": (1, 0, 0),
-    }
 
 
 def _py_hop_distances(edges, max_hops):

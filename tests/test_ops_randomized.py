@@ -73,7 +73,7 @@ def test_asof_join_random_sweep_matches_sequential(spark):
         assert got[lid] == expected(k, ts), f"lid={lid} k={k} ts={ts}"
 
 
-def test_pagerank_random_graph_matches_sequential_integer_reference(spark):
+def _check_pagerank_random_graph(spark, iters):
     rng = random.Random(13)
     nodes = [f"n{i}" for i in range(40)]
     edges = list(
@@ -86,7 +86,6 @@ def test_pagerank_random_graph_matches_sequential_integer_reference(spark):
     from easyner_spark.ops.graph import PR_DAMP_DEN, PR_DAMP_NUM, pagerank
 
     scale = 10**9
-    iters = 4
 
     # sequential reference of the exact integer algorithm
     eset = sorted(set(edges))
@@ -110,6 +109,20 @@ def test_pagerank_random_graph_matches_sequential_integer_reference(spark):
         for r in pagerank(df, iterations=iters, scale=scale).collect()
     }
     assert got == rank
+
+
+def test_pagerank_random_graph_matches_sequential_integer_reference(spark):
+    _check_pagerank_random_graph(spark, iters=4)
+
+
+def test_pagerank_random_graph_crosses_lineage_cut(spark):
+    """17 rounds pass two mid-loop lineage cuts (rounds 8 and 16 with
+    PR_CHECKPOINT_EVERY = 8); the ranks still equal the sequential
+    reference."""
+    from easyner_spark.ops.graph import PR_CHECKPOINT_EVERY
+
+    assert 17 > 2 * PR_CHECKPOINT_EVERY
+    _check_pagerank_random_graph(spark, iters=17)
 
 
 def test_canonical_url_is_idempotent_on_messy_corpus(spark):
