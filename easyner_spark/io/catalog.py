@@ -36,6 +36,21 @@ import re as _re
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+
+def _read_schema(stamped: StructType, batches: set[int]) -> StructType:
+    """The schema a parquet read of the stage dir would infer, built
+    from the manifest's stamp so the read skips its inference job:
+    data columns in written order, then the ``batch_id`` partition
+    column typed as partition inference types it (int unless a batch id
+    overflows it). Nullability is left to the reader, which marks every
+    file-source column nullable either way."""
+    wide = any(not -(2**31) <= b < 2**31 for b in batches)
+    return StructType(
+        [f for f in stamped.fields if f.name != "batch_id"]
+        + [StructField("batch_id", LongType() if wide else IntegerType())]
+    )
 
 
 def _content_counters(df: DataFrame, partition_col: str) -> dict[int, dict]:
@@ -269,15 +284,14 @@ class CheckpointCatalog:
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
         done = self.committed_batches(stage)
+        man = self._load_manifest(stage)
+        schema_json = man.get("schema")
+        schema = (
+            StructType.fromJson(json.loads(schema_json)) if schema_json else None
+        )
         if not done:
-            man = self._load_manifest(stage)
-            schema_json = man.get("schema")
-            if schema_json is not None:
-                from pyspark.sql.types import StructType
-
-                return spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(schema_json))
-                )
+            if schema is not None:
+                return spark.createDataFrame([], schema)
             if man["snapshots"]:
                 # fully-retracted pre-schema-stamp manifest: no data
                 # files and no recorded schema — a clear error beats an
@@ -288,10 +302,13 @@ class CheckpointCatalog:
                     "write_stage call stamps the schema)"
                 )
             raise ValueError(f"stage '{stage}' was never committed")
-        df = spark.read.parquet(self._stage_dir(stage))
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(_read_schema(schema, done))
+        df = reader.parquet(self._stage_dir(stage))
         # only committed partitions are visible (a crashed write's orphan
         # partition directories are filtered out = snapshot isolation)
-        return df.filter(F.col("batch_id").isin(*sorted(done))) if done else df
+        return df.filter(F.col("batch_id").isin(*sorted(done)))
 
     def compact_stage(
         self,

@@ -3,7 +3,8 @@
 Local-mode defaults follow the public Spark tuning guidance: shuffle
 partitions ~ cores (not 200), AQE on (runtime coalesce + skew-join),
 Arrow on for the pandas-UDF hot paths, UTC session timezone so results
-compare cleanly against the DuckDB oracle.
+compare cleanly against the DuckDB oracle, and a compiled-class cache
+that holds the engine's working set (``CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -11,6 +12,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Spark's compiled-class cache (spark.sql.codegen.cache.maxEntries, an
+# LRU of 100 by default) is smaller than one engine pass: measured on
+# local[4], the nine curation queries compile ~200 distinct classes, a
+# run_pipeline pass ~420 and all 126 contract queries ~2,150 in one
+# session. At 100, every repeated pass re-ran Janino for nearly all of
+# them (one 126-query pass compiled 3,909 classes instead of 2,135).
+# 4,000 holds the 126-query set with ~1.9x headroom for ~15 MB more
+# Metaspace; see README "Session".
+CODEGEN_CACHE_ENTRIES = 4000
 
 
 def get_spark(
@@ -57,6 +68,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

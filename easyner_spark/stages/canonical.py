@@ -25,7 +25,7 @@ Everything is built-in DataFrame ops (xxhash64, explode, joins, aggs)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 
 def _shingle_col(name_col, n: int = 3):
@@ -270,7 +270,9 @@ def connected_components(
     component = lexicographic min node id in the component. Each round:
     label(n) := min(label(n), min label over neighbors), then one
     pointer-jump (label := label(label)) to halve chain depth; rounds
-    are localCheckpointed so the plan never grows.
+    are localCheckpointed so the plan never grows. Convergence is read
+    off the round's own checkpoint: an ``observe`` on the jumped frame
+    counts the nodes whose label moved, so a round is one job.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -295,6 +297,7 @@ def connected_components(
             labels.join(nbr_min, "node", "left")
             .select(
                 "node",
+                F.col("label").alias("old"),
                 F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
             )
             # r6 opt (guide §2.4): merged feeds BOTH sides of the
@@ -307,20 +310,18 @@ def connected_components(
         parent = merged.select(
             F.col("node").alias("label"), F.col("label").alias("plabel")
         )
-        jumped = (
+        moved = Observation()
+        labels = (
             merged.join(parent, "label", "left")
-            .select("node", F.coalesce("plabel", "label").alias("label"))
+            .select("node", F.coalesce("plabel", "label").alias("label"), "old")
+            .observe(
+                moved,
+                F.count(F.when(F.col("label") != F.col("old"), 1)).alias("n"),
+            )
+            .select("node", "label")
             .localCheckpoint()
         )
-        changed = (
-            jumped.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = jumped
-        if changed == 0:
+        if moved.get["n"] == 0:
             break
     return labels.select("node", F.col("label").alias("component"))
 

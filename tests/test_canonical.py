@@ -169,3 +169,24 @@ def test_containment_filter_verifies_candidates_only(spark):
         for r in containment_filter(cand, ss, min_containment_ppm=0).collect()
     }
     assert low == {(1, 2)}
+
+
+def test_connected_components_empty_edges(spark):
+    e = spark.createDataFrame([], "src string, dst string")
+    assert connected_components(e).collect() == []
+
+
+def test_connected_components_long_chain_converges(spark):
+    """A 40-node path with shuffled ids needs more than two rounds
+    (two stop short of the min id); the converged run labels every
+    node with the path's min id."""
+    import random
+
+    ids = [f"n{i:02d}" for i in range(40)]
+    random.Random(7).shuffle(ids)
+    path = list(zip(ids, ids[1:]))
+    e = spark.createDataFrame(path, "src string, dst string")
+    short = {r["component"] for r in connected_components(e, max_iter=2).collect()}
+    assert short != {"n00"}
+    got = {r["node"]: r["component"] for r in connected_components(e).collect()}
+    assert got == {n: "n00" for n in ids}

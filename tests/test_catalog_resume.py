@@ -107,3 +107,53 @@ def test_orphan_partitions_invisible_until_committed(spark, docs, tmp_path):
     snap = cat.write_stage(docs, "s")
     assert sorted(int(b) for b in snap["counters"]) == [6, 7]
     assert cat.read_stage(spark, "s").count() == 400
+
+
+def test_read_stage_uses_stamped_schema_without_a_job(spark, docs, tmp_path):
+    """read_stage builds its reader schema from the manifest stamp, so
+    it runs no inference job; the schema is exactly what inference
+    gives (nullability and order: batch_id, written mid-frame here,
+    moves to the end as a partition column)."""
+    cat = CheckpointCatalog(str(tmp_path / "wh"))
+    cat.write_stage(docs, "s")
+    sc = spark.sparkContext
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    back = in_group("read_stage_stamped", lambda: cat.read_stage(spark, "s"))
+    inferred = in_group(
+        "read_stage_inferred",
+        lambda: spark.read.parquet(str(tmp_path / "wh" / "s")),
+    )
+    assert back.schema == inferred.schema
+    assert back.columns == ["doc_id", "text", "batch_id"]
+
+    def fold(df):
+        return df.select(F.bit_xor(F.xxhash64(*df.columns))).first()[0]
+
+    assert fold(back) == fold(inferred)
+    # read after the folds so the listener has posted both reads' jobs;
+    # inference is the positive control (its footer read is a job)
+    assert list(sc.statusTracker().getJobIdsForGroup("read_stage_stamped")) == []
+    assert list(sc.statusTracker().getJobIdsForGroup("read_stage_inferred"))
+
+
+def test_read_stage_without_schema_stamp_infers(spark, docs, tmp_path):
+    """Manifests written before schema stamping still read (by parquet
+    schema inference)."""
+    import json
+
+    cat = CheckpointCatalog(str(tmp_path / "wh"))
+    cat.write_stage(docs, "s")
+    with open(cat._manifest_path("s")) as f:
+        man = json.load(f)
+    del man["schema"]
+    cat._store_manifest("s", man)
+    back = cat.read_stage(spark, "s")
+    assert back.schema == spark.read.parquet(str(tmp_path / "wh" / "s")).schema
+    assert back.count() == 400

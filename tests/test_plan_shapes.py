@@ -351,3 +351,33 @@ def test_spread_leaves_non_local_scans_alone(spark):
     missing = "/nonexistent/sf_dir"
     assert _table_bytes(missing, "documents") is None
     assert "RoundRobinPartitioning" not in _plan(_spread(local, missing, "documents"))
+
+
+def test_repeated_pass_reuses_compiled_classes(spark):
+    """session.get_spark sizes Spark's compiled-class cache to the
+    engine's working set: the nine curation queries compile ~200
+    classes in a fresh session, more than Spark's default cache of 100,
+    so under the default a second run recompiled nearly all of them.
+    With the cache sized, the second run compiles only the few classes
+    whose generated code differs per run."""
+    from easyner_spark.queries import QUERIES
+
+    names = [
+        "dedup_minhash_pairs",
+        "dedup_jaccard",
+        "dedup_containment",
+        "dedup_components",
+        "dedup_embedding_cosine",
+        "embed_lsh_buckets",
+        "embed_knn_bruteforce",
+        "doc_length_percentiles",
+        "train_packing_manifest",
+    ]
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = []
+    for _ in range(2):
+        before = metric.METRIC_COMPILATION_TIME().getCount()
+        for name in names:
+            QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        compiled.append(metric.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[1] <= 20, compiled
