@@ -4,8 +4,9 @@ The north-star pipeline materializes a weighted co-occurrence graph
 (`kg_graph_nodes` / `kg_graph_edges`); these operators are the query
 workloads a KG actually serves from that graph: centrality (PageRank,
 HITS), local clustering (triangles, clustering coefficient, k-core,
-k-truss), communities (label propagation, bounded SCC) and
-neighborhood expansion (two-hop reach, BFS, bounded hop distances).
+k-truss), communities (label propagation, connected components,
+bounded SCC) and neighborhood expansion (two-hop reach, BFS, bounded
+hop distances).
 The reference repo stops at frequency ranking
 (scripts/analysis.py:61-104 ranks entities by mention count); these are
 the graph-native generalizations of that ranking.
@@ -20,9 +21,13 @@ Scale notes:
   :func:`_endpoints` are the edge prep and node frame of pagerank and
   hits, and :func:`_expand_pairs` is the one frontier loop (bfs_hops,
   hop_distances, directed_reach_pairs);
-* iterative loops keep lineage flat — per-round ``localCheckpoint``
-  (same discipline as stages/canonical.py pointer-jumping CC), or a
-  lazy chain cut every ``PR_CHECKPOINT_EVERY`` rounds for PageRank;
+* iterative loops keep lineage flat — per-round ``localCheckpoint``,
+  or a lazy chain cut every ``PR_CHECKPOINT_EVERY`` rounds for the
+  fixed-round PageRank;
+* every convergence loop (k_core, k_truss, connected_components and
+  the frontier loop) stops through :func:`_checkpoint_counting`: the
+  round's stop count is read off its own checkpoint job, never from a
+  separate count action;
 * no step ever materializes a neighborhood list in one buffer, and no
   op drops hubs — size bounds belong upstream (stages/triples.py caps
   mentions per sentence before pairing; the contract backbone keeps
@@ -36,7 +41,7 @@ bit at any partition layout, which a float PageRank cannot guarantee.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 # rank unit = 1/PR_SCALE. Headroom: total rank mass is bounded by
 # n_nodes * scale, and a single hub can in principle absorb almost all
@@ -55,6 +60,15 @@ PR_DAMP_DEN = 100
 PR_CHECKPOINT_EVERY = 8
 # clustering_coefficient's cc unit: parts per million
 CC_SCALE = 1_000_000
+
+
+def _checkpoint_counting(df: DataFrame, cond: Column) -> tuple[DataFrame, int]:
+    """``df`` localCheckpointed once, plus the number of its rows where
+    ``cond`` holds. The count is an ``observe`` filled by the
+    checkpoint's own job, so a loop's stop test adds no action."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.when(cond, 1)).alias("n")).localCheckpoint()
+    return out, obs.get["n"]
 
 
 def _weighted_edges(edges: DataFrame, weight: str | None) -> DataFrame:
@@ -481,6 +495,64 @@ def label_propagation(
     return labels.select("node", F.col("label").alias("community"))
 
 
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Min-label propagation with pointer jumping → (node, component),
+    run to fixpoint.
+
+    component = lexicographic min node id in the component. Each round:
+    label(n) := min(label(n), min label over neighbors), then one
+    pointer-jump (label := label(label)) to halve chain depth, so a
+    chain converges in O(log n) rounds. Labels only decrease, so the
+    loop always ends. The jumped frame is checkpointed once per round
+    and counts the nodes whose label moved
+    (:func:`_checkpoint_counting`); a round with none is the last."""
+    # own edge prep, not _adjacency(_undirected(...)): a node whose only
+    # edge is a self-loop keeps its own component here
+    e = (
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
+        .distinct()
+        .localCheckpoint()
+    )
+    labels = (
+        e.select(F.col("u").alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node"))
+        .localCheckpoint()
+    )
+    moved = 1
+    while moved:
+        nbr_min = (
+            e.join(labels, e["u"] == labels["node"])
+            .select(F.col("v").alias("node"), "label")
+            .groupBy("node")
+            .agg(F.min("label").alias("nlabel"))
+        )
+        merged = (
+            labels.join(nbr_min, "node", "left")
+            .select(
+                "node",
+                F.col("label").alias("old"),
+                F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
+            )
+            # feeds BOTH sides of the pointer-jump join (parent is
+            # merged re-keyed) and Catalyst does not dedupe the fan-out
+            # — without this the neighbor-min join+agg ran twice a round
+            .localCheckpoint()
+        )
+        # pointer jumping: label <- label's label
+        parent = merged.select(
+            F.col("node").alias("label"), F.col("label").alias("plabel")
+        )
+        labels, moved = _checkpoint_counting(
+            merged.join(parent, "label", "left").select(
+                "node", F.coalesce("plabel", "label").alias("label"), "old"
+            ),
+            F.col("label") != F.col("old"),
+        )
+    return labels.select("node", F.col("label").alias("component"))
+
+
 def bfs_hops(
     edges: DataFrame, sources: DataFrame, max_hops: int = 3
 ) -> DataFrame:
@@ -548,13 +620,14 @@ def k_truss(edges: DataFrame, t: int, max_iter: int | None = None) -> DataFrame:
     community-core primitive for KG neighborhoods.
 
     Same peel discipline as :func:`k_core`: per round one support
-    computation (wedge closure + partial agg + keyed left join) and
-    one anti-join dropping weak edges, localCheckpointed so lineage
-    stays flat; the early-exit check is a 1-row aggregate. Rounds =
-    peel depth; ``max_iter`` bounds them explicitly (the result is
-    then the well-defined "max_iter-round peel", which a bounded
-    contract query can pin cross-engine; None runs to fixpoint).
-    ``max_iter=0`` returns the input graph's own supports.
+    computation (wedge closure + partial agg + keyed left join),
+    checkpointed once with its weak-edge count (``support < t``, via
+    :func:`_checkpoint_counting`); the next round's graph is that
+    checkpoint's strong edges. Rounds = peel depth; ``max_iter``
+    bounds them explicitly (the result is then the well-defined
+    "max_iter-round peel", which a bounded contract query can pin
+    cross-engine; None runs to fixpoint). ``max_iter=0`` returns the
+    input graph's own supports.
 
     Reference has no graph ops (frequency ranking only,
     Aitslab/EasyNER scripts/analysis.py)."""
@@ -562,17 +635,13 @@ def k_truss(edges: DataFrame, t: int, max_iter: int | None = None) -> DataFrame:
     rounds = 0
     while True:
         # ONE wedge closure per round: the same support frame drives
-        # the weak-edge drop, the fixpoint check, and (on the final
-        # round) the returned result — recomputing it after the break
-        # would double the expensive step of every fixpoint call
-        sup = _edge_support(u).localCheckpoint()
-        if max_iter is not None and rounds >= max_iter:
-            return sup
-        weak = sup.filter(F.col("support") < t).select("a", "b")
-        if weak.limit(1).count() == 0:
+        # the stop test, the weak-edge drop, and (on the final round)
+        # the returned result
+        sup, n_weak = _checkpoint_counting(_edge_support(u), F.col("support") < t)
+        if n_weak == 0 or (max_iter is not None and rounds >= max_iter):
             return sup
         rounds += 1
-        u = u.join(weak, ["a", "b"], "left_anti").localCheckpoint()
+        u = sup.filter(F.col("support") >= t).select("a", "b")
 
 
 HITS_SCALE = 10**9
@@ -724,23 +793,25 @@ def _expand_pairs(adj: DataFrame, start: DataFrame, max_hops: int) -> DataFrame:
     (directed adjacency). ``start`` is layer 0 (deduplicated here);
     per round ONE keyed hash join (pair frontier ⋈ adjacency on the
     frontier node) + ONE anti-join against the visited pair set, each
-    new layer localCheckpointed once. The visited set and the output
-    stay lazy unions of the materialized layers — the full ball is the
-    caller's OUTPUT, so a per-round re-checkpoint would re-write it
-    max_hops times over. Work per round is Σ adjacency-degree over
-    frontier pairs — total cost is the output volume itself."""
+    new layer localCheckpointed once, and the loop stops when that
+    checkpoint counts no rows (:func:`_checkpoint_counting`). The
+    visited set and the output stay lazy unions of the materialized
+    layers — the full ball is the caller's OUTPUT, so a per-round
+    re-checkpoint would re-write it max_hops times over. Work per round
+    is Σ adjacency-degree over frontier pairs — total cost is the
+    output volume itself."""
     frontier = start.distinct().localCheckpoint()
     visited = frontier
     out = frontier.withColumn("hops", F.lit(0).cast("bigint"))
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt, n_new = _checkpoint_counting(
             adj.join(frontier.withColumnRenamed("node", "u"), "u")
             .select("seed", F.col("v").alias("node"))
             .distinct()
-            .join(visited, ["seed", "node"], "left_anti")
-            .localCheckpoint()
+            .join(visited, ["seed", "node"], "left_anti"),
+            F.lit(True),
         )
-        if nxt.limit(1).count() == 0:
+        if n_new == 0:
             break
         out = out.union(nxt.withColumn("hops", F.lit(h).cast("bigint")))
         visited = visited.union(nxt)
@@ -760,21 +831,23 @@ def k_core(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
     iterative peel: drop nodes with degree < k, recompute degrees on
     the induced subgraph, repeat to fixpoint. Each round is two keyed
     hash joins + one map-side-partial degree agg, localCheckpointed so
-    lineage stays flat (same discipline as the CC loop,
-    stages/canonical.py). Rounds needed = peel depth of the graph —
-    O(log n) on typical web graphs, O(n) only on a pure chain;
-    ``max_iter`` bounds the rounds explicitly (the result is then the
-    well-defined "max_iter-round peel", which the bounded contract
-    query pins cross-engine; None runs to fixpoint). The early-exit
-    count per round is a 1-row aggregate, not a collect of the frame.
+    lineage stays flat; the weak-node frame's checkpoint also counts
+    its rows (:func:`_checkpoint_counting`), which is the stop test.
+    Rounds needed = peel depth of the graph — O(log n) on typical web
+    graphs, O(n) only on a pure chain; ``max_iter`` bounds the rounds
+    explicitly (the result is then the well-defined "max_iter-round
+    peel", which the bounded contract query pins cross-engine; None
+    runs to fixpoint).
     """
     u = _undirected(edges).localCheckpoint()
     rounds = 0
     # max_iter <= 0 is the 0-round peel: the input graph's own degrees
     while max_iter is None or rounds < max_iter:
-        weak = _degrees(u).filter(F.col("d") < k).select("n").localCheckpoint()
+        weak, n_weak = _checkpoint_counting(
+            _degrees(u).filter(F.col("d") < k).select("n"), F.lit(True)
+        )
         rounds += 1
-        if weak.limit(1).count() == 0:
+        if n_weak == 0:
             break
         u = (
             u.join(weak.withColumnRenamed("n", "a"), "a", "left_anti")

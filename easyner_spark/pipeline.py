@@ -173,8 +173,8 @@ def run_pipeline(
     if "dedup" in want or (
         docs_consumer and cat.committed_batches("documents_deduped")
     ):
+        from .ops.graph import connected_components
         from .stages.canonical import (
-            connected_components,
             lsh_candidate_pairs,
             minhash_signatures,
             signature_similarity_filter,

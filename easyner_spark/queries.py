@@ -2014,12 +2014,12 @@ FROM reach GROUP BY node
 )
 def q_dedup_components(spark, sf_dir):
     """Near-duplicate document CLUSTERS: connected components (the
-    engine's iterative min-label-propagation, stages/canonical.py) over
+    engine's iterative min-label-propagation, ops/graph.py) over
     the MinHash-LSH candidate pair graph. The DuckDB oracle computes
     the same components via a recursive-CTE reachability closure — the
     distributed iterative algorithm is thus value-checked against an
     independent sequential formulation."""
-    from .stages.canonical import connected_components
+    from .ops.graph import connected_components
 
     pairs = QUERIES["dedup_minhash_pairs"](spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -4744,7 +4744,7 @@ def q_train_corpus_curated(spark, sf_dir):
     ONE materialized shingle frame (localCheckpoint — Catalyst does
     not dedupe multi-consumer subtrees), so tokenize/shingle run once,
     not three times."""
-    from .stages.canonical import connected_components
+    from .ops.graph import connected_components
 
     # r6 opt (guide §2.4): the shared 18M-row token frame is gone —
     # the quality statistics are intra-row (same rewrite as

@@ -1,5 +1,5 @@
-"""Stage 5 — entity canonicalization: MinHash-LSH blocking + connected
-components.
+"""Stage 5 — entity canonicalization: MinHash-LSH blocking, then
+connected components over the verified pairs.
 
 No reference counterpart (EasyNER links surfaces only by exact lookup,
 scripts/nel.py:38) — this stage is mandated by the target contract:
@@ -15,9 +15,9 @@ skew handled explicitly:
   entity id into sub-buckets of at most ``max_bucket`` before pair-gen,
   bounding the quadratic fan-out per bucket (documented recall
   trade-off; raise max_bucket to recover recall);
-* connected components use alternating min-label propagation with
-  pointer jumping (converges in O(log n) rounds on long chains) and a
-  ``localCheckpoint`` per round to keep lineage flat.
+* the merge itself is ``ops.graph.connected_components`` (min-label
+  propagation with pointer jumping, run to fixpoint); this stage holds
+  only the blocking and verification that feed it.
 
 Everything is built-in DataFrame ops (xxhash64, explode, joins, aggs)
 — no UDF anywhere in this stage.
@@ -25,7 +25,9 @@ Everything is built-in DataFrame ops (xxhash64, explode, joins, aggs)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+from ..ops.graph import connected_components
 
 
 def _shingle_col(name_col, n: int = 3):
@@ -257,73 +259,6 @@ def containment_filter(
         )
         .filter(F.col("cont_ppm") >= min_containment_ppm)
     )
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Min-label propagation with pointer jumping → (node, component).
-
-    component = lexicographic min node id in the component. Each round:
-    label(n) := min(label(n), min label over neighbors), then one
-    pointer-jump (label := label(label)) to halve chain depth; rounds
-    are localCheckpointed so the plan never grows. Convergence is read
-    off the round's own checkpoint: an ``observe`` on the jumped frame
-    counts the nodes whose label moved, so a round is one job.
-    """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        e.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            e.join(labels, e["u"] == labels["node"])
-            .select(F.col("v").alias("node"), "label")
-            .groupBy("node")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        merged = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.col("label").alias("old"),
-                F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
-            )
-            # r6 opt (guide §2.4): merged feeds BOTH sides of the
-            # pointer-jump join (parent is merged re-keyed) and Catalyst
-            # does not dedupe the fan-out — without this the neighbor-min
-            # join+agg executed twice per round.
-            .localCheckpoint()
-        )
-        # pointer jumping: label <- label's label
-        parent = merged.select(
-            F.col("node").alias("label"), F.col("label").alias("plabel")
-        )
-        moved = Observation()
-        labels = (
-            merged.join(parent, "label", "left")
-            .select("node", F.coalesce("plabel", "label").alias("label"), "old")
-            .observe(
-                moved,
-                F.count(F.when(F.col("label") != F.col("old"), 1)).alias("n"),
-            )
-            .select("node", "label")
-            .localCheckpoint()
-        )
-        if moved.get["n"] == 0:
-            break
-    return labels.select("node", F.col("label").alias("component"))
 
 
 def canonicalize_entities(

@@ -1,8 +1,17 @@
 """Hand-computed semantics for ops/graph.py on tiny known graphs."""
 
+import pytest
+from pyspark.sql import functions as F
+
 from easyner_spark.ops.graph import (
+    bfs_hops,
+    connected_components,
+    hop_distances,
+    k_core,
+    k_truss,
     node_jaccard,
     pagerank,
+    scc_bounded,
     triangles,
     two_hop_reach,
 )
@@ -339,8 +348,6 @@ def _py_kcore(edges, k, max_iter=None):
 
 
 def _run_kcore(spark, edges, k, max_iter=None):
-    from easyner_spark.ops.graph import k_core
-
     df = spark.createDataFrame(edges, "src long, dst long")
     got = k_core(df, k, max_iter=max_iter).collect()
     return {r["node"]: r["core_degree"] for r in got}
@@ -489,8 +496,6 @@ def _py_bfs(edges, sources, max_hops):
 
 
 def _run_bfs(spark, edges, sources, max_hops):
-    from easyner_spark.ops.graph import bfs_hops
-
     e = _edges(spark, [(str(a), str(b)) for a, b in edges])
     s = spark.createDataFrame([(str(x),) for x in sources], "node string")
     got = bfs_hops(e, s, max_hops=max_hops).collect()
@@ -575,8 +580,6 @@ def _py_hop_distances(edges, max_hops):
 
 
 def _run_hop_distances(spark, edges, max_hops):
-    from easyner_spark.ops.graph import hop_distances
-
     e = _edges(spark, [(str(a), str(b)) for a, b in edges])
     got = hop_distances(e, max_hops=max_hops).collect()
     return {(r["seed"], r["node"]): r["hops"] for r in got}
@@ -661,8 +664,6 @@ def test_personalized_pagerank_hand_computed(spark):
 
 
 def _truss(spark, edges, t, max_iter=None):
-    from easyner_spark.ops.graph import k_truss
-
     e = _edges(spark, edges)
     return {
         (r["a"], r["b"]): r["support"]
@@ -693,3 +694,21 @@ def test_k_truss_shared_edge_support_and_bounded_peel(spark):
     assert _truss(spark, g, 2) == {}
     assert _truss(spark, g, 2, max_iter=1) == {("B", "C"): 0}
     assert _truss(spark, g, 2, max_iter=0) == full
+
+
+_EMPTY_GRAPH_CALLS = {
+    "k_core": lambda e: k_core(e, 2),
+    "k_truss": lambda e: k_truss(e, 1),
+    "bfs_hops": lambda e: bfs_hops(e, e.select(F.col("src").alias("node"))),
+    "hop_distances": hop_distances,
+    "scc_bounded": scc_bounded,
+    "connected_components": connected_components,
+}
+
+
+@pytest.mark.parametrize("name", list(_EMPTY_GRAPH_CALLS))
+def test_empty_edges_return_no_rows(spark, name):
+    """Every convergence loop ends on an empty graph: the stop count
+    observed on the first round's checkpoint arrives (as 0) instead of
+    blocking, and the op returns no rows."""
+    assert _EMPTY_GRAPH_CALLS[name](_edges(spark, [])).collect() == []

@@ -10,6 +10,7 @@ single-partition) windows.
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -381,3 +382,26 @@ def test_repeated_pass_reuses_compiled_classes(spark):
             QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
         compiled.append(metric.METRIC_COMPILATION_TIME().getCount() - before)
     assert compiled[1] <= 20, compiled
+
+
+def test_graph_convergence_loops_add_no_count_jobs(spark):
+    """Every convergence loop reads its stop count off the round's own
+    checkpoint (ops/graph._checkpoint_counting), so a round runs no
+    separate count job. Job counts at sf0.001; with a count action
+    per round they were 38, 55 and 59."""
+    from easyner_spark.queries import QUERIES
+
+    if os.path.basename(SF_DIR.rstrip("/")) != "sf0.001":
+        pytest.skip("job counts are pinned at sf0.001")
+    sc = spark.sparkContext
+    names = ("kg_graph_kcore", "kg_graph_truss", "kg_graph_bfs_hops")
+    for name in names:
+        sc.setJobGroup(name, name)
+        try:
+            QUERIES[name](spark, SF_DIR).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = {n: len(sc.statusTracker().getJobIdsForGroup(n)) for n in names}
+    assert jobs == {"kg_graph_kcore": 34, "kg_graph_truss": 47, "kg_graph_bfs_hops": 53}
