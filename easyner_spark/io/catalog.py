@@ -8,10 +8,10 @@ contract requires: every stage checkpoints so a killed job resumes
 from the last committed partition, with per-partition lineage and
 counter metrics.
 
-Real Apache Iceberg needs its runtime jar on the classpath (not in
-this image — the catalog is import-try gated via ``use_iceberg``);
-this class reproduces the two Iceberg properties the pipeline relies
-on with plain parquet:
+Real Apache Iceberg needs its runtime jar on the classpath, which
+this build does not ship (``CheckpointCatalog`` says how to swap it
+in); this class reproduces the two Iceberg properties the pipeline
+relies on with plain parquet:
 
 * ATOMIC per-partition commits: data for each ``batch_id`` partition
   is written via dynamic partition overwrite, then the manifest is
@@ -79,16 +79,16 @@ def _content_counters(df: DataFrame, partition_col: str) -> dict[int, dict]:
 
 
 class CheckpointCatalog:
-    def __init__(self, root: str, use_iceberg: bool = False):
+    """Stage tables under ``root``, each partitioned by ``batch_id``
+    (the column ``read_stage`` filters and ``compact_stage`` rewrites).
+
+    On a cluster with the Iceberg runtime, pass
+    ``spark.jars.packages=org.apache.iceberg:iceberg-spark-runtime-...``
+    and swap this class for the Iceberg catalog."""
+
+    def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
-        if use_iceberg:
-            raise NotImplementedError(
-                "Apache Iceberg runtime jar is not on the classpath in this "
-                "image; on a real cluster pass spark.jars.packages="
-                "org.apache.iceberg:iceberg-spark-runtime-... and swap this "
-                "class for the iceberg catalog"
-            )
 
     # ------------------------------------------------------------------
     def _stage_dir(self, stage: str) -> str:
@@ -129,9 +129,7 @@ class CheckpointCatalog:
                     out.add(int(b))
         return out
 
-    def _retract_batches(
-        self, stage: str, batches: list[int], partition_col: str
-    ) -> None:
+    def _retract_batches(self, stage: str, batches: list[int]) -> None:
         """Physically drop vanished partitions + tombstone them in a new
         snapshot. Idempotent under crashes: dirs are removed before the
         manifest swap, and a re-run re-derives the same vanished set
@@ -140,7 +138,7 @@ class CheckpointCatalog:
 
         for b in batches:
             shutil.rmtree(
-                os.path.join(self._stage_dir(stage), f"{partition_col}={b}"),
+                os.path.join(self._stage_dir(stage), f"batch_id={b}"),
                 ignore_errors=True,
             )
         man = self._load_manifest(stage)
@@ -159,7 +157,6 @@ class CheckpointCatalog:
         self,
         df: DataFrame,
         stage: str,
-        partition_col: str = "batch_id",
         resume_mode: str = "verify_counts",
         allow_empty: bool = False,
     ) -> dict:
@@ -204,10 +201,10 @@ class CheckpointCatalog:
         pending = df
         if done and resume_mode == "skip_committed":
             # partition-pruned resume filter (pushed into the scan)
-            pending = df.filter(~F.col(partition_col).isin(*sorted(done)))
+            pending = df.filter(~F.col("batch_id").isin(*sorted(done)))
         elif done:
             committed = self.counters(stage)
-            incoming = _content_counters(df, partition_col)
+            incoming = _content_counters(df, "batch_id")
 
             def _same(b: int, inc: dict) -> bool:
                 c = committed.get(b)
@@ -240,7 +237,7 @@ class CheckpointCatalog:
                 and not c.get("retracted")
             )
             if vanished:
-                self._retract_batches(stage, vanished, partition_col)
+                self._retract_batches(stage, vanished)
             if not incoming and not allow_empty and any(
                 c.get("rows", 0) > 0 and not c.get("retracted")
                 for c in committed.values()
@@ -248,7 +245,7 @@ class CheckpointCatalog:
                 return {"stale_empty_input": True}
             if not changed:
                 return {"retracted": vanished} if vanished else {}
-            pending = df.filter(F.col(partition_col).isin(changed))
+            pending = df.filter(F.col("batch_id").isin(changed))
 
         # counters BEFORE the write (same plan feeds both via cache).
         # xxhash64(*) hashes NULLs distinctly per column (no concat_ws
@@ -256,7 +253,7 @@ class CheckpointCatalog:
         # the row hashes means a silent divergence needs an engineered
         # collision in two independent folds.
         pending = pending.persist()
-        counters = _content_counters(pending, partition_col)
+        counters = _content_counters(pending, "batch_id")
         if not counters:
             pending.unpersist()
             return {}
@@ -264,7 +261,7 @@ class CheckpointCatalog:
         (
             pending.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
+            .partitionBy("batch_id")
             .parquet(self._stage_dir(stage))
         )
         pending.unpersist()

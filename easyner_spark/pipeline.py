@@ -83,19 +83,17 @@ def run_pipeline(
     nel_lookup=None,
     n_batches: int = 64,
     stages: set[str] | None = None,
-    analysis_sets: bool = False,
-    analysis_approx: bool = False,
     triples_cap: int | None = None,
 ) -> dict:
     """Execute (and checkpoint) the full chain; returns the lineage
-    report {stage: {sec, rows, batches}}. ``stages`` filters which
-    stages run (the reference's `ignore` map, inverted).
+    report {table: {sec, rows_committed, batches_committed}}, one entry
+    per committed table (the "analysis" stage commits entity_frequency
+    and id_frequency, both built from ``linked``). ``stages`` filters
+    which stages run (the reference's `ignore` map, inverted).
 
-    ``analysis_sets``: opt back into the reference's articles_set
-    column (bounded/test corpora only — an unbounded array per surface
-    at web scale). ``triples_cap``: opt-in per-sentence mention cap for
-    entity-stuffed pages (None = exact, matches the sequential oracle;
-    set e.g. 32 on open web text and monitor the capped-sentence rate)."""
+    ``triples_cap``: opt-in per-sentence mention cap for entity-stuffed
+    pages (None = exact, matches the sequential oracle; set e.g. 32 on
+    open web text and monitor the capped-sentence rate)."""
     gazetteer = gazetteer if gazetteer is not None else GAZETTEER
     nel_lookup = nel_lookup if nel_lookup is not None else NEL_LOOKUP
     cat = CheckpointCatalog(warehouse)
@@ -234,18 +232,12 @@ def run_pipeline(
     elif {"canonical", "triples", "analysis"} & want:
         linked = need("linked", "canonical/triples/analysis")
 
-    if linked is not None and "canonical" in want:
+    if "canonical" in want:
         ents = linked.select(
             F.col("ent_id"), F.col("ent_name").alias("name")
         ).distinct()
         canon = canonicalize_entities(ents).withColumn("batch_id", F.lit(0))
-        cat.write_stage(canon, "canonical")
-        canon = cat.read_stage(spark, "canonical").drop("batch_id")
-        linked = linked.join(F.broadcast(canon), "ent_id", "left").withColumn(
-            "canon_id", F.coalesce("canon_id", "ent_id")
-        )
-    elif linked is not None:
-        linked = linked.withColumn("canon_id", F.col("ent_id"))
+        commit("canonical", canon)
 
     if "triples" in want:
         sents = sents if sents is not None else need("sentences", "triples")
@@ -304,22 +296,12 @@ def run_pipeline(
         commit("graph_pagerank", pr.withColumn("batch_id", bkey("node")))
 
     if "analysis" in want:
-        mentions = mentions if mentions is not None else need("mentions", "analysis")
-        # production default with_sets=False: never build per-surface
-        # doc_id arrays (unbounded for stopword-like surfaces at web
-        # scale); counts stay exact. The contract/test path opts back in
-        # via analysis_sets=True.
-        freq = entity_frequency(
-            mentions, with_sets=analysis_sets, approx_distinct=analysis_approx
-        ).withColumn(
-            "batch_id", F.lit(0)
-        )  # aggregate table: single logical partition
-        cat.write_stage(freq.drop("batch_count"), "entity_frequency")
-        idf = id_frequency(
-            linked, with_sets=analysis_sets, approx_distinct=analysis_approx
-        ).withColumn("batch_id", F.lit(0))
-        cat.write_stage(idf.drop("batch_count"), "id_frequency")
-        report["analysis"] = {"done": True}
+        # aggregate tables: a single logical partition each
+        for name, build in (
+            ("entity_frequency", entity_frequency),
+            ("id_frequency", id_frequency),
+        ):
+            commit(name, build(linked).withColumn("batch_id", F.lit(0)))
 
     # manifest-side total: the commit already counted every partition,
     # so a read-back count job would only re-scan the same parquet
@@ -347,7 +329,8 @@ def main() -> None:
         "config 'ignore' map, inverted; e.g. --stages mentions,linked "
         "re-runs NER+NEL over checkpointed sentences; 'graph' "
         "materializes graph_nodes/graph_edges/graph_pagerank from "
-        "committed triples)",
+        "committed triples; 'analysis' commits entity_frequency and "
+        "id_frequency from committed linked)",
     )
     ap.add_argument(
         "--triples-cap",
@@ -355,12 +338,6 @@ def main() -> None:
         default=None,
         help="opt-in per-sentence mention cap for entity-stuffed pages "
         "(default None = exact pairing, matches the sequential oracle)",
-    )
-    ap.add_argument(
-        "--analysis-sets",
-        action="store_true",
-        help="emit the reference's articles_set column (bounded/test "
-        "corpora only — unbounded per-surface arrays at web scale)",
     )
     ap.add_argument(
         "--screen",
@@ -376,13 +353,6 @@ def main() -> None:
         "MinHash-LSH pairs -> connected components, keep each "
         "component's canonical (min doc_id) member; commits "
         "documents_deduped and downstream stages consume it",
-    )
-    ap.add_argument(
-        "--analysis-approx",
-        action="store_true",
-        help="articles_spanned via HyperLogLog++ instead of exact "
-        "countDistinct (the 10^12-row mode; incompatible with "
-        "--analysis-sets)",
     )
     args = ap.parse_args()
 
@@ -404,8 +374,6 @@ def main() -> None:
         args.warehouse,
         n_batches=args.n_batches,
         stages=stages,
-        analysis_sets=args.analysis_sets,
-        analysis_approx=args.analysis_approx,
         triples_cap=args.triples_cap,
     )
     print(json.dumps(report, indent=2, default=str))

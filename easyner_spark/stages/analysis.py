@@ -7,145 +7,88 @@ articles_spanned, batches_spanned, freq_per_article, freq_per_batch,
 sorted descending by total_count. The DESC ranking is the contract
 item ("identical entity-frequency rankings").
 
-Spark shape: one two-level aggregation. Level 1 groups by
-(key, batch_id) — this gets map-side partial aggregation for the
-counts, so the shuffle carries at most |vocab|·|batches| rows, not one
-row per mention. Level 2 folds batches into the per-key row and builds
-the batch_count map with ``map_from_entries`` (exact reference
-semantics, analysis.py:57-63).
+Spark shape: one two-level aggregation per table, over ``linked``.
+Level 1 groups by (key, doc_id, batch_id) and counts — a codegen hash
+aggregate whose exchange carries one row per (key, doc). Level 2 folds
+those rows into one row per key with no distinct aggregate, no join
+and no sort. The tables carry no row order (parquet keeps none):
+readers rank by (total_count desc, key).
 
-Set-valued columns: the reference renders Python sets with '; ' joins
-(analysis.py:103-104) — nondeterministic order. We render SORTED
-(documented divergence; compare set-wise). ``collect_set(doc_id)`` is
-only emitted with ``with_sets=True`` (bounded/test mode): at 10^12
-docs the set for a stop-word-like entity is unbounded, so large-scale
-mode keeps only the exact distinct COUNTS (still exact via the
-two-level agg) — SURVEY.md §2.4 note.
+Kept from the reference: every count and the sorted '; '-joined
+batch_set (the reference joins Python sets, analysis.py:103-104 —
+nondeterministic order; we sort). Dropped: ``articles_set`` and the
+``batch_count`` map — per-key doc_id arrays are unbounded for
+stopword-like surfaces at web scale, and no stored table kept either.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+_STATS = (
+    "total_count",
+    "articles_spanned",
+    "batches_spanned",
+    "freq_per_article",
+    "freq_per_batch",
+    "batch_set",
+)
 
 
-def entity_frequency(
-    mentions: DataFrame,
-    key: str = "surface",
-    with_sets: bool = True,
-    extra_first: dict[str, str] | None = None,
-    approx_distinct: bool = False,
-) -> DataFrame:
-    """Per-``key`` frequency table, ranked by total_count desc.
-
-    ``extra_first`` maps output-column → input-column taken with
-    ``first(...)`` per key (used for the id-level table's ``name``,
-    analysis.py:72-75).
-
-    ``approx_distinct`` (with_sets=False mode only): articles_spanned
-    via HyperLogLog++ (``approx_count_distinct``, default rsd 5%)
-    instead of the exact countDistinct — the 10^12-row variant. The
-    sketch merges map-side (one pass, fixed memory per key), while
-    exact countDistinct internally expands to a (key, doc_id)-distinct
-    shuffle; rankings by total_count are unaffected either way.
-    """
-    if approx_distinct and with_sets:
-        raise ValueError(
-            "approx_distinct requires with_sets=False — the with_sets "
-            "mode materializes exact per-key doc_id sets, which is the "
-            "unbounded-state path the sketch exists to avoid"
-        )
-    per_batch = (
-        mentions.groupBy(key, "batch_id")
+def _fold(per_doc: DataFrame, key: str, *carry: Column) -> DataFrame:
+    """Level 2: (key, doc_id, batch_id, cnt) rows → one stats row per
+    key, plus the ``carry`` aggregates. batch_id and doc_id both derive
+    from the url (stages/extract.py), so (key, doc_id) is unique in
+    ``per_doc`` and count(*) is the exact distinct-article count."""
+    return (
+        per_doc.groupBy(key)
         .agg(
-            F.count("*").alias("cnt"),
-            # (with_sets=False needs nothing extra here: the distinct
-            # count comes from a dedicated pass below)
-            *([F.collect_set("doc_id").alias("doc_set")] if with_sets else []),
-            *[
-                F.first(src).alias(f"_fx_{dst}")
-                for dst, src in (extra_first or {}).items()
-            ],
+            F.sum("cnt").alias("total_count"),
+            F.count("*").alias("articles_spanned"),
+            F.sort_array(F.collect_set("batch_id")).alias("_batches"),
+            *carry,
         )
-    )
-
-    aggs = [
-        F.sum("cnt").alias("total_count"),
-        F.count("*").alias("batches_spanned"),
-        F.sort_array(F.collect_list("batch_id")).alias("_batch_arr"),
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("batch_id", "cnt")))
-        ).alias("batch_count"),
-    ]
-    if with_sets:
-        aggs.append(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("doc_set")))).alias(
-                "_doc_arr"
-            )
-        )
-    aggs.extend(
-        F.first(f"_fx_{dst}").alias(dst) for dst in (extra_first or {})
-    )
-
-    out = per_batch.groupBy(key).agg(*aggs)
-    if with_sets:
-        out = out.withColumn("articles_spanned", F.size("_doc_arr"))
-    else:
-        # distinct across batches needs a dedicated pass: exact
-        # countDistinct, or the HLL++ sketch at extreme scale
-        nd = mentions.groupBy(key).agg(
-            (
-                F.approx_count_distinct("doc_id")
-                if approx_distinct
-                else F.countDistinct("doc_id")
-            ).alias("articles_spanned")
-        )
-        out = out.join(nd, key)
-
-    out = (
-        out.withColumn(
+        .withColumn("batches_spanned", F.size("_batches").cast("bigint"))
+        .withColumn(
             "freq_per_article", F.col("total_count") / F.col("articles_spanned")
         )
         .withColumn("freq_per_batch", F.col("total_count") / F.col("batches_spanned"))
-        .withColumn("batch_set", F.array_join("_batch_arr", "; "))
+        .withColumn("batch_set", F.array_join("_batches", "; "))
     )
-    if with_sets:
-        out = out.withColumn("articles_set", F.array_join("_doc_arr", "; "))
-    cols = [
-        key,
-        *list((extra_first or {}).keys()),
-        "total_count",
-        "articles_spanned",
-        "batches_spanned",
-        "freq_per_article",
-        "freq_per_batch",
-        "batch_set",
-        "batch_count",
-    ] + (["articles_set"] if with_sets else [])
-    return out.select(*cols).orderBy(F.desc("total_count"), key)
 
 
-def id_frequency(
-    linked: DataFrame, with_sets: bool = True, approx_distinct: bool = False
-) -> DataFrame:
-    """Id-level table (analysis.py:68-89,110-120): keyed by ent_id with
-    canonical name and the distinct surfaces seen for the id.
+def entity_frequency(linked: DataFrame) -> DataFrame:
+    """Per-surface frequency table (analysis.py:29-66)."""
+    per_doc = linked.groupBy("surface", "doc_id", "batch_id").agg(
+        F.count("*").alias("cnt")
+    )
+    return _fold(per_doc, "surface").select("surface", *_STATS)
+
+
+def id_frequency(linked: DataFrame) -> DataFrame:
+    """Per-ent_id table (analysis.py:68-89,110-120), with the id's
+    name (``min(ent_name)``, as the contract oracle takes it) and its
+    sorted distinct surfaces.
 
     The reference's freq_per_article for ids divides by the SURFACE
     table's spans (analysis.py:117-118) — a known bug we do not
     replicate (SURVEY.md §2.4 A3); rankings are unaffected.
     """
-    surf = linked.groupBy("ent_id").agg(
-        F.array_join(F.array_sort(F.collect_set("surface")), "; ").alias(
-            "entities_list"
-        )
+    per_doc = linked.groupBy("ent_id", "doc_id", "batch_id").agg(
+        F.count("*").alias("cnt"),
+        F.min("ent_name").alias("name"),
+        F.collect_set("surface").alias("surfaces"),
     )
-    base = entity_frequency(
-        linked,
-        key="ent_id",
-        with_sets=with_sets,
-        extra_first={"name": "ent_name"},
-        approx_distinct=approx_distinct,
-    )
-    return base.join(F.broadcast(surf), "ent_id").orderBy(
-        F.desc("total_count"), "ent_id"
+    return _fold(
+        per_doc,
+        "ent_id",
+        F.min("name").alias("name"),
+        F.array_sort(F.array_distinct(F.flatten(F.collect_list("surfaces")))).alias(
+            "_surfaces"
+        ),
+    ).select(
+        "ent_id",
+        "name",
+        *_STATS,
+        F.array_join("_surfaces", "; ").alias("entities_list"),
     )

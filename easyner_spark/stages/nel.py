@@ -35,11 +35,9 @@ from ..ops.rank import ordered_prefix
 
 
 def link_entities(
-    mentions: DataFrame,
-    lookup: DataFrame,
-    mint_prefix: str = "easyner:",
+    mentions: DataFrame, lookup: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (linked, new_entities).
+    """Returns (linked, new_entities); misses are minted ``easyner:{n}``.
 
     ``lookup`` is (entity, id, name) — exact-surface key (the reference
     matches raw surface case-sensitively, nel.py:38).
@@ -77,7 +75,7 @@ def link_entities(
         ordered_prefix(buckets, "_bkt", ["surface"], "_p")
         .select(
             "surface",
-            F.concat(F.lit(mint_prefix), (F.col("_p") + 1).cast("string")).alias(
+            F.concat(F.lit("easyner:"), (F.col("_p") + 1).cast("string")).alias(
                 "mint_id"
             ),
         )

@@ -43,13 +43,13 @@ def _gap_pred(gap_col):
     return expr
 
 
-def _select_mentions(linked: DataFrame, subj_col: str, cap: int | None) -> DataFrame:
+def _select_mentions(linked: DataFrame, cap: int | None) -> DataFrame:
     m = linked.select(
         "doc_id",
         "batch_id",
         "sent_idx",
         "mention_idx",
-        F.col(subj_col).alias("ent"),
+        F.col("ent_name").alias("ent"),
         "begin",
         "end",
     )
@@ -67,18 +67,17 @@ def _select_mentions(linked: DataFrame, subj_col: str, cap: int | None) -> DataF
 def cooccurrence_triples(
     linked: DataFrame,
     sentences: DataFrame,
-    subj_col: str = "ent_name",
     max_mentions_per_sentence: int | None = None,
 ) -> DataFrame:
     """→ triples(subj, pred, obj, doc_id, sent_idx, batch_id).
 
-    subj/obj from ``subj_col`` (canonical name by default); subj is the
+    subj/obj are the mentions' linked ``ent_name``; subj is the
     earlier mention — reference builds its entity list in sentence
     order (entity_parser.py:19-40). Pattern predicates come from the
     sentence slice between the two mentions (JVM substring, no UDF).
     ``max_mentions_per_sentence`` pairs only mentions with
     ``mention_idx`` below it (None = uncapped)."""
-    m = _select_mentions(linked, subj_col, max_mentions_per_sentence)
+    m = _select_mentions(linked, max_mentions_per_sentence)
     a = m.alias("a")
     b = m.alias("b")
     pairs = a.join(

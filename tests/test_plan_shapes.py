@@ -165,6 +165,23 @@ def test_frequency_ranks_window_by_count_bucket(spark):
         assert "Exchange SinglePartition" not in plan, name
 
 
+def test_frequency_tables_are_two_level_aggregates(spark):
+    """The analysis tables are two keyed aggregates each: no Expand (a
+    distinct aggregate), no join and no range exchange (a sort)."""
+    from easyner_spark.stages.analysis import entity_frequency, id_frequency
+
+    linked = spark.createDataFrame(
+        [("d1", 0, "a", "X:1", "A"), ("d2", 1, "b", "X:1", "B")],
+        "doc_id string, batch_id int, surface string, ent_id string,"
+        " ent_name string",
+    )
+    for build in (entity_frequency, id_frequency):
+        plan = _plan(build(linked))
+        for op in ("Expand", "Join", "rangepartitioning"):
+            assert op not in plan, (build.__name__, op)
+        assert plan.count("hashpartitioning(") == 2, build.__name__
+
+
 def test_scalar_count_queries_are_lazy(spark):
     """doc_rarity_idf / kg_cooccur_pmi must embed their corpus-level
     scalar as a lazy cross-joined 1-row aggregate (the `_total` /
