@@ -23,9 +23,19 @@ relies on with plain parquet:
   `counters()` is the per-partition metrics table (A6 analog,
   scripts/pubmed_bulk.py:59-87).
 
-Resume semantics: ``write_stage`` computes only the NOT-yet-committed
-partitions (partition-pruned anti-filter on batch_id, which Catalyst
-pushes into the source scan) — re-running a finished stage is a no-op.
+Resume semantics: ``write_stage`` counts the incoming frame once and
+rewrites only the batches whose counters differ from the committed
+ones (the default ``verify_counts``), so a re-run over unchanged input
+commits nothing and a re-run over changed input rewrites only the
+changed batches. ``skip_committed`` is the cheap opt-in for immutable
+inputs: committed batches are filtered out before anything is computed
+(a partition-pruned anti-filter on batch_id that Catalyst pushes into
+the source scan).
+
+On-disk format: every committed manifest carries the stage's schema
+stamp and per-batch counters ``{rows, content_hash, content_sum}``; a
+manifest without a schema stamp was not written by this catalog, and
+``read_stage`` refuses it.
 """
 
 from __future__ import annotations
@@ -78,6 +88,22 @@ def _content_counters(df: DataFrame, partition_col: str) -> dict[int, dict]:
     }
 
 
+def _last_counters(man: dict) -> dict[int, dict]:
+    """The newest counters entry per batch across the manifest's
+    snapshots, tombstones included."""
+    out: dict[int, dict] = {}
+    for snap in man["snapshots"]:
+        for b, c in snap["counters"].items():
+            out[int(b)] = c
+    return out
+
+
+def _live(man: dict) -> dict[int, dict]:
+    """Counters of the committed batches: the newest entry per batch,
+    retracted batches dropped."""
+    return {b: c for b, c in _last_counters(man).items() if not c.get("retracted")}
+
+
 class CheckpointCatalog:
     """Stage tables under ``root``, each partitioned by ``batch_id``
     (the column ``read_stage`` filters and ``compact_stage`` rewrites).
@@ -119,15 +145,7 @@ class CheckpointCatalog:
 
     # ------------------------------------------------------------------
     def committed_batches(self, stage: str) -> set[int]:
-        man = self._load_manifest(stage)
-        out: set[int] = set()
-        for snap in man["snapshots"]:
-            for b, c in snap["counters"].items():
-                if c.get("retracted"):
-                    out.discard(int(b))
-                else:
-                    out.add(int(b))
-        return out
+        return set(_live(self._load_manifest(stage)))
 
     def _retract_batches(self, stage: str, batches: list[int]) -> None:
         """Physically drop vanished partitions + tombstone them in a new
@@ -136,11 +154,9 @@ class CheckpointCatalog:
         from the still-positive committed counters."""
         import shutil
 
+        stage_dir = self._stage_dir(stage)
         for b in batches:
-            shutil.rmtree(
-                os.path.join(self._stage_dir(stage), f"batch_id={b}"),
-                ignore_errors=True,
-            )
+            shutil.rmtree(os.path.join(stage_dir, f"batch_id={b}"), ignore_errors=True)
         man = self._load_manifest(stage)
         man["snapshots"].append(
             {
@@ -160,152 +176,109 @@ class CheckpointCatalog:
         resume_mode: str = "verify_counts",
         allow_empty: bool = False,
     ) -> dict:
-        """Commit all pending partitions of ``df``; returns the snapshot
-        entry ({} if everything was already committed).
+        """Commit the batches of ``df`` that differ from the committed
+        ones; returns the snapshot entry ({} if nothing changed).
 
-        ``allow_empty``: by default a fully-empty incoming frame is
-        treated as a caller bug and ignored (the stage keeps serving
-        its committed rows; the return dict carries
-        ``{"stale_empty_input": True}`` so the caller can tell). For
-        stages whose row set can legitimately shrink to zero on re-run
-        (e.g. a minted-entity dimension once every surface resolves),
-        pass ``allow_empty=True`` — an empty frame then retracts every
-        committed batch, and ``read_stage`` serves zero rows.
+        One path for every commit: persist the incoming frame, count it
+        once (``_content_counters``: row count + two order-insensitive
+        content folds per batch), and rewrite by dynamic partition
+        overwrite exactly the batches whose counters differ from the
+        live committed ones. A fresh stage is the case with nothing
+        committed, so every batch differs.
 
         Resume modes — "partition committed" is not "partition
         complete" when the INPUT can grow (batch_id is a hash of the
         key, so new rows land in already-committed batches):
 
-        * ``verify_counts`` (default): one counting pass over the
-          incoming frame computing row count AND the order-insensitive
-          content hash; a batch is pending iff either differs from the
-          committed counters (changed batches are re-committed via
-          dynamic partition overwrite) — an in-place row change with an
-          unchanged count (e.g. latest-crawl-wins replacing a page's
-          text) is therefore re-committed, not silently kept stale.
-          Re-running an unchanged stage is still a no-op.
-        * ``skip_committed``: the cheap immutable-input path — skip any
-          batch ever committed without looking at the data (exactly the
-          reference's skip-existing-file semantics).
+        * ``verify_counts`` (default): the committed counters are the
+          comparison set. An in-place row change with an unchanged
+          count (e.g. latest-crawl-wins replacing a page's text) is
+          re-committed, not silently kept stale; re-running an
+          unchanged stage commits nothing. Committed batches absent
+          from a non-empty incoming frame (the input shrank) are
+          retracted: their partition dirs are deleted and tombstoned,
+          and the return dict lists them under ``"retracted"``.
+        * ``skip_committed``: the cheap immutable-input path — committed
+          batches are filtered out before the frame is computed (the
+          reference's skip-existing-file semantics), and the rest are
+          committed as new. Nothing is verified or retracted.
+
+        ``allow_empty`` (``verify_counts`` only): by default a
+        fully-empty incoming frame over a committed stage is treated as
+        a caller bug and ignored — the stage keeps serving its
+        committed rows and the return dict is
+        ``{"stale_empty_input": True}``. For stages whose row set can
+        legitimately shrink to zero on re-run (e.g. a minted-entity
+        dimension once every surface resolves), pass
+        ``allow_empty=True``: an empty frame then retracts every
+        committed batch, and ``read_stage`` serves zero rows.
         """
-        done = self.committed_batches(stage)
-        # stamp the frame schema for any stage that has a manifest:
-        # read_stage needs it to serve a typed EMPTY frame after a full
-        # retraction, including manifests written before schema stamping
-        # existed and runs that retract without writing new data
-        if done:
-            man = self._load_manifest(stage)
-            if "schema" not in man:
-                man["schema"] = df.schema.json()
-                self._store_manifest(stage, man)
-        pending = df
-        if done and resume_mode == "skip_committed":
-            # partition-pruned resume filter (pushed into the scan)
-            pending = df.filter(~F.col("batch_id").isin(*sorted(done)))
-        elif done:
-            committed = self.counters(stage)
-            incoming = _content_counters(df, "batch_id")
-
-            def _same(b: int, inc: dict) -> bool:
-                c = committed.get(b)
-                if c is None or c["rows"] != inc["rows"]:
-                    return False
-                # BOTH folds must match; missing keys = pre-hash
-                # manifests → count-only fallback
-                if "content_hash" in c and c["content_hash"] != inc["content_hash"]:
-                    return False
-                return (
-                    "content_sum" not in c
-                    or c["content_sum"] == inc["content_sum"]
-                )
-
-            changed = sorted(
-                b for b, inc in incoming.items() if not _same(b, inc)
-            )
-            # retract committed batches absent from the incoming frame
-            # (input shrank): delete their partition dirs and tombstone
-            # them, else read_stage serves deleted rows forever. A
-            # fully-empty incoming frame only wipes the stage under the
-            # explicit allow_empty opt-in; otherwise it is treated as a
-            # caller bug (no-op, flagged in the returned snapshot).
-            vanished = sorted(
-                b
-                for b, c in committed.items()
-                if (incoming or allow_empty)
-                and b not in incoming
-                and c.get("rows", 0) > 0
-                and not c.get("retracted")
-            )
-            if vanished:
-                self._retract_batches(stage, vanished)
-            if not incoming and not allow_empty and any(
-                c.get("rows", 0) > 0 and not c.get("retracted")
-                for c in committed.values()
-            ):
+        live = _live(self._load_manifest(stage))
+        if resume_mode == "skip_committed":
+            if live:
+                # partition-pruned resume filter (pushed into the scan)
+                df = df.filter(~F.col("batch_id").isin(*sorted(live)))
+            live = {}
+        # counted once, then written from the cache. xxhash64(*) hashes
+        # NULLs distinctly per column (no concat_ws null-blindness);
+        # keeping BOTH a bit_xor and a decimal sum of the row hashes
+        # means a silent divergence needs an engineered collision in two
+        # independent folds.
+        df = df.persist()
+        incoming = _content_counters(df, "batch_id")
+        changed = sorted(b for b, c in incoming.items() if c != live.get(b))
+        # retract committed batches absent from the incoming frame (input
+        # shrank), else read_stage serves deleted rows forever. A
+        # fully-empty incoming frame only wipes the stage under the
+        # explicit allow_empty opt-in.
+        vanished = sorted(set(live) - set(incoming)) if incoming or allow_empty else []
+        if vanished:
+            self._retract_batches(stage, vanished)
+        if not changed:
+            df.unpersist()
+            if live and not incoming and not allow_empty:
                 return {"stale_empty_input": True}
-            if not changed:
-                return {"retracted": vanished} if vanished else {}
-            pending = df.filter(F.col("batch_id").isin(changed))
-
-        # counters BEFORE the write (same plan feeds both via cache).
-        # xxhash64(*) hashes NULLs distinctly per column (no concat_ws
-        # null-blindness); keeping BOTH a bit_xor and a decimal sum of
-        # the row hashes means a silent divergence needs an engineered
-        # collision in two independent folds.
-        pending = pending.persist()
-        counters = _content_counters(pending, "batch_id")
-        if not counters:
-            pending.unpersist()
-            return {}
+            return {"retracted": vanished} if vanished else {}
 
         (
-            pending.write.mode("overwrite")
+            df.filter(F.col("batch_id").isin(*changed))
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(self._stage_dir(stage))
         )
-        pending.unpersist()
+        df.unpersist()
 
         man = self._load_manifest(stage)
         snap = {
             "snapshot_id": len(man["snapshots"]),
             "ts": time.time(),
-            "counters": {str(k): v for k, v in counters.items()},
+            "counters": {str(b): incoming[b] for b in changed},
         }
         man["snapshots"].append(snap)
-        # recorded so read_stage can serve a typed EMPTY frame after a
-        # full retraction (no data files left to infer a schema from)
-        man["schema"] = pending.schema.json()
+        # read_stage reads with this stamp (no inference job) and serves
+        # a typed EMPTY frame from it after a full retraction
+        man["schema"] = df.schema.json()
         self._store_manifest(stage, man)
         return snap
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
-        done = self.committed_batches(stage)
         man = self._load_manifest(stage)
-        schema_json = man.get("schema")
-        schema = (
-            StructType.fromJson(json.loads(schema_json)) if schema_json else None
-        )
+        if "schema" not in man:
+            raise ValueError(
+                f"stage '{stage}' has no committed manifest with a schema "
+                f"stamp in {self.root}"
+            )
+        schema = StructType.fromJson(json.loads(man["schema"]))
+        done = sorted(_live(man))
         if not done:
-            if schema is not None:
-                return spark.createDataFrame([], schema)
-            if man["snapshots"]:
-                # fully-retracted pre-schema-stamp manifest: no data
-                # files and no recorded schema — a clear error beats an
-                # UNABLE_TO_INFER_SCHEMA from the raw parquet read
-                raise ValueError(
-                    f"stage '{stage}' is fully retracted and its manifest "
-                    "predates schema stamping; re-commit the stage (any "
-                    "write_stage call stamps the schema)"
-                )
-            raise ValueError(f"stage '{stage}' was never committed")
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(_read_schema(schema, done))
-        df = reader.parquet(self._stage_dir(stage))
+            return spark.createDataFrame([], schema)
+        df = spark.read.schema(_read_schema(schema, done)).parquet(
+            os.path.join(self.root, man.get("data_dir", stage))
+        )
         # only committed partitions are visible (a crashed write's orphan
         # partition directories are filtered out = snapshot isolation)
-        return df.filter(F.col("batch_id").isin(*sorted(done)))
+        return df.filter(F.col("batch_id").isin(*done))
 
     def compact_stage(
         self,
@@ -313,7 +286,6 @@ class CheckpointCatalog:
         stage: str,
         partition_expr,
         manifest_extra: dict | None = None,
-        transform=None,
     ) -> dict:
         """Rewrite a stage into a fresh compact ``batch_id`` keyspace
         and reset its manifest to ONE snapshot — the Iceberg
@@ -334,11 +306,7 @@ class CheckpointCatalog:
         manifest inside the SAME atomic swap — writers use it to carry
         counters that must survive the keyspace reset (e.g. the epoch
         service's ``epoch_base``; streaming/ingest.py
-        compact_sig_stage). ``transform`` (optional ``df -> df``) is
-        applied to the rows before the rewrite — since compaction
-        rewrites EVERY partition at once, this is the one safe point to
-        evolve a stage's schema (e.g. materializing a derived version
-        column) without mixing parquet schemas across partition dirs.
+        compact_sig_stage).
 
         Crash safety — the manifest swap is the SINGLE commit point:
         the compacted data is fully written to a fresh generation
@@ -369,10 +337,7 @@ class CheckpointCatalog:
             ):
                 shutil.rmtree(os.path.join(self.root, entry), ignore_errors=True)
 
-        df = self.read_stage(spark, stage)
-        if transform is not None:
-            df = transform(df)
-        df = df.drop("batch_id")
+        df = self.read_stage(spark, stage).drop("batch_id")
         compacted = df.withColumn(
             "batch_id", partition_expr.cast("int")
         ).persist()
@@ -429,11 +394,7 @@ class CheckpointCatalog:
         os.replace(tmp, self._config_path(stage))
 
     def counters(self, stage: str) -> dict[int, dict]:
-        out: dict[int, dict] = {}
-        for snap in self._load_manifest(stage)["snapshots"]:
-            for b, c in snap["counters"].items():
-                out[int(b)] = c
-        return out
+        return _last_counters(self._load_manifest(stage))
 
     def history(self, stage: str) -> list[dict]:
         return self._load_manifest(stage)["snapshots"]

@@ -5062,11 +5062,7 @@ def q_dedup_containment(spark, sf_dir):
     Catches a short page verbatim-embedded in a long one — quote farms,
     article+comments wrappers — which symmetric Jaccard scores low
     because the union is dominated by the long side. Plan: the
-    shared _shingle_overlap frame (at production scale the same
-    MinHash-band blocking as dedup_minhash_pairs runs first and
-    stages/canonical.py:containment_filter verifies only the
-    candidates — this contract query is its exact whole-corpus twin)
-    → integer ppm filter."""
+    shared _shingle_overlap frame → integer ppm filter."""
     return (
         _shingle_overlap(spark, sf_dir)
         .select(

@@ -211,81 +211,22 @@ def signature_similarity_filter(
     )
 
 
-def containment_filter(
-    pairs: DataFrame,
-    shingle_sets: DataFrame,
-    id_col: str = "doc_id",
-    min_containment_ppm: int = 600_000,
-) -> DataFrame:
-    """Exact shingle-containment verification over CANDIDATE pairs →
-    (src, dst, n_inter, n_small, cont_ppm BIGINT).
-
-    The asymmetric near-dup signal |A∩B| * 1e6 div min(|A|,|B|): a
-    short page verbatim-embedded in a long one scores ~1e6 here while
-    symmetric Jaccard scores low (union dominated by the long side).
-
-    Scale path: this runs AFTER blocking (``lsh_candidate_pairs`` /
-    ``incremental_lsh_candidates``), so the cost is O(candidate pairs ×
-    shingles per doc), never corpus² — the exact-contract twin over the
-    whole corpus is the ``dedup_containment`` oracle query
-    (queries.py). ``shingle_sets`` is (id, shingle) DISTINCT; both
-    joins are equi-keyed (pair id, then (id, shingle)) and AQE
-    skew-splits any hot candidate.
-    """
-    ss = shingle_sets.select(F.col(id_col).alias("_id"), "shingle").distinct()
-    sizes = ss.groupBy("_id").agg(F.count("*").cast("bigint").alias("n"))
-    a = ss.select(F.col("_id").alias("src"), "shingle")
-    b = ss.select(F.col("_id").alias("dst"), "shingle")
-    inter = (
-        pairs.select("src", "dst")
-        .join(a, "src")
-        .join(b, ["dst", "shingle"])
-        .groupBy("src", "dst")
-        .agg(F.count("*").cast("bigint").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("_id").alias("src"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("_id").alias("dst"), F.col("n").alias("nb"))
-    return (
-        inter.join(sa, "src")
-        .join(sb, "dst")
-        .select(
-            "src",
-            "dst",
-            "n_inter",
-            F.expr("CAST(least(na, nb) AS BIGINT)").alias("n_small"),
-            F.expr(
-                "CAST(n_inter * 1000000 div least(na, nb) AS BIGINT)"
-            ).alias("cont_ppm"),
-        )
-        .filter(F.col("cont_ppm") >= min_containment_ppm)
-    )
-
-
-def canonicalize_entities(
-    entities: DataFrame,
-    id_col: str = "ent_id",
-    name_col: str = "name",
-    num_hashes: int = 12,
-    num_bands: int = 4,
-    min_agreement: float = 0.5,
-    max_bucket: int = 256,
-) -> DataFrame:
-    """Full canonicalization: → (ent_id, canon_id).
+def canonicalize_entities(entities: DataFrame) -> DataFrame:
+    """Full canonicalization of (ent_id, name) rows: → (ent_id, canon_id).
 
     Entities whose names are near-duplicates share a canon_id (the min
     ent_id of their component); everything else maps to itself
     (identity canonicalization), so the stage is safe to insert even
-    when no merges fire.
+    when no merges fire. Blocking and verification run at the callees'
+    defaults: 12 hashes over character trigrams, 4 bands, buckets
+    salted at 256, pairs kept at signature agreement >= 0.5.
     """
-    sigs = minhash_signatures(entities, id_col, name_col, num_hashes)
-    pairs = lsh_candidate_pairs(sigs, id_col, num_bands, max_bucket)
-    verified = signature_similarity_filter(pairs, sigs, id_col, min_agreement)
+    sigs = minhash_signatures(entities)
+    verified = signature_similarity_filter(lsh_candidate_pairs(sigs), sigs)
     comp = connected_components(verified.select("src", "dst"))
     return (
-        entities.select(id_col)
+        entities.select("ent_id")
         .distinct()
-        .join(comp.withColumnRenamed("node", id_col), id_col, "left")
-        .select(
-            id_col, F.coalesce("component", F.col(id_col)).alias("canon_id")
-        )
+        .join(comp.withColumnRenamed("node", "ent_id"), "ent_id", "left")
+        .select("ent_id", F.coalesce("component", F.col("ent_id")).alias("canon_id"))
     )

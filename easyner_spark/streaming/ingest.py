@@ -82,40 +82,41 @@ def _pin_n_batches(cat, sig_stage: str, n_batches: int, has_data: bool) -> int:
     latest-version selection, so the value is pinned in the catalog's
     per-stage config sidecar (which, unlike the manifest, survives
     compaction) and a later call with a different value fails loudly.
-    A transitional fallback honors the ``sig_n_batches`` manifest key
-    an earlier code version wrote, migrating it into the sidecar.
 
     The pin is written BEFORE the first commit (committed data without
     a pin would mean silently trusting the next caller); a mismatching
     call against a stage with NO committed data simply re-pins — a
     crashed first run never locks an empty stage."""
-    in_sidecar = cat.load_config(sig_stage).get("n_batches")
-    stored = in_sidecar
-    if stored is None:
-        # transitional: earlier code pinned in the manifest
-        stored = cat._load_manifest(sig_stage).get("sig_n_batches")
-    if stored is not None and int(stored) != n_batches:
-        if has_data:
+    stored = cat.load_config(sig_stage).get("n_batches")
+    if stored is None or int(stored) != n_batches:
+        if stored is not None and has_data:
             raise ValueError(
                 f"stage '{sig_stage}' was built with n_batches={stored}; "
                 f"called with n_batches={n_batches} — epoch numbering "
                 "would corrupt. Pass the original value."
             )
-        stored = None  # empty stage: nothing at risk, re-pin below
-    final = n_batches if stored is None else int(stored)
-    if in_sidecar is None or int(in_sidecar) != final:
-        cat.store_config(sig_stage, {"n_batches": final})  # pin/migrate
-    return final
+        # unpinned, or an empty stage: nothing at risk, (re-)pin
+        cat.store_config(sig_stage, {"n_batches": n_batches})
+    return n_batches
 
 
-def _with_derived_epoch(df: DataFrame, n_batches: int) -> DataFrame:
-    """Legacy-schema epoch derivation (ONE definition): pre-epoch-column
-    stages carried the version in their epoch-scoped batch id."""
-    if "epoch" in df.columns:
-        return df
-    return df.withColumn(
-        "epoch", F.expr(f"batch_id div {n_batches}").cast("bigint")
-    )
+def _next_epoch(spark: SparkSession, cat, sig_stage: str, batch_range: int) -> int:
+    """The epoch number of the signature stage's next commit (ONE
+    definition: the epoch service and its compaction must agree),
+    cheapest source first:
+
+    1. ``epoch_base`` recorded by compact_sig_stage (O(manifest));
+    2. plain append-only history: epoch == batch range (each effective
+       commit bumps both, from 0);
+    3. compacted WITHOUT the wrapper (direct compact_stage): one max
+       over the preserved epoch column."""
+    man = cat._load_manifest(sig_stage)
+    if man.get("epoch_base") is not None:
+        return int(man["epoch_base"]) + batch_range
+    if not man.get("data_dir"):
+        return batch_range
+    corpus = cat.read_stage(spark, sig_stage)
+    return int(corpus.agg(F.max("epoch").alias("m")).first()["m"]) + 1
 
 
 def _latest_per_doc(versioned: DataFrame, ids: DataFrame) -> DataFrame:
@@ -217,7 +218,6 @@ def epoch_dedup_pairs(
 
     cat = CheckpointCatalog(warehouse)
     done = cat.committed_batches(sig_stage)
-    man = cat._load_manifest(sig_stage)  # loaded ONCE per call
     # n_batches became load-bearing for the version counter (epoch ==
     # f(batch_range)): resolve/validate/pin against the sidecar config
     n_batches = _pin_n_batches(cat, sig_stage, n_batches, has_data=bool(done))
@@ -225,34 +225,9 @@ def epoch_dedup_pairs(
     # invariant); it resets when a compaction flattens the keyspace,
     # while the `epoch` version counter keeps climbing
     batch_range = (max(done) // n_batches + 1) if done else 0
-    legacy_schema = False
     if done:
         corpus_full = cat.read_stage(spark, sig_stage)
-        if "epoch" not in corpus_full.columns:
-            # warehouse committed before the explicit-epoch schema: the
-            # old scheme carried the version in the batch id. Derive it
-            # (batch ids were epoch-scoped then) and KEEP committing in
-            # the legacy shape — mixing schemas across partition dirs
-            # would make the parquet read schema footer-dependent.
-            # (compact_sig_stage MATERIALIZES the derived column while
-            # rewriting every partition, upgrading the stage.)
-            legacy_schema = True
-            corpus_full = _with_derived_epoch(corpus_full, n_batches)
-        # next epoch number, cheapest source first:
-        #  1. epoch_base recorded by compact_sig_stage (O(manifest));
-        #  2. plain append-only history: epoch == batch range (each
-        #     effective commit bumps both, from 0);
-        #  3. compacted WITHOUT the wrapper (direct compact_stage):
-        #     one max over the preserved epoch column.
-        man_base = man.get("epoch_base")
-        if man_base is not None:
-            epoch_seq = int(man_base) + batch_range
-        elif not man.get("data_dir"):
-            epoch_seq = batch_range
-        else:
-            epoch_seq = (
-                int(corpus_full.agg(F.max("epoch").alias("m")).first()["m"]) + 1
-            )
+        epoch_seq = _next_epoch(spark, cat, sig_stage, batch_range)
     else:
         corpus_full = None
         epoch_seq = 0
@@ -337,8 +312,6 @@ def epoch_dedup_pairs(
             new_sigs.select("doc_id").distinct(),
         )
         fresh = new_sigs.join(latest_committed, ["doc_id", "sig"], "left_anti")
-        if legacy_schema:
-            fresh = fresh.drop("epoch")
         cat.write_stage(fresh, sig_stage, resume_mode="skip_committed")
     else:
         pairs = lsh_candidate_pairs(
@@ -364,46 +337,27 @@ def compact_sig_stage(
     """Compact the epoch-grown signature stage into one n_batches
     keyspace, recording the epoch counter's continuation point
     (``epoch_base``) in the manifest INSIDE the same atomic swap — the
-    O(manifest) path for epoch_seq derivation after compaction. Legacy
-    stages (pre-epoch-column) are upgraded on the way through: the
-    derived epoch column is materialized while every partition is
-    being rewritten anyway (the one safe schema-evolution point).
-
-    Use THIS wrapper for the signature stage, not a direct
-    ``compact_stage`` call. A direct call works only for stages that
-    already carry the epoch column (epoch_dedup_pairs then falls back
-    to one max() over it); on a LEGACY stage it would flatten the
-    batch ids that encode the versions, irrecoverably collapsing every
-    historical version to epoch 0 (multi-version docs then resolve
-    'latest' by the arbitrary-but-deterministic sig tiebreak).
+    O(manifest) path for epoch_seq derivation after compaction. A
+    direct ``compact_stage`` call keeps the rows and their ``epoch``
+    column too, but records no ``epoch_base``, so every later epoch
+    pays one max() over the stage to number itself.
     """
     cat = CheckpointCatalog(warehouse)
     done = cat.committed_batches(sig_stage)
     if not done:
         raise ValueError(f"stage '{sig_stage}' has no committed batches")
-    man = cat._load_manifest(sig_stage)
     # honor the stage's pinned n_batches; reject a conflicting value
     # (the stage has committed data by the guard above)
     n_batches = _pin_n_batches(cat, sig_stage, n_batches, has_data=True)
-    batch_range = max(done) // n_batches + 1
-    if man.get("epoch_base") is not None:
-        next_epoch = int(man["epoch_base"]) + batch_range
-    elif not man.get("data_dir"):
-        next_epoch = batch_range  # plain append-only history
-    else:
-        cur = _with_derived_epoch(cat.read_stage(spark, sig_stage), n_batches)
-        next_epoch = int(cur.agg(F.max("epoch").alias("m")).first()["m"]) + 1
-
+    next_epoch = _next_epoch(spark, cat, sig_stage, max(done) // n_batches + 1)
     # post-compaction batch_range is 1 (all data in range 0), so the
     # invariant next_epoch == epoch_base + batch_range needs base =
-    # next_epoch - 1. The transform bakes the derived epoch column into
-    # legacy stages during the rewrite.
+    # next_epoch - 1
     return cat.compact_stage(
         spark,
         sig_stage,
         _sig_batch_key(n_batches, 0),
         manifest_extra={"epoch_base": next_epoch - 1},
-        transform=lambda df: _with_derived_epoch(df, n_batches),
     )
 
 

@@ -136,41 +136,6 @@ def test_incremental_lsh_matches_filtered_full_join(spark):
     assert any(p not in got for p in full - expected) or not (full - expected)
 
 
-def test_containment_filter_verifies_candidates_only(spark):
-    """containment_filter scores ONLY the supplied candidate pairs with
-    exact shingle containment of the smaller side: a short doc fully
-    embedded in a long one scores 1e6 ppm; a disjoint pair dies at the
-    threshold; a pair absent from the candidate list is never emitted
-    even if its containment is perfect."""
-    from easyner_spark.stages.canonical import containment_filter
-
-    ss = spark.createDataFrame(
-        # doc 1 = {a b, b c}; doc 2 = {a b, b c, c d, d e} (1 ⊂ 2);
-        # doc 3 disjoint; doc 4 = copy of doc 1 (perfect pair, not a
-        # candidate below)
-        [(1, "a b"), (1, "b c"),
-         (2, "a b"), (2, "b c"), (2, "c d"), (2, "d e"),
-         (3, "x y"), (3, "y z"),
-         (4, "a b"), (4, "b c")],
-        "doc_id long, shingle string",
-    )
-    cand = spark.createDataFrame(
-        [(1, 2), (1, 3)], "src long, dst long"
-    )
-    got = {
-        (r["src"], r["dst"]): (r["n_inter"], r["n_small"], r["cont_ppm"])
-        for r in containment_filter(cand, ss).collect()
-    }
-    assert got == {(1, 2): (2, 2, 1_000_000)}  # (1,3) filtered, (1,4) absent
-    # lower threshold: disjoint still absent (zero intersection rows
-    # never reach the agg), perfect pair still requires candidacy
-    low = {
-        (r["src"], r["dst"])
-        for r in containment_filter(cand, ss, min_containment_ppm=0).collect()
-    }
-    assert low == {(1, 2)}
-
-
 def test_connected_components_long_chain_converges(spark):
     """A 40-node path with shuffled ids needs several rounds; the run
     goes to fixpoint and labels every node with the path's min id."""

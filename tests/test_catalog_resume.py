@@ -143,17 +143,17 @@ def test_read_stage_uses_stamped_schema_without_a_job(spark, docs, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup("read_stage_inferred"))
 
 
-def test_read_stage_without_schema_stamp_infers(spark, docs, tmp_path):
-    """Manifests written before schema stamping still read (by parquet
-    schema inference)."""
-    import json
-
+def test_read_stage_refuses_manifest_without_schema_stamp(spark, docs, tmp_path):
+    """Every commit stamps the schema, so a manifest without one was not
+    written by this catalog: read_stage raises, naming the stage,
+    instead of guessing a schema from the data files."""
     cat = CheckpointCatalog(str(tmp_path / "wh"))
     cat.write_stage(docs, "s")
-    with open(cat._manifest_path("s")) as f:
-        man = json.load(f)
+    man = cat._load_manifest("s")
     del man["schema"]
     cat._store_manifest("s", man)
-    back = cat.read_stage(spark, "s")
-    assert back.schema == spark.read.parquet(str(tmp_path / "wh" / "s")).schema
-    assert back.count() == 400
+    with pytest.raises(ValueError, match="stage 's'"):
+        cat.read_stage(spark, "s")
+    # a stage that was never committed raises the same error
+    with pytest.raises(ValueError, match="stage 'missing'"):
+        cat.read_stage(spark, "missing")

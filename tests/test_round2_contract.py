@@ -134,7 +134,8 @@ def test_read_documents_epochs_empty_warehouse(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
-def test_catalog_resume_detects_content_change(spark, tmp_path):
+def test_catalog_resume_detects_content_change(spark, tmp_path, monkeypatch):
+    from easyner_spark.io import catalog as cat_mod
     from easyner_spark.io.catalog import CheckpointCatalog
 
     wh = str(tmp_path / "wh")
@@ -150,8 +151,25 @@ def test_catalog_resume_detects_content_change(spark, tmp_path):
     v2 = spark.createDataFrame(
         [("a2", 0), ("b", 1)], "doc_id string, batch_id int"
     )
+    def files(b):
+        d = os.path.join(wh, "docs", f"batch_id={b}")
+        return {(f, os.stat(os.path.join(d, f)).st_mtime_ns) for f in os.listdir(d)}
+
+    kept = files(1)
+    # the verifying commit counts the incoming frame ONCE: the same
+    # counters decide what changed and are recorded for it
+    calls = []
+    counters = cat_mod._content_counters
+    monkeypatch.setattr(
+        cat_mod,
+        "_content_counters",
+        lambda df, col: calls.append(col) or counters(df, col),
+    )
     snap2 = cat.write_stage(v2, "docs")
+    monkeypatch.undo()
+    assert len(calls) == 1
     assert list(snap2["counters"]) == ["0"]  # only the changed batch recommitted
+    assert files(1) == kept  # the unchanged batch's files were not rewritten
     got = {r["doc_id"] for r in cat.read_stage(spark, "docs").collect()}
     assert got == {"a2", "b"}
 

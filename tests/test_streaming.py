@@ -328,84 +328,6 @@ def test_epoch_dedup_handles_content_revert(spark, tmp_path):
     assert len(rows) == len(pairs)  # no duplicate emissions
 
 
-def test_epoch_dedup_reads_legacy_warehouse_without_epoch_column(spark, tmp_path):
-    """A signature stage committed by the pre-epoch-column code (rows
-    are doc_id/sig/batch_id only) must keep working: epochs derive from
-    the batch id and commits stay in the legacy shape (no mixed parquet
-    schemas across partition dirs)."""
-    from easyner_spark.io.catalog import CheckpointCatalog
-    from easyner_spark.stages.canonical import minhash_signatures
-    from easyner_spark.streaming.ingest import _sig_batch_key, epoch_dedup_pairs
-
-    wh = str(tmp_path / "wh_legacy")
-    nb = 8
-    text_a = "the quick brown fox jumps over the lazy dog again and again"
-    docs = spark.createDataFrame(
-        [(1, text_a), (2, text_a)], "doc_id long, text string"
-    )
-    legacy = minhash_signatures(docs, id_col="doc_id", name_col="text").select(
-        "doc_id", "sig", _sig_batch_key(nb, 0).alias("batch_id")
-    )
-    cat = CheckpointCatalog(wh)
-    cat.write_stage(legacy, "minhash_sigs", resume_mode="skip_committed")
-
-    rows = epoch_dedup_pairs(
-        spark,
-        wh,
-        spark.createDataFrame([(9, text_a)], "doc_id long, text string"),
-        n_batches=nb,
-    ).collect()
-    pairs = {(r["doc_a"], r["doc_b"]) for r in rows}
-    assert pairs == {(1, 9), (2, 9)}
-    # the stage schema stayed legacy (no epoch column materialized)
-    sigs = cat.read_stage(spark, "minhash_sigs")
-    assert "epoch" not in sigs.columns
-    assert {r["doc_id"] for r in sigs.select("doc_id").collect()} == {1, 2, 9}
-
-
-def test_legacy_stage_compaction_materializes_epochs(spark, tmp_path):
-    """Review r4 pass 4: compacting a LEGACY stage (version implicit in
-    the batch id) must bake the derived epoch column in during the
-    rewrite — otherwise flattening the keyspace collapses every
-    version to epoch 0 and latest-version selection degrades to the
-    sig tiebreak."""
-    from easyner_spark.io.catalog import CheckpointCatalog
-    from easyner_spark.stages.canonical import minhash_signatures
-    from easyner_spark.streaming.ingest import (
-        _sig_batch_key,
-        compact_sig_stage,
-        epoch_dedup_pairs,
-    )
-
-    wh = str(tmp_path / "wh_legacycompact")
-    nb = 8
-    text_a = "the quick brown fox jumps over the lazy dog again and again"
-    text_b = "entirely different replacement content with no overlap at all"
-    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    cat = CheckpointCatalog(wh)
-    legacy = minhash_signatures(
-        mk([(1, text_a), (2, text_a)]), id_col="doc_id", name_col="text"
-    ).select("doc_id", "sig", _sig_batch_key(nb, 0).alias("batch_id"))
-    cat.write_stage(legacy, "minhash_sigs", resume_mode="skip_committed")
-    # legacy-shape second version for doc 1 (range 1)
-    epoch_dedup_pairs(spark, wh, mk([(1, text_b)]), n_batches=nb)
-    sigs = cat.read_stage(spark, "minhash_sigs")
-    assert "epoch" not in sigs.columns  # still legacy before compaction
-
-    compact_sig_stage(spark, wh, n_batches=nb)
-    sigs2 = cat.read_stage(spark, "minhash_sigs")
-    assert "epoch" in sigs2.columns  # upgraded during the rewrite
-    eps = {
-        (r["doc_id"], r["epoch"]) for r in sigs2.select("doc_id", "epoch").collect()
-    }
-    assert (1, 0) in eps and (1, 1) in eps and (2, 0) in eps
-
-    # and latest-version verification still works post-compaction:
-    # doc 1's current content is B, so only (2, 9) verifies
-    rows = epoch_dedup_pairs(spark, wh, mk([(9, text_a)]), n_batches=nb).collect()
-    assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(2, 9)}
-
-
 def test_epoch_dedup_rejects_mismatched_n_batches(spark, tmp_path):
     """n_batches is load-bearing for epoch numbering — a mismatching
     later call must fail loudly, not silently collide epochs."""
@@ -427,8 +349,7 @@ def test_epoch_dedup_rejects_mismatched_n_batches(spark, tmp_path):
 def test_pin_n_batches_semantics(tmp_path):
     """Pin is written before the first commit; an empty stage can
     re-pin (a crashed first run never locks it); a stage WITH data
-    rejects mismatches; a legacy manifest key migrates to the sidecar
-    and survives compaction's manifest rebuild."""
+    rejects mismatches."""
     from easyner_spark.io.catalog import CheckpointCatalog
     from easyner_spark.streaming.ingest import _pin_n_batches
 
@@ -440,14 +361,6 @@ def test_pin_n_batches_semantics(tmp_path):
     assert _pin_n_batches(cat, "s", 256, has_data=True) == 256
     with pytest.raises(ValueError, match="n_batches"):
         _pin_n_batches(cat, "s", 64, has_data=True)
-
-    # transitional: pin recorded by the earlier code in the MANIFEST
-    cat._store_manifest("t", {"stage": "t", "snapshots": [], "sig_n_batches": 32})
-    assert _pin_n_batches(cat, "t", 32, has_data=True) == 32
-    # ...is migrated into the sidecar (which compaction cannot drop)
-    assert cat.load_config("t")["n_batches"] == 32
-    with pytest.raises(ValueError, match="n_batches"):
-        _pin_n_batches(cat, "t", 64, has_data=True)
 
 
 def test_epoch_dedup_rejects_mixed_signature_family(spark, tmp_path):
