@@ -27,7 +27,6 @@ def entity_level_pr(
     pred: DataFrame,
     gold: DataFrame,
     tolerance: int = 1,
-    by: tuple[str, ...] = ("class",),
 ) -> DataFrame:
     """→ per-class (tp, fp, fn, precision, recall, f1) + micro/macro rows.
 

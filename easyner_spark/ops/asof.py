@@ -49,15 +49,12 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str | Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    suffix: str = "_r",
     tie_break: bool = True,
     salt: int | None = None,
 ) -> DataFrame:
-    """Backward as-of left join → all left columns + right payload
-    columns (everything but the keys) suffixed, NULL when no right row
-    precedes.
+    """Backward as-of left join on the ``ts`` column of both sides →
+    all left columns + right payload columns (everything but the keys)
+    suffixed ``_r``, NULL when no right row precedes.
 
     ``tie_break=True`` orders tied right rows by their payload struct
     (deterministic greatest-payload pick) — requires orderable payload
@@ -91,21 +88,21 @@ def asof_join(
     clash = reserved & (set(left.columns) | set(right.columns))
     if clash:
         raise ValueError(f"asof_join: reserved column name(s) in input: {sorted(clash)}")
-    out_clash = {c + suffix for c in payload} & set(left.columns)
+    out_clash = {c + "_r" for c in payload} & set(left.columns)
     if out_clash:
         raise ValueError(
             f"asof_join: suffixed right column(s) collide with left columns: "
-            f"{sorted(out_clash)}; pass a different suffix"
+            f"{sorted(out_clash)}; rename the column"
         )
     r2 = right.select(
         *keys,
-        F.col(right_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(1).alias("__is_r"),
         F.struct(*[F.col(c) for c in payload]).alias("__p"),
     )
     l2 = left.select(
         *keys,
-        F.col(left_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(0).alias("__is_r"),
         F.lit(None).cast(r2.schema["__p"].dataType).alias("__p"),
         F.struct(*[F.col(c) for c in left.columns]).alias("__l"),
@@ -157,5 +154,5 @@ def asof_join(
     )
     return matched.select(
         "__l.*",
-        *[F.col(f"__m.{c}").alias(c + suffix) for c in payload],
+        *[F.col(f"__m.{c}").alias(c + "_r") for c in payload],
     )

@@ -80,14 +80,13 @@ def scrub_pii(text: Column) -> Column:
     return out
 
 
-def screen_documents(df, text_col: str = "text"):
+def screen_documents(df):
     """documents → documents + per-category counts + pii_total +
-    scrubbed text. The full-screen projection a pipeline appends before
-    sharding; pure JVM, no shuffle."""
-    with_counts = df.select("*", *pii_counts(F.col(text_col)))
+    scrubbed ``text``. The full-screen projection a pipeline appends
+    before sharding; pure JVM, no shuffle."""
+    text = F.col("text")
+    with_counts = df.select("*", *pii_counts(text))
     return with_counts.withColumn(
         "text_scrubbed",
-        F.when(F.col("pii_total") > 0, scrub_pii(F.col(text_col))).otherwise(
-            F.col(text_col)
-        ),
+        F.when(F.col("pii_total") > 0, scrub_pii(text)).otherwise(text),
     )

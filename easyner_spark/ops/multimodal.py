@@ -1,129 +1,25 @@
-"""Multimodal column plumbing: opaque binary payloads with typed
-metadata, decode / feature-extraction / frame-sampling operators.
+"""Multimodal column plumbing: deterministic frame sampling over opaque
+binary payloads.
 
-No reference counterpart (EasyNER is text-only) — mandated by the
-target brief: treat image/audio/video as opaque ``binary`` columns,
-implement the Spark-side plumbing (schema, partitioning, Arrow batch
-shape, UDF signatures) for real, and STUB the actual codec behind an
-import-try (image/audio libraries are not in this container).
+No reference counterpart (EasyNER is text-only). Image/audio/video
+payloads are opaque ``binary`` columns ``(payload_id, payload)``; the
+codec is out of scope (no image/audio library in this build), so frame
+sampling slices byte windows with the same Spark shape a real
+keyframe decoder would have.
 
-Layout decisions that matter at 100 TB:
-* metadata (format sniff, size, hash) is pure JVM — no bytes cross the
-  Python boundary for the 99% of rows that only need filtering;
-* decode/feature-extract run in ``mapInPandas`` so each Arrow batch
-  moves the binary column ONCE into Python, and the decoder object is
-  a per-process lazy singleton;
-* frame sampling emits (payload_id, frame_idx, frame_bytes) — an
-  explode-shaped operator, partitioned by payload so one huge video
-  cannot skew a partition beyond its own row.
+Frame sampling emits (payload_id, frame_idx, frame_bytes) — an
+explode-shaped, pure-JVM operator, so one huge video cannot skew a
+partition beyond its own row.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-
-# magic-byte format sniffing — pure JVM (hex prefix → format label)
-_MAGIC = [
-    ("89504E47", "png"),
-    ("FFD8FF", "jpeg"),
-    ("47494638", "gif"),
-    ("52494646", "riff"),  # wav/avi container
-    ("66747970", "mp4"),  # ftyp at offset 4 handled below
-    ("494433", "mp3"),
-]
-
-
-def payload_meta(df: DataFrame, binary_col: str = "payload") -> DataFrame:
-    """+ (n_bytes, payload_md5, format) — JVM-side only."""
-    hexhead = F.upper(F.hex(F.substring(F.col(binary_col), 1, 8)))
-    fmt = F.lit("unknown")
-    for magic, label in reversed(_MAGIC):
-        fmt = F.when(hexhead.startswith(magic), F.lit(label)).otherwise(fmt)
-    # mp4: 'ftyp' sits at byte offset 5
-    fmt = F.when(
-        F.upper(F.hex(F.substring(F.col(binary_col), 5, 4))) == "66747970",
-        F.lit("mp4"),
-    ).otherwise(fmt)
-    return df.withColumn("n_bytes", F.octet_length(binary_col)).withColumn(
-        "payload_md5", F.md5(binary_col)
-    ).withColumn("format", fmt)
-
-
-_DECODER = {"obj": None}
-
-
-def _get_decoder():
-    """Lazy per-process decoder singleton: real PIL when available,
-    deterministic fake otherwise (md5-derived pseudo-features)."""
-    if _DECODER["obj"] is None:
-        try:
-            from PIL import Image  # noqa: F401
-
-            def decode(b: bytes):
-                import io
-
-                from PIL import Image
-
-                img = Image.open(io.BytesIO(b))
-                arr = np.asarray(img.convert("L").resize((8, 8)), dtype=np.float32)
-                return int(img.width), int(img.height), (arr.ravel() / 255.0)
-
-        except ImportError:
-
-            def decode(b: bytes):
-                # deterministic fake: 64 pseudo-features from rolling md5
-                h = hashlib.md5(b).digest()
-                feats = np.frombuffer(
-                    hashlib.sha512(b).digest() + hashlib.sha512(b + b"x").digest(),
-                    dtype=np.uint8,
-                )[:64].astype(np.float32) / 255.0
-                return int(h[0]) + 1, int(h[1]) + 1, feats
-
-        _DECODER["obj"] = decode
-    return _DECODER["obj"]
-
-
-def image_features(
-    df: DataFrame, id_col: str = "payload_id", binary_col: str = "payload"
-) -> DataFrame:
-    """→ (payload_id, width, height, features array<float>) via
-    mapInPandas; decoder initialized once per python worker."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _get_decoder()
-        for pdf in batches:
-            rows = []
-            for pid, blob in zip(pdf[id_col], pdf[binary_col]):
-                if blob is None:
-                    continue
-                w, h, feats = decode(bytes(blob))
-                rows.append(
-                    {
-                        id_col: pid,
-                        "width": w,
-                        "height": h,
-                        "features": [float(x) for x in feats],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "features"]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        run, f"{id_col} string, width int, height int, features array<float>"
-    )
 
 
 def sample_frames(
     df: DataFrame,
     n_frames: int = 4,
-    id_col: str = "payload_id",
-    binary_col: str = "payload",
     frame_size: int = 256,
 ) -> DataFrame:
     """Deterministic frame sampling: n_frames evenly-spaced byte windows
@@ -137,14 +33,14 @@ def sample_frames(
     to int could round differently across engines at the boundary.
     """
     idx = F.explode(F.sequence(F.lit(0), F.lit(n_frames - 1))).alias("frame_idx")
-    exploded = df.select(id_col, binary_col, idx)
+    exploded = df.select("payload_id", "payload", idx)
     stride = max(n_frames - 1, 1)
     return exploded.select(
-        id_col,
+        "payload_id",
         "frame_idx",
         F.expr(
-            f"substring({binary_col}, cast((frame_idx *"
-            f" greatest(octet_length({binary_col}) - {frame_size}, 0))"
+            "substring(payload, cast((frame_idx *"
+            f" greatest(octet_length(payload) - {frame_size}, 0))"
             f" div {stride} as int) + 1, {frame_size})"
         ).alias("frame_bytes"),
     )

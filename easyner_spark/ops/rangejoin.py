@@ -29,63 +29,55 @@ def interval_join(
     right: DataFrame,
     on: str | Sequence[str],
     bin_width: int,
-    left_bounds: tuple[str, str] = ("start", "end"),
-    right_bounds: tuple[str, str] = ("start", "end"),
-    suffix: str = "_r",
 ) -> DataFrame:
     """Inner join on key equality + closed-interval overlap
     (l.start <= r.end AND r.start <= l.end), executed as a binned
-    equi-join. Bounds are integral; ``bin_width`` trades shuffle
+    equi-join; right columns other than the keys come out suffixed
+    ``_r``. Bounds are integral; ``bin_width`` trades shuffle
     volume (small bins → more replicas) against candidate fan-in
     (large bins → more false candidates); set it near the median
     interval length.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    ls, le = left_bounds
-    rs, re_ = right_bounds
     # guard the internal bin column and the suffixed right outputs
     # against caller-column collisions (silent wrong output otherwise)
     if "__bin" in left.columns or "__bin" in right.columns:
         raise ValueError("interval_join: reserved column name '__bin' in input")
     out_clash = {
-        c + suffix for c in right.columns if c not in keys
+        c + "_r" for c in right.columns if c not in keys
     } & set(left.columns)
     if out_clash:
         raise ValueError(
             f"interval_join: suffixed right column(s) collide with left "
-            f"columns: {sorted(out_clash)}; pass a different suffix"
+            f"columns: {sorted(out_clash)}; rename the column"
         )
 
-    def binned(df: DataFrame, s: str, e: str) -> DataFrame:
+    def binned(df: DataFrame) -> DataFrame:
         # exact integer division (bounds must be non-negative integers —
         # avoids double-rounding near bin boundaries at int64 magnitudes)
         return df.withColumn(
             "__bin",
             F.explode(
                 F.sequence(
-                    F.expr(f"{s} div {bin_width}"),
-                    F.expr(f"{e} div {bin_width}"),
+                    F.expr(f"start div {bin_width}"),
+                    F.expr(f"end div {bin_width}"),
                 )
             ),
         )
 
-    r2 = binned(right, rs, re_).select(
+    r2 = binned(right).select(
         *keys,
         "__bin",
-        *[
-            F.col(c).alias(c + suffix)
-            for c in right.columns
-            if c not in keys
-        ],
+        *[F.col(c).alias(c + "_r") for c in right.columns if c not in keys],
     )
-    l2 = binned(left, ls, le)
+    l2 = binned(left)
     joined = l2.join(r2, [*keys, "__bin"]).filter(
-        (F.col(ls) <= F.col(re_ + suffix)) & (F.col(rs + suffix) <= F.col(le))
+        (F.col("start") <= F.col("end_r")) & (F.col("start_r") <= F.col("end"))
     )
     # a pair overlapping k shared bins appears k times; keep the lowest
     # shared bin — a pure predicate (no distinct/shuffle needed)
     lowest_shared = F.greatest(
-        F.expr(f"{ls} div {bin_width}"),
-        F.expr(f"`{rs + suffix}` div {bin_width}"),
+        F.expr(f"start div {bin_width}"),
+        F.expr(f"start_r div {bin_width}"),
     )
     return joined.filter(F.col("__bin") == lowest_shared).drop("__bin")

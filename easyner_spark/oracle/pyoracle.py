@@ -37,7 +37,6 @@ def run_oracle(
     pages: pd.DataFrame,
     gazetteer: list[tuple[str, str]],
     lookup: list[tuple[str, str, str]],
-    lang_filter: str | None = "en",
 ) -> dict:
     """Run the whole sequential pipeline; returns a dict of results:
 
@@ -58,7 +57,7 @@ def run_oracle(
 
     best: dict[str, tuple] = {}
     for row in pages.itertuples():
-        if lang_filter is not None and row.lang != lang_filter:
+        if row.lang != "en":  # the engine's language filter
             continue
         key = (row.warc_ts, _hl.md5(bytes(row.html)).hexdigest() if row.html is not None else "")
         if row.url not in best or key > best[row.url][0]:

@@ -89,16 +89,23 @@ def run_pipeline(
     report {table: {sec, rows_committed, batches_committed}}, one entry
     per committed table (the "analysis" stage commits entity_frequency
     and id_frequency, both built from ``linked``). ``stages`` filters
-    which stages run (the reference's `ignore` map, inverted).
+    which stages run (the reference's `ignore` map, inverted); a name
+    outside ``STAGES``, "screen" and "dedup" raises before anything is
+    committed.
 
     ``triples_cap``: opt-in per-sentence mention cap for entity-stuffed
     pages (None = exact, matches the sequential oracle; set e.g. 32 on
     open web text and monitor the capped-sentence rate)."""
+    want = stages or set(STAGES)
+    valid = {*STAGES, "screen", "dedup"}
+    if want - valid:
+        raise ValueError(
+            f"unknown stage(s) {sorted(want - valid)}; valid: {sorted(valid)}"
+        )
     gazetteer = gazetteer if gazetteer is not None else GAZETTEER
     nel_lookup = nel_lookup if nel_lookup is not None else NEL_LOOKUP
     cat = CheckpointCatalog(warehouse)
     report: dict[str, dict] = {}
-    want = stages or set(STAGES)
 
     def commit(name: str, df: DataFrame) -> DataFrame:
         t0 = time.time()

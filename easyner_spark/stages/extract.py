@@ -52,16 +52,14 @@ def _title_expr(html_col):
     return F.trim(F.regexp_replace(t, r"\s+", " "))
 
 
-def extract_documents(
-    pages: DataFrame,
-    n_batches: int = 64,
-    lang_filter: str | None = "en",
-    dedup_urls: bool = True,
-) -> DataFrame:
+def extract_documents(pages: DataFrame, n_batches: int = 64) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → documents.
 
     documents(doc_id, url, title, text, lang, warc_ts, batch_id):
 
+    * only ``lang = 'en'`` pages are kept, filtered before the url
+      dedup so a late crawl in another language cannot shadow an
+      English one;
     * re-crawled urls keep the LATEST crawl (max warc_ts, md5(html)
       tiebreak) — doc_id is url-keyed, so exactly one row per url;
     * ``doc_id`` = sha2(url, 256) — deterministic, collision-safe id
@@ -75,28 +73,26 @@ def extract_documents(
     * empty-text rows are dropped (reference drops empty abstracts,
       cord_loader.py:41-42, pubmed_bulk.py:114-116).
     """
-    if lang_filter is not None:
-        pages = pages.filter(F.col("lang") == lang_filter)
+    pages = pages.filter(F.col("lang") == "en")
 
-    if dedup_urls:
-        # hash-aggregate argmax, NOT a row_number window: groupBy gets
-        # map-side PARTIAL aggregation, so with re-crawl duplicates the
-        # shuffle carries one candidate row per url per map partition
-        # (a window shuffles every row, then sorts each partition).
-        # Ordering key is TOTAL (ts, html hash, text hash, lang) so the
-        # winner is deterministic even for same-ts re-crawls.
-        cols = pages.columns
-        okey = F.struct(
-            F.col("warc_ts").alias("ts"),
-            F.md5(F.col("html")).alias("hh"),
-            F.xxhash64(F.col("text")).alias("th"),
-            F.col("lang").alias("lg"),
-        )
-        pages = (
-            pages.groupBy("url")
-            .agg(F.max_by(F.struct(*cols), okey).alias("_r"))
-            .select("_r.*")
-        )
+    # hash-aggregate argmax, NOT a row_number window: groupBy gets
+    # map-side PARTIAL aggregation, so with re-crawl duplicates the
+    # shuffle carries one candidate row per url per map partition
+    # (a window shuffles every row, then sorts each partition).
+    # Ordering key is TOTAL (ts, html hash, text hash, lang) so the
+    # winner is deterministic even for same-ts re-crawls.
+    cols = pages.columns
+    okey = F.struct(
+        F.col("warc_ts").alias("ts"),
+        F.md5(F.col("html")).alias("hh"),
+        F.xxhash64(F.col("text")).alias("th"),
+        F.col("lang").alias("lg"),
+    )
+    pages = (
+        pages.groupBy("url")
+        .agg(F.max_by(F.struct(*cols), okey).alias("_r"))
+        .select("_r.*")
+    )
 
     base = pages.withColumn(
         "batch_id", F.pmod(F.xxhash64("url"), F.lit(n_batches)).cast("int")

@@ -25,7 +25,7 @@ from functools import reduce
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-DEFAULT_PRIORITY = {"chemical": 1, "disease": 2, "species": 3, "gene": 4, "cell": 5}
+PRIORITY = {"chemical": 1, "disease": 2, "species": 3, "gene": 4, "cell": 5}
 
 
 def merge_mention_runs(*mention_dfs: DataFrame) -> DataFrame:
@@ -38,7 +38,6 @@ def merge_mention_runs(*mention_dfs: DataFrame) -> DataFrame:
 
 def resolve_conflicts_py(
     rows: list[tuple[str, int, int, str]],
-    priority: dict[str, int] | None = None,
 ) -> list[tuple[str, int, int, str]]:
     """Pure sweep over one sentence's mentions — reference algorithm
     (entity_merger2.py:99-146) re-expressed deterministically.
@@ -48,7 +47,6 @@ def resolve_conflicts_py(
     the END of the (start, end)-sorted list and deletes i when any j
     dominates it; we keep exactly that rule.
     """
-    prio = priority or DEFAULT_PRIORITY
     items = sorted(rows, key=lambda r: (r[1], r[2]))
     i = len(items) - 1
     while i >= 0:
@@ -60,7 +58,7 @@ def resolve_conflicts_py(
             same_span = (si, ei) == (sj, ej)
             if same_span and items[i][3] != items[j][3]:
                 # identical span, different class → lower priority loses
-                if prio.get(items[i][3], 99) > prio.get(items[j][3], 99):
+                if PRIORITY.get(items[i][3], 99) > PRIORITY.get(items[j][3], 99):
                     del items[i]
                     break
             elif not same_span and si >= sj and ei <= ej:
@@ -78,17 +76,13 @@ def resolve_conflicts_py(
     return items
 
 
-def resolve_conflicts(
-    mentions: DataFrame,
-    priority: dict[str, int] | None = None,
-) -> DataFrame:
+def resolve_conflicts(mentions: DataFrame) -> DataFrame:
     """J3 over the mentions table → conflict-free mentions with
     re-assigned ``mention_idx`` (position in (begin, end) order).
 
     Plan: singleton sentences (one mention) bypass the grouped-map
     shuffle; only multi-mention sentences go through applyInPandas.
     """
-    prio = priority or DEFAULT_PRIORITY
     cols = [
         "doc_id",
         "batch_id",
@@ -114,7 +108,7 @@ def resolve_conflicts(
             rows = list(
                 zip(grp["surface"], grp["begin"], grp["end"], grp["class"])
             )
-            survive = set(resolve_conflicts_py(rows, prio))
+            survive = set(resolve_conflicts_py(rows))
             keep = grp[
                 [
                     (s, b, e, c) in survive

@@ -52,13 +52,10 @@ def dict_ner(
         sents = text.fillna("").tolist()
         return pd.Series(match_terms_batch(sents, idx))
 
-    # extra input columns (e.g. warc_ts in the streaming path) pass through
-    extras = [c for c in sentences.columns if c not in ("doc_id", "batch_id", "sent_idx", "text")]
     return sentences.select(
         "doc_id",
         "batch_id",
         "sent_idx",
-        *extras,
         F.posexplode(_match_udf("text")).alias("mention_idx", "m"),
     ).select(
         "doc_id",
@@ -70,5 +67,4 @@ def dict_ner(
         F.col("m.end").alias("end"),
         F.col("m.class").alias("class"),
         F.lit(source).alias("source"),
-        *extras,
     )

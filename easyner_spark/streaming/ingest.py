@@ -1,24 +1,34 @@
-"""Structured Streaming incremental ingest.
+"""Incremental ingest: a page stream into per-epoch document stages,
+and the incremental near-dup pass over them.
 
 Reference analog: the nightly PubMed update files
 (scripts/pubmed_bulk.py:44-54, README.md:129-134) — new batch files
 appear in a folder and are folded into the corpus with last-write-wins
-dedup (scripts/util.py:12-23, downloader.py:68-79). Target design
-(SURVEY.md §2.9): new page files land in a directory (the stand-in for
-new Iceberg snapshots), are deduplicated by url under a watermark on
-``warc_ts`` (bounded state for late data), extracted with the SAME
-deterministic stage used in batch, and committed idempotently through
-``foreachBatch`` + CheckpointCatalog — a killed stream resumes from
-both the streaming checkpoint AND the last committed partition.
+dedup (scripts/util.py:12-23, downloader.py:68-79). Here
+(SURVEY.md §2.9):
+
+* ``start_ingest``: new page files land in a directory (the stand-in
+  for new Iceberg snapshots), are deduplicated by url under a 10-minute
+  watermark on ``warc_ts`` (``read_page_stream``; bounded state for
+  late data), extracted with the SAME deterministic stage used in
+  batch, and committed idempotently through ``foreachBatch`` +
+  CheckpointCatalog, one ``documents_epochNNNNNN`` stage per
+  micro-batch — a killed stream resumes from both the streaming
+  checkpoint AND the last committed partition;
+* ``read_documents_epochs``: the latest-epoch-wins batch view over
+  those stages;
+* ``epoch_dedup_pairs`` / ``compact_sig_stage``: the per-epoch MinHash
+  near-dup probe against the committed corpus signatures.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
-from ..io.catalog import CheckpointCatalog
+from ..io.catalog import CheckpointCatalog, _live
 from ..stages.extract import extract_documents
 
 PAGES_SCHEMA = T.StructType(
@@ -35,13 +45,12 @@ PAGES_SCHEMA = T.StructType(
 def read_page_stream(
     spark: SparkSession,
     input_dir: str,
-    watermark: str = "10 minutes",
     canonicalize_urls: bool = False,
 ) -> DataFrame:
     """File-source stream of pages with watermarked url-dedup.
 
-    ``dropDuplicates(url, warc_ts)`` under the watermark keeps dedup
-    state bounded — late re-crawls beyond the watermark age are
+    ``dropDuplicates(url, warc_ts)`` under a 10-minute watermark keeps
+    dedup state bounded — late re-crawls beyond the watermark age are
     accepted as new versions (documented divergence from unbounded
     exact dedup, which cannot exist at 10^12 docs).
 
@@ -56,7 +65,7 @@ def read_page_stream(
         from ..ops.web import canonical_url
 
         raw = raw.withColumn("url", canonical_url(F.col("url")))
-    return raw.withWatermark("warc_ts", watermark).dropDuplicates(["url", "warc_ts"])
+    return raw.withWatermark("warc_ts", "10 minutes").dropDuplicates(["url", "warc_ts"])
 
 
 def _sig_batch_key(n_batches: int, range_seq: int):
@@ -367,7 +376,6 @@ def start_ingest(
     warehouse: str,
     checkpoint_dir: str,
     n_batches: int = 64,
-    lang_filter: str | None = "en",
     canonicalize_urls: bool = False,
 ):
     """Continuous pages→documents ingest; exactly-once via foreachBatch
@@ -381,13 +389,10 @@ def start_ingest(
         # NEW timestamp still reaches the sink twice, which would put
         # duplicate doc_id = sha2(url) rows in one epoch stage (the
         # exact corruption extract.py's docstring warns about). Reuse
-        # the BATCH path's dedup (dedup_urls=True): it filters lang
-        # first (a late non-matching-lang crawl can't shadow a matching
-        # one) and picks the winner by a TOTAL key, so epoch replays
-        # commit identical bytes.
-        docs = extract_documents(
-            batch_df, n_batches=n_batches, lang_filter=lang_filter, dedup_urls=True
-        )
+        # the BATCH path's dedup: it filters lang first (a late
+        # non-English crawl can't shadow an English one) and picks the
+        # winner by a TOTAL key, so epoch replays commit identical bytes.
+        docs = extract_documents(batch_df, n_batches=n_batches)
         # append-style commit: allow new rows for already-seen batches by
         # keying the stage per epoch (each epoch is an atomic snapshot)
         cat.write_stage(docs, f"documents_epoch{epoch_id:06d}")
@@ -411,9 +416,6 @@ def read_documents_epochs(spark: SparkSession, warehouse: str) -> DataFrame:
     total order). One window shuffle on doc_id, same key as the
     downstream stages.
     """
-    import os
-    import re as _re
-
     cat = CheckpointCatalog(warehouse)
     # \d{6,}: epoch ids grow past the 06d zero-padding at 1e6 epochs —
     # a fixed-width match would truncate them onto other epochs' names
@@ -421,18 +423,10 @@ def read_documents_epochs(spark: SparkSession, warehouse: str) -> DataFrame:
         {
             m.group(0)
             for f in os.listdir(warehouse)
-            if (m := _re.match(r"documents_epoch(\d{6,})$", f))
-            or (m := _re.match(r"documents_epoch(\d{6,})(?=\._manifest\.json$)", f))
+            if (m := re.match(r"documents_epoch(\d{6,})$", f))
+            or (m := re.match(r"documents_epoch(\d{6,})(?=\._manifest\.json$)", f))
         }
     )
-    # manifest gate: a crash between the parquet write and the manifest
-    # swap leaves a data directory with NO committed batches — reading
-    # it would serve uncommitted rows AND (being the highest epoch)
-    # shadow committed older crawls under latest-epoch-wins. Only
-    # epochs with at least one committed batch are snapshots.
-    names = [n for n in names if cat.committed_batches(n)]
-    if not names:
-        raise ValueError(f"no documents_epoch* stages committed in {warehouse}")
     # ONE multi-path parquet read (a linear unionByName chain would grow
     # driver plan size/analysis time O(n_epochs)). Only COMMITTED
     # batch-partition leaf dirs are listed — snapshot isolation happens
@@ -440,17 +434,23 @@ def read_documents_epochs(spark: SparkSession, warehouse: str) -> DataFrame:
     # read), strictly stronger than read_stage's post-filter. Epoch and
     # batch_id ride in on the file path (leaf-dir reads skip partition
     # discovery, which cannot mix non-key=value epoch roots).
-    # resolve each stage's CURRENT data directory through the catalog
-    # (the manifest data_dir pointer — a compacted stage lives in a
-    # .genN generation dir, not the bare stage name). One manifest
-    # load per STAGE, hoisted out of the per-batch expansion.
+    # One manifest load per stage gives both its committed batches and
+    # its CURRENT data directory (the data_dir pointer — a compacted
+    # stage lives in a .genN generation dir, not the bare stage name),
+    # so the two come from one snapshot. A stage with no committed
+    # batch (a crash between the parquet write and the manifest swap)
+    # contributes no path: reading it would serve uncommitted rows AND
+    # (being the highest epoch) shadow committed older crawls under
+    # latest-epoch-wins.
     paths = []
     for n in names:
-        stage_dir = cat._stage_dir(n)
+        man = cat._load_manifest(n)
+        stage_dir = os.path.join(warehouse, man.get("data_dir", n))
         paths.extend(
-            os.path.join(stage_dir, f"batch_id={b}")
-            for b in sorted(cat.committed_batches(n))
+            os.path.join(stage_dir, f"batch_id={b}") for b in sorted(_live(man))
         )
+    if not paths:
+        raise ValueError(f"no documents_epoch* stages committed in {warehouse}")
     allrows = (
         spark.read.parquet(*paths)
         .withColumn(
@@ -474,42 +474,3 @@ def read_documents_epochs(spark: SparkSession, warehouse: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_epoch")
     )
-
-
-def streaming_entity_counts(
-    pages: DataFrame,
-    gazetteer: dict[str, str] | list[tuple[str, str]],
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Windowed streaming aggregate: entity mentions per event-time
-    window (the streaming twin of A1). Works on the page stream
-    directly: extract → split → match inside the micro-batch plan.
-
-    ``slide`` (optional): SLIDING windows — each mention lands in
-    window_duration/slide overlapping windows (the streaming twin of
-    the events_sliding_window_users batch contract; state size grows by
-    the same factor, bounded by the watermark as before). None keeps
-    tumbling windows, bit-identical to before the option existed."""
-    from ..stages.ner_dict import dict_ner
-    from ..stages.split import _split_udf
-
-    # one watermark, defined once at the source; warc_ts rides along the
-    # narrow plan (extract → explode → match) with NO stream-stream join
-    docs = extract_documents(
-        pages.withWatermark("warc_ts", watermark), n_batches=8, dedup_urls=False
-    )  # window dedup is not streamable; the source stream dedups by url
-    sents = docs.select(
-        "doc_id",
-        "batch_id",
-        "warc_ts",
-        F.posexplode(_split_udf("text")).alias("sent_idx", "text"),
-    )
-    mentions = dict_ner(sents, gazetteer)  # warc_ts passes through
-    win = (
-        F.window("warc_ts", window)
-        if slide is None
-        else F.window("warc_ts", window, slide)
-    )
-    return mentions.groupBy(win, "surface").agg(F.count("*").alias("n"))

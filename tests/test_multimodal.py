@@ -1,10 +1,8 @@
-"""Multimodal binary plumbing: metadata sniff, feature extraction via
-mapInPandas (stub decoder), deterministic frame sampling."""
+"""Multimodal binary plumbing: deterministic frame sampling."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from easyner_spark.ops.multimodal import image_features, payload_meta, sample_frames
+from easyner_spark.ops.multimodal import sample_frames
 
 PNG = b"\x89PNG\r\n\x1a\n" + b"\x00" * 64
 JPG = b"\xff\xd8\xff\xe0" + b"\x01" * 100
@@ -18,26 +16,6 @@ def payloads(spark):
         [("p1", PNG), ("p2", JPG), ("p3", MP4), ("p4", RAW)],
         "payload_id string, payload binary",
     )
-
-
-def test_payload_meta_sniff(spark, payloads):
-    rows = {r["payload_id"]: r for r in payload_meta(payloads).collect()}
-    assert rows["p1"]["format"] == "png"
-    assert rows["p2"]["format"] == "jpeg"
-    assert rows["p3"]["format"] == "mp4"
-    assert rows["p4"]["format"] == "unknown"
-    assert rows["p1"]["n_bytes"] == len(PNG)
-    assert len(rows["p1"]["payload_md5"]) == 32
-
-
-def test_image_features_stub_deterministic(spark, payloads):
-    a = {r["payload_id"]: r for r in image_features(payloads).collect()}
-    b = {r["payload_id"]: r for r in image_features(payloads.repartition(4)).collect()}
-    assert set(a) == {"p1", "p2", "p3", "p4"}
-    for k in a:
-        assert len(a[k]["features"]) == 64
-        assert a[k]["features"] == b[k]["features"]  # partition-invariant
-        assert a[k]["width"] >= 1 and a[k]["height"] >= 1
 
 
 def test_sample_frames_shape(spark, payloads):

@@ -322,6 +322,24 @@ def test_graph_stage_skips_cleanly_on_empty_triples(spark, tmp_path):
     assert report["_totals"]["triples"] is None
 
 
+def test_unknown_stage_name_raises_before_any_commit(spark, tmp_path):
+    """A misspelt --stages entry ("mention" for "mentions") must fail
+    loudly, naming the unknown stage and the valid set, before any
+    stage commits — not run nothing and return a report."""
+    import glob
+    import os
+
+    from easyner_spark.pipeline import run_pipeline
+
+    wh = str(tmp_path / "wh_typo")
+    with pytest.raises(ValueError, match=r"'mention'.*'dedup'.*'mentions'.*'screen'"):
+        run_pipeline(
+            spark, pages_df(spark, n_docs=20), wh, n_batches=2,
+            stages={"documents", "mention"},
+        )
+    assert glob.glob(os.path.join(wh, "*._manifest.json")) == []
+
+
 def test_screen_stage_scrubs_and_downstream_consumes(spark, tmp_path):
     """--screen: PII is scrubbed in the committed documents_screened
     table, the report carries the hit count, and the sentences stage

@@ -270,47 +270,6 @@ def test_web_url_features_is_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """io/bucketing.py: two tables bucketed (and bucket-sorted) on the
-    join key must join with ZERO Exchange and ZERO per-task Sort — the
-    write-once/join-forever co-location contract that replaces a 100 TB
-    shuffle per query. The unbucketed control join of the same data
-    must show an Exchange, proving the absence above comes from the
-    bucket metadata, not from the data size."""
-    from easyner_spark.io.bucketing import read_table, write_bucketed
-
-    linked = spark.range(0, 2000).selectExpr(
-        "id AS doc_id", "id % 37 AS ent_id", "CAST(id % 8 AS INT) AS sent_idx"
-    )
-    sents = spark.range(0, 2000).selectExpr(
-        "id AS doc_id", "concat('sentence ', id) AS text"
-    )
-    try:
-        write_bucketed(
-            linked, "t_linked_b", str(tmp_path / "linked"), "doc_id", n_buckets=8
-        )
-        write_bucketed(
-            sents, "t_sents_b", str(tmp_path / "sents"), "doc_id", n_buckets=8
-        )
-        joined = read_table(spark, "t_linked_b").join(
-            read_table(spark, "t_sents_b").hint("merge"), "doc_id"
-        )
-        plan = _plan(joined)
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-        # bucket-sorted files: no per-task SortExec either
-        assert "Sort [" not in plan
-        assert joined.count() == 2000
-
-        # control: identical data via plain parquet reads must shuffle
-        a = spark.read.parquet(str(tmp_path / "linked"))
-        b = spark.read.parquet(str(tmp_path / "sents"))
-        assert "Exchange" in _plan(a.join(b.hint("merge"), "doc_id"))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_linked_b")
-        spark.sql("DROP TABLE IF EXISTS t_sents_b")
-
-
 def test_pending_r6_queries_have_no_single_partition_exchange(spark):
     """The non-iterative round-6 (window-6) contracts must keep every
     exchange hash-partitioned and every window keyed: the transition

@@ -96,7 +96,7 @@ def test_merge_conflicts_query_is_nontrivial(spark):
 # --------------------------------------------------------------------------
 
 
-def test_read_documents_epochs_latest_wins(spark, tmp_path):
+def test_read_documents_epochs_latest_wins(spark, tmp_path, monkeypatch):
     from easyner_spark.io.catalog import CheckpointCatalog
     from easyner_spark.streaming.ingest import read_documents_epochs
 
@@ -118,8 +118,19 @@ def test_read_documents_epochs_latest_wins(spark, tmp_path):
     )
     cat.write_stage(e0, "documents_epoch000000")
     cat.write_stage(e1, "documents_epoch000001")
+    # each epoch stage's batches and data directory come from ONE
+    # manifest load (one snapshot), not one load per lookup
+    loads = []
+    load = CheckpointCatalog._load_manifest
+
+    def counting(self, stage):
+        loads.append(stage)
+        return load(self, stage)
+
+    monkeypatch.setattr(CheckpointCatalog, "_load_manifest", counting)
     rows = {r["doc_id"]: r["text"] for r in read_documents_epochs(spark, wh).collect()}
     assert rows == {"d1": "new text", "d2": "keep"}
+    assert sorted(loads) == ["documents_epoch000000", "documents_epoch000001"]
 
 
 def test_read_documents_epochs_empty_warehouse(spark, tmp_path):

@@ -1,5 +1,5 @@
 """Structured Streaming ingest: incremental files → documents, dedup,
-resume across restarts, windowed streaming aggregate."""
+resume across restarts, and the per-epoch near-dup pass."""
 
 import glob
 import os
@@ -7,12 +7,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from easyner_spark.corpus import GAZETTEER, make_pages_pdf
+from easyner_spark.corpus import make_pages_pdf
 from easyner_spark.streaming.ingest import (
     PAGES_SCHEMA,
     read_page_stream,
     start_ingest,
-    streaming_entity_counts,
 )
 
 
@@ -86,26 +85,6 @@ def test_stream_dedup_by_url(spark, dirs):
     q.stop()
     out = spark.sql("SELECT url, count(*) c FROM dedup_out GROUP BY url HAVING c > 1")
     assert out.count() == 0
-
-
-def test_streaming_windowed_entity_counts(spark, dirs):
-    pdf = make_pages_pdf(n_docs=40)
-    _write_pages(spark, pdf, dirs["in"])
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(dirs["in"])
-    agg = streaming_entity_counts(stream, GAZETTEER, window="1 hour")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .option("checkpointLocation", dirs["ckpt"])
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    # append mode emits only closed windows; just assert the stream ran
-    # and the sink table exists with the right schema
-    cols = set(spark.sql("SELECT * FROM win_counts").columns)
-    assert cols == {"window", "surface", "n"}
 
 
 def test_stream_canonical_url_dedup(spark, dirs):
@@ -399,35 +378,3 @@ def test_epoch_dedup_rejects_mixed_signature_family(spark, tmp_path):
         spark, wh, mk([(3, "eight nine ten eleven twelve thirteen")]),
         sig_fn=bigint_fn,
     )
-
-
-def test_streaming_sliding_window_entity_counts(spark, dirs):
-    """Sliding-window mode: each mention lands in window/slide
-    overlapping windows, so per-window totals must sum to slide-factor
-    x the tumbling totals over the same stream (complete mode exposes
-    open windows for the check)."""
-    pdf = make_pages_pdf(n_docs=40)
-    _write_pages(spark, pdf, dirs["in"])
-
-    def run(name, **kw):
-        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(dirs["in"])
-        agg = streaming_entity_counts(stream, GAZETTEER, **kw)
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        return spark.sql(
-            f"SELECT surface, SUM(n) AS t FROM {name} GROUP BY surface"
-        ).collect()
-
-    tumb = {r["surface"]: r["t"] for r in run("slide_t", window="1 hour")}
-    slid = {
-        r["surface"]: r["t"]
-        for r in run("slide_s", window="1 hour", slide="30 minutes")
-    }
-    assert tumb and set(slid) == set(tumb)
-    assert all(slid[s] == 2 * tumb[s] for s in tumb)
