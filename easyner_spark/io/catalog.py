@@ -32,17 +32,18 @@ inputs: committed batches are filtered out before anything is computed
 (a partition-pruned anti-filter on batch_id that Catalyst pushes into
 the source scan).
 
-On-disk format: every committed manifest carries the stage's schema
-stamp and per-batch counters ``{rows, content_hash, content_sum}``; a
-manifest without a schema stamp was not written by this catalog, and
-``read_stage`` refuses it.
+On-disk format: a stage's data lives in ``<root>/<stage>/`` and every
+committed manifest carries the stage's schema stamp and per-batch
+counters ``{rows, content_hash, content_sum}``. A manifest without a
+schema stamp, or pointing the stage's data at another directory, was
+not written by this catalog: ``read_stage`` refuses the first, and
+every manifest load refuses the second.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re as _re
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -67,9 +68,9 @@ def _content_counters(df: DataFrame, partition_col: str) -> dict[int, dict]:
     """Per-partition integrity counters: row count + TWO independent
     order-insensitive folds of xxhash64(*) (bit_xor alone cancels even
     multisets: {A,A}→{B,B} keeps count AND xor). This is the catalog's
-    integrity core — every site (commit verify, commit record,
-    compaction) must fold identically or resume comparisons break, so
-    it exists exactly once."""
+    integrity core — every site (commit verify, commit record) must
+    fold identically or resume comparisons break, so it exists exactly
+    once."""
     return {
         int(r[partition_col]): {
             "rows": r["rows"],
@@ -105,8 +106,9 @@ def _live(man: dict) -> dict[int, dict]:
 
 
 class CheckpointCatalog:
-    """Stage tables under ``root``, each partitioned by ``batch_id``
-    (the column ``read_stage`` filters and ``compact_stage`` rewrites).
+    """Stage tables under ``root``: ``<root>/<stage>/`` partitioned by
+    ``batch_id`` (the column ``read_stage`` filters), beside its
+    ``<stage>._manifest.json``.
 
     On a cluster with the Iceberg runtime, pass
     ``spark.jars.packages=org.apache.iceberg:iceberg-spark-runtime-...``
@@ -118,13 +120,8 @@ class CheckpointCatalog:
 
     # ------------------------------------------------------------------
     def _stage_dir(self, stage: str) -> str:
-        """CURRENT data directory of a stage. Normally ``<root>/<stage>``;
-        after a compaction the manifest's ``data_dir`` pointer names a
-        generation directory (``<stage>.gen1``, ...) — the
-        metadata-pointer indirection that makes compaction commit
-        atomically at the manifest swap (Iceberg's design)."""
-        man = self._load_manifest(stage)
-        return os.path.join(self.root, man.get("data_dir", stage))
+        """Data directory of a stage: always ``<root>/<stage>``."""
+        return os.path.join(self.root, stage)
 
     def _manifest_path(self, stage: str) -> str:
         return os.path.join(self.root, f"{stage}._manifest.json")
@@ -134,7 +131,16 @@ class CheckpointCatalog:
         if not os.path.exists(p):
             return {"stage": stage, "snapshots": []}
         with open(p) as f:
-            return json.load(f)
+            man = json.load(f)
+        if "data_dir" in man:
+            # the data lives elsewhere (a compacted generation): serving
+            # <root>/<stage> would read stale or missing rows
+            raise ValueError(
+                f"stage '{stage}' has a manifest pointing at data_dir "
+                f"'{man['data_dir']}'; this catalog reads only "
+                f"{self._stage_dir(stage)}"
+            )
+        return man
 
     def _store_manifest(self, stage: str, manifest: dict) -> None:
         p = self._manifest_path(stage)
@@ -274,99 +280,11 @@ class CheckpointCatalog:
         if not done:
             return spark.createDataFrame([], schema)
         df = spark.read.schema(_read_schema(schema, done)).parquet(
-            os.path.join(self.root, man.get("data_dir", stage))
+            self._stage_dir(stage)
         )
         # only committed partitions are visible (a crashed write's orphan
         # partition directories are filtered out = snapshot isolation)
         return df.filter(F.col("batch_id").isin(*done))
-
-    def compact_stage(
-        self,
-        spark: SparkSession,
-        stage: str,
-        partition_expr,
-        manifest_extra: dict | None = None,
-    ) -> dict:
-        """Rewrite a stage into a fresh compact ``batch_id`` keyspace
-        and reset its manifest to ONE snapshot — the Iceberg
-        rewrite_data_files/expire_snapshots analog.
-
-        Append-style stages whose writers mint new partition ranges per
-        commit (e.g. the epoch-scoped signature stage) grow their
-        committed-batch set and manifest without bound: after E epochs
-        every reader carries an E×n_batches-literal isin() filter and
-        every commit re-parses E snapshots. Compacting every K epochs
-        bounds both at K×n_batches — amortized O(corpus/K) per epoch.
-        Only ``batch_id`` is rewritten; every data column (including
-        any version/epoch column the stage carries) is preserved.
-
-        ``partition_expr`` is a Column producing the NEW batch_id for
-        each row (e.g. ``pmod(xxhash64("doc_id"), lit(64))``).
-        ``manifest_extra`` (optional dict) is merged into the new
-        manifest inside the SAME atomic swap — writers use it to carry
-        counters that must survive the keyspace reset (e.g. the epoch
-        service's ``epoch_base``; streaming/ingest.py
-        compact_sig_stage).
-
-        Crash safety — the manifest swap is the SINGLE commit point:
-        the compacted data is fully written to a fresh generation
-        directory (``<stage>.gen1``, ``.gen2``, ...) while the current
-        generation keeps serving; then one atomic ``_store_manifest``
-        flips the ``data_dir`` pointer, the snapshot list and the
-        committed-batch set together. A crash at ANY point before the
-        swap leaves the old generation fully intact and served (the
-        half-written new generation is an unreferenced orphan); after
-        the swap, only the obsolete old generation remains to be
-        garbage-collected (best-effort rmtree at the end).
-        """
-        import shutil
-
-        man = self._load_manifest(stage)
-        cur = man.get("data_dir", stage)
-        gen = int(cur.rsplit(".gen", 1)[1]) if ".gen" in cur else 0
-        new_dir_name = f"{stage}.gen{gen + 1}"
-        new_dir = os.path.join(self.root, new_dir_name)
-        # GC every unreferenced generation up front — a crash between a
-        # previous compaction's manifest swap and its own GC would
-        # otherwise leak one full stage copy per crashed run forever
-        # (only the manifest's current data_dir is live)
-        for entry in os.listdir(self.root):
-            if entry != cur and (
-                entry == stage
-                or _re.fullmatch(_re.escape(stage) + r"\.gen\d+", entry)
-            ):
-                shutil.rmtree(os.path.join(self.root, entry), ignore_errors=True)
-
-        df = self.read_stage(spark, stage).drop("batch_id")
-        compacted = df.withColumn(
-            "batch_id", partition_expr.cast("int")
-        ).persist()
-        counters = _content_counters(compacted, "batch_id")
-        compacted.write.mode("overwrite").partitionBy("batch_id").parquet(
-            new_dir
-        )
-        schema_json = compacted.schema.json()
-        compacted.unpersist()
-        snap = {
-            "snapshot_id": 0,
-            "ts": time.time(),
-            "compacted": True,
-            "counters": {str(k): v for k, v in counters.items()},
-        }
-        # the atomic commit: pointer + snapshots + schema (+ any
-        # caller-carried counters) in one swap
-        new_man = {
-            "stage": stage,
-            "data_dir": new_dir_name,
-            "snapshots": [snap],
-            "schema": schema_json,
-        }
-        if manifest_extra:
-            new_man.update(manifest_extra)
-        self._store_manifest(stage, new_man)
-        old_dir = os.path.join(self.root, cur)
-        shutil.rmtree(old_dir, ignore_errors=True)  # GC, post-commit
-        return snap
 
     # ------------------------------------------------------------------
     def _config_path(self, stage: str) -> str:
@@ -375,8 +293,8 @@ class CheckpointCatalog:
     def load_config(self, stage: str) -> dict:
         """Writer-owned per-stage config sidecar (e.g. the epoch
         service's pinned n_batches). Deliberately SEPARATE from the
-        manifest: compact_stage rebuilds the manifest from scratch,
-        while the config must survive any compaction untouched."""
+        manifest: a writer must pin its config before the stage's
+        first commit, and only ``write_stage`` writes the manifest."""
         p = self._config_path(stage)
         if not os.path.exists(p):
             return {}

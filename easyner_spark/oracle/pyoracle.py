@@ -51,15 +51,20 @@ def run_oracle(
     lookup_dict = {e: (i, n) for e, i, n in lookup}
     new_entries: list[tuple[str, str, str]] = []
 
-    # url dedup: the LATEST crawl wins (max warc_ts, md5(html) tiebreak)
-    # — mirrors the engine's window dedup in stages/extract.py
+    # url dedup: the LATEST crawl wins — max of (warc_ts, md5(html),
+    # md5(text)), the engine's max_by key in stages/extract.py. A NULL
+    # hash orders below every value, as in Spark's struct ordering.
     import hashlib as _hl
+
+    def _md5(b):
+        return (0, "") if b is None else (1, _hl.md5(bytes(b)).hexdigest())
 
     best: dict[str, tuple] = {}
     for row in pages.itertuples():
         if row.lang != "en":  # the engine's language filter
             continue
-        key = (row.warc_ts, _hl.md5(bytes(row.html)).hexdigest() if row.html is not None else "")
+        text = row.text.encode() if isinstance(row.text, str) else None
+        key = (row.warc_ts, _md5(row.html), _md5(text))
         if row.url not in best or key > best[row.url][0]:
             best[row.url] = (key, row)
 

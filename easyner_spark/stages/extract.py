@@ -60,8 +60,9 @@ def extract_documents(pages: DataFrame, n_batches: int = 64) -> DataFrame:
     * only ``lang = 'en'`` pages are kept, filtered before the url
       dedup so a late crawl in another language cannot shadow an
       English one;
-    * re-crawled urls keep the LATEST crawl (max warc_ts, md5(html)
-      tiebreak) — doc_id is url-keyed, so exactly one row per url;
+    * re-crawled urls keep the LATEST crawl (max warc_ts, then
+      md5(html), then md5(text) tiebreaks) — doc_id is url-keyed, so
+      exactly one row per url;
     * ``doc_id`` = sha2(url, 256) — deterministic, collision-safe id
       (reference fallback semantics, cord_loader.py:82-83, keyed by url
       because url is the page identity per the input contract);
@@ -85,7 +86,7 @@ def extract_documents(pages: DataFrame, n_batches: int = 64) -> DataFrame:
     okey = F.struct(
         F.col("warc_ts").alias("ts"),
         F.md5(F.col("html")).alias("hh"),
-        F.xxhash64(F.col("text")).alias("th"),
+        F.md5(F.col("text")).alias("th"),
         F.col("lang").alias("lg"),
     )
     pages = (

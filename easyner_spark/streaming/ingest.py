@@ -17,8 +17,8 @@ dedup (scripts/util.py:12-23, downloader.py:68-79). Here
   checkpoint AND the last committed partition;
 * ``read_documents_epochs``: the latest-epoch-wins batch view over
   those stages;
-* ``epoch_dedup_pairs`` / ``compact_sig_stage``: the per-epoch MinHash
-  near-dup probe against the committed corpus signatures.
+* ``epoch_dedup_pairs``: the per-epoch MinHash near-dup probe against
+  the committed corpus signatures.
 """
 
 from __future__ import annotations
@@ -75,8 +75,8 @@ def _sig_batch_key(n_batches: int, range_seq: int):
     own n_batches partitions — the corpus partitions written by earlier
     epochs are never re-hashed or rewritten (O(epoch) commit cost, not
     O(corpus); ADVICE r3). A row's batch is fixed at commit time
-    forever; the VERSION counter is the separate ``epoch`` data column
-    (batch ranges reset at compaction, epochs never do)."""
+    forever; the commit's ``range_seq`` is also its ``epoch`` data
+    column, the version that latest-per-doc selection reads."""
     return (
         F.lit(range_seq * n_batches)
         + F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
@@ -89,8 +89,10 @@ def _pin_n_batches(cat, sig_stage: str, n_batches: int, has_data: bool) -> int:
     batch_range = max(batch)//n_batches is the version counter's input
     — a silent mismatch would collide epoch numbers and corrupt
     latest-version selection, so the value is pinned in the catalog's
-    per-stage config sidecar (which, unlike the manifest, survives
-    compaction) and a later call with a different value fails loudly.
+    per-stage config sidecar (a separate file, because the pin must be
+    on disk before the first commit and only ``write_stage`` writes
+    the manifest) and a later call with a different value fails
+    loudly.
 
     The pin is written BEFORE the first commit (committed data without
     a pin would mean silently trusting the next caller); a mismatching
@@ -107,25 +109,6 @@ def _pin_n_batches(cat, sig_stage: str, n_batches: int, has_data: bool) -> int:
         # unpinned, or an empty stage: nothing at risk, (re-)pin
         cat.store_config(sig_stage, {"n_batches": n_batches})
     return n_batches
-
-
-def _next_epoch(spark: SparkSession, cat, sig_stage: str, batch_range: int) -> int:
-    """The epoch number of the signature stage's next commit (ONE
-    definition: the epoch service and its compaction must agree),
-    cheapest source first:
-
-    1. ``epoch_base`` recorded by compact_sig_stage (O(manifest));
-    2. plain append-only history: epoch == batch range (each effective
-       commit bumps both, from 0);
-    3. compacted WITHOUT the wrapper (direct compact_stage): one max
-       over the preserved epoch column."""
-    man = cat._load_manifest(sig_stage)
-    if man.get("epoch_base") is not None:
-        return int(man["epoch_base"]) + batch_range
-    if not man.get("data_dir"):
-        return batch_range
-    corpus = cat.read_stage(spark, sig_stage)
-    return int(corpus.agg(F.max("epoch").alias("m")).first()["m"]) + 1
 
 
 def _latest_per_doc(versioned: DataFrame, ids: DataFrame) -> DataFrame:
@@ -151,7 +134,7 @@ def epoch_dedup_pairs(
     max_bucket: int = 256,
     sig_stage: str = "minhash_sigs",
     n_batches: int = 64,
-    min_agreement: float | None = 0.9,
+    min_agreement: float = 0.9,
     sig_fn=None,
     num_bands: int = 4,
 ) -> DataFrame:
@@ -161,17 +144,12 @@ def epoch_dedup_pairs(
     the epoch (new x new + new x corpus — corpus x corpus was emitted
     by earlier epochs; stages/canonical.py:incremental_lsh_candidates).
 
-    ``min_agreement``: LSH emits band-collision CANDIDATES; by default
-    each pair is verified with the MinHash-agreement estimate before it
-    is returned — same-vocabulary pages otherwise chain into
-    mega-components when the caller clusters the pairs (the exact
-    over-merge pipeline.py's dedup stage guards against). Pass None for
-    the raw candidates (caller runs its own verification). Caveat for
-    None: raw candidates may include collisions against STALE signature
-    versions of multi-version docs (only the verified path restricts to
-    each doc's latest version) — a caller doing its own verification
-    must compare against latest-per-doc signatures, as the built-in
-    path does via ``_latest_per_doc``.
+    ``min_agreement``: LSH emits band-collision CANDIDATES; each pair is
+    verified with the MinHash-agreement estimate against its docs'
+    LATEST signatures before it is returned — same-vocabulary pages
+    otherwise chain into mega-components when the caller clusters the
+    pairs (the exact over-merge pipeline.py's dedup stage guards
+    against).
 
     ``sig_fn``: optional override for the signature stage — a callable
     ``epoch_docs -> (doc_id, sig)`` replacing the default
@@ -191,14 +169,14 @@ def epoch_dedup_pairs(
     COMMIT matches: batch ids are epoch-scoped (disjoint per-epoch
     ranges via _sig_batch_key), so each epoch appends exactly its own
     n_batches partitions under skip_committed and the earlier epochs'
-    partitions are never re-read, re-hashed or rewritten. The
-    committed-batch set and manifest still grow one epoch-range per
-    ingest; run ``compact_sig_stage`` (below) every K epochs to reset
-    both to a single n_batches keyspace (amortized O(corpus/K)). The
-    VERSION counter is the explicit ``epoch`` data column — it keeps
-    climbing monotonically across compactions (the wrapper records an
-    ``epoch_base`` in the manifest inside the same atomic swap), while
-    only the batch-id RANGES restart. Re-ingested doc_ids are handled
+    partitions are never re-read, re-hashed or rewritten. An epoch's
+    number is its batch range, ``max(committed) // n_batches + 1`` (0
+    on an empty stage), written to every row as the ``epoch`` data
+    column. So the committed-batch set (and with it the manifest and
+    every reader's batch filter) grows by ``n_batches`` per epoch, and
+    nothing compacts it: a compaction returns once a caller schedules
+    one.
+    Re-ingested doc_ids are handled
     explicitly: a re-ingest matching the doc's LATEST committed version
     collapses (anti-join against the latest signature only), while any
     content change — including a REVERT to an older committed text —
@@ -225,21 +203,17 @@ def epoch_dedup_pairs(
         signature_similarity_filter,
     )
 
+    if min_agreement is None:
+        raise ValueError("min_agreement must be a number: pairs are always verified")
     cat = CheckpointCatalog(warehouse)
     done = cat.committed_batches(sig_stage)
-    # n_batches became load-bearing for the version counter (epoch ==
-    # f(batch_range)): resolve/validate/pin against the sidecar config
+    # n_batches is load-bearing for the version counter (epoch ==
+    # batch range): resolve/validate/pin against the sidecar config
     n_batches = _pin_n_batches(cat, sig_stage, n_batches, has_data=bool(done))
-    # the batch-id RANGE is derived from committed batches (append-only
-    # invariant); it resets when a compaction flattens the keyspace,
-    # while the `epoch` version counter keeps climbing
-    batch_range = (max(done) // n_batches + 1) if done else 0
-    if done:
-        corpus_full = cat.read_stage(spark, sig_stage)
-        epoch_seq = _next_epoch(spark, cat, sig_stage, batch_range)
-    else:
-        corpus_full = None
-        epoch_seq = 0
+    # the epoch's batch-id range, derived from the committed batches
+    # (append-only invariant); it is also the epoch number
+    epoch_seq = (max(done) // n_batches + 1) if done else 0
+    corpus_full = cat.read_stage(spark, sig_stage) if done else None
     # materialized once: the epoch's shingle/minhash aggregate feeds the
     # pair probe, the similarity filter AND the signature-stage commit
     # — without this it recomputes per consumer
@@ -269,7 +243,7 @@ def epoch_dedup_pairs(
             "doc_id",
             "sig",
             F.lit(epoch_seq).cast("bigint").alias("epoch"),
-            _sig_batch_key(n_batches, batch_range).alias("batch_id"),
+            _sig_batch_key(n_batches, epoch_seq).alias("batch_id"),
         )
         .localCheckpoint()
     )
@@ -282,31 +256,29 @@ def epoch_dedup_pairs(
             num_bands=num_bands,
             max_bucket=max_bucket,
         )
-        if min_agreement is not None:
-            # verify against ONE signature per doc_id — its LATEST
-            # version (changed-content re-ingests keep every version in
-            # the stage, so a doc_id can own several sig rows; joining
-            # the multi-version table would both duplicate emitted
-            # pairs and let a STALE version pass verification). The
-            # window input is first semi-joined down to the docs that
-            # actually appear in candidate pairs — O(candidates), not
-            # an O(corpus) shuffle-sort per epoch.
-            pairs = pairs.localCheckpoint()  # feeds members + the filter
-            members = (
-                pairs.select(F.col("src").alias("doc_id"))
-                .unionByName(pairs.select(F.col("dst").alias("doc_id")))
-                .distinct()
-            )
-            latest = _latest_per_doc(
-                corpus_full.select("doc_id", "sig", "epoch").unionByName(
-                    new_sigs.select("doc_id", "sig", "epoch")
-                ),
-                members,
-            )
-            pairs = signature_similarity_filter(
-                pairs, latest, id_col="doc_id", min_agreement=min_agreement
-            ).select("src", "dst")
-        pairs = pairs.localCheckpoint()
+        # verify against ONE signature per doc_id — its LATEST version
+        # (changed-content re-ingests keep every version in the stage,
+        # so a doc_id can own several sig rows; joining the
+        # multi-version table would both duplicate emitted pairs and
+        # let a STALE version pass verification). The window input is
+        # first semi-joined down to the docs that actually appear in
+        # candidate pairs — O(candidates), not an O(corpus)
+        # shuffle-sort per epoch.
+        pairs = pairs.localCheckpoint()  # feeds members + the filter
+        members = (
+            pairs.select(F.col("src").alias("doc_id"))
+            .unionByName(pairs.select(F.col("dst").alias("doc_id")))
+            .distinct()
+        )
+        latest = _latest_per_doc(
+            corpus_full.select("doc_id", "sig", "epoch").unionByName(
+                new_sigs.select("doc_id", "sig", "epoch")
+            ),
+            members,
+        )
+        pairs = signature_similarity_filter(
+            pairs, latest, id_col="doc_id", min_agreement=min_agreement
+        ).select("src", "dst").localCheckpoint()
         # append ONLY this epoch's genuinely-new signatures. The
         # anti-join is against each re-ingested doc's LATEST committed
         # version, not all versions: a doc whose content REVERTS to an
@@ -326,47 +298,12 @@ def epoch_dedup_pairs(
         pairs = lsh_candidate_pairs(
             new_sigs, id_col="doc_id", num_bands=num_bands, max_bucket=max_bucket
         )
-        if min_agreement is not None:
-            pairs = signature_similarity_filter(
-                pairs, new_sigs, id_col="doc_id", min_agreement=min_agreement
-            ).select("src", "dst")
-        pairs = pairs.localCheckpoint()
+        pairs = signature_similarity_filter(
+            pairs, new_sigs, id_col="doc_id", min_agreement=min_agreement
+        ).select("src", "dst").localCheckpoint()
         cat.write_stage(new_sigs, sig_stage, resume_mode="skip_committed")
     return pairs.select(
         F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
-    )
-
-
-def compact_sig_stage(
-    spark: SparkSession,
-    warehouse: str,
-    sig_stage: str = "minhash_sigs",
-    n_batches: int = 64,
-) -> dict:
-    """Compact the epoch-grown signature stage into one n_batches
-    keyspace, recording the epoch counter's continuation point
-    (``epoch_base``) in the manifest INSIDE the same atomic swap — the
-    O(manifest) path for epoch_seq derivation after compaction. A
-    direct ``compact_stage`` call keeps the rows and their ``epoch``
-    column too, but records no ``epoch_base``, so every later epoch
-    pays one max() over the stage to number itself.
-    """
-    cat = CheckpointCatalog(warehouse)
-    done = cat.committed_batches(sig_stage)
-    if not done:
-        raise ValueError(f"stage '{sig_stage}' has no committed batches")
-    # honor the stage's pinned n_batches; reject a conflicting value
-    # (the stage has committed data by the guard above)
-    n_batches = _pin_n_batches(cat, sig_stage, n_batches, has_data=True)
-    next_epoch = _next_epoch(spark, cat, sig_stage, max(done) // n_batches + 1)
-    # post-compaction batch_range is 1 (all data in range 0), so the
-    # invariant next_epoch == epoch_base + batch_range needs base =
-    # next_epoch - 1
-    return cat.compact_stage(
-        spark,
-        sig_stage,
-        _sig_batch_key(n_batches, 0),
-        manifest_extra={"epoch_base": next_epoch - 1},
     )
 
 
@@ -434,20 +371,16 @@ def read_documents_epochs(spark: SparkSession, warehouse: str) -> DataFrame:
     # read), strictly stronger than read_stage's post-filter. Epoch and
     # batch_id ride in on the file path (leaf-dir reads skip partition
     # discovery, which cannot mix non-key=value epoch roots).
-    # One manifest load per stage gives both its committed batches and
-    # its CURRENT data directory (the data_dir pointer — a compacted
-    # stage lives in a .genN generation dir, not the bare stage name),
-    # so the two come from one snapshot. A stage with no committed
-    # batch (a crash between the parquet write and the manifest swap)
-    # contributes no path: reading it would serve uncommitted rows AND
-    # (being the highest epoch) shadow committed older crawls under
-    # latest-epoch-wins.
+    # One manifest load per stage gives its committed batches. A stage
+    # with no committed batch (a crash between the parquet write and
+    # the manifest swap) contributes no path: reading it would serve
+    # uncommitted rows AND (being the highest epoch) shadow committed
+    # older crawls under latest-epoch-wins.
     paths = []
     for n in names:
-        man = cat._load_manifest(n)
-        stage_dir = os.path.join(warehouse, man.get("data_dir", n))
         paths.extend(
-            os.path.join(stage_dir, f"batch_id={b}") for b in sorted(_live(man))
+            os.path.join(cat._stage_dir(n), f"batch_id={b}")
+            for b in sorted(_live(cat._load_manifest(n)))
         )
     if not paths:
         raise ValueError(f"no documents_epoch* stages committed in {warehouse}")
@@ -456,9 +389,7 @@ def read_documents_epochs(spark: SparkSession, warehouse: str) -> DataFrame:
         .withColumn(
             "_epoch",
             F.regexp_extract(
-                F.input_file_name(),
-                r"documents_epoch(\d+)(?:\.gen\d+)?/",
-                1,
+                F.input_file_name(), r"documents_epoch(\d+)/", 1
             ).cast("long"),
         )
         .withColumn(

@@ -157,3 +157,40 @@ def test_read_stage_refuses_manifest_without_schema_stamp(spark, docs, tmp_path)
     # a stage that was never committed raises the same error
     with pytest.raises(ValueError, match="stage 'missing'"):
         cat.read_stage(spark, "missing")
+
+
+def test_warehouse_holds_one_data_directory_per_stage(spark, docs, tmp_path):
+    """A pipeline run plus two signature epochs leave only ``<stage>/``
+    data directories, ``<stage>._manifest.json`` files and the
+    signature stage's config sidecar. A manifest that points the stage
+    at another directory makes read_stage and write_stage raise."""
+    import os
+
+    from easyner_spark.corpus import pages_df
+    from easyner_spark.pipeline import run_pipeline
+    from easyner_spark.streaming.ingest import epoch_dedup_pairs
+
+    wh = str(tmp_path / "wh")
+    run_pipeline(spark, pages_df(spark, n_docs=30), wh, n_batches=2)
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    epoch_dedup_pairs(spark, wh, mk([(1, "alpha beta gamma delta epsilon zeta")]))
+    epoch_dedup_pairs(spark, wh, mk([(2, "one two three four five six seven")]))
+
+    entries = set(os.listdir(wh))
+    stages = {e for e in entries if os.path.isdir(os.path.join(wh, e))}
+    assert "minhash_sigs" in stages and "documents" in stages
+    assert entries == (
+        stages
+        | {f"{s}._manifest.json" for s in stages}
+        | {"minhash_sigs._config.json"}
+    )
+
+    cat = CheckpointCatalog(wh)
+    man = cat._load_manifest("documents")
+    # a generation-directory pointer, as compacted stages once carried
+    man["data_dir"] = "documents_gen1"
+    cat._store_manifest("documents", man)
+    with pytest.raises(ValueError, match="stage 'documents'"):
+        cat.read_stage(spark, "documents")
+    with pytest.raises(ValueError, match="stage 'documents'"):
+        cat.write_stage(docs, "documents")

@@ -1,16 +1,16 @@
 """Property test for the signature-stage versioning matrix (r4 verdict
-ask #6): a randomized ingest / unchanged-re-ingest / revert / compact /
-crash sequence is replayed against a sequential python oracle dict, and
-after EVERY op the committed stage must satisfy the versioning
-invariants:
+ask #6): a randomized ingest / unchanged-re-ingest / revert / crash /
+bad-n_batches sequence is replayed against a sequential python oracle
+dict, and after EVERY op the committed stage must satisfy the
+versioning invariants:
 
 * (doc_id, epoch) is unique — (doc_id, sig) is deliberately NOT (a
   revert re-commits an older sig at a new epoch);
 * committed row count == number of effective content CHANGES (unchanged
   re-ingests collapse; changes — including reverts — always commit);
 * latest-per-doc selection (max epoch) resolves every doc to its
-  CURRENT content's signature, across any number of compactions
-  (epoch_base carried atomically inside the compaction swap);
+  CURRENT content's signature (an epoch is numbered by its batch
+  range, so epochs only grow);
 * an orphan data directory from a crashed writer (parquet present, no
   manifest entry) is invisible to reads and to subsequent versioning;
 * a mismatched n_batches against a stage with committed data fails
@@ -51,7 +51,6 @@ _ingest = st.dictionaries(
 )
 _op = st.one_of(
     st.tuples(st.just("ingest"), _ingest),
-    st.tuples(st.just("compact"), st.none()),
     st.tuples(st.just("crash"), st.none()),
     st.tuples(st.just("bad_n"), st.none()),
 )
@@ -78,7 +77,7 @@ def expected_sigs(spark):
 @given(ops=st.lists(_op, min_size=2, max_size=5))
 def test_versioning_matrix(spark, expected_sigs, ops):
     from easyner_spark.io.catalog import CheckpointCatalog
-    from easyner_spark.streaming.ingest import compact_sig_stage, epoch_dedup_pairs
+    from easyner_spark.streaming.ingest import epoch_dedup_pairs
 
     wh = tempfile.mkdtemp(prefix="epoch_prop_")
     try:
@@ -123,17 +122,11 @@ def test_versioning_matrix(spark, expected_sigs, ops):
 
         for kind, arg in ops:
             if kind == "ingest":
-                epoch_dedup_pairs(
-                    spark, wh, mk(arg), n_batches=N_BATCHES, min_agreement=None
-                )
+                epoch_dedup_pairs(spark, wh, mk(arg), n_batches=N_BATCHES)
                 for doc, ti in arg.items():
                     if truth.get(doc) != ti:
                         n_changes += 1
                         truth[doc] = ti
-            elif kind == "compact":
-                if not committed():
-                    continue
-                compact_sig_stage(spark, wh, n_batches=N_BATCHES)
             elif kind == "crash":
                 if not committed():
                     continue
@@ -156,11 +149,7 @@ def test_versioning_matrix(spark, expected_sigs, ops):
                     continue
                 with pytest.raises(ValueError):
                     epoch_dedup_pairs(
-                        spark,
-                        wh,
-                        mk({1: 0}),
-                        n_batches=N_BATCHES + 3,
-                        min_agreement=None,
+                        spark, wh, mk({1: 0}), n_batches=N_BATCHES + 3
                     )
             check_invariants()
     finally:

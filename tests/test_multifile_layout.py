@@ -13,7 +13,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from easyner_spark.compare import TABLES, compare_query
-from easyner_spark.queries import ORACLES, QUERIES, _table_bytes
+from easyner_spark import queries
+from easyner_spark.queries import ORACLES, QUERIES, _spread, _table_bytes
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 N_FILES = 3
@@ -52,7 +53,13 @@ def test_layout_is_multi_file_and_multi_row_group(multifile_dir):
 
 @pytest.mark.parametrize(
     "name",
-    ["dedup_jaccard", "embed_knn_bruteforce", "kg_linked", "events_asof_purchase"],
+    [
+        "dedup_jaccard",
+        "embed_knn_bruteforce",
+        "kg_linked",
+        "events_asof_purchase",
+        "dedup_epoch_incremental",
+    ],
 )
 def test_query_on_multifile_copy_matches_oracle_on_original(
     spark, multifile_dir, name
@@ -72,3 +79,24 @@ def test_table_bytes_sums_a_directory_table(multifile_dir):
         d = os.path.join(multifile_dir, f"{t}.parquet")
         want = sum(os.path.getsize(os.path.join(d, f)) for f in os.listdir(d))
         assert _table_bytes(multifile_dir, t) == want
+
+
+def _round_robin(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "RoundRobinPartitioning" in plan
+
+
+def test_spread_leaves_unstattable_and_large_tables_alone(
+    spark, multifile_dir, monkeypatch
+):
+    """``_spread`` adds a round-robin exchange only under a small local
+    table; a path it cannot stat (cluster storage) and a table over the
+    threshold pass through unchanged."""
+    small = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    assert _round_robin(_spread(small, SF_DIR, "documents"))  # control
+    assert _spread(small, "s3a://bucket/x", "documents") is small
+
+    monkeypatch.setattr(queries, "_SPREAD_OPEN_COST", 1)
+    df = spark.read.parquet(os.path.join(multifile_dir, "documents.parquet"))
+    out = _spread(df, multifile_dir, "documents")
+    assert out is df and not _round_robin(out)

@@ -242,6 +242,27 @@ def test_recrawled_urls_keep_latest(spark, oracle):
             assert got[u] == "recrawled text only. one sentence."
 
 
+def test_same_timestamp_recrawl_winner_matches_oracle(spark):
+    """Two English crawls of one url with the same warc_ts and no html
+    differ only in text: the engine's max_by key and the oracle's
+    sequential max must pick the same winner (md5(text) breaks the tie),
+    whatever the row order."""
+    import datetime as dt
+
+    from easyner_spark.streaming.ingest import PAGES_SCHEMA
+
+    ts = dt.datetime(2024, 1, 1)
+    rows = [("http://x/u1", ts, None, t, "en") for t in ("alpha text", "beta text")]
+    winners = set()
+    for order in (rows, rows[::-1]):
+        pdf = pd.DataFrame(order, columns=PAGES_SCHEMA.fieldNames())
+        got = extract_documents(spark.createDataFrame(order, PAGES_SCHEMA), n_batches=2)
+        want = run_oracle(pdf, GAZETTEER, NEL_LOOKUP)["documents"]
+        assert [r["text"] for r in got.collect()] == [want["http://x/u1"]["text"]]
+        winners.add(want["http://x/u1"]["text"])
+    assert len(winners) == 1
+
+
 def test_full_pipeline_orchestrator_matches_oracle(spark, tmp_path, oracle):
     """The CLI-facing orchestrator (pipeline.run_pipeline, with
     checkpoints and canonicalization) must hit the same P/R contract as

@@ -151,6 +151,9 @@ def test_epoch_dedup_pairs_incremental(spark, tmp_path):
     cat = CheckpointCatalog(wh)
     sigs = cat.read_stage(spark, "minhash_sigs")
     assert {r["doc_id"] for r in sigs.select("doc_id").collect()} == {1, 2, 3, 4, 5}
+    # pairs are always verified: there is no raw-candidate mode
+    with pytest.raises(ValueError, match="min_agreement"):
+        epoch_dedup_pairs(spark, wh, e2, min_agreement=None)
 
 
 def test_epoch_dedup_commit_is_append_only_per_epoch(spark, tmp_path):
@@ -207,12 +210,8 @@ def test_epoch_dedup_verifies_against_latest_signature_only(spark, tmp_path):
     """Review fix: a doc with several committed signature versions must
     be verified against its LATEST version only — a stale version must
     not admit a pair, and multi-version joins must not duplicate
-    emitted rows. A compact_stage between the versions and the probe
-    must NOT break this: the version order lives in the explicit epoch
-    column, which compaction preserves while rewriting batch ids."""
-    from pyspark.sql import functions as SF
-
-    from easyner_spark.io.catalog import CheckpointCatalog
+    emitted rows. The version order lives in the explicit epoch
+    column."""
     from easyner_spark.streaming.ingest import epoch_dedup_pairs
 
     wh = str(tmp_path / "wh_latestsig")
@@ -223,66 +222,12 @@ def test_epoch_dedup_verifies_against_latest_signature_only(spark, tmp_path):
     epoch_dedup_pairs(spark, wh, mk([(1, text_a), (2, text_a)]))
     # epoch 1: doc 1 rewritten to text B (both versions stay committed)
     epoch_dedup_pairs(spark, wh, mk([(1, text_b)]))
-    # compaction flattens the batch-id keyspace — the version ordering
-    # must survive it (review r4: a batch-id-derived epoch did not)
-    CheckpointCatalog(wh).compact_stage(
-        spark, "minhash_sigs", SF.pmod(SF.xxhash64("doc_id"), SF.lit(8))
-    )
     # epoch 2: doc 9 arrives with text A — it band-collides with doc
     # 1's STALE signature and doc 2's current one
     rows = epoch_dedup_pairs(spark, wh, mk([(9, text_a)])).collect()
     pairs = [(r["doc_a"], r["doc_b"]) for r in rows]
     assert set(pairs) == {(2, 9)}  # stale (1,9) rejected
     assert len(pairs) == 1         # and no duplicate emissions
-
-
-def test_compact_stage_resets_keyspace_and_keeps_rows(spark, tmp_path):
-    """compact_sig_stage rewrites an epoch-grown stage into one
-    n_batches keyspace with an identical row set, GCs orphan
-    generations, records epoch_base atomically, and the epoch service
-    keeps working afterwards."""
-    from easyner_spark.io.catalog import CheckpointCatalog
-    from easyner_spark.streaming.ingest import epoch_dedup_pairs
-
-    wh = str(tmp_path / "wh_compact")
-    nb = 8
-    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    epoch_dedup_pairs(spark, wh, mk(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")]
-    ), n_batches=nb)
-    epoch_dedup_pairs(spark, wh, mk(
-        [(2, "one two three four five six seven eight nine ten eleven")]
-    ), n_batches=nb)
-    cat = CheckpointCatalog(wh)
-    before = {
-        (r["doc_id"], tuple(r["sig"]))
-        for r in cat.read_stage(spark, "minhash_sigs").collect()
-    }
-    assert max(cat.committed_batches("minhash_sigs")) >= nb  # grown
-    # plant an orphan generation (a crashed past compaction) — the next
-    # compaction must GC it
-    orphan = os.path.join(wh, "minhash_sigs.gen7")
-    os.makedirs(orphan, exist_ok=True)
-    from easyner_spark.streaming.ingest import compact_sig_stage
-
-    compact_sig_stage(spark, wh, n_batches=nb)
-    assert not os.path.exists(orphan)
-    after_batches = cat.committed_batches("minhash_sigs")
-    assert after_batches and max(after_batches) < nb  # reset keyspace
-    assert len(cat.history("minhash_sigs")) == 1      # manifest reset
-    # the wrapper recorded the epoch continuation point atomically
-    assert cat._load_manifest("minhash_sigs")["epoch_base"] == 1
-    after = {
-        (r["doc_id"], tuple(r["sig"]))
-        for r in cat.read_stage(spark, "minhash_sigs").collect()
-    }
-    assert after == before
-    # the epoch service continues: next commit lands in range 1
-    epoch_dedup_pairs(spark, wh, mk(
-        [(3, "red orange yellow green blue indigo violet colors spectrum x")]
-    ), n_batches=nb)
-    new = cat.committed_batches("minhash_sigs") - after_batches
-    assert new and all(nb <= b < 2 * nb for b in new)
 
 
 def test_epoch_dedup_handles_content_revert(spark, tmp_path):
@@ -312,7 +257,7 @@ def test_epoch_dedup_rejects_mismatched_n_batches(spark, tmp_path):
     later call must fail loudly, not silently collide epochs."""
     import pytest as _pytest
 
-    from easyner_spark.streaming.ingest import compact_sig_stage, epoch_dedup_pairs
+    from easyner_spark.streaming.ingest import epoch_dedup_pairs
 
     wh = str(tmp_path / "wh_nbpin")
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
@@ -321,8 +266,6 @@ def test_epoch_dedup_rejects_mismatched_n_batches(spark, tmp_path):
     ), n_batches=8)
     with _pytest.raises(ValueError, match="n_batches"):
         epoch_dedup_pairs(spark, wh, mk([(2, "x y z")]), n_batches=64)
-    with _pytest.raises(ValueError, match="n_batches"):
-        compact_sig_stage(spark, wh, n_batches=64)
 
 
 def test_pin_n_batches_semantics(tmp_path):
@@ -343,7 +286,7 @@ def test_pin_n_batches_semantics(tmp_path):
 
 
 def test_epoch_dedup_rejects_mixed_signature_family(spark, tmp_path):
-    """The sig-family datatype is pinned in the config sidecar: a stage
+    """The sig-family datatype is read from the committed schema: a stage
     committed with the default xxhash64 bigint signatures must reject a
     later call injecting a different-typed sig_fn (mixed families match
     nothing, silently) — while a SAME-typed custom family is accepted."""
