@@ -88,8 +88,9 @@ def run_pipeline(
     """Execute (and checkpoint) the full chain; returns the lineage
     report {table: {sec, rows_committed, batches_committed}}, one entry
     per committed table (the "analysis" stage commits entity_frequency
-    and id_frequency, both built from ``linked``). ``stages`` filters
-    which stages run (the reference's `ignore` map, inverted); a name
+    and id_frequency, both built from ``linked``; the "linked" stage
+    also commits its minted dimension, nel_new_entities). ``stages``
+    filters which stages run (the reference's `ignore` map, inverted); a name
     outside ``STAGES``, "screen" and "dedup" raises before anything is
     committed.
 
@@ -107,15 +108,19 @@ def run_pipeline(
     cat = CheckpointCatalog(warehouse)
     report: dict[str, dict] = {}
 
-    def commit(name: str, df: DataFrame) -> DataFrame:
+    def write(name: str, df: DataFrame, allow_empty: bool = False) -> None:
         t0 = time.time()
-        snap = cat.write_stage(df, name)
-        rows = sum(c["rows"] for c in snap.get("counters", {}).values())
+        counters = cat.write_stage(df, name, allow_empty=allow_empty).get(
+            "counters", {}
+        )
         report[name] = {
             "sec": round(time.time() - t0, 3),
-            "rows_committed": rows,
-            "batches_committed": len(snap.get("counters", {})),
+            "rows_committed": sum(c["rows"] for c in counters.values()),
+            "batches_committed": len(counters),
         }
+
+    def commit(name: str, df: DataFrame) -> DataFrame:
+        write(name, df)
         if not cat.committed_batches(name):
             # empty stage (e.g. gazetteer matched nothing): no manifest
             # exists to read back — keep the (empty) frame flowing so
@@ -231,9 +236,9 @@ def run_pipeline(
         # allow_empty: once every surface resolves against the lookup,
         # the minted dimension legitimately shrinks to zero rows — the
         # re-run must retract the stale mints, not keep serving them
-        cat.write_stage(
-            new_ents.withColumn("batch_id", F.lit(0)),
+        write(
             "nel_new_entities",
+            new_ents.withColumn("batch_id", F.lit(0)),
             allow_empty=True,
         )
     elif {"canonical", "triples", "analysis"} & want:

@@ -140,10 +140,28 @@ def _spread(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
 # shared Spark building blocks
 # ---------------------------------------------------------------------------
 
+def _scan(
+    spark: SparkSession, sf_dir: str, name: str, *cols: str, nonblank: bool = False
+) -> DataFrame:
+    """One testdata table behind the _spread guard: read, project to
+    ``cols`` (all columns when none are named), and with ``nonblank``
+    keep only rows whose text tokenizes non-empty. The guard is
+    length(trim(text)) > 0 — a doc tokenizes empty iff its text is all
+    spaces — because it is cheap under filter pushdown: a size(toks)
+    filter below the projection would re-evaluate the whole tokenize
+    chain per row."""
+    df = _read(spark, sf_dir, name)
+    if cols:
+        df = df.select(*cols)
+    if nonblank:
+        df = df.filter(F.expr("length(trim(text)) > 0"))
+    return _spread(df, sf_dir, name)
+
+
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings scan behind the same _spread guard (vector math above
     the first exchange is the expensive part)."""
-    return _spread(_read(spark, sf_dir, "embeddings"), sf_dir, "embeddings")
+    return _scan(spark, sf_dir, "embeddings")
 
 
 def _normed(e: DataFrame, id_as: str, vec_as: str, norm_as: str) -> DataFrame:
@@ -158,15 +176,32 @@ def _normed(e: DataFrame, id_as: str, vec_as: str, norm_as: str) -> DataFrame:
 
 
 def _doc_tokens(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, pos, token): ONE definition of the
-    contract tokenization (non-empty split(' ') elements, within-row
-    order via posexplode — narrow, no shuffle). tokens() and the
-    epoch-dedup sig_fn both build on this, so the oracle's _TOKS_CTE
-    has exactly one Spark twin."""
+    """(doc_id, text) → (doc_id, pos, token): the contract tokenization
+    as one row per token (non-empty split(' ') elements, within-row
+    order via posexplode — narrow, no shuffle). pos is the RAW split
+    position, empty tokens counted, as in the oracle's _TOKS_CTE.
+    tokens() and _len_hist build on this; per-document consumers use
+    the array form, _doc_toks."""
     return docs.select(
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("pos", "token"),
     ).filter(F.col("token") != "")
+
+
+# the contract token sequence of one document as an array: its non-empty
+# split(' ') elements in order (== the oracle's tokens ORDER BY pos)
+_TOK_ARRAY = "filter(split(text, ' '), x -> x != '')"
+
+
+def _doc_toks(
+    spark: SparkSession, sf_dir: str, *cols: str, nonblank: bool = False
+) -> DataFrame:
+    """documents → (doc_id, *cols, toks): each document's token array,
+    derived intra-row (no explode, no shuffle-back). ``nonblank`` drops
+    the documents whose array is empty (see _scan)."""
+    return _scan(
+        spark, sf_dir, "documents", "doc_id", *cols, "text", nonblank=nonblank
+    ).select("doc_id", *cols, F.expr(_TOK_ARRAY).alias("toks"))
 
 
 def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,7 +209,7 @@ def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode keeps within-row order, no shuffle (the _spread guard
     redistributes the pre-explode rows when the scan is one split)."""
     return (
-        _doc_tokens(_spread(_read(spark, sf_dir, "documents").select("doc_id", "text"), sf_dir, "documents"))
+        _doc_tokens(_scan(spark, sf_dir, "documents", "doc_id", "text"))
         .select(
             "doc_id",
             "pos",
@@ -248,6 +283,18 @@ def linked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pairs(lk: DataFrame) -> DataFrame:
+    """Every ordered mention pair of one sentence: ``lk`` self-joined
+    as ``a``/``b`` on (doc_id, sent_idx) with a.pos < b.pos — the
+    co-occurrence join of the oracles' ``linked a JOIN linked b``."""
+    return lk.alias("a").join(
+        lk.alias("b"),
+        (F.col("a.doc_id") == F.col("b.doc_id"))
+        & (F.col("a.sent_idx") == F.col("b.sent_idx"))
+        & (F.col("a.pos") < F.col("b.pos")),
+    )
+
+
 _LINKED_CTE = (
     _MENTIONS_CTE
     + f""",
@@ -283,8 +330,9 @@ def sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges). Row set and values are identical: slice order == pos
     order, concat_ws == array_join, size(non-empty) == count(*), and
     windows with no non-empty token had no group before == filtered
-    here."""
-    docs = _spread(_read(spark, sf_dir, "documents").select("doc_id", "text"), sf_dir, "documents")
+    here. Not _doc_toks: the windows are over RAW split positions,
+    empty tokens included."""
+    docs = _scan(spark, sf_dir, "documents", "doc_id", "text")
     return (
         docs.select(
             "doc_id",
@@ -330,52 +378,25 @@ sentences AS (
 
 def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6 opt (guide §2.4): the non-empty token sequence of a document
-    # is derivable intra-row from its text — filter(split(...)) — so
-    # the shingle slide needs NO groupBy/collect_list exchange at all.
+    # is derivable intra-row from its text — _doc_toks — so the
+    # shingle slide needs NO groupBy/collect_list exchange at all.
     # Every shingle consumer (jaccard/containment/minhash/boilerplate/
-    # contamination/novelty) drops one full-corpus shuffle. Same rows:
-    # filter() preserves split order == pos order, and the slide
-    # expression below is byte-identical to _shingles_from_tokens'.
-    per_doc = _spread(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"),
-        sf_dir,
-        "documents",
-    ).select(
-        "doc_id",
-        F.expr("filter(split(text, ' '), x -> x != '')").alias("toks"),
-    )
-    return _slide_shingles(per_doc)
+    # contamination/novelty) drops one full-corpus shuffle.
+    return _slide_shingles(_doc_toks(spark, sf_dir))
 
 
-def _shingles_from_tokens(t: DataFrame) -> DataFrame:
-    """(doc_id, pos, token) → (doc_id, shingle). Split out so composite
-    queries (train_corpus_curated) can feed ONE materialized token
-    frame to every shingle consumer instead of re-tokenizing per
-    branch."""
-    # window-free construction: collect per doc then slide — cheaper than
-    # a 3-way self-join and keeps one shuffle
-    per_doc = t.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "token"))),
-            lambda s: s["token"],
-        ).alias("toks")
-    )
-    return _slide_shingles(per_doc)
+# the trigram slide over a toks array: one concat_ws per start position
+_SLIDE = (
+    "transform(sequence(0, greatest(size(toks) - 3, -1)),"
+    " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
+)
 
 
 def _slide_shingles(per_doc: DataFrame) -> DataFrame:
-    """(doc_id, toks array) → (doc_id, shingle): the ONE trigram slide
-    expression, shared by the shuffled token-frame path
-    (_shingles_from_tokens) and the narrow from-text path (shingles)
-    so the two can never drift."""
+    """(doc_id, toks array) → (doc_id, shingle): one row per trigram,
+    empty concatenations dropped."""
     return per_doc.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, greatest(size(toks) - 3, -1)),"
-                " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
-            )
-        ).alias("shingle"),
+        "doc_id", F.explode(F.expr(_SLIDE)).alias("shingle")
     ).filter(F.col("shingle") != "")
 
 
@@ -601,13 +622,7 @@ def q_kg_triples(spark, sf_dir):
         .select("doc_id", "sent_idx", "pos", "ent_name")
         .localCheckpoint()
     )
-    a, b = lk.alias("a"), lk.alias("b")
-    return a.join(
-        b,
-        (F.col("a.doc_id") == F.col("b.doc_id"))
-        & (F.col("a.sent_idx") == F.col("b.sent_idx"))
-        & (F.col("a.pos") < F.col("b.pos")),
-    ).select(
+    return _pairs(lk).select(
         F.col("a.ent_name").alias("subj"),
         F.lit("co_occurs_with").alias("pred"),
         F.col("b.ent_name").alias("obj"),
@@ -666,7 +681,8 @@ def q_kg_entity_search(spark, sf_dir):
     # semi-join exchange). The EXISTS is a per-sentence ANY over the
     # sentence's own tokens — and sent_text is the non-empty tokens
     # single-space-joined, so split(sent_text) reproduces exactly that
-    # token set. With the narrow sentences() rebuild the whole query is
+    # token set (no empty elements, so no _TOK_ARRAY filter). With the
+    # narrow sentences() rebuild the whole query is
     # scan → project → explode → filter: ZERO exchanges, zero joins.
     terms = F.array(*[F.lit(t) for t in SEARCH_TERMS])
     return (
@@ -707,6 +723,8 @@ GROUP BY 1
 """,
 )
 def q_kg_batch_counters(spark, sf_dir):
+    # raw split size, empty elements counted, as the oracle's
+    # len(string_split(...)) — not the contract token count
     d = _read(spark, sf_dir, "documents")
     return (
         d.select(
@@ -1287,46 +1305,29 @@ FROM toks GROUP BY doc_id
 )
 def q_doc_quality_scores(spark, sf_dir):
     # r6 opt (guide §2.4): every statistic is a function of ONE row's
-    # token multiset — derive it intra-row from filter(split(text))
+    # token multiset — derive it intra-row from the token array
     # instead of exploding all tokens and shuffling them back into
     # per-doc groups (the before plan's countDistinct exchange carried
     # every distinct (doc, token) pair). ZERO exchanges now. Values
     # identical: integer counts/sums are order-free, the two double
     # divisions are the same operations on the same exact integers.
-    # the tokens-exist guard is length(trim(text)) > 0 — equivalent to
-    # size(_t) > 0 (a doc tokenizes empty iff its text is all spaces)
-    # but cheap under filter pushdown: a size(_t) filter below the
-    # projection would re-evaluate the whole tokenize chain per row.
-    d = _spread(
-        _read(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.expr("length(trim(text)) > 0")),
-        sf_dir,
-        "documents",
-    )
-    return (
-        d.select(
-            "doc_id",
-            F.expr("filter(split(text, ' '), x -> x != '')").alias("_t"),
-        )
-        .select(
-            "doc_id",
-            F.size("_t").cast("bigint").alias("n_tokens"),
-            F.size(F.array_distinct("_t")).cast("bigint").alias("n_distinct"),
-            F.round(
-                F.size(F.array_distinct("_t")).cast("double") / F.size("_t"), 6
-            ).alias("ttr"),
-            F.round(
-                F.expr(
-                    "aggregate(_t, CAST(0 AS BIGINT), (acc, x) -> acc + length(x))"
-                ).cast("double")
-                / F.size("_t"),
-                6,
-            ).alias("avg_token_len"),
-            F.expr("array_max(transform(_t, x -> length(x)))")
-            .cast("bigint")
-            .alias("max_token_len"),
-        )
+    return _doc_toks(spark, sf_dir, nonblank=True).select(
+        "doc_id",
+        F.size("toks").cast("bigint").alias("n_tokens"),
+        F.size(F.array_distinct("toks")).cast("bigint").alias("n_distinct"),
+        F.round(
+            F.size(F.array_distinct("toks")).cast("double") / F.size("toks"), 6
+        ).alias("ttr"),
+        F.round(
+            F.expr(
+                "aggregate(toks, CAST(0 AS BIGINT), (acc, x) -> acc + length(x))"
+            ).cast("double")
+            / F.size("toks"),
+            6,
+        ).alias("avg_token_len"),
+        F.expr("array_max(transform(toks, x -> length(x)))")
+        .cast("bigint")
+        .alias("max_token_len"),
     )
 
 
@@ -1350,26 +1351,14 @@ def q_lang_id_stopword(spark, sf_dir):
     # shuffle-back, no join. ZERO exchanges (before: explode + join +
     # grouped agg). Integer-only predicate unchanged.
     stop_list = ", ".join(f"'{s}'" for s in STOPWORDS)
-    # same trim-guard as doc_quality_scores (cheap pushdown-safe filter)
-    d = _spread(
-        _read(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .filter(F.expr("length(trim(text)) > 0")),
-        sf_dir,
-        "documents",
-    )
     return (
-        d.select(
-            "doc_id",
-            "lang",
-            F.expr("filter(split(text, ' '), x -> x != '')").alias("_t"),
-        )
+        _doc_toks(spark, sf_dir, "lang", nonblank=True)
         .select(
             "doc_id",
-            F.expr(f"size(filter(_t, x -> x IN ({stop_list})))")
+            F.expr(f"size(filter(toks, x -> x IN ({stop_list})))")
             .cast("bigint")
             .alias("n_stop"),
-            F.size("_t").cast("bigint").alias("n_tokens"),
+            F.size("toks").cast("bigint").alias("n_tokens"),
             "lang",
         )
         .withColumn(
@@ -1405,18 +1394,8 @@ def q_doc_fingerprint(spark, sf_dir):
     # keep the md5 argmin in a codegen'd explode+agg (an intra-row
     # transform(md5) measured far slower interpreted); the exchange
     # carries one partial row per doc.
-    per_doc = _spread(
-        _read(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.expr("length(trim(text)) > 0")),
-        sf_dir,
-        "documents",
-    ).select(
-        "doc_id",
-        F.expr("filter(split(text, ' '), x -> x != '')").alias("toks"),
-    )
     return (
-        _slide_shingles(per_doc)
+        _slide_shingles(_doc_toks(spark, sf_dir, nonblank=True))
         .groupBy("doc_id")
         .agg(
             F.min(F.md5(F.col("shingle").cast("binary"))).alias("fingerprint"),
@@ -1436,6 +1415,8 @@ FROM documents
 """,
 )
 def q_token_count_estimate(spark, sf_dir):
+    # raw split size, empty elements counted, as the oracle's
+    # len(string_split(...)) — not the contract token count
     d = _read(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -1952,6 +1933,7 @@ def q_ner_udf_surface_counts(spark, sf_dir):
     exactly; a mismatch means the Arrow/numpy matcher diverged."""
     from .stages.ner_dict import dict_ner
 
+    # not _ner_docs: string doc_id and the real batch_id
     docs = _read(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.expr(f"CAST(doc_id % {N_BATCHES} AS INT)").alias("batch_id"),
@@ -2212,6 +2194,18 @@ grams AS (
 """
 
 
+def _ner_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents as dict_ner input: one sentence per document (the
+    whole text, sent_idx 0) in batch 0, so mention offsets are
+    character offsets into documents.text."""
+    return _read(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.lit(0).alias("batch_id"),
+        F.lit(0).alias("sent_idx"),
+        "text",
+    )
+
+
 @register(
     "ner_udf_ngram_mentions",
     _CTOKS_CTE
@@ -2249,12 +2243,7 @@ def q_ner_udf_ngram_mentions(spark, sf_dir):
     ner_spacy.py:41-54,144-159."""
     from .stages.ner_dict import dict_ner
 
-    docs = _read(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.lit(0).alias("batch_id"),
-        F.lit(0).alias("sent_idx"),
-        "text",
-    )
+    docs = _ner_docs(spark, sf_dir)
     m = dict_ner(docs, NGRAM_GAZ)
     return m.select(
         "doc_id",
@@ -2343,12 +2332,7 @@ def q_merge_conflicts_resolved(spark, sf_dir):
     from .stages.merge import resolve_conflicts
     from .stages.ner_dict import dict_ner
 
-    docs = _read(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.lit(0).alias("batch_id"),
-        F.lit(0).alias("sent_idx"),
-        "text",
-    )
+    docs = _ner_docs(spark, sf_dir)
     resolved = resolve_conflicts(dict_ner(docs, CONFLICT_GAZ))
     return resolved.select(
         "doc_id",
@@ -2661,26 +2645,9 @@ def q_doc_repetition(spark, sf_dir):
     # r6 opt (guide §2.4): per-row statistics of the row's own shingle
     # multiset — intra-row, zero exchanges (same shape as
     # doc_fingerprint; values identical, integer counts + one division)
-    d = _spread(
-        _read(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.expr("length(trim(text)) > 0")),  # trim-guard, see doc_quality_scores
-        sf_dir,
-        "documents",
-    )
     return (
-        d.select(
-            "doc_id",
-            F.expr("filter(split(text, ' '), x -> x != '')").alias("toks"),
-        )
-        .select(
-            "doc_id",
-            F.expr(
-                "filter(transform(sequence(0, greatest(size(toks) - 3, -1)),"
-                " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])),"
-                " s -> s != '')"
-            ).alias("_sh"),
-        )
+        _doc_toks(spark, sf_dir, nonblank=True)
+        .select("doc_id", F.expr(f"filter({_SLIDE}, s -> s != '')").alias("_sh"))
         .select(
             "doc_id",
             F.size("_sh").cast("bigint").alias("n_shingles"),
@@ -2844,14 +2811,8 @@ def q_kg_graph_nodes(spark, sf_dir):
     # dedupe identical logical subtrees, so without this the upstream
     # pipeline executes multiple times (same fix as kg_triple_counts)
     lk = linked(spark, sf_dir).localCheckpoint()
-    a, b = lk.alias("a"), lk.alias("b")
     triples = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.sent_idx") == F.col("b.sent_idx"))
-            & (F.col("a.pos") < F.col("b.pos")),
-        )
+        _pairs(lk)
         .select(
             F.col("a.ent_id").alias("subj_id"),
             F.col("b.ent_id").alias("obj_id"),
@@ -2901,22 +2862,8 @@ def q_kg_graph_edges(spark, sf_dir):
     (src, dst, co-occurrence weight, document support). In production
     this lands partitioned/bucketed by src so neighbor expansion is a
     single-partition read; the aggregation is map-side partial."""
-    # r6 opt (guide §2.3/§2.4): materialize the linked chain once for
-    # the two self-join sides, projected to the pair-join columns
-    # (same fix as kg_triples/dedges).
-    lk = (
-        linked(spark, sf_dir)
-        .select("doc_id", "sent_idx", "pos", "ent_id")
-        .localCheckpoint()
-    )
-    a, b = lk.alias("a"), lk.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.sent_idx") == F.col("b.sent_idx"))
-            & (F.col("a.pos") < F.col("b.pos")),
-        )
+        _pairs(_linked_pair_base(spark, sf_dir))
         .groupBy(
             F.col("a.ent_id").alias("src"), F.col("b.ent_id").alias("dst")
         )
@@ -2959,11 +2906,12 @@ uedges AS (
 def _linked_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sent_idx, pos, ent_id) — the linked chain projected to
     the four columns every co-occurrence pair join needs, materialized
-    ONCE (r6 opt, guide §2.3/§2.4): dedges/wedges consume it on both
-    self-join sides, and Catalyst does not dedupe the fan-out — without
-    this every graph query re-ran tokenize→NER→NEL twice. The early
-    projection also keeps surface/class/ent_name out of the
-    materialized blocks and the join exchanges."""
+    ONCE (r6 opt, guide §2.3/§2.4): kg_graph_edges, dedges and wedges
+    consume it on both self-join sides, and Catalyst does not dedupe
+    the fan-out — without this every graph query re-ran
+    tokenize→NER→NEL twice. The early projection also keeps
+    surface/class/ent_name out of the materialized blocks and the join
+    exchanges."""
     return (
         linked(spark, sf_dir)
         .select("doc_id", "sent_idx", "pos", "ent_id")
@@ -2972,15 +2920,8 @@ def _linked_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lk = _linked_pair_base(spark, sf_dir)
-    a, b = lk.alias("a"), lk.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.sent_idx") == F.col("b.sent_idx"))
-            & (F.col("a.pos") < F.col("b.pos")),
-        )
+        _pairs(_linked_pair_base(spark, sf_dir))
         .select(F.col("a.ent_id").alias("src"), F.col("b.ent_id").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -2993,15 +2934,8 @@ def wedges(spark: SparkSession, sf_dir: str) -> DataFrame:
     of distinct, so every weighted graph op runs on the same graph
     definition (kg_graph_edges keeps its own published contract with
     doc-support columns and no loop filter)."""
-    lk = _linked_pair_base(spark, sf_dir)
-    a, b = lk.alias("a"), lk.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.sent_idx") == F.col("b.sent_idx"))
-            & (F.col("a.pos") < F.col("b.pos")),
-        )
+        _pairs(_linked_pair_base(spark, sf_dir))
         .filter(F.col("a.ent_id") != F.col("b.ent_id"))
         .groupBy(F.col("a.ent_id").alias("src"), F.col("b.ent_id").alias("dst"))
         .agg(F.count("*").cast("bigint").alias("w"))
@@ -3229,12 +3163,7 @@ def q_merge_runs_union(spark, sf_dir):
     from .stages.merge import merge_mention_runs
     from .stages.ner_dict import dict_ner
 
-    docs = _read(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.lit(0).alias("batch_id"),
-        F.lit(0).alias("sent_idx"),
-        "text",
-    )
+    docs = _ner_docs(spark, sf_dir)
     run_a = dict_ner(docs, {"slow": "disease", "fast": "disease"}, source="run_a")
     run_b = dict_ner(docs, {"hash": "chemical", "merge": "chemical"}, source="run_b")
     merged = merge_mention_runs(run_a, run_b)
@@ -4286,17 +4215,15 @@ def q_text_bigram_lm(spark, sf_dir):
     """Bigram language-model counts with exact integer conditional
     probabilities (parts-per-million via BIGINT div — no float, no
     log): the n-gram statistics layer of a data-quality / perplexity
-    pipeline. Plan: one doc-partitioned lead window (narrow per-doc
-    sort), one map-side-partial bigram agg, then the denominator as a
+    pipeline. Plan: intra-row bigrams (no exchange), one
+    map-side-partial bigram agg, then the denominator as a
     groupBy(w1) partial agg + w1-keyed shuffle join — NOT a
     w1-partitioned window, which would sort every head word's distinct
     successors in one task (vocabulary-bounded but a needless
     sort-based skew point; the agg+join is sort-free and map-side
     partial). All hash-partitioned, nothing global. LM construction is
-    shared with doc_lm_score via _doc_bigrams_from/_bigram_lm_from."""
-    big = _bigram_lm_from(
-        _doc_bigrams_narrow(_read(spark, sf_dir, "documents"), sf_dir)
-    )
+    shared with doc_lm_score via _doc_bigrams_narrow/_bigram_lm_from."""
+    big = _bigram_lm_from(_doc_bigrams_narrow(spark, sf_dir))
     return big.filter(F.col("c12") >= 3).select(
         "w1",
         "w2",
@@ -4306,30 +4233,15 @@ def q_text_bigram_lm(spark, sf_dir):
     )
 
 
-def _doc_bigrams_from(t: DataFrame) -> DataFrame:
-    """(doc_id, pos, token) → per-occurrence bigrams
-    (doc_id, w1, w2). One narrow doc-partitioned lead window."""
-    w = W.partitionBy("doc_id").orderBy("pos")
+def _doc_bigrams_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → per-occurrence bigrams (doc_id, w1, w2) with ZERO
+    exchange (r6 opt, guide §2.4): a bigram is two ADJACENT non-empty
+    tokens of one row's text, so a doc-partitioned lead window over the
+    token rows would pay a doc_id exchange + per-doc sort for something
+    derivable intra-row. Same rows: toks order == pos order, lead ==
+    next array element."""
     return (
-        t.withColumn("w2", F.lead("token").over(w))
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", F.col("token").alias("w1"), "w2")
-    )
-
-
-def _doc_bigrams_narrow(docs: DataFrame, sf_dir: str) -> DataFrame:
-    """(doc_id, text) → per-occurrence bigrams (doc_id, w1, w2) with
-    ZERO exchange (r6 opt, guide §2.4): a bigram is two ADJACENT
-    non-empty tokens of one row's text, so the lead-window formulation
-    (_doc_bigrams_from — kept for token-frame callers) paid a doc_id
-    exchange + per-doc sort for something derivable intra-row. Same
-    rows: filter(split) order == pos order, lead == next array element."""
-    return (
-        _spread(docs.select("doc_id", "text"), sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.expr("filter(split(text, ' '), x -> x != '')").alias("toks"),
-        )
+        _doc_toks(spark, sf_dir)
         .select(
             "doc_id",
             F.explode(
@@ -4759,23 +4671,10 @@ def q_train_corpus_curated(spark, sf_dir):
         F.col("node").alias("doc_id"), "component"
     )
     dupes = comp.filter(F.col("component") < F.col("doc_id")).select("doc_id")
-    quality = (
-        _spread(
-            _read(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .filter(F.expr("length(trim(text)) > 0")),  # trim-guard
-            sf_dir,
-            "documents",
-        )
-        .select(
-            "doc_id",
-            F.expr("filter(split(text, ' '), x -> x != '')").alias("_t"),
-        )
-        .select(
-            "doc_id",
-            F.size("_t").cast("bigint").alias("n_tokens"),
-            F.size(F.array_distinct("_t")).cast("bigint").alias("nd"),
-        )
+    quality = _doc_toks(spark, sf_dir, nonblank=True).select(
+        "doc_id",
+        F.size("toks").cast("bigint").alias("n_tokens"),
+        F.size(F.array_distinct("toks")).cast("bigint").alias("nd"),
     )
     contam = _contamination_from(sh).select("doc_id", "contam_ppm")
     return (
@@ -5107,15 +5006,13 @@ def q_doc_lm_score(spark, sf_dir):
     low scores flag gibberish/boilerplate-shredded text, the quality
     signal a curation gate adds next to length/TTR. Everything integer
     (p_ppm = c12*1e6 div c1; score = sum div count): no log(), no
-    float, engine-exact. Plan: one narrow per-doc lead window → the
-    doc-bigram frame is materialized ONCE (localCheckpoint) and feeds
-    both the LM aggregation and the probability join; the LM and its
-    w1 marginal are map-side partial aggs; final agg keys on doc_id.
-    LM construction is the SAME _doc_bigrams_from/_bigram_lm_from
+    float, engine-exact. Plan: the intra-row doc-bigram frame is
+    materialized ONCE (localCheckpoint) and feeds both the LM
+    aggregation and the probability join; the LM and its w1 marginal
+    are map-side partial aggs; final agg keys on doc_id. LM
+    construction is the SAME _doc_bigrams_narrow/_bigram_lm_from
     text_bigram_lm uses — the two queries cannot silently diverge."""
-    bg = _doc_bigrams_narrow(
-        _read(spark, sf_dir, "documents"), sf_dir
-    ).localCheckpoint()
+    bg = _doc_bigrams_narrow(spark, sf_dir).localCheckpoint()
     p = _bigram_lm_from(bg).select(
         "w1",
         "w2",
@@ -5432,26 +5329,16 @@ def q_dedup_epoch_incremental(spark, sf_dir):
 
     # _spread: the single-row-group scan would otherwise serialize the
     # per-epoch tokenize+signature chain onto one task (guide §2.5)
-    docs = _spread(_read(spark, sf_dir, "documents").select("doc_id", "text"), sf_dir, "documents")
+    docs = _scan(spark, sf_dir, "documents", "doc_id", "text")
 
     def sig_fn(epoch_docs: DataFrame) -> DataFrame:
-        # shared leaves: the narrow filter(split)→_slide_shingles path
-        # (same slide expression as every other shingle consumer) →
+        # shared leaves: the _TOK_ARRAY→_slide_shingles path (same
+        # token array and slide as every other shingle consumer) →
         # _md5_sig_cols, so this family and its oracle can never drift
         # apart. r6 opt: intra-row token derivation — no collect_list
         # exchange before the signature agg.
-        return _md5_sig_array(
-            _md5_sig_cols(
-                _slide_shingles(
-                    epoch_docs.select(
-                        "doc_id",
-                        F.expr("filter(split(text, ' '), x -> x != '')").alias(
-                            "toks"
-                        ),
-                    )
-                )
-            )
-        )
+        toks = epoch_docs.select("doc_id", F.expr(_TOK_ARRAY).alias("toks"))
+        return _md5_sig_array(_md5_sig_cols(_slide_shingles(toks)))
 
     wh = tempfile.mkdtemp(prefix="dedup_epoch_wh_")
     try:

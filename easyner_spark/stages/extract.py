@@ -34,9 +34,10 @@ def _extract_text_udf(html: pd.Series) -> pd.Series:
 
 def _title_expr(html_col):
     """JVM-side <title> extraction: regexp probe + the common named
-    entities + whitespace squash. Matches textops.extract_title for
-    the entity set real titles use; exotic numeric entities fall back
-    to their literal form (title is metadata, not part of the
+    entities + whitespace squash. Matches the title that
+    textops.extract_html returns (the oracle's title) for the entity
+    set real titles use; exotic numeric entities fall back to their
+    literal form (title is metadata, not part of the
     byte-identical-text contract)."""
     raw = F.decode(html_col, "UTF-8")
     t = F.regexp_extract(raw, r"(?is)<title[^>]*>(.*?)</title>", 1)

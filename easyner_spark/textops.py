@@ -59,14 +59,6 @@ _BLOCK_TAG_RE = re.compile(
 _TAG_RE = re.compile(r"<[^>]+>")
 
 
-def extract_title(html_bytes: bytes) -> str:
-    """Title-only extraction (cheap path when body text is already
-    present): one regex probe instead of the full body pipeline."""
-    raw = html_bytes.decode("utf-8", errors="replace")
-    m = _TITLE_RE.search(raw)
-    return normalize_text(_html.unescape(m.group(1))) if m else ""
-
-
 def extract_html(html_bytes: bytes) -> tuple[str, str]:
     """Deterministic HTML -> (title, text).
 

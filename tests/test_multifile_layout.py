@@ -59,6 +59,10 @@ def test_layout_is_multi_file_and_multi_row_group(multifile_dir):
         "kg_linked",
         "events_asof_purchase",
         "dedup_epoch_incremental",
+        "doc_fingerprint",
+        "text_bigram_lm",
+        "kg_graph_edges",
+        "merge_conflicts_resolved",
     ],
 )
 def test_query_on_multifile_copy_matches_oracle_on_original(

@@ -193,6 +193,7 @@ def test_pipeline_staged_subset_runs(spark, tmp_path):
     (not a parquet AnalysisException); a staged sequence over one
     warehouse completes and the totals come from the manifest."""
     from easyner_spark.corpus import pages_df
+    from easyner_spark.io.catalog import CheckpointCatalog
     from easyner_spark.pipeline import run_pipeline
 
     wh = str(tmp_path / "wh")
@@ -207,12 +208,24 @@ def test_pipeline_staged_subset_runs(spark, tmp_path):
         spark, pages, wh, stages={"mentions", "linked", "triples"}
     )
     assert r2["_totals"]["triples"] > 0
+    # the minted dimension is reported like every committed stage
+    live = CheckpointCatalog(wh).counters("nel_new_entities")
+    assert r2["nel_new_entities"]["rows_committed"] == sum(
+        c["rows"] for c in live.values()
+    )
     # full re-run over the same warehouse is a resume no-op
     r3 = run_pipeline(spark, pages, wh)
     assert r3["_totals"]["triples"] == r2["_totals"]["triples"]
     assert all(
         r3[s]["batches_committed"] == 0
-        for s in ("documents", "sentences", "mentions", "linked", "triples")
+        for s in (
+            "documents",
+            "sentences",
+            "mentions",
+            "linked",
+            "nel_new_entities",
+            "triples",
+        )
     )
 
 
