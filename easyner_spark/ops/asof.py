@@ -19,7 +19,8 @@ Determinism: rows at equal timestamps order right-before-left, so a
 left row at exactly t matches a right row at t (inclusive semantics,
 matching DuckDB's ``ASOF JOIN ... ON l.ts >= r.ts`` oracle). Right rows
 tied on (keys, ts) are ordered by their payload struct, so the match is
-the GREATEST payload — deterministic under any partition layout. Note
+the GREATEST payload (unless the payload holds a map, which is not
+orderable) — deterministic under any partition layout. Note
 an external oracle (e.g. DuckDB ASOF) makes its own arbitrary pick on
 such ties: pre-aggregate the right side to one row per (keys, ts) when
 cross-engine agreement matters.
@@ -34,8 +35,8 @@ from pyspark.sql import types as T
 
 
 def _has_map(dt: T.DataType) -> bool:
-    """True if the type contains a MapType anywhere (xxhash64 rejects
-    maps — unordered, no canonical hash)."""
+    """True if the type contains a MapType anywhere (maps are
+    unordered: xxhash64 rejects them and no window ORDER BY takes them)."""
     if isinstance(dt, T.MapType):
         return True
     if isinstance(dt, T.ArrayType):
@@ -49,18 +50,16 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str | Sequence[str],
-    tie_break: bool = True,
     salt: int | None = None,
 ) -> DataFrame:
     """Backward as-of left join on the ``ts`` column of both sides →
     all left columns + right payload columns (everything but the keys)
     suffixed ``_r``, NULL when no right row precedes.
 
-    ``tie_break=True`` orders tied right rows by their payload struct
-    (deterministic greatest-payload pick) — requires orderable payload
-    types. Pass False for payloads containing maps (not orderable in a
-    window ORDER BY); then the right side must be unique per
-    (keys, ts) for a deterministic result.
+    Tied right rows are ordered by their payload struct (deterministic
+    greatest-payload pick) unless the payload holds a map, which no
+    window ORDER BY accepts; a map payload's right side must then be
+    unique per (keys, ts) for a deterministic result.
 
     ``salt``: hot-key guard. The window partitions by key, so one hot
     key (a null-heavy join column, a mega-user) concentrates its whole
@@ -138,7 +137,7 @@ def asof_join(
         ).withColumn("__salt", F.col("__salt").cast("bigint"))
         part_keys.append("__salt")
     order = [F.col("__ts").asc(), F.col("__is_r").desc()]
-    if tie_break:
+    if not _has_map(r2.schema["__p"].dataType):
         # deterministic tie-break among right rows at one ts: the
         # greatest payload struct wins (last() takes the final one)
         order.append(F.col("__p").asc_nulls_first())

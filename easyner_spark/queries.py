@@ -385,19 +385,18 @@ def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _slide_shingles(_doc_toks(spark, sf_dir))
 
 
-# the trigram slide over a toks array: one concat_ws per start position
+# the trigram slide over a toks array: one shingle per start position
+# i < size - 2, so a document of fewer than 3 tokens yields none (the
+# oracle's range(greatest(len - 2, 0))) and no index runs past the end
 _SLIDE = (
-    "transform(sequence(0, greatest(size(toks) - 3, -1)),"
-    " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
+    "transform(slice(toks, 1, greatest(size(toks) - 2, 0)),"
+    " (t, i) -> concat_ws(' ', t, toks[i+1], toks[i+2]))"
 )
 
 
 def _slide_shingles(per_doc: DataFrame) -> DataFrame:
-    """(doc_id, toks array) → (doc_id, shingle): one row per trigram,
-    empty concatenations dropped."""
-    return per_doc.select(
-        "doc_id", F.explode(F.expr(_SLIDE)).alias("shingle")
-    ).filter(F.col("shingle") != "")
+    """(doc_id, toks array) → (doc_id, shingle): one row per trigram."""
+    return per_doc.select("doc_id", F.explode(F.expr(_SLIDE)).alias("shingle"))
 
 
 _SHINGLES_CTE = (
@@ -507,54 +506,32 @@ GROUP BY surface
 """,
 )
 def q_kg_entity_frequency(spark, sf_dir):
-    m = mentions(spark, sf_dir)
-    # r6 opt (guide §2.3): the one-shot agg with TWO count(DISTINCT)
-    # groups planned an Expand — every mention row was tripled and
-    # object-hash-aggregated (no codegen) over a 4-column key. Two-level
-    # instead: pre-aggregate by (surface, doc_id, batch_id) — a codegen
-    # hash agg whose exchange carries one row per (surface, doc) — then
-    # derive every statistic without any distinct aggregate (batch_id
-    # is doc_id-determined, so (surface, doc_id) is unique in g;
-    # batches_spanned == size of the collected batch set). Same values.
-    g = m.groupBy("surface", "doc_id", "batch_id").agg(
-        F.count("*").alias("c")
-    )
-    agg = (
-        g.groupBy("surface")
-        .agg(
-            F.sum("c").cast("bigint").alias("total_count"),
-            F.count("*").cast("bigint").alias("articles_spanned"),
-            F.array_sort(
-                F.collect_set(F.col("batch_id").cast("string"))
-            ).alias("_bs"),
-        )
-        .select(
-            "surface",
-            "total_count",
-            "articles_spanned",
-            F.size("_bs").cast("bigint").alias("batches_spanned"),
-            F.array_join(F.col("_bs"), "; ").alias("batch_set"),
-        )
-    )
+    """The pipeline's own analysis stage (stages/analysis.py) over the
+    contract mentions, ranked. Its batch_set sorts batch ids
+    numerically, the oracle's as strings: one order while N_BATCHES <=
+    10 (single-digit ids), and this oracle check fails loudly if that
+    ever stops holding."""
+    from .stages.analysis import entity_frequency
+
     # (total_count DESC, surface) is a unique total order (surface is
     # the group key), so RANK == row position: the count-bucketed
     # ordered_prefix — no global single-partition window (the round-2
     # weak item). Checkpointed: the windowed side and its bucket totals
     # both consume the aggregate.
     ranked = ordered_prefix(
-        agg.localCheckpoint(), "total_count", ["surface"], "_p", descending=True
+        entity_frequency(mentions(spark, sf_dir)).localCheckpoint(),
+        "total_count",
+        ["surface"],
+        "_p",
+        descending=True,
     )
     return ranked.select(
         "surface",
         "total_count",
         "articles_spanned",
         "batches_spanned",
-        F.round(
-            F.col("total_count").cast("double") / F.col("articles_spanned"), 6
-        ).alias("freq_per_article"),
-        F.round(
-            F.col("total_count").cast("double") / F.col("batches_spanned"), 6
-        ).alias("freq_per_batch"),
+        F.round("freq_per_article", 6).alias("freq_per_article"),
+        F.round("freq_per_batch", 6).alias("freq_per_batch"),
         "batch_set",
         (F.col("_p") + 1).alias("rnk"),
     )
@@ -575,28 +552,20 @@ GROUP BY ent_id
 """,
 )
 def q_kg_id_frequency(spark, sf_dir):
-    lk = linked(spark, sf_dir)
-    agg = lk.groupBy("ent_id").agg(
-        F.min("ent_name").alias("name"),
-        F.array_join(F.array_sort(F.collect_set("surface")), "; ").alias(
-            "entities_list"
-        ),
-        F.count("*").alias("total_count"),
-        F.countDistinct("doc_id").alias("articles_spanned"),
-    )
-    # (total_count DESC, ent_id) is unique per row — bucketed rank,
-    # same reasoning as kg_entity_frequency.
+    """The pipeline's own id_frequency (stages/analysis.py) over the
+    contract linked mentions, ranked like kg_entity_frequency:
+    (total_count DESC, ent_id) is unique per row."""
+    from .stages.analysis import id_frequency
+
+    cols = ["ent_id", "name", "entities_list", "total_count", "articles_spanned"]
     ranked = ordered_prefix(
-        agg.localCheckpoint(), "total_count", ["ent_id"], "_p", descending=True
-    )
-    return ranked.select(
-        "ent_id",
-        "name",
-        "entities_list",
+        id_frequency(linked(spark, sf_dir)).select(*cols).localCheckpoint(),
         "total_count",
-        "articles_spanned",
-        (F.col("_p") + 1).alias("rnk"),
+        ["ent_id"],
+        "_p",
+        descending=True,
     )
+    return ranked.select(*cols, (F.col("_p") + 1).alias("rnk"))
 
 
 @register(
@@ -2646,8 +2615,10 @@ def q_doc_repetition(spark, sf_dir):
     # multiset — intra-row, zero exchanges (same shape as
     # doc_fingerprint; values identical, integer counts + one division)
     return (
-        _doc_toks(spark, sf_dir, nonblank=True)
-        .select("doc_id", F.expr(f"filter({_SLIDE}, s -> s != '')").alias("_sh"))
+        _doc_toks(spark, sf_dir)
+        # fewer than 3 tokens: no shingle, so no oracle row (and no ratio)
+        .filter(F.size("toks") > 2)
+        .select("doc_id", F.expr(_SLIDE).alias("_sh"))
         .select(
             "doc_id",
             F.size("_sh").cast("bigint").alias("n_shingles"),
@@ -4246,12 +4217,11 @@ def _doc_bigrams_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.explode(
                 F.expr(
-                    "transform(sequence(0, greatest(size(toks) - 2, -1)),"
-                    " i -> named_struct('w1', toks[i], 'w2', toks[i+1]))"
+                    "transform(slice(toks, 1, greatest(size(toks) - 1, 0)),"
+                    " (t, i) -> named_struct('w1', t, 'w2', toks[i+1]))"
                 )
             ).alias("_b"),
         )
-        .filter(F.col("_b.w2").isNotNull())
         .select("doc_id", F.col("_b.w1").alias("w1"), F.col("_b.w2").alias("w2"))
     )
 

@@ -51,6 +51,12 @@ def get_spark(
         cpus_s = os.environ.get("SPARK_GRAFT_CPUS", "")
         shuffle_partitions = int(cpus_s) if cpus_s.isdigit() else (os.cpu_count() or 8)
 
+    # a quarter of physical memory, at most 24g, unless SPARK_DRIVER_MEM
+    # says otherwise: two local sessions (e.g. the test suite and a
+    # determinism sweep) then fit one host
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    driver_mem = f"{min(phys // 4 // 2**20, 24 * 1024)}m"
+
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
@@ -66,7 +72,7 @@ def get_spark(
         # (reference: scripts/ner_spacy.py:140-141) but larger because our
         # UDFs are vectorized over the whole batch, not per-sentence.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", driver_mem))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )

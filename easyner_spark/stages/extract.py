@@ -5,7 +5,8 @@ scripts/cord_loader.py:14-103) — line-strip + single-space join and a
 deterministic id with sha256 fallback (cord_loader.py:82-83). Target
 contract adds: input is a table of Common-Crawl-style pages and the
 extracted ``text`` must be byte-identical per url (enforced by the
-audit below).
+catalog's per-batch content folds, io/catalog.py:_content_counters,
+which run_pipeline reports as the documents audit).
 
 Plan shape: pages are first deduplicated by url (last crawl wins —
 re-crawled pages are routine at web scale and duplicate doc_ids would
@@ -113,27 +114,3 @@ def extract_documents(pages: DataFrame, n_batches: int = 64) -> DataFrame:
     docs = passthrough.unionByName(extracted)
     return docs.filter(F.length("text") > 0)
 
-
-def audit_hashes(documents: DataFrame) -> DataFrame:
-    """Per-partition audit of the byte-identical-text invariant.
-
-    audit(batch_id, n_docs, text_hash_sum, text_hash_xor): order-
-    insensitive fold of xxhash64(url, text) per batch. Both a decimal
-    SUM and a bit_xor are kept — xor alone cancels even multisets of
-    differences, sum alone misses sign-symmetric swaps; together a
-    divergence needs an engineered collision. xxhash64 over the two
-    columns directly hashes NULLs distinctly (no concat_ws null
-    blindness). Two runs (or engine vs oracle) over the same pages must
-    agree per batch; disagreement pinpoints the diverged partition
-    (SURVEY.md §4 custom-work item 3).
-    """
-    h = F.xxhash64(F.col("url"), F.col("text"))
-    return (
-        documents.select("batch_id", h.alias("h"))
-        .groupBy("batch_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.col("h").cast("decimal(38,0)")).alias("text_hash_sum"),
-            F.expr("bit_xor(h)").alias("text_hash_xor"),
-        )
-    )

@@ -68,6 +68,10 @@ def read_page_stream(
     return raw.withWatermark("warc_ts", "10 minutes").dropDuplicates(["url", "warc_ts"])
 
 
+# the committed corpus signature stage epoch_dedup_pairs probes and appends to
+SIG_STAGE = "minhash_sigs"
+
+
 def _sig_batch_key(n_batches: int, range_seq: int):
     """Signature-stage partition key, RANGE-SCOPED: batch_id =
     range_seq * n_batches + hash(doc_id) % n_batches. Each commit owns
@@ -132,15 +136,15 @@ def epoch_dedup_pairs(
     warehouse: str,
     epoch_docs: DataFrame,
     max_bucket: int = 256,
-    sig_stage: str = "minhash_sigs",
     n_batches: int = 64,
     min_agreement: float = 0.9,
     sig_fn=None,
     num_bands: int = 4,
 ) -> DataFrame:
     """Incremental near-dup pass for one ingest epoch: signature the
-    NEW documents, probe the committed corpus signature stage, commit
-    the new signatures, and return the VERIFIED near-dup pairs touching
+    NEW documents, probe the committed corpus signature stage
+    (``SIG_STAGE``; the first epoch probes an empty one), commit the
+    new signatures, and return the VERIFIED near-dup pairs touching
     the epoch (new x new + new x corpus — corpus x corpus was emitted
     by earlier epochs; stages/canonical.py:incremental_lsh_candidates).
 
@@ -198,7 +202,6 @@ def epoch_dedup_pairs(
     """
     from ..stages.canonical import (
         incremental_lsh_candidates,
-        lsh_candidate_pairs,
         minhash_signatures,
         signature_similarity_filter,
     )
@@ -206,14 +209,13 @@ def epoch_dedup_pairs(
     if min_agreement is None:
         raise ValueError("min_agreement must be a number: pairs are always verified")
     cat = CheckpointCatalog(warehouse)
-    done = cat.committed_batches(sig_stage)
+    done = cat.committed_batches(SIG_STAGE)
     # n_batches is load-bearing for the version counter (epoch ==
     # batch range): resolve/validate/pin against the sidecar config
-    n_batches = _pin_n_batches(cat, sig_stage, n_batches, has_data=bool(done))
+    n_batches = _pin_n_batches(cat, SIG_STAGE, n_batches, has_data=bool(done))
     # the epoch's batch-id range, derived from the committed batches
     # (append-only invariant); it is also the epoch number
     epoch_seq = (max(done) // n_batches + 1) if done else 0
-    corpus_full = cat.read_stage(spark, sig_stage) if done else None
     # materialized once: the epoch's shingle/minhash aggregate feeds the
     # pair probe, the similarity filter AND the signature-stage commit
     # — without this it recomputes per consumer
@@ -222,21 +224,6 @@ def epoch_dedup_pairs(
         if sig_fn is not None
         else minhash_signatures(epoch_docs, id_col="doc_id", name_col="text")
     )
-    # signature-FAMILY guard: committing one epoch with xxhash64
-    # bigints and the next with an injected md5-string family would
-    # silently match nothing (and corrupt the union schema). The
-    # committed stage's own sig column type is the truth — no sidecar
-    # key needed; same-typed families remain the caller's contract.
-    sig_type = sig_src.schema["sig"].dataType.simpleString()
-    if done:
-        committed_type = corpus_full.schema["sig"].dataType.simpleString()
-        if committed_type != sig_type:
-            raise ValueError(
-                f"stage '{sig_stage}' holds signatures of type "
-                f"{committed_type}; this call produces {sig_type} — "
-                "mixed signature families cannot match. Pass the "
-                "original sig_fn (or start a fresh stage)."
-            )
     new_sigs = (
         sig_src
         .select(
@@ -247,61 +234,67 @@ def epoch_dedup_pairs(
         )
         .localCheckpoint()
     )
-    if done:
-        corpus = corpus_full.select("doc_id", "sig")
-        pairs = incremental_lsh_candidates(
-            new_sigs,
-            corpus,
-            id_col="doc_id",
-            num_bands=num_bands,
-            max_bucket=max_bucket,
+    # the first epoch probes an empty corpus: one path serves every epoch
+    corpus_full = cat.read_stage(spark, SIG_STAGE) if done else new_sigs.limit(0)
+    # signature-FAMILY guard: committing one epoch with xxhash64
+    # bigints and the next with an injected md5-string family would
+    # silently match nothing (and corrupt the union schema). The
+    # committed stage's own sig column type is the truth — no sidecar
+    # key needed; same-typed families remain the caller's contract.
+    committed_type = corpus_full.schema["sig"].dataType.simpleString()
+    sig_type = new_sigs.schema["sig"].dataType.simpleString()
+    if committed_type != sig_type:
+        raise ValueError(
+            f"stage '{SIG_STAGE}' holds signatures of type "
+            f"{committed_type}; this call produces {sig_type} — "
+            "mixed signature families cannot match. Pass the "
+            "original sig_fn (or start a fresh stage)."
         )
-        # verify against ONE signature per doc_id — its LATEST version
-        # (changed-content re-ingests keep every version in the stage,
-        # so a doc_id can own several sig rows; joining the
-        # multi-version table would both duplicate emitted pairs and
-        # let a STALE version pass verification). The window input is
-        # first semi-joined down to the docs that actually appear in
-        # candidate pairs — O(candidates), not an O(corpus)
-        # shuffle-sort per epoch.
-        pairs = pairs.localCheckpoint()  # feeds members + the filter
-        members = (
-            pairs.select(F.col("src").alias("doc_id"))
-            .unionByName(pairs.select(F.col("dst").alias("doc_id")))
-            .distinct()
-        )
-        latest = _latest_per_doc(
-            corpus_full.select("doc_id", "sig", "epoch").unionByName(
-                new_sigs.select("doc_id", "sig", "epoch")
-            ),
-            members,
-        )
-        pairs = signature_similarity_filter(
-            pairs, latest, id_col="doc_id", min_agreement=min_agreement
-        ).select("src", "dst").localCheckpoint()
-        # append ONLY this epoch's genuinely-new signatures. The
-        # anti-join is against each re-ingested doc's LATEST committed
-        # version, not all versions: a doc whose content REVERTS to an
-        # older committed text must re-commit (advancing its epoch so
-        # verification tracks the current content again), while an
-        # unchanged re-ingest still collapses. The window input is
-        # semi-joined down to this epoch's doc ids — O(epoch), not
-        # O(corpus). The write touches only the epoch's own batch range
-        # (skip_committed — earlier partitions are immutable).
-        latest_committed = _latest_per_doc(
-            corpus_full.select("doc_id", "sig", "epoch"),
-            new_sigs.select("doc_id").distinct(),
-        )
-        fresh = new_sigs.join(latest_committed, ["doc_id", "sig"], "left_anti")
-        cat.write_stage(fresh, sig_stage, resume_mode="skip_committed")
-    else:
-        pairs = lsh_candidate_pairs(
-            new_sigs, id_col="doc_id", num_bands=num_bands, max_bucket=max_bucket
-        )
-        pairs = signature_similarity_filter(
-            pairs, new_sigs, id_col="doc_id", min_agreement=min_agreement
-        ).select("src", "dst").localCheckpoint()
-        cat.write_stage(new_sigs, sig_stage, resume_mode="skip_committed")
+    pairs = incremental_lsh_candidates(
+        new_sigs,
+        corpus_full.select("doc_id", "sig"),
+        id_col="doc_id",
+        num_bands=num_bands,
+        max_bucket=max_bucket,
+    )
+    # verify against ONE signature per doc_id — its LATEST version
+    # (changed-content re-ingests keep every version in the stage,
+    # so a doc_id can own several sig rows; joining the
+    # multi-version table would both duplicate emitted pairs and
+    # let a STALE version pass verification). The window input is
+    # first semi-joined down to the docs that actually appear in
+    # candidate pairs — O(candidates), not an O(corpus)
+    # shuffle-sort per epoch.
+    pairs = pairs.localCheckpoint()  # feeds members + the filter
+    members = (
+        pairs.select(F.col("src").alias("doc_id"))
+        .unionByName(pairs.select(F.col("dst").alias("doc_id")))
+        .distinct()
+    )
+    latest = _latest_per_doc(
+        corpus_full.select("doc_id", "sig", "epoch").unionByName(
+            new_sigs.select("doc_id", "sig", "epoch")
+        ),
+        members,
+    )
+    pairs = signature_similarity_filter(
+        pairs, latest, id_col="doc_id", min_agreement=min_agreement
+    ).select("src", "dst").localCheckpoint()
+    # append ONLY this epoch's genuinely-new signatures. The
+    # anti-join is against each re-ingested doc's LATEST committed
+    # version, not all versions: a doc whose content REVERTS to an
+    # older committed text must re-commit (advancing its epoch so
+    # verification tracks the current content again), while an
+    # unchanged re-ingest still collapses. The window input is
+    # semi-joined down to this epoch's doc ids — O(epoch), not
+    # O(corpus). The write touches only the epoch's own batch range
+    # (skip_committed — earlier partitions are immutable).
+    latest_committed = _latest_per_doc(
+        corpus_full.select("doc_id", "sig", "epoch"),
+        new_sigs.select("doc_id").distinct(),
+    )
+    fresh = new_sigs.join(latest_committed, ["doc_id", "sig"], "left_anti")
+    cat.write_stage(fresh, SIG_STAGE, resume_mode="skip_committed")
     return pairs.select(
         F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
     )

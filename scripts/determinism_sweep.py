@@ -14,11 +14,11 @@ Exit code 0 iff every query hashes identically under both configs.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -52,15 +52,26 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     # both knobs differ between the two layouts; neither oversubscribes
     # a 4-core host
-    configs = [("local[2]", "3", "/tmp/det_sweep_a.json"),
-               ("local[4]", "16", "/tmp/det_sweep_b.json")]
-    for master, shuffle, path in configs:
-        subprocess.run(
-            [sys.executable, "-c", WORKER, master, shuffle, sf_dir, path],
-            cwd=REPO, check=True, capture_output=True, text=True,
-        )
-    a = json.load(open(configs[0][2]))
-    b = json.load(open(configs[1][2]))
+    configs = [("local[2]", "3"), ("local[4]", "16")]
+    hashes = []
+    with tempfile.TemporaryDirectory(prefix="det_sweep_") as tmp:
+        for i, (master, shuffle) in enumerate(configs):
+            path = os.path.join(tmp, f"{i}.json")
+            proc = subprocess.run(
+                [sys.executable, "-c", WORKER, master, shuffle, sf_dir, path],
+                cwd=REPO, capture_output=True, text=True,
+            )
+            if proc.returncode != 0:
+                tail = "\n".join(proc.stderr.splitlines()[-20:])
+                print(
+                    f"worker {master} shuffle={shuffle} exited "
+                    f"{proc.returncode}:\n{tail}",
+                    file=sys.stderr,
+                )
+                return 1
+            with open(path) as f:
+                hashes.append(json.load(f))
+    a, b = hashes
     diff = sorted(k for k in a if a[k] != b[k])
     print(json.dumps({"queries": len(a), "mismatched": diff}))
     return 1 if diff else 0

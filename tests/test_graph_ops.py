@@ -254,15 +254,16 @@ def test_node_jaccard_matches_contract_query_shape(spark):
 
 
 def test_asof_join_map_payload_with_tie_break_off(spark):
-    """Map-typed payloads are not window-orderable; tie_break=False
-    keeps the operator usable (right side unique per key/ts)."""
+    """Map-typed payloads are not window-orderable; the operator then
+    skips the payload tie-break and stays usable (right side unique per
+    key/ts)."""
     from easyner_spark.ops.asof import asof_join
 
     left = spark.createDataFrame([(1, 10, "l")], "k int, ts int, lid string")
     right = spark.createDataFrame(
         [(1, 5, {"a": "1"})], "k int, ts int, props map<string,string>"
     )
-    row = asof_join(left, right, on="k", tie_break=False).collect()[0]
+    row = asof_join(left, right, on="k").collect()[0]
     assert row["props_r"] == {"a": "1"}
 
 
@@ -283,7 +284,7 @@ def test_asof_join_salted_with_map_columns(spark):
     got = {
         (r["k"], r["ts"]): r["val_r"]
         for r in asof_join(
-            left, right, on="k", tie_break=False, salt=4
+            left, right, on="k", salt=4
         ).collect()
     }
     assert got == {(1, 10): 1.0, (1, 20): 2.0, (2, 15): 3.0}

@@ -63,6 +63,8 @@ def test_layout_is_multi_file_and_multi_row_group(multifile_dir):
         "text_bigram_lm",
         "kg_graph_edges",
         "merge_conflicts_resolved",
+        "kg_entity_frequency",
+        "kg_id_frequency",
     ],
 )
 def test_query_on_multifile_copy_matches_oracle_on_original(

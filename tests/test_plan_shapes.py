@@ -360,6 +360,41 @@ def test_repeated_pass_reuses_compiled_classes(spark):
     assert compiled[1] <= 20, compiled
 
 
+def test_driver_memory_default_fits_the_host(monkeypatch):
+    """With SPARK_DRIVER_MEM unset, get_spark asks for at most a
+    quarter of physical memory (24g cap), so two local sessions fit in
+    one host instead of one of them being OOM-killed."""
+    import os
+    from types import SimpleNamespace
+
+    from pyspark.sql import SparkSession
+
+    from easyner_spark.session import get_spark
+
+    conf = {}
+
+    class Recorder:
+        def __getattr__(self, _name):
+            return lambda *_a: self
+
+        def config(self, key, value):
+            conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(
+                sparkContext=SimpleNamespace(setLogLevel=lambda _level: None)
+            )
+
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(SparkSession, "builder", Recorder())
+    get_spark()
+    mem = conf["spark.driver.memory"]
+    got = int(mem[:-1]) * {"m": 2**20, "g": 2**30}[mem[-1]]
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert got <= min(phys // 4, 24 * 2**30), mem
+
+
 def test_graph_convergence_loops_add_no_count_jobs(spark):
     """Every convergence loop reads its stop count off the round's own
     checkpoint (ops/graph._checkpoint_counting), so a round runs no

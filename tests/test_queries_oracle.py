@@ -3,9 +3,11 @@ oracle at sf0.001 (the driver itself runs sf0.01 — same code path)."""
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from easyner_spark.compare import compare_query
+from easyner_spark.compare import TABLES, compare_query
 from easyner_spark.queries import ORACLES, QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -74,6 +76,51 @@ def test_driver_window_union_invariant():
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_duckdb(spark, name):
     diff = compare_query(spark, SF_DIR, name, QUERIES[name], ORACLES[name])
+    assert diff is None, diff
+
+
+# fewer than 3 tokens (no trigram), fewer than 2 (no bigram), empty,
+# all-blank, padded; the repeated 3-token text makes one near-dup pair
+SHORT_TEXTS = ["a", "a b", "", "   ", " a  b ", "x y z", "x y z", "p q r s"]
+
+
+@pytest.fixture(scope="module")
+def short_docs_dir(tmp_path_factory):
+    """The testdata with short and blank documents appended to
+    ``documents`` (every other table linked unchanged)."""
+    out = tmp_path_factory.mktemp("sf_short_docs")
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(os.path.join(SF_DIR, f"{t}.parquet"), out / f"{t}.parquet")
+    docs = pq.read_table(os.path.join(SF_DIR, "documents.parquet"))
+    proto = docs.slice(0, 1).to_pylist()[0]
+    first = max(docs.column("doc_id").to_pylist()) + 1
+    extra = [
+        dict(proto, doc_id=first + i, text=t, n_chars=len(t))
+        for i, t in enumerate(SHORT_TEXTS)
+    ]
+    pq.write_table(
+        pa.concat_tables([docs, pa.Table.from_pylist(extra, schema=docs.schema)]),
+        str(out / "documents.parquet"),
+    )
+    return str(out)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_jaccard",
+        "doc_fingerprint",
+        "doc_repetition",
+        "text_bigram_lm",
+        "dedup_epoch_incremental",
+    ],
+)
+def test_short_documents_match_oracle(spark, short_docs_dir, name):
+    """A document too short for a trigram (or bigram) yields none, as
+    the oracle's range(greatest(len - 2, 0)) does — no out-of-bounds
+    index under ANSI, no spurious shorter shingle."""
+    diff = compare_query(spark, short_docs_dir, name, QUERIES[name], ORACLES[name])
     assert diff is None, diff
 
 

@@ -204,6 +204,8 @@ def test_pipeline_staged_subset_runs(spark, tmp_path):
 
     r1 = run_pipeline(spark, pages, wh, stages={"documents", "sentences"})
     assert r1["_totals"]["triples"] is None
+    # the documents audit is the committed per-batch counters
+    assert r1["documents"]["audit"] == CheckpointCatalog(wh).counters("documents")
     r2 = run_pipeline(
         spark, pages, wh, stages={"mentions", "linked", "triples"}
     )

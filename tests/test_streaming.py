@@ -118,11 +118,16 @@ def test_stream_canonical_url_dedup(spark, dirs):
 
 
 def test_epoch_dedup_pairs_incremental(spark, tmp_path):
-    """Two ingest epochs through epoch_dedup_pairs: epoch-1 pairs are
-    the self-join of epoch 1; epoch-2 pairs touch epoch-2 docs only
+    """Two ingest epochs through epoch_dedup_pairs: epoch-1 pairs equal
+    the full LSH chain over epoch 1; epoch-2 pairs touch epoch-2 docs only
     (new x new + new x corpus, never re-emitting corpus x corpus); the
     committed signature stage accumulates both epochs."""
     from easyner_spark.io.catalog import CheckpointCatalog
+    from easyner_spark.stages.canonical import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        signature_similarity_filter,
+    )
     from easyner_spark.streaming.ingest import epoch_dedup_pairs
 
     wh = str(tmp_path / "wh_epochdedup")
@@ -136,6 +141,16 @@ def test_epoch_dedup_pairs_incremental(spark, tmp_path):
     p1 = {(r["doc_a"], r["doc_b"]) for r in
           epoch_dedup_pairs(spark, wh, e1).collect()}
     assert (1, 2) in p1 and all(a != b for a, b in p1)
+    # the first epoch probes an empty corpus: its pairs are exactly the
+    # full LSH self-join chain over the same docs
+    sigs1 = minhash_signatures(e1, id_col="doc_id", name_col="text")
+    full = signature_similarity_filter(
+        lsh_candidate_pairs(sigs1, id_col="doc_id"),
+        sigs1,
+        id_col="doc_id",
+        min_agreement=0.9,
+    )
+    assert p1 == {(r["src"], r["dst"]) for r in full.collect()}
 
     e2 = mk([
         (4, "the quick brown fox jumps over the lazy dog again and again"),
