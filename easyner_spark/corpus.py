@@ -21,8 +21,20 @@ import datetime as dt
 import random
 
 import pandas as pd
+from pyspark.sql import types as T
 
 from .textops import normalize_text
+
+# the pages table: the batch pipeline's input and the ingest stream's schema
+PAGES_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), False),
+        T.StructField("html", T.BinaryType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("lang", T.StringType(), True),
+    ]
+)
 
 # ---------------------------------------------------------------------------
 # embedded seed content (public-knowledge biomedical-ish vocabulary)
@@ -117,29 +129,33 @@ def _entity_sentence(rng: random.Random) -> str:
     return tpl.format(A=a, B=b, C=c)
 
 
-def make_pages_pdf(
-    n_docs: int = 200,
-    seed: int = 42,
-    dup_fraction: float = 0.08,
-    html_only_fraction: float = 0.3,
-    foreign_fraction: float = 0.05,
-) -> pd.DataFrame:
+# share of docs that are near-verbatim copies of earlier docs
+# (exercises dedup operators)
+DUP_FRACTION = 0.08
+# share of rows that carry ``text=None`` and only ``html``
+HTML_ONLY_FRACTION = 0.3
+# share of rows with ``lang != 'en'`` (filter path)
+FOREIGN_FRACTION = 0.05
+# sentences per ``<p>`` paragraph in the generated html
+PARA_SENTENCES = 3
+
+
+def make_pages_pdf(n_docs: int = 200, seed: int = 42) -> pd.DataFrame:
     """Deterministic pandas frame of pages.
 
-    * ``dup_fraction`` of docs are near-verbatim copies of earlier docs
-      (exercises dedup operators).
-    * ``html_only_fraction`` of rows carry ``text=None`` and only
+    * ``DUP_FRACTION`` of docs are near-verbatim copies of earlier docs.
+    * ``HTML_ONLY_FRACTION`` of rows carry ``text=None`` and only
       ``html`` — extraction must reconstruct the text; the remaining
       rows carry both, and extraction must pass ``text`` through
       byte-identically.
-    * ``foreign_fraction`` rows get ``lang != 'en'`` (filter path).
+    * ``FOREIGN_FRACTION`` rows get ``lang != 'en'`` (filter path).
     """
     rng = random.Random(seed)
     base_ts = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
     rows = []
     texts: list[tuple[str, str]] = []  # (title, body) built so far
     for i in range(n_docs):
-        if i > 0 and rng.random() < dup_fraction:
+        if i > 0 and rng.random() < DUP_FRACTION:
             src = rng.randrange(len(texts))
             title, body = texts[src]
             title = title + " (mirror)"
@@ -155,7 +171,7 @@ def make_pages_pdf(
         texts.append((title, body))
 
         lang = "en"
-        if rng.random() < foreign_fraction:
+        if rng.random() < FOREIGN_FRACTION:
             lang = rng.choice(["de", "fr", "zh"])
         paras = "".join(f"<p>{s}</p>" for s in split_paras(body))
         html = (
@@ -164,7 +180,7 @@ def make_pages_pdf(
             f"<body><h1>{title}</h1>{paras}"
             f'<script>var x=1;</script></body></html>'
         ).encode("utf-8")
-        text = None if rng.random() < html_only_fraction else normalize_text(body)
+        text = None if rng.random() < HTML_ONLY_FRACTION else normalize_text(body)
         rows.append(
             {
                 "url": f"https://corpus.test/doc/{i:06d}",
@@ -177,26 +193,17 @@ def make_pages_pdf(
     return pd.DataFrame(rows)
 
 
-def split_paras(body: str, per: int = 3) -> list[str]:
-    """Group sentences into paragraphs of ``per`` (layout detail only)."""
+def split_paras(body: str) -> list[str]:
+    """Group sentences into paragraphs of ``PARA_SENTENCES`` (layout
+    detail only)."""
     from .textops import split_sentences
 
     sents = split_sentences(body)
-    return [" ".join(sents[i : i + per]) for i in range(0, len(sents), per)]
+    n = PARA_SENTENCES
+    return [" ".join(sents[i : i + n]) for i in range(0, len(sents), n)]
 
 
 def pages_df(spark, n_docs: int = 200, seed: int = 42, n_partitions: int = 8):
     """Synthetic pages as a Spark DataFrame (deterministic)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), True),
-            T.StructField("text", T.StringType(), True),
-            T.StructField("lang", T.StringType(), True),
-        ]
-    )
     pdf = make_pages_pdf(n_docs=n_docs, seed=seed)
-    return spark.createDataFrame(pdf, schema=schema).repartition(n_partitions, "url")
+    return spark.createDataFrame(pdf, PAGES_SCHEMA).repartition(n_partitions, "url")

@@ -32,7 +32,8 @@ inputs: committed batches are filtered out before anything is computed
 (a partition-pruned anti-filter on batch_id that Catalyst pushes into
 the source scan).
 
-On-disk format: a stage's data lives in ``<root>/<stage>/`` and every
+On-disk format: exactly ``<root>/<stage>/`` (the data) and
+``<root>/<stage>._manifest.json`` per stage, and nothing else; every
 committed manifest carries the stage's schema stamp and per-batch
 counters ``{rows, content_hash, content_sum}``. A manifest without a
 schema stamp, or pointing the stage's data at another directory, was
@@ -167,7 +168,7 @@ class CheckpointCatalog:
         man["snapshots"].append(
             {
                 "snapshot_id": len(man["snapshots"]),
-                "ts": time.time(),
+                "ts_ms": time.time_ns() // 1_000_000,
                 "counters": {
                     str(b): {"rows": 0, "retracted": True} for b in batches
                 },
@@ -258,7 +259,7 @@ class CheckpointCatalog:
         man = self._load_manifest(stage)
         snap = {
             "snapshot_id": len(man["snapshots"]),
-            "ts": time.time(),
+            "ts_ms": time.time_ns() // 1_000_000,
             "counters": {str(b): incoming[b] for b in changed},
         }
         man["snapshots"].append(snap)
@@ -285,31 +286,6 @@ class CheckpointCatalog:
         # only committed partitions are visible (a crashed write's orphan
         # partition directories are filtered out = snapshot isolation)
         return df.filter(F.col("batch_id").isin(*done))
-
-    # ------------------------------------------------------------------
-    def _config_path(self, stage: str) -> str:
-        return os.path.join(self.root, f"{stage}._config.json")
-
-    def load_config(self, stage: str) -> dict:
-        """Writer-owned per-stage config sidecar (e.g. the epoch
-        service's pinned n_batches). Deliberately SEPARATE from the
-        manifest: a writer must pin its config before the stage's
-        first commit, and only ``write_stage`` writes the manifest."""
-        p = self._config_path(stage)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            return json.load(f)
-
-    def store_config(self, stage: str, cfg: dict) -> None:
-        """Merge-write: keys not in ``cfg`` survive — a writer pinning
-        one key (e.g. n_batches) must not clobber keys another writer
-        added to the same sidecar (ADVICE r4)."""
-        merged = {**self.load_config(stage), **cfg}
-        tmp = self._config_path(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(merged, f)
-        os.replace(tmp, self._config_path(stage))
 
     def counters(self, stage: str) -> dict[int, dict]:
         return _last_counters(self._load_manifest(stage))

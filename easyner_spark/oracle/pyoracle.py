@@ -26,7 +26,6 @@ from ..textops import (
     extract_html,
     match_terms,
     split_sentences,
-    text_sha256,
 )
 
 # same ordered rules as easyner_spark.stages.triples, applied sequentially
@@ -104,7 +103,6 @@ def run_oracle(
     for rec in linked:
         by_sent[(rec[0], rec[1])].append(rec)
     triples = set()
-    triple_list = []
     for (url, si), ms in by_sent.items():
         if len(ms) < 2:
             continue
@@ -120,7 +118,6 @@ def run_oracle(
                         break
                 t = (a[7], pred, b[7], url, si)
                 triples.add(t)
-                triple_list.append(t)
 
     surface_counts = Counter(m[2] for m in mentions)
     name_counts = Counter(r[7] for r in linked)
@@ -128,9 +125,6 @@ def run_oracle(
     for m in mentions:
         articles_per_surface[m[2]].add(m[0])
 
-    audits = {
-        url: text_sha256(url, doc["text"]) for url, doc in documents.items()
-    }
     return {
         "documents": documents,
         "sentences": sentences,
@@ -138,11 +132,9 @@ def run_oracle(
         "linked": linked,
         "new_entries": new_entries,
         "triples": triples,
-        "triple_list": triple_list,
         "surface_counts": surface_counts,
         "name_counts": name_counts,
         "articles_per_surface": articles_per_surface,
-        "audits": audits,
     }
 
 

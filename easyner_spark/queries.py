@@ -1918,15 +1918,18 @@ def q_ner_udf_surface_counts(spark, sf_dir):
 @register(
     "split_udf_passthrough",
     """
-SELECT CAST(doc_id AS VARCHAR) AS doc_id, 0 AS sent_idx, text AS sent_text
+SELECT CAST(doc_id AS VARCHAR) AS doc_id, 0 AS sent_idx, trim(text) AS sent_text
 FROM documents WHERE length(trim(text)) > 0
 """,
 )
 def q_split_udf_passthrough(spark, sf_dir):
     """The engine's sentence-splitter UDF over the documents text. The
     word-soup corpus has no sentence terminators, so the splitter must
-    return exactly one sentence per document equal to the input text —
-    SQL-checkable identity that still drives the full Arrow UDF path."""
+    return exactly one sentence per non-blank document: the text with
+    its outer spaces stripped (the splitter's normalization; space is
+    the corpus' only separator, so DuckDB's ``trim`` is the same
+    strip) — SQL-checkable, and it still drives the full Arrow UDF
+    path."""
     from .stages.split import split_documents
 
     docs = _read(spark, sf_dir, "documents").select(

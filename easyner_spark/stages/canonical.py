@@ -29,19 +29,24 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..ops.graph import connected_components
 
+# characters per MinHash shingle
+SHINGLE_LEN = 3
 
-def _shingle_col(name_col, n: int = 3):
-    """Char n-gram shingles of normalized lower(name) as an array column
-    (pure JVM expression — sequence + substr, no UDF)."""
+
+def _shingle_col(name_col):
+    """Char ``SHINGLE_LEN``-gram shingles of normalized lower(name) as
+    an array column (pure JVM expression — sequence + substr, no UDF)."""
     norm = F.lower(F.regexp_replace(name_col, r"[^A-Za-z0-9]+", " "))
     norm = F.trim(F.regexp_replace(norm, r"\s+", " "))
     padded = F.concat(F.lit("^"), norm, F.lit("$"))
     return F.filter(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(padded) - (n - 1), F.lit(1))),
-            lambda i: padded.substr(i, F.lit(n)),
+            F.sequence(
+                F.lit(1), F.greatest(F.length(padded) - (SHINGLE_LEN - 1), F.lit(1))
+            ),
+            lambda i: padded.substr(i, F.lit(SHINGLE_LEN)),
         ),
-        lambda s: F.length(s) == n,
+        lambda s: F.length(s) == SHINGLE_LEN,
     )
 
 
@@ -50,14 +55,13 @@ def minhash_signatures(
     id_col: str = "ent_id",
     name_col: str = "name",
     num_hashes: int = 12,
-    shingle_len: int = 3,
 ) -> DataFrame:
     """→ (ent_id, name, sig: array<bigint>) — one xxhash64 family member
     per seed; min over the entity's shingle set."""
     sh = entities.select(
         id_col,
         name_col,
-        F.explode(_shingle_col(F.col(name_col), shingle_len)).alias("shingle"),
+        F.explode(_shingle_col(F.col(name_col))).alias("shingle"),
     ).distinct()
     mins = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")

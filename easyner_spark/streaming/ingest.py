@@ -1,5 +1,5 @@
-"""Incremental ingest: a page stream into per-epoch document stages,
-and the incremental near-dup pass over them.
+"""Incremental ingest: a page stream into an epoch-versioned documents
+stage, and the incremental near-dup pass over epochs of documents.
 
 Reference analog: the nightly PubMed update files
 (scripts/pubmed_bulk.py:44-54, README.md:129-134) — new batch files
@@ -12,34 +12,30 @@ dedup (scripts/util.py:12-23, downloader.py:68-79). Here
   watermark on ``warc_ts`` (``read_page_stream``; bounded state for
   late data), extracted with the SAME deterministic stage used in
   batch, and committed idempotently through ``foreachBatch`` +
-  CheckpointCatalog, one ``documents_epochNNNNNN`` stage per
-  micro-batch — a killed stream resumes from both the streaming
-  checkpoint AND the last committed partition;
+  CheckpointCatalog into the one ``documents_epochs`` stage — a killed
+  stream resumes from both the streaming checkpoint AND the last
+  committed partition;
 * ``read_documents_epochs``: the latest-epoch-wins batch view over
-  those stages;
+  that stage;
 * ``epoch_dedup_pairs``: the per-epoch MinHash near-dup probe against
   the committed corpus signatures.
+
+Both streaming stages version by one rule: epoch ``e`` owns the batch
+ids ``[e * EPOCH_WIDTH, (e + 1) * EPOCH_WIDTH)`` (``_epoch_batch``), so
+an epoch's commit appends its own partitions under ``skip_committed``
+and never touches an earlier epoch's.
 """
 
 from __future__ import annotations
 
+import glob
 import os
-import re
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from ..io.catalog import CheckpointCatalog, _live
+from ..corpus import PAGES_SCHEMA
+from ..io.catalog import CheckpointCatalog
 from ..stages.extract import extract_documents
-
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
 
 
 def read_page_stream(
@@ -70,49 +66,45 @@ def read_page_stream(
 
 # the committed corpus signature stage epoch_dedup_pairs probes and appends to
 SIG_STAGE = "minhash_sigs"
+# the stage start_ingest commits every micro-batch into
+DOCS_STAGE = "documents_epochs"
+# batch ids per epoch: epoch e owns [e * EPOCH_WIDTH, (e + 1) * EPOCH_WIDTH)
+EPOCH_WIDTH = 4096
 
 
-def _sig_batch_key(n_batches: int, range_seq: int):
-    """Signature-stage partition key, RANGE-SCOPED: batch_id =
-    range_seq * n_batches + hash(doc_id) % n_batches. Each commit owns
-    a disjoint batch-id range, so committing an epoch touches only its
-    own n_batches partitions — the corpus partitions written by earlier
-    epochs are never re-hashed or rewritten (O(epoch) commit cost, not
-    O(corpus); ADVICE r3). A row's batch is fixed at commit time
-    forever; the commit's ``range_seq`` is also its ``epoch`` data
-    column, the version that latest-per-doc selection reads."""
-    return (
-        F.lit(range_seq * n_batches)
-        + F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
-    ).cast("int")
+def _epoch_batch(epoch: int, b: Column, n_batches: int) -> Column:
+    """Epoch-scoped partition key: the BIGINT ``epoch * EPOCH_WIDTH + b``
+    for a batch ``b`` in ``[0, n_batches)``. Each epoch owns a disjoint
+    batch-id range of one fixed width, so committing an epoch touches
+    only its own partitions — earlier epochs are never re-hashed or
+    rewritten (O(epoch) commit cost, not O(corpus)) — and
+    ``batch_id // EPOCH_WIDTH`` is the epoch whatever ``n_batches`` each
+    call used. BIGINT, so a long-running stream cannot overflow INT."""
+    if not 1 <= n_batches <= EPOCH_WIDTH:
+        raise ValueError(
+            f"n_batches={n_batches} must be in [1, {EPOCH_WIDTH}]: an epoch "
+            f"owns {EPOCH_WIDTH} batch ids"
+        )
+    return F.lit(epoch * EPOCH_WIDTH).cast("bigint") + b
 
 
-def _pin_n_batches(cat, sig_stage: str, n_batches: int, has_data: bool) -> int:
-    """Resolve, validate and pin the stage's n_batches.
-
-    batch_range = max(batch)//n_batches is the version counter's input
-    — a silent mismatch would collide epoch numbers and corrupt
-    latest-version selection, so the value is pinned in the catalog's
-    per-stage config sidecar (a separate file, because the pin must be
-    on disk before the first commit and only ``write_stage`` writes
-    the manifest) and a later call with a different value fails
-    loudly.
-
-    The pin is written BEFORE the first commit (committed data without
-    a pin would mean silently trusting the next caller); a mismatching
-    call against a stage with NO committed data simply re-pins — a
-    crashed first run never locks an empty stage."""
-    stored = cat.load_config(sig_stage).get("n_batches")
-    if stored is None or int(stored) != n_batches:
-        if stored is not None and has_data:
-            raise ValueError(
-                f"stage '{sig_stage}' was built with n_batches={stored}; "
-                f"called with n_batches={n_batches} — epoch numbering "
-                "would corrupt. Pass the original value."
-            )
-        # unpinned, or an empty stage: nothing at risk, (re-)pin
-        cat.store_config(sig_stage, {"n_batches": n_batches})
-    return n_batches
+def _refuse_old_layout(warehouse: str) -> None:
+    """Raise if the warehouse holds epochs in the layout written before
+    fixed-width epochs: a ``minhash_sigs._config.json`` pin means
+    signature ranges ``n_batches`` wide, whose epoch numbers the
+    fixed-width rule would silently collide with, and a
+    ``documents_epoch<digits>._manifest.json`` is a per-epoch documents
+    stage that ``read_documents_epochs`` would silently drop."""
+    root = glob.escape(warehouse)
+    old = sorted(
+        glob.glob(os.path.join(root, f"{SIG_STAGE}._config.json"))
+        + glob.glob(os.path.join(root, "documents_epoch[0-9]*._manifest.json"))
+    )
+    if old:
+        raise ValueError(
+            f"{old[0]} holds epochs in the n_batches-wide or stage-per-epoch "
+            "layout, which fixed-width epochs cannot read; rebuild the warehouse"
+        )
 
 
 def _latest_per_doc(versioned: DataFrame, ids: DataFrame) -> DataFrame:
@@ -170,16 +162,16 @@ def epoch_dedup_pairs(
 
     This is the join shape that keeps web-scale dedup sustainable: each
     epoch costs O(epoch x bucket overlap), not corpus^2 — and the
-    COMMIT matches: batch ids are epoch-scoped (disjoint per-epoch
-    ranges via _sig_batch_key), so each epoch appends exactly its own
-    n_batches partitions under skip_committed and the earlier epochs'
-    partitions are never re-read, re-hashed or rewritten. An epoch's
-    number is its batch range, ``max(committed) // n_batches + 1`` (0
-    on an empty stage), written to every row as the ``epoch`` data
-    column. So the committed-batch set (and with it the manifest and
-    every reader's batch filter) grows by ``n_batches`` per epoch, and
-    nothing compacts it: a compaction returns once a caller schedules
-    one.
+    COMMIT matches: batch ids are epoch-scoped (``_epoch_batch``), so
+    each epoch appends at most its own ``n_batches`` partitions under
+    skip_committed and the earlier epochs' partitions are never
+    re-read, re-hashed or rewritten. An epoch's number is its batch
+    range, ``max(committed) // EPOCH_WIDTH + 1`` (0 on an empty stage),
+    written to every row as the ``epoch`` data column; ``n_batches``
+    may differ between calls. So the committed-batch set (and with it
+    the manifest and every reader's batch filter) grows by up to
+    ``n_batches`` per epoch, and nothing compacts it: a compaction
+    returns once a caller schedules one.
     Re-ingested doc_ids are handled
     explicitly: a re-ingest matching the doc's LATEST committed version
     collapses (anti-join against the latest signature only), while any
@@ -208,14 +200,12 @@ def epoch_dedup_pairs(
 
     if min_agreement is None:
         raise ValueError("min_agreement must be a number: pairs are always verified")
+    _refuse_old_layout(warehouse)
     cat = CheckpointCatalog(warehouse)
     done = cat.committed_batches(SIG_STAGE)
-    # n_batches is load-bearing for the version counter (epoch ==
-    # batch range): resolve/validate/pin against the sidecar config
-    n_batches = _pin_n_batches(cat, SIG_STAGE, n_batches, has_data=bool(done))
     # the epoch's batch-id range, derived from the committed batches
     # (append-only invariant); it is also the epoch number
-    epoch_seq = (max(done) // n_batches + 1) if done else 0
+    epoch_seq = (max(done) // EPOCH_WIDTH + 1) if done else 0
     # materialized once: the epoch's shingle/minhash aggregate feeds the
     # pair probe, the similarity filter AND the signature-stage commit
     # — without this it recomputes per consumer
@@ -230,7 +220,9 @@ def epoch_dedup_pairs(
             "doc_id",
             "sig",
             F.lit(epoch_seq).cast("bigint").alias("epoch"),
-            _sig_batch_key(n_batches, epoch_seq).alias("batch_id"),
+            _epoch_batch(
+                epoch_seq, F.pmod(F.xxhash64("doc_id"), F.lit(n_batches)), n_batches
+            ).alias("batch_id"),
         )
         .localCheckpoint()
     )
@@ -310,22 +302,39 @@ def start_ingest(
 ):
     """Continuous pages→documents ingest; exactly-once via foreachBatch
     into the partition-idempotent catalog. Returns the StreamingQuery
-    (caller drives trigger/stop; tests use processAllAvailable())."""
+    (caller drives trigger/stop; tests use processAllAvailable()).
+
+    Micro-batch ``epoch_id`` commits into ``DOCS_STAGE`` under the
+    batch ids ``_epoch_batch(epoch_id, batch)`` with ``skip_committed``:
+    a replayed epoch finds its range committed and commits nothing
+    (an ``n_batches`` above ``EPOCH_WIDTH`` fails the first
+    micro-batch before it commits). That relies on the streaming checkpoint numbering epochs, so a
+    warehouse with committed documents needs its ``checkpoint_dir``
+    (a local path, like the warehouse): a fresh checkpoint would
+    restart ``epoch_id`` at 0 and silently drop the new pages."""
+    _refuse_old_layout(warehouse)
     cat = CheckpointCatalog(warehouse)
+    if cat.committed_batches(DOCS_STAGE) and not os.path.exists(checkpoint_dir):
+        raise ValueError(
+            f"stage '{DOCS_STAGE}' in {warehouse} has committed epochs but the "
+            f"checkpoint {checkpoint_dir} does not exist: a fresh checkpoint "
+            "restarts epoch ids at 0 and its epochs would commit nothing"
+        )
     pages = read_page_stream(spark, input_dir, canonicalize_urls=canonicalize_urls)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         # the stream dedups on (url, warc_ts) — a re-crawled url with a
         # NEW timestamp still reaches the sink twice, which would put
-        # duplicate doc_id = sha2(url) rows in one epoch stage (the
-        # exact corruption extract.py's docstring warns about). Reuse
-        # the BATCH path's dedup: it filters lang first (a late
-        # non-English crawl can't shadow an English one) and picks the
-        # winner by a TOTAL key, so epoch replays commit identical bytes.
+        # duplicate doc_id = sha2(url) rows in one epoch (the exact
+        # corruption extract.py's docstring warns about). Reuse the
+        # BATCH path's dedup: it filters lang first (a late non-English
+        # crawl can't shadow an English one) and picks the winner by a
+        # TOTAL key, so a doc_id occurs once per epoch.
         docs = extract_documents(batch_df, n_batches=n_batches)
-        # append-style commit: allow new rows for already-seen batches by
-        # keying the stage per epoch (each epoch is an atomic snapshot)
-        cat.write_stage(docs, f"documents_epoch{epoch_id:06d}")
+        docs = docs.withColumn(
+            "batch_id", _epoch_batch(epoch_id, F.col("batch_id"), n_batches)
+        )
+        cat.write_stage(docs, DOCS_STAGE, resume_mode="skip_committed")
 
     return (
         pages.writeStream.foreachBatch(sink)
@@ -336,65 +345,23 @@ def start_ingest(
 
 
 def read_documents_epochs(spark: SparkSession, warehouse: str) -> DataFrame:
-    """Latest-epoch-wins batch view over the ``documents_epoch*`` stages.
+    """Latest-epoch-wins batch view over ``DOCS_STAGE``.
 
-    Each streaming epoch is an independent atomic snapshot, so a url
-    re-crawled across epochs appears once PER epoch. Consumers must not
-    union the epochs raw (doc_id double-count); this reader unions only
-    committed partitions and keeps, per doc_id, the row from the
-    highest epoch — and within it the latest warc_ts (deterministic
-    total order). One window shuffle on doc_id, same key as the
+    A url re-crawled across epochs has one row PER epoch. Consumers
+    must not read the stage raw (doc_id double-count); this reader
+    keeps, per doc_id, the row with the highest batch id — the latest
+    epoch, since a doc_id occurs once within an epoch and every epoch's
+    range lies above the earlier ones — and returns its within-epoch
+    ``batch_id`` (``batch_id % EPOCH_WIDTH``, as ``extract_documents``
+    assigned it). One window shuffle on doc_id, same key as the
     downstream stages.
     """
-    cat = CheckpointCatalog(warehouse)
-    # \d{6,}: epoch ids grow past the 06d zero-padding at 1e6 epochs —
-    # a fixed-width match would truncate them onto other epochs' names
-    names = sorted(
-        {
-            m.group(0)
-            for f in os.listdir(warehouse)
-            if (m := re.match(r"documents_epoch(\d{6,})$", f))
-            or (m := re.match(r"documents_epoch(\d{6,})(?=\._manifest\.json$)", f))
-        }
-    )
-    # ONE multi-path parquet read (a linear unionByName chain would grow
-    # driver plan size/analysis time O(n_epochs)). Only COMMITTED
-    # batch-partition leaf dirs are listed — snapshot isolation happens
-    # at file-listing time (an orphan dir from a crashed write is never
-    # read), strictly stronger than read_stage's post-filter. Epoch and
-    # batch_id ride in on the file path (leaf-dir reads skip partition
-    # discovery, which cannot mix non-key=value epoch roots).
-    # One manifest load per stage gives its committed batches. A stage
-    # with no committed batch (a crash between the parquet write and
-    # the manifest swap) contributes no path: reading it would serve
-    # uncommitted rows AND (being the highest epoch) shadow committed
-    # older crawls under latest-epoch-wins.
-    paths = []
-    for n in names:
-        paths.extend(
-            os.path.join(cat._stage_dir(n), f"batch_id={b}")
-            for b in sorted(_live(cat._load_manifest(n)))
-        )
-    if not paths:
-        raise ValueError(f"no documents_epoch* stages committed in {warehouse}")
-    allrows = (
-        spark.read.parquet(*paths)
-        .withColumn(
-            "_epoch",
-            F.regexp_extract(
-                F.input_file_name(), r"documents_epoch(\d+)/", 1
-            ).cast("long"),
-        )
-        .withColumn(
-            "batch_id",
-            F.regexp_extract(F.input_file_name(), r"/batch_id=(\d+)/", 1).cast(
-                "int"
-            ),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("_epoch"), F.desc("warc_ts"))
+    _refuse_old_layout(warehouse)
+    docs = CheckpointCatalog(warehouse).read_stage(spark, DOCS_STAGE)
+    w = Window.partitionBy("doc_id").orderBy(F.desc("batch_id"))
     return (
-        allrows.withColumn("_rn", F.row_number().over(w))
+        docs.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "_epoch")
+        .drop("_rn")
+        .withColumn("batch_id", (F.col("batch_id") % EPOCH_WIDTH).cast("int"))
     )

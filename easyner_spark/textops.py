@@ -29,7 +29,6 @@ Semantics are pinned to the reference's deterministic path:
 
 from __future__ import annotations
 
-import hashlib
 import html as _html
 import re
 from dataclasses import dataclass
@@ -77,11 +76,6 @@ def extract_html(html_bytes: bytes) -> tuple[str, str]:
     body = _TAG_RE.sub(" ", body)
     body = _html.unescape(body)
     return title, normalize_text(body)
-
-
-def text_sha256(url: str, text: str) -> str:
-    """Audit hash: sha256(url || NUL || text) hex (SURVEY.md §4 item 3)."""
-    return hashlib.sha256(url.encode("utf-8") + b"\x00" + text.encode("utf-8")).hexdigest()
 
 
 # --------------------------------------------------------------------------

@@ -161,9 +161,9 @@ def test_read_stage_refuses_manifest_without_schema_stamp(spark, docs, tmp_path)
 
 def test_warehouse_holds_one_data_directory_per_stage(spark, docs, tmp_path):
     """A pipeline run plus two signature epochs leave only ``<stage>/``
-    data directories, ``<stage>._manifest.json`` files and the
-    signature stage's config sidecar. A manifest that points the stage
-    at another directory makes read_stage and write_stage raise."""
+    data directories and ``<stage>._manifest.json`` files. A manifest
+    that points the stage at another directory makes read_stage and
+    write_stage raise."""
     import os
 
     from easyner_spark.corpus import pages_df
@@ -179,11 +179,7 @@ def test_warehouse_holds_one_data_directory_per_stage(spark, docs, tmp_path):
     entries = set(os.listdir(wh))
     stages = {e for e in entries if os.path.isdir(os.path.join(wh, e))}
     assert "minhash_sigs" in stages and "documents" in stages
-    assert entries == (
-        stages
-        | {f"{s}._manifest.json" for s in stages}
-        | {"minhash_sigs._config.json"}
-    )
+    assert entries == stages | {f"{s}._manifest.json" for s in stages}
 
     cat = CheckpointCatalog(wh)
     man = cat._load_manifest("documents")

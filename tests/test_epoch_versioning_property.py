@@ -1,6 +1,6 @@
 """Property test for the signature-stage versioning matrix (r4 verdict
 ask #6): a randomized ingest / unchanged-re-ingest / revert / crash /
-bad-n_batches sequence is replayed against a sequential python oracle
+other-n_batches sequence is replayed against a sequential python oracle
 dict, and after EVERY op the committed stage must satisfy the
 versioning invariants:
 
@@ -13,8 +13,8 @@ versioning invariants:
   range, so epochs only grow);
 * an orphan data directory from a crashed writer (parquet present, no
   manifest entry) is invisible to reads and to subsequent versioning;
-* a mismatched n_batches against a stage with committed data fails
-  loudly instead of corrupting epoch numbering.
+* an ingest at another n_batches keeps every invariant above: an
+  epoch's batch range has one fixed width whatever n_batches fills it.
 
 The signature FUNCTION itself is oracle-gated elsewhere
 (queries.py:dedup_epoch_incremental); here expected signatures are
@@ -52,7 +52,7 @@ _ingest = st.dictionaries(
 _op = st.one_of(
     st.tuples(st.just("ingest"), _ingest),
     st.tuples(st.just("crash"), st.none()),
-    st.tuples(st.just("bad_n"), st.none()),
+    st.tuples(st.just("other_n"), _ingest),
 )
 
 
@@ -121,8 +121,9 @@ def test_versioning_matrix(spark, expected_sigs, ops):
                 )
 
         for kind, arg in ops:
-            if kind == "ingest":
-                epoch_dedup_pairs(spark, wh, mk(arg), n_batches=N_BATCHES)
+            if kind in ("ingest", "other_n"):
+                n_batches = N_BATCHES if kind == "ingest" else N_BATCHES + 3
+                epoch_dedup_pairs(spark, wh, mk(arg), n_batches=n_batches)
                 for doc, ti in arg.items():
                     if truth.get(doc) != ti:
                         n_changes += 1
@@ -144,13 +145,6 @@ def test_versioning_matrix(spark, expected_sigs, ops):
                     .write.mode("overwrite")
                     .parquet(orphan)
                 )
-            elif kind == "bad_n":
-                if not committed():
-                    continue
-                with pytest.raises(ValueError):
-                    epoch_dedup_pairs(
-                        spark, wh, mk({1: 0}), n_batches=N_BATCHES + 3
-                    )
             check_invariants()
     finally:
         shutil.rmtree(wh, ignore_errors=True)

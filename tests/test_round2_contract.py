@@ -97,8 +97,10 @@ def test_merge_conflicts_query_is_nontrivial(spark):
 
 
 def test_read_documents_epochs_latest_wins(spark, tmp_path, monkeypatch):
+    from pyspark.sql import functions as F
+
     from easyner_spark.io.catalog import CheckpointCatalog
-    from easyner_spark.streaming.ingest import read_documents_epochs
+    from easyner_spark.streaming.ingest import _epoch_batch, read_documents_epochs
 
     wh = str(tmp_path / "wh")
     cat = CheckpointCatalog(wh)
@@ -116,10 +118,11 @@ def test_read_documents_epochs_latest_wins(spark, tmp_path, monkeypatch):
         [("d1", "u1", "t", "new text", "en", datetime(2026, 1, 2), 0)],
         cols,
     )
-    cat.write_stage(e0, "documents_epoch000000")
-    cat.write_stage(e1, "documents_epoch000001")
-    # each epoch stage's batches and data directory come from ONE
-    # manifest load (one snapshot), not one load per lookup
+    # committed as start_ingest's sink commits epochs 0 and 1
+    for epoch, docs in enumerate([e0, e1]):
+        keyed = docs.withColumn("batch_id", _epoch_batch(epoch, F.col("batch_id"), 2))
+        cat.write_stage(keyed, "documents_epochs", resume_mode="skip_committed")
+    # the view reads the one stage through ONE manifest load
     loads = []
     load = CheckpointCatalog._load_manifest
 
@@ -128,9 +131,13 @@ def test_read_documents_epochs_latest_wins(spark, tmp_path, monkeypatch):
         return load(self, stage)
 
     monkeypatch.setattr(CheckpointCatalog, "_load_manifest", counting)
-    rows = {r["doc_id"]: r["text"] for r in read_documents_epochs(spark, wh).collect()}
-    assert rows == {"d1": "new text", "d2": "keep"}
-    assert sorted(loads) == ["documents_epoch000000", "documents_epoch000001"]
+    rows = {
+        r["doc_id"]: (r["text"], r["batch_id"])
+        for r in read_documents_epochs(spark, wh).collect()
+    }
+    # batch_id is the within-epoch batch extract_documents assigned
+    assert rows == {"d1": ("new text", 0), "d2": ("keep", 1)}
+    assert loads == ["documents_epochs"]
 
 
 def test_read_documents_epochs_empty_warehouse(spark, tmp_path):

@@ -1,7 +1,6 @@
 """Structured Streaming ingest: incremental files → documents, dedup,
 resume across restarts, and the per-epoch near-dup pass."""
 
-import glob
 import os
 
 import pytest
@@ -9,7 +8,9 @@ from pyspark.sql import functions as F
 
 from easyner_spark.corpus import make_pages_pdf
 from easyner_spark.streaming.ingest import (
+    EPOCH_WIDTH,
     PAGES_SCHEMA,
+    read_documents_epochs,
     read_page_stream,
     start_ingest,
 )
@@ -38,20 +39,8 @@ def test_incremental_ingest_and_restart(spark, dirs):
     q.processAllAvailable()
     q.stop()
 
-    def read_epochs():
-        dfs = [
-            spark.read.parquet(d)
-            for d in sorted(glob.glob(os.path.join(dirs["wh"], "documents_epoch*")))
-            if not d.endswith(".json")
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    docs1 = glob.glob(os.path.join(dirs["wh"], "documents_epoch*/batch_id=*/*.parquet"))
-    n1 = read_epochs().count()
-    assert n1 > 0 and docs1
+    n1 = read_documents_epochs(spark, dirs["wh"]).count()
+    assert n1 > 0
 
     # second tranche arrives + stream RESTARTS from checkpoint: only the
     # new files are processed (no duplicate epochs)
@@ -60,11 +49,87 @@ def test_incremental_ingest_and_restart(spark, dirs):
     q2.processAllAvailable()
     q2.stop()
 
-    all_docs = read_epochs()
+    all_docs = read_documents_epochs(spark, dirs["wh"])
     n2 = all_docs.count()
     assert n2 > n1
     # no url ingested twice across epochs
     assert all_docs.groupBy("url").count().filter(F.col("count") > 1).count() == 0
+    # every epoch landed in the one stage: the catalog's two entries
+    assert sorted(os.listdir(dirs["wh"])) == [
+        "documents_epochs",
+        "documents_epochs._manifest.json",
+    ]
+
+
+def test_replayed_epoch_commits_nothing(spark, dirs, monkeypatch):
+    """A micro-batch the checkpoint never marked done is re-run under
+    the same epoch_id; its batch range is already committed, so the
+    replay commits nothing (exactly-once)."""
+    from easyner_spark.io.catalog import CheckpointCatalog
+
+    _write_pages(spark, make_pages_pdf(n_docs=20), dirs["in"])
+    q = start_ingest(spark, dirs["in"], dirs["wh"], dirs["ckpt"], n_batches=4)
+    q.processAllAvailable()
+    q.stop()
+    cat = CheckpointCatalog(dirs["wh"])
+    history = cat.history("documents_epochs")
+    counters = cat.counters("documents_epochs")
+    assert len(history) == 1 and all(b < EPOCH_WIDTH for b in counters)
+
+    # forget that epoch 0 (and the watermark's empty epoch 1) finished:
+    # the restart replays epoch 0 from its logged offsets
+    for sub, ids in (("commits", "01"), ("offsets", "1")):
+        for i in ids:
+            for f in (i, f".{i}.crc"):
+                os.remove(os.path.join(dirs["ckpt"], sub, f))
+    fed = []
+    write_stage = CheckpointCatalog.write_stage
+
+    def counting(self, df, stage, **kw):
+        fed.append(df.count())
+        return write_stage(self, df, stage, **kw)
+
+    monkeypatch.setattr(CheckpointCatalog, "write_stage", counting)
+    q2 = start_ingest(spark, dirs["in"], dirs["wh"], dirs["ckpt"], n_batches=4)
+    q2.processAllAvailable()
+    q2.stop()
+    # epoch 0's documents reached the sink again, and nothing committed
+    assert fed[0] == sum(c["rows"] for c in counters.values())
+    assert cat.history("documents_epochs") == history
+
+
+def test_fresh_checkpoint_against_used_warehouse_raises(spark, dirs, tmp_path):
+    """A fresh checkpoint restarts epoch ids at 0, whose committed range
+    would make skip_committed drop the new pages: start_ingest refuses
+    it before the stream starts."""
+    from easyner_spark.io.catalog import CheckpointCatalog
+
+    docs = spark.createDataFrame([("d1", "t", 0)], "doc_id string, text string, batch_id long")
+    CheckpointCatalog(dirs["wh"]).write_stage(docs, "documents_epochs")
+    with pytest.raises(ValueError, match="checkpoint"):
+        start_ingest(spark, dirs["in"], dirs["wh"], str(tmp_path / "fresh_ckpt"))
+
+
+@pytest.mark.parametrize(
+    "marker", ["minhash_sigs._config.json", "documents_epoch000003._manifest.json"]
+)
+def test_old_epoch_layout_raises(spark, dirs, marker):
+    """A warehouse written with n_batches-wide signature ranges (their
+    config pin) or per-epoch documents stages is refused by every
+    streaming entry point, naming the file, instead of colliding epoch
+    numbers or dropping old epochs."""
+    from easyner_spark.streaming.ingest import epoch_dedup_pairs
+
+    os.makedirs(dirs["wh"])
+    with open(os.path.join(dirs["wh"], marker), "w") as f:
+        f.write("{}")
+    docs = spark.createDataFrame([(1, "alpha beta gamma delta")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=marker):
+        epoch_dedup_pairs(spark, dirs["wh"], docs)
+    with pytest.raises(ValueError, match=marker):
+        start_ingest(spark, dirs["in"], dirs["wh"], dirs["ckpt"])
+    with pytest.raises(ValueError, match=marker):
+        read_documents_epochs(spark, dirs["wh"])
 
 
 def test_stream_dedup_by_url(spark, dirs):
@@ -202,7 +267,9 @@ def test_epoch_dedup_commit_is_append_only_per_epoch(spark, tmp_path):
     counters2 = cat.counters("minhash_sigs")
     new_batches = done2 - done1
     # the new partitions live strictly in the next epoch's range...
-    assert new_batches and all(nb <= b < 2 * nb for b in new_batches)
+    assert new_batches and all(
+        EPOCH_WIDTH <= b < EPOCH_WIDTH + nb for b in new_batches
+    )
     # ...and every epoch-1 partition's counters are byte-identical (no
     # rewrite, no re-hash)
     assert all(counters2[b] == counters1[b] for b in done1)
@@ -267,37 +334,34 @@ def test_epoch_dedup_handles_content_revert(spark, tmp_path):
     assert len(rows) == len(pairs)  # no duplicate emissions
 
 
-def test_epoch_dedup_rejects_mismatched_n_batches(spark, tmp_path):
-    """n_batches is load-bearing for epoch numbering — a mismatching
-    later call must fail loudly, not silently collide epochs."""
-    import pytest as _pytest
-
+def test_epoch_dedup_n_batches_may_change_between_epochs(spark, tmp_path):
+    """Every epoch owns a fixed-width batch range, so nothing divides by
+    n_batches: three epochs at 8, 64 and 4 batches keep distinct epoch
+    numbers and ranges, and a doc changed in the middle epoch is still
+    verified against its latest signature."""
+    from easyner_spark.io.catalog import CheckpointCatalog
     from easyner_spark.streaming.ingest import epoch_dedup_pairs
 
-    wh = str(tmp_path / "wh_nbpin")
+    wh = str(tmp_path / "wh_nbchange")
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    epoch_dedup_pairs(spark, wh, mk(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")]
-    ), n_batches=8)
-    with _pytest.raises(ValueError, match="n_batches"):
-        epoch_dedup_pairs(spark, wh, mk([(2, "x y z")]), n_batches=64)
+    text_a = "the quick brown fox jumps over the lazy dog again and again"
+    text_b = "entirely different replacement content with no overlap at all"
+    epoch_dedup_pairs(spark, wh, mk([(1, text_a), (2, text_a)]), n_batches=8)
+    epoch_dedup_pairs(spark, wh, mk([(1, text_b)]), n_batches=64)
+    rows = epoch_dedup_pairs(spark, wh, mk([(9, text_a)]), n_batches=4).collect()
+    # doc 1's stale text A no longer pairs it with doc 9
+    assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(2, 9)} and len(rows) == 1
 
-
-def test_pin_n_batches_semantics(tmp_path):
-    """Pin is written before the first commit; an empty stage can
-    re-pin (a crashed first run never locks it); a stage WITH data
-    rejects mismatches."""
-    from easyner_spark.io.catalog import CheckpointCatalog
-    from easyner_spark.streaming.ingest import _pin_n_batches
-
-    cat = CheckpointCatalog(str(tmp_path / "wh_pin"))
-    assert _pin_n_batches(cat, "s", 64, has_data=False) == 64
-    # empty stage: a different value re-pins instead of raising
-    assert _pin_n_batches(cat, "s", 256, has_data=False) == 256
-    # with data: pinned value wins, mismatch raises
-    assert _pin_n_batches(cat, "s", 256, has_data=True) == 256
+    sigs = CheckpointCatalog(wh).read_stage(spark, "minhash_sigs")
+    got = sorted((r["doc_id"], r["epoch"], r["batch_id"]) for r in sigs.collect())
+    assert [(d, e) for d, e, _ in got] == [(1, 0), (1, 1), (2, 0), (9, 2)]
+    widths = {0: 8, 1: 64, 2: 4}
+    assert all(
+        e * EPOCH_WIDTH <= b < e * EPOCH_WIDTH + widths[e] for _, e, b in got
+    )
+    # an epoch cannot hold more batches than its range is wide
     with pytest.raises(ValueError, match="n_batches"):
-        _pin_n_batches(cat, "s", 64, has_data=True)
+        epoch_dedup_pairs(spark, wh, mk([(3, text_b)]), n_batches=EPOCH_WIDTH + 1)
 
 
 def test_epoch_dedup_rejects_mixed_signature_family(spark, tmp_path):
